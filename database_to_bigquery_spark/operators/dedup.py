@@ -5,10 +5,10 @@ Five variants over `documents` / `events` / `embeddings`:
   dedup_exact_*        exact hash-groupBy (one shuffle on the hash key)
   dedup_ngram_jaccard  exact n-gram Jaccard pairs (the oracle-checkable
                        ground truth the approximate methods approximate)
-  dedup_minhash_lsh    MinHash signatures + banded LSH candidate join +
+  dedup_minhash_lsh    MinHash signatures + banded LSH candidate buckets +
                        exact verification — THE 100 TB path: cost is
                        O(docs × bands), never O(docs²)
-  dedup_simhash        64→32-bit SimHash + pigeonhole band join for
+  dedup_simhash        64→32-bit SimHash + pigeonhole band buckets for
                        hamming-distance candidates
   dedup_embedding_cosine  semantic near-dup pairs over embeddings
 
@@ -30,6 +30,14 @@ from pyspark.sql import functions as F
 from ..data import bounded, load_table, load_table_spread
 from ..registry import query
 from .ngram_util import sliding_structs
+from .pairs import (
+    LSH_BUCKET_CAP,
+    block_pairs,
+    block_sides,
+    bucket_pairs,
+    drop_hot_buckets,
+    gid_intersections,
+)
 
 # ------------------------------------------------------------- exact ----
 
@@ -172,18 +180,12 @@ def char_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shingles_of(d)
 
 
-def _tagged_shingle_blocks(spark: SparkSession, sf_dir: str, n_blocks: int = 8) -> DataFrame:
-    """`_tagged_gid_blocks` over the whole corpus's char shingles."""
-    return _tagged_gid_blocks(spark, char_shingles(spark, sf_dir), n_blocks)
-
-
-def _tagged_gid_blocks(spark: SparkSession, sh: DataFrame, n_blocks: int = 8) -> DataFrame:
+def _tagged_gid_blocks(sh: DataFrame) -> DataFrame:
     """Shared prep for the blocked all-pairs intersection operators
     (exact Jaccard / containment / corpus-prep dedup): encode each
-    document's distinct shingles to a gid array, split docs into
-    ``n_blocks`` hash blocks, and replicate each doc to every
-    block-pair group it participates in, tagged with its side.
-    ``sh`` is any (doc_id, g)-distinct relation.
+    document's distinct shingles to a gid array and fan it out to its
+    block-pair groups (`pairs.block_pairs`). ``sh`` is any
+    (doc_id, g)-distinct relation.
 
     Gram ids are ``xxhash64(g)`` — a PURE FUNCTION of the gram, not a
     dictionary — applied through the same idempotent ``_as_gids``
@@ -192,8 +194,8 @@ def _tagged_gid_blocks(spark: SparkSession, sh: DataFrame, n_blocks: int = 8) ->
     untouched rather than double-hashed, and blocked-path gids stay
     value-comparable with minhash-path gids (advisor r7). The earlier
     dictionary (distinct → monotonically_increasing_id) handed out ids
-    nondeterministically after a shuffle, so the two union branches
-    below could in principle see different encodings if Catalyst ever
+    nondeterministically after a shuffle, so two branches of the
+    fan-out could in principle see different encodings if Catalyst ever
     recomputed the exchange (advisor finding), and pinning it cost an
     extra materialization pass. A content hash is recomputation-proof
     by construction, needs no distinct/join/checkpoint (one
@@ -202,48 +204,9 @@ def _tagged_gid_blocks(spark: SparkSession, sh: DataFrame, n_blocks: int = 8) ->
     block pair.
     64-bit collisions would conflate two grams; over a per-corpus
     vocabulary V the expected collisions are V²/2^65 — ~0.003 even
-    at 10^10 grams, and the fixture gate is deterministic either way.
-
-    B(B+1)/2 = 36 block-pair tasks (enough to saturate 32 cores since
-    same-block pairs are ~half-size); each doc's gid array ships to
-    B+1 = 9 groups, so replication — the dominant Arrow-transfer
-    cost — stays modest. Larger B shrinks per-task matmuls (already
-    far from the FLOP bound) while inflating transfer linearly.
-
-    Replication is ONE explode of a generated (bi, bj, side) array per
-    doc (r10) — the previous shape (two broadcast joins against a
-    createDataFrame block-pair relation, unioned) was measured doing
-    everything twice at bench scale: the union's two branches each
-    re-ran the whole shingle→collect_list subtree (AQE compiles them
-    as separate stages; 16.4 s → 8 s task time at sf0.1), and each
-    branch built its own broadcast of a PYTHON-parallelized local
-    relation (32 Python-worker tasks per build, ~13 s task time of
-    pure worker round-trips). The explode emits the identical row
-    multiset with zero joins, zero broadcasts, and a single pass."""
-    vecs = (
-        _as_gids(sh)
-        .groupBy("doc_id")
-        .agg(F.collect_list("g").alias("gids"))
-        .withColumn("blk", (F.col("doc_id") % n_blocks).cast("int"))
-    )
-    last = F.lit(n_blocks - 1).cast("int")
-    reps = F.concat(
-        F.transform(
-            F.sequence(F.col("blk"), last),
-            lambda j: F.struct(
-                F.col("blk").alias("bi"), j.alias("bj"), F.lit("a").alias("side")
-            ),
-        ),
-        F.transform(
-            F.sequence(F.lit(0).cast("int"), F.col("blk")),
-            lambda i: F.struct(
-                i.alias("bi"), F.col("blk").alias("bj"), F.lit("b").alias("side")
-            ),
-        ),
-    )
-    return vecs.select("doc_id", "gids", F.explode(reps).alias("r")).select(
-        "r.bi", "r.bj", "doc_id", "gids", "r.side"
-    )
+    at 10^10 grams, and the fixture gate is deterministic either way."""
+    vecs = _as_gids(sh).groupBy("doc_id").agg(F.collect_list("g").alias("gids"))
+    return block_pairs(vecs, "doc_id")
 
 
 @query(
@@ -302,9 +265,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
 
 
-def blocked_jaccard_pairs(
-    spark: SparkSession, sh: DataFrame, threshold: float, n_blocks: int = 8
-) -> DataFrame:
+def blocked_jaccard_pairs(spark: SparkSession, sh: DataFrame, threshold: float) -> DataFrame:
     """Exact Jaccard pairs ≥ threshold over any (doc_id, g)-distinct
     relation via blocked all-pairs numpy matmul (see
     dedup_ngram_jaccard's design note). Returns (doc_a < doc_b,
@@ -315,27 +276,14 @@ def blocked_jaccard_pairs(
         import numpy as np
         import pandas as pd
 
-        a = pdf[pdf["side"] == "a"]
-        b = pdf[pdf["side"] == "b"]
+        a, b, same_block = block_sides(pdf)
         if a.empty or b.empty:
             return pd.DataFrame(
                 {c: pd.Series(dtype="int64") for c in ["doc_a", "doc_b", "n_common", "na", "nb"]}
             )
-        same_block = pdf["bi"].iat[0] == pdf["bj"].iat[0]
-        vocab = np.unique(np.concatenate(list(pdf["gids"])))
         ids_a = a["doc_id"].to_numpy()
         ids_b = b["doc_id"].to_numpy()
-
-        def densify(col):
-            m = np.zeros((len(col), len(vocab)), dtype=np.float32)
-            for r, gids in enumerate(col):
-                m[r, np.searchsorted(vocab, gids)] = 1.0
-            return m
-
-        ma, mb = densify(list(a["gids"])), densify(list(b["gids"]))
-        common = ma @ mb.T  # exact: counts ≤ |vocab| ≪ 2^24
-        na = ma.sum(axis=1)
-        nb = mb.sum(axis=1)
+        common, na, nb = gid_intersections(a, b)
         jac = common.astype(np.float64) / (na[:, None] + nb[None, :] - common)
         mask = jac >= threshold
         if same_block:
@@ -347,14 +295,13 @@ def blocked_jaccard_pairs(
             {
                 "doc_a": np.minimum(ids_a[ia], ids_b[ib]),
                 "doc_b": np.maximum(ids_a[ia], ids_b[ib]),
-                "n_common": common[ia, ib].astype(np.int64),
-                "na": na[ia].astype(np.int64),
-                "nb": nb[ib].astype(np.int64),
+                "n_common": common[ia, ib],
+                "na": na[ia],
+                "nb": nb[ib],
             }
         )
 
-    tagged = _tagged_gid_blocks(spark, sh, n_blocks)
-    return tagged.groupBy("bi", "bj").applyInPandas(
+    return _tagged_gid_blocks(sh).groupBy("bi", "bj").applyInPandas(
         block_intersections, "doc_a long, doc_b long, n_common long, na long, nb long"
     )
 
@@ -554,50 +501,6 @@ def _sig_agreement_packed(a="sig_a", b="sig_b") -> F.Column:
     )
 
 
-# Band buckets larger than this are dropped before any bucket join.
-# The bucket join's cost is Σ n_b² (n_b·m_b on asymmetric probes): at
-# 250k twin docs the top buckets reach ~8k members and 99.98% of the
-# 181M candidate pairs they generate verify FALSE — a band hash shared
-# by thousands of documents is boilerplate, the posting-list stopword
-# of LSH, carrying no discriminative signal. Dropping it is the
-# standard production move and is nearly lossless because a true
-# near-dup pair has 16 independent band collisions to survive on:
-# measured recall of verified J ≥ 0.6 pairs is 1.0000 at sf0.1
-# (5k docs, hottest bucket 727) and 0.9996 at the 50k-doc twin
-# (2671/2672), while the x50 miner wall drops ~8 min → seconds. The
-# sf0.01 oracle fixtures' hottest bucket is 72, so the cap NEVER
-# binds where exactness is asserted.
-#
-# 128 (was 256, r10): the cap is the transition-regime lever SCALE.md
-# §16 named against the miner's residual x250 superlinearity, and the
-# banding probe priced the flip at both tiers (SCALE.md §17):
-# x50 collision mass 4.66M → 3.04M at recall 0.99629 → 0.99621; x250
-# 38.2M → 22.9M at recall 0.99626 → 0.99604, calm wall 121.9 → 97.6 s
-# — the miner-core x50→x250 exponent bends ≈1.07 → 0.94 (cap-128's
-# own calm pair 21.4 → 97.6 s; the default's pair crosses sessions:
-# r9's calm 121.9 vs this round's x50 21.9). The capped
-# buckets are background pileups (a bucket needs >128 docs sharing a
-# band hash), not true-pair homes: a true near-dup pair still has 16
-# independent quieter bands to collide on.
-_LSH_BUCKET_CAP = 128
-
-
-def drop_hot_buckets(bands: DataFrame, cap: int = _LSH_BUCKET_CAP) -> DataFrame:
-    """Remove LSH band buckets with more than ``cap`` members (see
-    `_LSH_BUCKET_CAP`). The bucket population rides a window COUNT
-    partitioned by the bucket key — the exact key the downstream
-    bucket join shuffles on, so this adds ZERO exchanges: the window's
-    shuffle IS the join's shuffle (and on the streaming path's
-    part-sorted cached band relations it needs neither exchange nor
-    sort)."""
-    w = W.partitionBy("band_idx", "band_hash")
-    return (
-        bands.withColumn("_bucket_n", F.count("*").over(w))
-        .filter(F.col("_bucket_n") <= cap)
-        .drop("_bucket_n")
-    )
-
-
 @query("dedup_minhash_lsh", headline=True)  # approximate → rows-only check
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup candidates, exact-verified.
@@ -613,7 +516,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
          agreement estimate AND true shingle intersection)
 
     Cost at 100 TB: shingling is map-only; signatures are one partial
-    agg; the band join only shuffles (doc, band) pairs — never doc².
+    agg; the band grouping only shuffles (doc, band) rows — never doc².
     Output: (doc_a, doc_b, est_jaccard, jaccard) for true pairs ≥ 0.6.
     """
     return minhash_verified_pairs(char_shingles(spark, sf_dir))
@@ -713,7 +616,7 @@ def minhash_verified_pairs(
     raw_shingles: DataFrame,
     bands: int = _MH_BANDS,
     rows: int = _MH_K // _MH_BANDS,
-    cap: int = _LSH_BUCKET_CAP,
+    cap: int = LSH_BUCKET_CAP,
     sig: DataFrame | None = None,
 ) -> DataFrame:
     """The banded-MinHash mine-and-verify core over a (doc_id, g)
@@ -728,7 +631,7 @@ def minhash_verified_pairs(
     1 − (1 − J^rows)^bands). The signature length is bands·rows
     (prefix of the fixed permutation set, so different schemes remain
     comparable on shared prefixes). ``cap`` is the hot-bucket
-    population ceiling (see _LSH_BUCKET_CAP) — parameterized so the
+    population ceiling (see LSH_BUCKET_CAP) — parameterized so the
     sharpness probe can price cap rungs the same way it prices
     banding schemes (judge r9 task 1).
 
@@ -742,22 +645,13 @@ def minhash_verified_pairs(
     is multiset-insensitive, so a defensive .distinct() here would be
     a pure extra corpus shuffle for every compliant caller).
 
-    Candidate generation is BUCKET-GROUPED (r10): the capped band
-    relation is aggregated per (band_idx, band_hash) into a member
-    array and the i<j pairs + signature-agreement estimate are emitted
-    by array expressions inside that one stage — replacing the former
-    band self-join. Measured motivation (plans/r10, stage profile at
-    sf0.1): AQE compiled the self-join's two band_rel sides as
-    separate query stages and submitted them CONCURRENTLY, so exchange
-    reuse never fired and the entire shingle→signature→band subtree
-    (the miner's most expensive compute) ran twice, racing to build
-    the caches ("Asked to cache already cached data"); the self-join
-    also paid two band exchanges + two SMJ sorts. The grouped form
-    computes that subtree once, shuffles the band relation once, and
-    needs no sort beyond the hot-bucket window's own. Memory is
-    bounded by the cap: members ≤ cap × (packed sig + 2 longs) ≈ 43 KB
-    per bucket, and the est filter runs INSIDE the per-bucket
-    expression so only surviving pairs materialize. The per-doc
+    Candidate generation is bucket-grouped (`pairs.bucket_pairs`; see
+    the pairs module for when grouping beats the band self-join it
+    replaced): the capped band relation is aggregated per
+    (band_idx, band_hash) into a member array and the i<j pairs with
+    their signature-agreement estimate are emitted and est-filtered
+    inside that one stage. Memory is bounded by the cap: members ≤
+    cap × (packed sig + 2 longs) ≈ 43 KB per bucket. The per-doc
     shingle-set size ``n`` rides the band rows too, which deletes the
     two corpus-sized size-attach SMJs (and the sizes cache + its
     repartition) that previously sat above the verification join —
@@ -806,7 +700,7 @@ def minhash_verified_pairs(
     # distinct-shingle count n riding each band row. band_hash = md5
     # of the rows-joined values. Hot buckets dropped first: pair
     # generation is Σ n_b² per bucket, so the cap both bounds the
-    # quadratic term (see _LSH_BUCKET_CAP) and bounds the member-array
+    # quadratic term (see LSH_BUCKET_CAP) and bounds the member-array
     # memory of the grouped aggregation below.
     #
     # Why the signature rides the band explode (r8): bands derive FROM
@@ -828,47 +722,29 @@ def minhash_verified_pairs(
         ),
         cap=cap,
     )
-    # Bucket-grouped candidate generation (r10, replaces the band
-    # self-join): group the capped buckets — the window's exchange on
+    # Group the capped buckets — the window's exchange on
     # (band_idx, band_hash) IS this aggregation's clustering, so no
-    # new shuffle — collect the ≤cap members, and emit each bucket's
-    # i<j pairs with the signature-agreement estimate computed and
-    # filtered INSIDE the array expression. sort_array orders members
-    # by doc_id (first struct field, unique per bucket), which makes
-    # the emitted (doc_a < doc_b) orientation deterministic and
-    # identical to the old x.doc_id < y.doc_id join predicate.
+    # new shuffle — and emit each bucket's i<j pairs with the
+    # signature-agreement estimate computed and filtered in-array.
+    # sort_array orders members by doc_id (first struct field, unique
+    # per bucket), so doc_a < doc_b. CAST(repr(thr) AS DOUBLE) parses
+    # to the bit-identical IEEE754 value of the F.lit(thr) literal.
     thr = _est_threshold(k)
-    grouped = (
-        band_rel.groupBy("band_idx", "band_hash")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct("doc_id", "sigp", "n"))
-            ).alias("ms")
-        )
+    grouped = band_rel.groupBy("band_idx", "band_hash").agg(
+        F.sort_array(F.collect_list(F.struct("doc_id", "sigp", "n"))).alias("ms")
     )
-    # One generated-SQL expression for the whole per-bucket pair
-    # emission (the py4j-cost note on minhash_signatures applies).
-    # CAST(repr(thr) AS DOUBLE) parses to bit-identical IEEE754 as the
-    # F.lit(thr) literal it replaces.
-    #
-    # The inner iteration slices an INDEX array and dereferences with
-    # element_at — NOT slice(ms, …): member structs carry the 32-long
-    # packed signature, so slicing ms copies O(m²·m) struct bytes per
-    # bucket, a constant that measured 2.3× the old self-join's CPU at
-    # the 1.25M-doc twin where buckets run full (the x50 tier, with
-    # sparser buckets, had hidden it). Index slices copy 4-byte ints.
-    agree = _sig_agreement_packed_sql("a.sigp", "element_at(ms, j).sigp")
-    pairs_arr = F.expr(
-        "flatten(transform(ms, (a, i) -> "
-        "filter(transform("
-        "slice(sequence(1, size(ms)), i + 2, size(ms) - i - 1), j -> "
-        "named_struct("
-        "'doc_a', a.doc_id, "
-        "'doc_b', element_at(ms, j).doc_id, "
-        f"'est_jaccard', round(cast({agree} as double) / {k}, 4), "
-        "'na', a.n, "
-        "'nb', element_at(ms, j).n)), "
-        f"p -> p.est_jaccard >= cast('{thr!r}' as double))))"
+    agree = _sig_agreement_packed_sql("a.sigp", "b.sigp")
+    cand = bucket_pairs(
+        grouped,
+        "ms",
+        {
+            "doc_a": "a.doc_id",
+            "doc_b": "b.doc_id",
+            "est_jaccard": f"round(cast({agree} as double) / {k}, 4)",
+            "na": "a.n",
+            "nb": "b.n",
+        },
+        keep=f"p.est_jaccard >= cast('{thr!r}' as double)",
     )
     # the est pre-filter sits ~2.5σ below the J = 0.6 output threshold
     # (σ = √(0.6·0.4/k), see _est_threshold), so true pairs survive
@@ -881,12 +757,7 @@ def minhash_verified_pairs(
     # (doc_a, doc_b) group) and the doc_a verification join below
     # (exact partition-key match) — distinct + a second join exchange
     # would cost two.
-    sig_est = (
-        grouped.select(F.explode(pairs_arr).alias("p"))
-        .select("p.*")
-        .repartition("doc_a")
-        .dropDuplicates(["doc_a", "doc_b"])
-    )
+    sig_est = cand.repartition("doc_a").dropDuplicates(["doc_a", "doc_b"])
 
     sh_a = shingles
     # intersection count as an equi-join on BOTH (doc, gram) keys —
@@ -926,7 +797,7 @@ _SIMHASH_BAND_BITS = _SIMHASH_BITS // 4
 def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup candidates: 60-bit fingerprint voted from word
     BIGRAM hashes; pairs within hamming distance ≤ 3 found via the
-    pigeonhole band join (4 bands × 15 bits → a pair within distance 3
+    pigeonhole band buckets (4 bands × 15 bits → a pair within distance 3
     has its ≤3 differing bits spread over ≤3 bands, so at least one of
     the 4 bands matches exactly). Output (doc_a, doc_b, hamming).
 
@@ -946,8 +817,9 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     it only binds on a degenerate corpus — exact-dup mega-clusters
     that dedup_exact_text already owns).
 
-    Scale: fingerprints are one narrow agg; the band join buckets on
-    (band_idx, band_val) — bounded fanout, no doc² shuffle.
+    Scale: fingerprints are one narrow agg; pairs form only inside
+    capped (band_idx, band_val) buckets — bounded fanout, no doc²
+    shuffle.
     """
     d = load_table_spread(spark, sf_dir, "documents", "doc_id")
     ws = F.split(F.col("text"), " ")
@@ -988,34 +860,24 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band_idx", "band_val"),
     )
-    # hot-bucket backstop (see docstring)
-    bucket_w = W.partitionBy("band_idx", "band_val")
-    bands = bands.withColumn("_bn", F.count("*").over(bucket_w)).filter(
-        F.col("_bn") <= 64
-    ).drop("_bn")
-    # Bucket-grouped pair generation (r10, the minhash_verified_pairs
-    # restructure): the former band self-join compiled its two sides
-    # as separate concurrent AQE stages, computing the fingerprint
-    # subtree twice; grouping the capped buckets (≤64 members — the
-    # window above bounds the array) emits each bucket's i<j pairs
-    # with the hamming filter inline, one pass, one band shuffle
-    # (which the window's exchange already is). The distinct across
-    # bands is unchanged (hamming is a pure function of the pair).
+    # hot-bucket backstop (see docstring); the grouping below reuses
+    # the window's (band_idx, band_val) exchange, and the hamming cut
+    # runs in-array. hamming is a pure function of the pair, so the
+    # distinct across bands keeps one row per pair.
+    bands = drop_hot_buckets(bands, cap=64, keys=("band_idx", "band_val"))
     grouped = bands.groupBy("band_idx", "band_val").agg(
         F.sort_array(F.collect_list(F.struct("doc_id", "simhash"))).alias("ms")
     )
-    pairs_arr = F.expr(
-        "flatten(transform(ms, (a, i) -> "
-        "filter(transform(slice(ms, i + 2, size(ms) - i - 1), b -> "
-        "named_struct('doc_a', a.doc_id, 'doc_b', b.doc_id, "
-        "'hamming', bit_count(a.simhash ^ b.simhash))), "
-        "p -> p.hamming <= 3)))"
-    )
-    return (
-        grouped.select(F.explode(pairs_arr).alias("p"))
-        .select("p.*")
-        .distinct()
-    )
+    return bucket_pairs(
+        grouped,
+        "ms",
+        {
+            "doc_a": "a.doc_id",
+            "doc_b": "b.doc_id",
+            "hamming": "bit_count(a.simhash ^ b.simhash)",
+        },
+        keep="p.hamming <= 3",
+    ).distinct()
 
 
 # ------------------------------------------------ embedding near-dup ----
@@ -1090,38 +952,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # theta-join BNLJ = no codegen, 17 s; block equi-join with a
     # 64-term unrolled codegen dot = 11 s of element_at overhead;
     # this = ~2 s.)
-    # replication via one explode of a generated (bi, bj, side) array
-    # (r10, the _tagged_gid_blocks fix): the former two broadcast
-    # joins against a createDataFrame local relation each built a
-    # broadcast of a PYTHON-parallelized RDD (32 Python-worker tasks
-    # per build), and the union's branches read the cache twice
-    n_blocks = 8
-    vecs = e.withColumn("blk", (F.col("vec_id") % n_blocks).cast("int"))
-    last = F.lit(n_blocks - 1).cast("int")
-    reps = F.concat(
-        F.transform(
-            F.sequence(F.col("blk"), last),
-            lambda j: F.struct(
-                F.col("blk").alias("bi"), j.alias("bj"), F.lit("a").alias("side")
-            ),
-        ),
-        F.transform(
-            F.sequence(F.lit(0).cast("int"), F.col("blk")),
-            lambda i: F.struct(
-                i.alias("bi"), F.col("blk").alias("bj"), F.lit("b").alias("side")
-            ),
-        ),
-    )
-    tagged = vecs.select("vec_id", "v", "nrm", F.explode(reps).alias("r")).select(
-        "r.bi", "r.bj", "vec_id", "v", "nrm", "r.side"
-    )
+    tagged = block_pairs(e, "vec_id")
 
     def block_candidates(pdf):
         import numpy as np
         import pandas as pd
 
-        a_rows = pdf[pdf["side"] == "a"]
-        b_rows = pdf[pdf["side"] == "b"]
+        a_rows, b_rows, same_block = block_sides(pdf)
         if a_rows.empty or b_rows.empty:
             return pd.DataFrame({c: pd.Series(dtype="int64") for c in ["vec_a", "vec_b"]})
         ma = np.stack(list(a_rows["v"])).astype(np.float64)
@@ -1130,7 +967,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         ids_a = a_rows["vec_id"].to_numpy()
         ids_b = b_rows["vec_id"].to_numpy()
         mask = cos >= _COS_T - 1e-6
-        if pdf["bi"].iat[0] == pdf["bj"].iat[0]:
+        if same_block:
             mask &= ids_a[:, None] < ids_b[None, :]
         else:
             mask &= ids_a[:, None] != ids_b[None, :]
@@ -1754,7 +1591,7 @@ def cross_minhash_pairs(
     re-shuffling the corpus bands per batch; a corpus side derived
     here is capped here. Both sides are capped independently — the
     probe join's per-bucket cost is n_batch × n_corpus, so either
-    side's hot bucket blows it up (see _LSH_BUCKET_CAP).
+    side's hot bucket blows it up (see LSH_BUCKET_CAP).
 
     ``prune_corpus_to_batch`` (judge r8 task 2) turns on the small-
     batch probe shape: every corpus-sized relation is semi-filtered by
@@ -2103,32 +1940,19 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd  # noqa: F401 — applyInPandas ships these to workers
 
     t = 0.9
-    tagged = _tagged_shingle_blocks(spark, sf_dir)
+    tagged = _tagged_gid_blocks(char_shingles(spark, sf_dir))
 
     def block_containment(pdf):
         import numpy as np
         import pandas as pd
 
-        a = pdf[pdf["side"] == "a"]
-        b = pdf[pdf["side"] == "b"]
+        a, b, same_block = block_sides(pdf)
         cols = ["doc_a", "doc_b", "n_common", "na", "nb"]
         if a.empty or b.empty:
             return pd.DataFrame({c: pd.Series(dtype="int64") for c in cols})
-        same_block = pdf["bi"].iat[0] == pdf["bj"].iat[0]
-        vocab = np.unique(np.concatenate(list(pdf["gids"])))
         ids_a = a["doc_id"].to_numpy()
         ids_b = b["doc_id"].to_numpy()
-
-        def densify(col):
-            m = np.zeros((len(col), len(vocab)), dtype=np.float32)
-            for r, gids in enumerate(col):
-                m[r, np.searchsorted(vocab, gids)] = 1.0
-            return m
-
-        ma, mb = densify(list(a["gids"])), densify(list(b["gids"]))
-        common = (ma @ mb.T).astype(np.int64)  # exact: counts ≤ |vocab| ≪ 2^24
-        na = ma.sum(axis=1).astype(np.int64)
-        nb = mb.sum(axis=1).astype(np.int64)
+        common, na, nb = gid_intersections(a, b)
         neq = ids_a[:, None] != ids_b[None, :]
         # containment of the a-side doc in the b-side doc
         m1 = neq & (na[:, None] < nb[None, :]) & (

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..data import load_table
 from ..registry import query
+from .pairs import bucket_pairs
 
 _DAMP = 0.85
 _QTY = 48  # edge threshold: supplier shipped a part with quantity >= 48
@@ -241,24 +242,18 @@ def graph_item_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     behind "users who did A also did B" and bipartite-graph projection.
 
     Scale: the classic trap is intersecting user SETS pairwise (set
-    materialization per item → skew + memory). Instead the bipartite
-    edge list is deduped once (one shuffle on (user, item)), pair
-    counts come from a self-join on user_id — per-user cost is
-    C(items-per-user, 2), bounded by the per-user item fanout, never
-    |users|² — and the per-item sizes broadcast back. Heavy-fanout
+    materialization per item → skew + memory). Instead each user's
+    distinct items are collected once (one shuffle on user_id) and
+    the pairs emitted per user — per-user cost is C(items-per-user, 2),
+    bounded by the per-user item fanout, never |users|² — and the
+    per-item sizes broadcast back. Heavy-fanout
     users (the skew risk) get capped upstream in a real deployment;
     the plan itself is the standard co-occurrence projection
     (q_cooccurrence_pairs is the basket-bounded twin on orders)."""
-    # One groupBy(user) pass instead of distinct + self-join (r10):
-    # the previous shape computed the (user, item) distinct three
-    # times (a/b/sizes consumers — four events scans and four
-    # exchanges in the captured plan) and then re-shuffled both join
-    # sides by user_id (the distinct's (user, item) partitioning can't
-    # serve a user_id-keyed join). Collecting each user's sorted
-    # distinct item set pays ONE exchange on user_id, emits the i<j
-    # pairs in-array (bounded by the per-user item fanout — the same
-    # bound the self-join's C(items-per-user, 2) cost had), and the
-    # sizes aggregate rides the same cached relation.
+    # One groupBy(user) with in-array pair emission (`pairs.bucket_pairs`):
+    # the sorted collect_set subsumes the (user, item) distinct a
+    # self-join pays, so one exchange on user_id serves the pairs, and
+    # the sizes aggregate rides the same cached relation.
     # NULL pin (advisor r10): the old distinct + self-join dropped NULL
     # user_id rows (equi-join keys) and NULL event_type (the a < b
     # comparison); groupBy would keep a NULL-user group, silently
@@ -273,14 +268,8 @@ def graph_item_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_set("event_type")).alias("items"))
         .persist()
     )
-    pairs_arr = F.expr(
-        "flatten(transform(items, (a, i) -> "
-        "transform(slice(items, i + 2, size(items) - i - 1), b -> "
-        "named_struct('item_a', a, 'item_b', b))))"
-    )
     inter = (
-        per_user.select(F.explode(pairs_arr).alias("p"))
-        .select("p.*")
+        bucket_pairs(per_user, "items", {"item_a": "a", "item_b": "b"})
         .groupBy("item_a", "item_b")
         .agg(F.count("*").cast("long").alias("n_both"))
     )

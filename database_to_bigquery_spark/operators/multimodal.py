@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..data import load_table, load_table_spread
 from ..registry import query
+from .pairs import bucket_pairs, drop_hot_buckets
 
 DECODE_SCHEMA = "doc_id long, width int, height int, mean_luma double"
 
@@ -402,17 +403,10 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean bands to collide on); the pigeonhole-complete variant in
     this family is dedup_simhash.
 
-    Candidate generation is BUCKET-GROUPED (r11, the
-    minhash_verified_pairs / dedup_simhash restructure): the former
-    band self-join compiled its two sides as separate concurrent AQE
-    query stages, so the ENTIRE subtree below it — including the
-    mapInPandas hash, the operator's most expensive stage — computed
-    twice, and the join paid two band exchanges + two sorts plus a
-    3-column distinct over the array payloads. Grouping the capped
-    buckets (≤64 members — the hot-bucket window above bounds the
-    array, and its exchange on (band_idx, band_val) IS this
-    aggregation's clustering) emits each bucket's i<j pairs with the
-    hamming filter inline: the pandas hash runs once, one band
+    Candidate generation is bucket-grouped (`pairs.bucket_pairs`): the
+    capped buckets' i<j pairs are emitted with the hamming cut
+    in-array, so the pandas hash runs once (a band self-join computed
+    it twice, as separate concurrent AQE stages), there is one band
     shuffle, and only (doc_a, doc_b, hamming) rows — never the band
     arrays — cross the final distinct's exchange."""
     d = load_table_spread(spark, sf_dir, "documents", "doc_id").filter(
@@ -426,15 +420,10 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bands",
         F.posexplode("bands").alias("band_idx", "band_val"),
     )
-    bucket_w = W.partitionBy("band_idx", "band_val")
-    bands = bands.withColumn("bsz", F.count("*").over(bucket_w)).filter(
-        F.col("bsz") <= 64
-    )
     # sort_array orders members by doc_id (first struct field, unique
-    # per bucket), so the i<j emission reproduces the old join's
-    # doc_a < doc_b orientation exactly; hamming is a pure function of
-    # the pair, so the distinct across buckets keeps the same set the
-    # old (doc_a, doc_b, ba, bb) distinct produced.
+    # per bucket), so doc_a < doc_b; hamming is a pure function of the
+    # pair, so the distinct across buckets keeps one row per pair.
+    bands = drop_hot_buckets(bands, cap=64, keys=("band_idx", "band_val"))
     grouped = bands.groupBy("band_idx", "band_val").agg(
         F.sort_array(F.collect_list(F.struct("doc_id", "bands"))).alias("ms")
     )
@@ -442,18 +431,12 @@ def mm_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"bit_count(element_at(a.bands, {j}) ^ element_at(b.bands, {j}))"
         for j in range(1, _PH_BANDS + 1)
     )
-    pairs_arr = F.expr(
-        "flatten(transform(ms, (a, i) -> "
-        "filter(transform(slice(ms, i + 2, size(ms) - i - 1), b -> "
-        "named_struct('doc_a', a.doc_id, 'doc_b', b.doc_id, "
-        f"'hamming', cast({xor_sum} as int))), "
-        f"p -> p.hamming <= {_PH_HAMMING_MAX})))"
-    )
-    return (
-        grouped.select(F.explode(pairs_arr).alias("p"))
-        .select("p.*")
-        .distinct()
-    )
+    return bucket_pairs(
+        grouped,
+        "ms",
+        {"doc_a": "a.doc_id", "doc_b": "b.doc_id", "hamming": f"cast({xor_sum} as int)"},
+        keep=f"p.hamming <= {_PH_HAMMING_MAX}",
+    ).distinct()
 
 
 @query(

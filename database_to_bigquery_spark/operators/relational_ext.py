@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..data import load_table
 from ..registry import query
+from .pairs import bucket_pairs
 
 
 @query(
@@ -1108,12 +1109,12 @@ def q_basket_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast. Top-15 is ordered on ROUNDED lift with pair
     tie-breaks — a cross-engine-stable cut (text_pmi_collocations
     policy)."""
-    # One groupBy(order) with in-array pair emission (r10, the
-    # graph_item_jaccard restructure): collect_set dedups within the
-    # basket, so the single exchange on l_orderkey replaces BOTH the
-    # (ok, part) distinct and the self-join's two ok-keyed sides. The
-    # persisted per-basket relation feeds the basket total, the
-    # supports, and the pair counts.
+    # One groupBy(order) with in-array pair emission
+    # (`pairs.bucket_pairs`): collect_set subsumes the (ok, part)
+    # distinct, so the single exchange on l_orderkey replaces it and
+    # the self-join's two ok-keyed sides. The persisted per-basket
+    # relation feeds the basket total, the supports, and the pair
+    # counts.
     # NULL l_orderkey filtered for the same reason as
     # q_cooccurrence_pairs (advisor r10): the old (ok, part) distinct +
     # self-join dropped NULL ok via the equi-key; a groupBy would keep
@@ -1129,14 +1130,8 @@ def q_basket_affinity_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     supp = baskets.select(F.explode("items").alias("part")).groupBy("part").agg(
         F.count("*").alias("s")
     )
-    pairs_arr = F.expr(
-        "flatten(transform(items, (a, i) -> "
-        "transform(slice(items, i + 2, size(items) - i - 1), b -> "
-        "named_struct('part_a', a, 'part_b', b))))"
-    )
     pairs = (
-        baskets.select(F.explode(pairs_arr).alias("p"))
-        .select("p.*")
+        bucket_pairs(baskets, "items", {"part_a": "a", "part_b": "b"})
         .groupBy("part_a", "part_b")
         .agg(F.count("*").alias("n_both"))
         .filter(F.col("n_both") >= 2)

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..data import bounded, load_table, load_table_spread
 from ..registry import query
+from .pairs import block_pairs, block_sides
 
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
 _TOP_K = 5
@@ -1323,7 +1324,6 @@ def sim_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------- kNN join ----
 
 _KNN_K = 5  # neighbors per vector
-_KNN_BLOCKS = 8
 _KNN_MARGIN = 8  # per-block candidate surplus over k (ordering slack)
 
 
@@ -1370,28 +1370,7 @@ def sim_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     e = e.withColumn("nrm", F.sqrt(_dot("v", "v"))).persist()
 
-    # replication via one explode of a generated (bi, bj, side) array
-    # (r10, the _tagged_gid_blocks fix): no Python-parallelized
-    # broadcast builds, no duplicated union branches
-    vecs = e.withColumn("blk", (F.col("vec_id") % _KNN_BLOCKS).cast("int"))
-    last = F.lit(_KNN_BLOCKS - 1).cast("int")
-    reps = F.concat(
-        F.transform(
-            F.sequence(F.col("blk"), last),
-            lambda j: F.struct(
-                F.col("blk").alias("bi"), j.alias("bj"), F.lit("a").alias("side")
-            ),
-        ),
-        F.transform(
-            F.sequence(F.lit(0).cast("int"), F.col("blk")),
-            lambda i: F.struct(
-                i.alias("bi"), F.col("blk").alias("bj"), F.lit("b").alias("side")
-            ),
-        ),
-    )
-    tagged = vecs.select("vec_id", "v", "nrm", F.explode(reps).alias("r")).select(
-        "r.bi", "r.bj", "vec_id", "v", "nrm", "r.side"
-    )
+    tagged = block_pairs(e, "vec_id")
 
     n_cand = _KNN_K + _KNN_MARGIN
 
@@ -1399,8 +1378,7 @@ def sim_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        a_rows = pdf[pdf["side"] == "a"]
-        b_rows = pdf[pdf["side"] == "b"]
+        a_rows, b_rows, same = block_sides(pdf)
         out_id, out_nb = [], []
         if not a_rows.empty and not b_rows.empty:
             ma = np.stack(list(a_rows["v"])).astype(np.float64)
@@ -1410,7 +1388,6 @@ def sim_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             ids_a = a_rows["vec_id"].to_numpy()
             ids_b = b_rows["vec_id"].to_numpy()
-            same = pdf["bi"].iat[0] == pdf["bj"].iat[0]
             if same:
                 cos[ids_a[:, None] == ids_b[None, :]] = -np.inf  # no self-pairs
             # per-a top candidates from this block's b side

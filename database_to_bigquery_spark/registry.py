@@ -45,162 +45,72 @@ class QuerySpec:
 _REGISTRY: dict[str, QuerySpec] = {}
 
 # The external driver samples the FIRST 50 entries of queries() for its
-# per-round correctness attestation (CORRECTNESS_r{N}.json). Registration
-# order is module-import order, which buried the relational core /
-# similarity / streaming / UDF families past position 50 in round 1
-# (VERDICT.md "driver coverage blind spot"). This explicit prefix pins at
-# least one *oracle-bearing* representative of every SURVEY.md §2 operator
-# family (S1-S19, X1-X17) into the sampled window; round 2 additionally
-# rotates in the new flagship operators (count-min, k-means, BPE, bloom,
-# PSI, streaming sketch, power iteration, corpus funnel) in place of
-# second representatives of already-attested families — every family
-# keeps at least one pinned oracle-bearing query. Keep at exactly <=50
-# names.
-#
-# Round-3 rotation (this pin): every r02-attested non-family-critical
-# entry swapped for a still-unattested oracle-bearing flagship — the
-# registry-noted candidates (sim_topk_ivfpq, graph_cc_pointer_jumping,
-# sim_semantic_decontamination, text_bigram_kn_score,
-# ts_decayed_engagement, text_vocab_growth, q_class_balanced_sample,
-# mm_scene_split, q_merkle_bucket_diff, q_join_cardinality_estimate,
-# q_webdataset_shard_plan, q_corpus_quality_report, q_pipe_syntax,
-# udf_arrow_grouped_span) plus the VERDICT-named q_merge_with_delete,
-# text_length_outlier_filter, q_freshness_sla_audit,
-# stream_session_windows. Every §2 family keeps at least one
-# oracle-bearing representative in the window (gated by
-# tests/test_registry_order.py). Rotated-out r02-green entries:
-# q_countmin_sketch, dedup_semdedup, sim_topk_pq, q_snapshot_diff_cdc,
-# text_quality_linear_probe, sim_kmeans_2iter, q_gdpr_erasure_audit,
-# text_bpe_merges, llm_corpus_prepare, q_bloom_filter_membership,
-# dedup_clusters, ts_stl_decompose, mm_phash_neardup, q_psi_drift,
-# q_decile_lift, sim_power_iteration, ts_sessionize. r04 rotation
-# (previously unattested flagships in; r03-green out):
-# q_merkle_bucket_diff → sim_knn_join_exact (sim_topk_ivfpq kept —
-# it carries the PQ family), q_webdataset_shard_plan → mm_webdataset_write,
-# q_percentiles → q_histogram_equi_depth, ts_decayed_engagement →
-# ts_holt_winters, q_pipe_syntax → q_recursive_month_spine,
-# stream_session_windows → stream_stateful_user_totals (back in).
-# r04 late rotation (new round-4 flagships in; r03-green out):
-# text_tfidf_top_terms -> text_repeated_ngrams, mm_scene_split ->
-# sim_ivf_incremental_add, q_funnel_conversion -> stream_knn_probe,
-# q_salted_hot_key_join -> mm_tar_member_index, dedup_minhash_lsh ->
-# mm_webdataset_read (X12's oracle-bearing window rep stays
-# dedup_exact_text; minhash r03-attested rows-only).
-# r07 rotation (VERDICT r6 task 3): the four new r6 ops in
-# (q_dp_noisy_sum, sim_covariance_matrix, llm_curriculum_order,
-# dedup_simhash) plus one rep per large never-attested family
-# (q_funnel_time_windowed, q_survival_km, q_activity_streaks, q_ks_test,
-# q_corr_matrix, q_merkle_bucket_diff). Out — all r06-green, each family
-# still covered in-window: q_hash_agg_functions (X5 ← q1),
-# q_table_checksum (checksum ← q_merkle_bucket_diff), mm_webdataset_read,
-# text_stats (X14 ← text_quality_threshold_sweep), text_repeated_ngrams,
-# sim_ivf_incremental_add, mm_binary_metadata (X15 ← mm_webdataset_write
-# + mm_phash_neardup), text_length_outlier_filter, stream_tumbling_hourly
-# (X16 ← stream_stateful_user_totals), q_dp_noisy_counts (DP ←
-# q_dp_noisy_sum).
-# r08 rotation (VERDICT r7 task 2): the three r7-new ops in
-# (dedup_cluster_keep_best — oracle, sim_knn_join_ivf_whitened +
-# stream_knn_probe_ivf — rows-only beside oracle-bearing family mates)
-# plus one oracle-bearing rep per large never-attested family
-# (q_chi_square_independence, q_cohort_retention, ts_gapfill_hourly,
-# q_variant_json, text_pack_sequences, q_stratified_sample;
-# q_zorder_layout deferred to r9 — only 9 slots free without evicting
-# a sole-family representative). Out — all r07-attested, each family
-# still covered in-window: q_corr_matrix + q_ks_test (statistics ←
-# q_chi_square_independence), q_json_extract (X11 ← q_variant_json),
-# dedup_exact_text (X12 ← dedup_cluster_keep_best), dedup_simhash
-# (X15+ phash ← mm_phash_neardup), sim_topk_bruteforce (X13 ←
-# sim_topk_ivfpq), q_survival_km + q_activity_streaks
-# (survival/retention ← q_cohort_retention — retention curves ARE the
-# survival function of churn), llm_chunk_manifest (packing ←
-# text_pack_sequences).
-# r10 rotation (VERDICT r9 task 3): the per-round attestation
-# bandwidth problem was STRUCTURAL — the family-coverage gate pinned
-# 45/50 seats because coverage was defined as "a family rep sits in
-# the current window". tests/test_registry_order.py now defines
-# coverage as ROLLING: a family counts covered if any representative
-# was attested green within the last ATTESTATION_WINDOW rounds
-# (derived from the committed CORRECTNESS_r*.json history), falling
-# back to the in-window-oracle-rep rule only for families whose
-# attestations have expired.
-# r11 rotation (VERDICT r10 task 1 + 8): 47 of the 50 r10 seats
-# attested green, so they rotate out. The two r10 FAILURES stay seated
-# so their fixes re-attest this round: stream_sliding_windows (oracle
-# tstz typing, fixed in streaming/batch_equiv.py) and q_map_functions
-# (list columns the driver's canonicalizer cannot sort, now
-# JSON-encoded on both sides). sim_knn_join_ivf2 is PULLED — rows-only
-# entries burn an attestation seat as `no_oracle` (its purity stays
-# pinned by tests/test_llm_ops.py and its family by the r10-green
-# sim_knn_join_exact/sim_topk_ivfpq oracles). The other 48 seats go to
-# never-attested oracle-bearing first-timers (83-query backlog after
-# r10), spread across families; every family stays covered by its
-# r09/r10 rolling attestation. Each seated query was re-verified
-# against the driver-strict gate (tools/check_oracle.py now fails
-# tz-aware timestamps and list-typed result columns) at sf0.001 AND
-# sf0.01 before taking its seat.
+# per-round correctness attestation (CORRECTNESS_r{N}.json), and
+# registration order is module-import order, so DRIVER_PRIORITY pins
+# that window. Standing rule for filling it (gated by
+# tests/test_registry_order.py):
+#   * family coverage is ROLLING: a SURVEY.md §2 operator family is
+#     covered while any representative was attested green within the
+#     last ATTESTATION_WINDOW rounds; only a lapsed family needs an
+#     oracle-bearing seat here;
+#   * every other seat goes to an oracle-bearing query that was never
+#     attested or whose implementation changed since its last
+#     attestation; a seat attested green rotates out the next round,
+#     a failure stays seated until its fix re-attests;
+#   * rows-only queries take no seat (they attest only as no_oracle);
+#   * a query is seated only after tools/check_oracle.py passes it at
+#     sf0.001 and sf0.01.
+# git log keeps the per-round rotation history.
 DRIVER_PRIORITY: tuple[str, ...] = (
-    # the two r10 attestation failures, re-seated with their fixes
-    "q_map_functions",        # X11 map surface — arrays now JSON-encoded
-    "stream_sliding_windows", # X16 — oracle cast to plain TIMESTAMP
-    # TPC-H stock forms never driver-attested (X1-X10 composites)
-    "q4_order_priority",
-    "q11_important_parts",
-    "q14_promo_revenue",
-    "q17_small_quantity_revenue",
-    "q20_excess_shippers",
-    # behavioral funnels / engagement first-timers
-    "q_time_to_convert",
-    "q_cumulative_distinct_users",
-    "q_session_path_topk",
-    "q_change_contribution",
-    "q_rfm_segmentation",
-    "q_new_vs_returning",
-    "q_stickiness_dau_wau",
-    # graph first-timer
-    "graph_label_propagation_2iter",
-    # statistics first-timers
-    "q_gini_concentration",
-    "q_mad_outliers",
-    # similarity first-timers (X13)
-    "sim_label_centroids",
-    "sim_topk_sq8",
-    "sim_hard_negatives",
-    # UDF surface first-timers (X17)
-    "udf_grouped_zscore",
-    "udf_grouped_agg_weighted",
-    "udf_arrow_vector_norm",
-    # streaming batch-equivalence first-timers (X16)
-    "stream_click_attribution",
-    "stream_dedup_ids",
-    "stream_static_enrich",
-    "stream_countmin_cells",
-    # training-prep / sampling first-timers
-    "q_asof_nearest",
-    "q_leakage_safe_split",
-    "q_temperature_mixture",
-    # text-analysis first-timers (X14)
-    "text_char_entropy_filter",
-    "text_corpus_overlap",
-    "text_inverted_index",
-    "text_pmi_collocations",
-    "text_sentence_chunk",
-    "text_bpe_tokenize",
-    # timeseries first-timers
-    "ts_forward_fill",
-    "ts_resample_ohlc",
-    "ts_scd2_intervals",
-    "ts_rolling_zscore",
-    "ts_time_weighted_avg",
-    "ts_autocorr_lag1",
-    "ts_ols_trend",
-    "ts_peak_concurrency",
-    # relational surface first-timers
-    "q_cooccurrence_pairs",   # r10 grouped single-pass rewrite
-    "q_cube",
-    "q_window_running",
-    "q_array_functions",
-    "q_string_agg_ordered",
-    "q_calendar_dim",
+    # pair-generation callers rewritten onto operators/pairs.py
+    "mm_phash_neardup",
+    "graph_item_jaccard",
+    "q_basket_affinity_lift",
+    "dedup_ngram_jaccard",
+    "dedup_containment",
+    "dedup_embedding_cosine",
+    "sim_knn_join_exact",
+    "llm_corpus_prepare",
+    # rewritten after their last attestation
+    "sim_topk_ivfpq",
+    "dedup_incremental_clusters",
+    # never-attested: relational surface
+    "q_conditional_agg_pivot",
+    "q_sort_limit",
+    "q_distinct",
+    "q_scalar_functions",
+    "q_date_functions",
+    "q_array_agg_ordered",
+    "q_set_ops_all",
+    "q_posexplode_words",
+    "q_window_first_last_nth",
+    "q_boolean_aggregates",
+    "q_offset_pagination",
+    "q_partial_agg_merge",
+    "q_salted_two_phase_agg",
+    "q_sql_udf_library",
+    # never-attested: statistics and sampling
+    "q_ntile_stats",
+    "q_largest_remainder_alloc",
+    "q_histogram",
+    "q_hash_sample",
+    "q_dataset_mixture",
+    "q_minmax_scale",
+    "q_weighted_sample",
+    # never-attested: text analysis
+    "text_quality_score",
+    "text_normalize",
+    "text_novelty_ratio",
+    "text_repeated_ngram_coverage",
+    "text_chunk_fixed",
+    # never-attested: timeseries
+    "ts_session_window_builtin",
+    "ts_interval_coverage",
+    "ts_cusum_changepoint",
+    "ts_lttb_downsample",
+    "ts_forecast_backtest",
+    "ts_downsample_m4",
+    "ts_dow_hour_heatmap",
 )
 
 

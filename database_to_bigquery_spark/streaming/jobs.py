@@ -621,11 +621,12 @@ def probe_layout(sh: DataFrame, sig: DataFrame) -> tuple[DataFrame, DataFrame, D
     shuffles and sorts per micro-batch
     (test_fuzzy_dedup_corpus_side_not_reshuffled asserts this on the
     executed plan). The band relation is hot-bucket-capped HERE, once
-    at layout build (`dedup.drop_hot_buckets` — its window rides the
+    at layout build (`pairs.drop_hot_buckets` — its window rides the
     same bucket-key shuffle the part-sort needs), so per-batch probes
     pay neither the cap scan nor hot-bucket join blowups. Callers own
     the persisted relations' lifetime."""
-    from ..operators.dedup import drop_hot_buckets, signature_bands
+    from ..operators.dedup import signature_bands
+    from ..operators.pairs import drop_hot_buckets
 
     sh = _part_sort(sh, "doc_id", "g")
     sig = _part_sort(sig, "doc_id")
@@ -773,11 +774,11 @@ def run_fuzzy_dedup_stream(
     and admissions store have grown."""
     from ..operators.dedup import (
         cross_minhash_pairs,
-        drop_hot_buckets,
         minhash_signatures,
         shingles_of,
         signature_bands,
     )
+    from ..operators.pairs import drop_hot_buckets
 
     if standing_store is not None and isinstance(standing_store, str):
         from .standing_store import StandingStore

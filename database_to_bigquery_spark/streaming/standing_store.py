@@ -66,10 +66,10 @@ from ..operators.dedup import (
     _as_gids,
     _est_threshold,
     _sig_agreement,
-    drop_hot_buckets,
     minhash_signatures,
     signature_bands,
 )
+from ..operators.pairs import drop_hot_buckets
 
 TARGET_BAND_BUCKET_ROWS = 4096
 TARGET_DOC_BUCKET_DOCS = 128

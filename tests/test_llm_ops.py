@@ -32,6 +32,67 @@ def test_minhash_finds_all_true_near_dups(spark, sf_dir):
     assert len(truth) > 0  # fixture plants near-dups — the test is non-vacuous
 
 
+@pytest.mark.parametrize(
+    "m, key, cap",
+    [(0, "band_hash", None), (1, "band_val", 64), (2, "band_hash", None), (128, "band_val", 64)],
+)
+def test_pair_primitives(spark, m, key, cap):
+    """The candidate-pair primitives on an m-member bucket: bucket_pairs
+    emits exactly the C(m, 2) doc_a < doc_b pairs that pass its filter,
+    over struct or scalar members, block_pairs routes each unordered id
+    pair into exactly one (bi, bj) group (on opposite sides across
+    blocks), and drop_hot_buckets keeps a bucket of `cap` members but
+    drops one of cap + 1."""
+    from itertools import combinations
+
+    from pyspark.sql import functions as F
+
+    from database_to_bigquery_spark.operators.pairs import (
+        LSH_BUCKET_CAP,
+        block_pairs,
+        bucket_pairs,
+        drop_hot_buckets,
+    )
+
+    ids = [3 * i + 1 for i in range(m)][::-1]  # every block, unsorted input
+    every = set(combinations(sorted(ids), 2))
+    members = spark.createDataFrame([(ids,)], "ids array<long>").select(
+        F.sort_array(F.transform("ids", lambda x: F.struct(x.alias("doc_id")))).alias("ms")
+    )
+    fields = {"doc_a": "a.doc_id", "doc_b": "b.doc_id"}
+    got = [tuple(r) for r in bucket_pairs(members, "ms", fields).collect()]
+    assert sorted(got) == sorted(every) and len(got) == m * (m - 1) // 2
+    kept = bucket_pairs(members, "ms", fields, keep="p.doc_b - p.doc_a != 3").collect()
+    assert {tuple(r) for r in kept} == {(x, y) for x, y in every if y - x != 3}
+    scalars = members.select(F.col("ms.doc_id").alias("ids"))
+    got = bucket_pairs(scalars, "ids", {"doc_a": "a", "doc_b": "b"}).collect()
+    assert sorted(tuple(r) for r in got) == sorted(every)
+
+    tagged = block_pairs(spark.createDataFrame([(i,) for i in ids], "doc_id long"), "doc_id")
+    groups: dict[tuple[int, int], list[tuple[int, str]]] = {}
+    for r in tagged.collect():
+        groups.setdefault((r["bi"], r["bj"]), []).append((r["doc_id"], r["side"]))
+    for x, y in every:
+        homes = []
+        for (bi, bj), rows in groups.items():
+            a = {d for d, s in rows if s == "a"}
+            b = {d for d, s in rows if s == "b"}
+            if (x in a and y in b) or (y in a and x in b):
+                homes.append((bi, bj))
+                if bi != bj:
+                    assert (x in a) != (y in a), (x, y, bi, bj)
+        assert len(homes) == 1, (x, y, homes)
+
+    kw = {} if cap is None else {"cap": cap}  # None: the default LSH cap
+    n = cap or LSH_BUCKET_CAP
+    rows = [(0, 1, d) for d in range(n)] + [(0, 2, d) for d in range(n + 1)] + [(1, 2, 0)]
+    bands = spark.createDataFrame(rows, f"band_idx int, {key} int, doc_id int")
+    capped = drop_hot_buckets(bands, keys=("band_idx", key), **kw)
+    sizes = {(r[0], r[1]): r[2] for r in capped.groupBy("band_idx", key).count().collect()}
+    assert sizes == {(0, 1): n, (1, 2): 1}
+    assert capped.columns == bands.columns
+
+
 def test_gid_boundary_is_encoding_invariant(spark, sf_dir):
     """`_as_gids` must make string-gram callers and `shingles_of`
     (gid-at-source) callers indistinguishable to the miner: the

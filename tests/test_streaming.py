@@ -1390,7 +1390,7 @@ def test_fuzzy_dedup_corpus_side_not_reshuffled(spark, sf_dir):
         root = probe._jdf.queryExecution().executedPlan()
 
         bad: list[str] = []
-        smj = [0]
+        smj_keys: list[tuple[str, ...]] = []
 
         def walk(node, parent_name):
             name = node.nodeName()
@@ -1398,7 +1398,10 @@ def test_fuzzy_dedup_corpus_side_not_reshuffled(spark, sf_dir):
                 walk(node.executedPlan(), parent_name)
                 return
             if "SortMergeJoin" in name:
-                smj[0] += 1
+                keys = node.leftKeys()
+                smj_keys.append(
+                    tuple(sorted(keys.apply(i).toString().split("#")[0] for i in range(keys.size())))
+                )
             if "QueryStage" in name:  # Table/Shuffle/Broadcast stage
                 walk(node.plan(), parent_name)  # leaf wrappers: descend
                 return
@@ -1412,9 +1415,15 @@ def test_fuzzy_dedup_corpus_side_not_reshuffled(spark, sf_dir):
 
         walk(root, "")
         assert not bad, bad
-        # the band join, signature attach, verification join and size
-        # lookup are all corpus-sized: each must be an SMJ
-        assert smj[0] >= 4, f"expected >=4 SortMergeJoins, saw {smj[0]}"
+        # exactly the three corpus-sized joins are SMJs: band join,
+        # signature attach and verification join. The set sizes ride the
+        # signature rows, so no size-attach join (a second corpus_id-keyed
+        # SMJ) may exist.
+        assert sorted(smj_keys) == [
+            ("band_hash", "band_idx"),
+            ("corpus_id",),
+            ("corpus_id", "g"),
+        ], smj_keys
     finally:
         for df in (c_sh, c_sig, c_bands):
             df.unpersist()

@@ -43,12 +43,15 @@ from pyspark.sql import functions as F  # noqa: E402
 from tools.calm import timed_calm  # noqa: E402
 from database_to_bigquery_spark.operators.dedup import (  # noqa: E402
     _as_gids,
-    drop_hot_buckets,
     minhash_signatures,
     minhash_verified_pairs,
     shingles_of,
     signature_bands,
     spread_partitions,
+)
+from database_to_bigquery_spark.operators.pairs import (  # noqa: E402
+    LSH_BUCKET_CAP,
+    drop_hot_buckets,
 )
 from database_to_bigquery_spark.session import get_spark  # noqa: E402
 from tools.miner_recall_probe import close_over_exact  # noqa: E402
@@ -70,12 +73,10 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=3)
     args = ap.parse_args()
 
-    from database_to_bigquery_spark.operators.dedup import _LSH_BUCKET_CAP
-
     def parse_config(c: str) -> tuple[int, int, int]:
         scheme, _, cap_s = c.partition("@")
         b, r = map(int, scheme.split("x"))
-        return b, r, int(cap_s) if cap_s else (args.cap or _LSH_BUCKET_CAP)
+        return b, r, int(cap_s) if cap_s else (args.cap or LSH_BUCKET_CAP)
 
     configs = [parse_config(c) for c in args.configs]
 

@@ -39,7 +39,7 @@ to a NAMED mechanism instead of a residual —
   * est_filter: bands collided but the signature-agreement estimate
     fell below the pre-filter threshold;
   * hot_bucket_cap: every colliding band bucket exceeded the
-    _LSH_BUCKET_CAP population in the standing state;
+    LSH_BUCKET_CAP population in the standing state;
   * unexplained: none of the above (should be empty — a real bug).
 
 Usage: python tools/stream_recall_probe.py [x10|x50] [--files 10]
@@ -61,7 +61,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from database_to_bigquery_spark.operators.dedup import (  # noqa: E402
-    _LSH_BUCKET_CAP,
     _MH_BANDS,
     _MH_K,
     _est_threshold,
@@ -69,6 +68,7 @@ from database_to_bigquery_spark.operators.dedup import (  # noqa: E402
     shingles_of,
     signature_bands,
 )
+from database_to_bigquery_spark.operators.pairs import LSH_BUCKET_CAP  # noqa: E402
 from database_to_bigquery_spark.session import get_spark  # noqa: E402
 from database_to_bigquery_spark.streaming.jobs import (  # noqa: E402
     run_fuzzy_dedup_stream,
@@ -174,7 +174,7 @@ def attribute_misses(
                 per.append((p, "band_miss", est))
             elif est < thr:
                 per.append((p, "est_filter", est))
-            elif all(pops.get(k, 0) > _LSH_BUCKET_CAP for k in shared):
+            elif all(pops.get(k, 0) > LSH_BUCKET_CAP for k in shared):
                 per.append((p, "hot_bucket_cap", est))
             else:
                 per.append((p, "unexplained", est))
