@@ -49,11 +49,13 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-# Reference wall seconds for _calibration() on an idle host of this
-# class (32 vCPU / 128 GiB, measured 2026-08-16 as the median of 5
-# warm reps: [0.769, 0.727, 0.841, 0.775, 0.770]). The VM this bench
-# runs on shows ±40% phases with no local
-# cause (BASELINE.md), which has twice produced garbage cross-round
+# Reference wall seconds for _calibration() on an idle host, PER CORE:
+# the workload gives every core one 100M-row partition, so the same
+# constant holds at any core count (measured 2026-08-16 on 32 vCPU /
+# 128 GiB as the median of 5 warm reps: [0.769, 0.727, 0.841, 0.775,
+# 0.770]; a 4-core host read 0.75-0.95 s in five medians of 3). The
+# VM this bench runs on shows ±40% phases with no local cause
+# (BASELINE.md), which has twice produced garbage cross-round
 # ratios (r4: uniform 1.3x; r7: 1.162x that an idle rerun showed was
 # 0.90x) — the pinned workload below measures the MACHINE, so any
 # consumer can divide the query walls by `calibration.ratio` before
@@ -62,13 +64,14 @@ _CAL_REFERENCE_SEC = 0.77
 
 
 def _calibration(spark) -> float:
-    """One pinned CPU-bound measurement: xxhash64 over 3.2B longs on 32
-    fixed partitions — pure JVM whole-stage codegen, no I/O, no Python
-    workers, independent of the query set and the SF dir. The %-mod
-    keeps the ANSI sum inside long range. Returns wall seconds; callers
-    take a median of a few reps."""
+    """One pinned CPU-bound measurement: xxhash64 over 100M longs per
+    core, one partition per core — pure JVM whole-stage codegen, no
+    I/O, no Python workers, independent of the query set and the SF
+    dir. The %-mod keeps the ANSI sum inside long range. Returns wall
+    seconds; callers take a median of a few reps."""
+    cores = spark.sparkContext.defaultParallelism
     df = (
-        spark.range(0, 3_200_000_000, 1, 32)
+        spark.range(0, cores * 100_000_000, 1, cores)
         .select(F.sum(F.xxhash64("id") % 100000).alias("h"))
     )
     t0 = time.time()

@@ -23,4 +23,16 @@ Layout:
     streaming   Structured Streaming over events (X16)
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 __version__ = "0.1.0"
+
+# Module-level helpers of every submodule run inside Python workers
+# (pandas UDFs, mapInPandas, applyInPandas). Pickling the package by
+# value ships them with the task, so a worker never imports the
+# package, which fails when the Spark application starts from a
+# directory outside the repository. cloudpickle matches submodules by
+# their parent's name, so this one registration covers them all.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])

@@ -315,7 +315,8 @@ def blocked_jaccard_pairs(spark: SparkSession, sh: DataFrame, threshold: float) 
 _MH_PRIME = (1 << 31) - 1
 # Default banding scheme: 16 bands × 5 rows (k = 80), flipped from
 # 16 × 4 in r9 on the measured (bands, rows) frontier
-# (tools/banding_probe.py, SCALE.md §16). One band collides at J^rows,
+# (tools/banding_probe.py @ 43b8cbc, SCALE.md §16). One band collides
+# at J^rows,
 # so rows=5 suppresses the adversarial twin background (J ≈ 0.09 mean
 # / 0.152 p99) ~11× per band vs rows=4 while 16 bands keep ground-truth
 # recall ≥ 0.99 at every measured tier (0.9963 at 1.25M docs, truth
@@ -345,8 +346,9 @@ _MH_B = [_rng.randrange(0, _MH_PRIME) for _ in range(_MH_MAX_K)]
 # `bands` buy back recall at the dedup threshold. The r8 x250 ladder
 # measured the (16, 4) default transitional-superlinear (e 1.15)
 # precisely because its per-band collision rate at background J is
-# 16·J⁴; see tools/banding_probe.py for the measured (bands, rows)
-# frontier and SCALE.md §16 for the numbers behind the default below.
+# 16·J⁴; see tools/banding_probe.py @ 43b8cbc for the measured
+# (bands, rows) frontier and SCALE.md §16 for the numbers behind the
+# default below.
 def _est_threshold(k: int) -> float:
     """Signature-agreement pre-filter threshold for a k-length
     signature: ~2.5σ below the J = 0.6 output bar (σ = √(0.6·0.4/k)),
@@ -1270,19 +1272,6 @@ def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
 
-    return incremental_label_update(new_edges, standing)
-
-
-def incremental_label_update(new_edges: DataFrame, standing: DataFrame) -> DataFrame:
-    """The per-batch label-graph remap of `dedup_incremental_clusters`,
-    factored out so tools/incremental_steady_probe.py can time it (and
-    the edge mining) against a PREBUILT standing state across corpus
-    sizes — isolating the steady-state per-batch cost the docstring
-    claims is O(new edges) from the one-time backfill that dominates
-    the twin-ladder wall. ``new_edges`` is an (a, b) relation of newly
-    mined near-dup edges (already checkpointed by callers that fan it
-    out); ``standing`` is the (node, label) component table. Returns
-    the merged (component, cluster_size) view."""
     # map each new edge to the component labels it connects; a node
     # outside the standing labels (unclustered corpus doc or batch
     # doc) is its own label

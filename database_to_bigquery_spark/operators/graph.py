@@ -98,8 +98,9 @@ def graph_pagerank_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recompute the edge subtree k+1 times and grow the lineage).
     # r11 measured-and-REVERTED: pre-attaching outdeg to a persisted
     # `wedges` relation (deleting the per-iteration deg join) was
-    # twin-measured at the 30M-lineitem tier (tools/grouped_pairs_probe
-    # graph_pagerank_2iter old-vs-new): identical shuffle bytes
+    # twin-measured at the 30M-lineitem tier (graph_pagerank_2iter
+    # old-vs-new, tools/grouped_pairs_probe.py @ 43b8cbc): identical
+    # shuffle bytes
     # (285 MB — deg is a V-row relation that BROADCASTS in both
     # shapes, so the "deleted" join never paid an exchange) and
     # slightly worse CPU/wall (248 → 291 s task CPU) from the extra

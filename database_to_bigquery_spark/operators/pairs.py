@@ -38,18 +38,10 @@ whole signature / hash subtree ran twice.
 from __future__ import annotations
 
 import re
-import sys
 
-from pyspark import cloudpickle
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-
-# `block_sides` and `gid_intersections` run inside applyInPandas
-# workers. Pickling this module's functions by value spares those
-# workers an import of the package, which fails when the Spark
-# application starts from a directory outside the repository.
-cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 # Block count of the blocked all-pairs operators: B(B+1)/2 = 36
 # block-pair tasks (enough to keep every core busy, since same-block

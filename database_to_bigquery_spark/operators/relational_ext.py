@@ -857,7 +857,8 @@ def q_cooccurrence_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shape history (r10→r11): r10 replaced the self-join with a
     groupBy(order) + in-array pair emission; the r11 twin measurement
-    (tools/grouped_pairs_probe.py, x50/x250 + whale-basket variants)
+    (tools/grouped_pairs_probe.py @ 43b8cbc, x50/x250 + whale-basket
+    variants)
     REFUTED that trade for this query and it was reverted: the pair
     multiset IS the output here — no distinct is subsumed (unlike
     q_basket_affinity_lift) and no selective filter runs inside the

@@ -2431,8 +2431,8 @@ def sim_knn_join_ivf_whitened(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Corpus-size boundary for the auto entry's flat→two-level IVF tier
-# switch. Measured (tools/ivf2_probe.py + SCALING.md ladder, clustered
-# twin geometry, calm-gated): at 100k vecs flat 20.3 s vs ivf2 14.1 s
+# switch. Measured (tools/ivf2_probe.py @ 43b8cbc + SCALING.md ladder,
+# clustered twin geometry, calm-gated): at 100k vecs flat 20.3 s vs ivf2 14.1 s
 # (near-parity, both fine); at 500k vecs flat 118.2 s / e 1.26 vs ivf2
 # 71.8 s / e 0.98 — the Θ(n^1.5·d) vs Θ(n^(4/3)·d) asymptote is the
 # point, so the boundary sits between the tiers: below it the flat

@@ -719,7 +719,7 @@ def run_fuzzy_dedup_stream(
     the CONTRACT (judge r9 task 5):
       * admissions mode → True. The mode's promise is "dedup the
         ingest stream"; ground-truth measurement (r9,
-        tools/stream_recall_probe.py) showed every recall miss was an
+        tools/stream_recall_probe.py @ 43b8cbc) showed every recall miss was an
         intra-batch pair, so the self-probe is part of the mode.
       * static mode (``admissions_dir=None``) → False. The mode's
         promise is "flag documents that duplicate the STANDING
@@ -732,8 +732,8 @@ def run_fuzzy_dedup_stream(
         spanning different micro-batches remain out of scope there
         (nothing is admitted to match them against — that is what
         admissions mode is for). Both modes' recall is measured
-        against generator ground truth in tools/stream_recall_probe.py
-        (--mode static|admissions); rows in SCALE.md.
+        against generator ground truth (`--mode static|admissions` of
+        tools/stream_recall_probe.py @ 43b8cbc); rows in SCALE.md.
 
     ``standing_store`` (r11, judge r9 task 4 / r10 task 4): a built
     `streaming.standing_store.StandingStore` (or its path) replaces
@@ -997,7 +997,7 @@ def run_fuzzy_dedup_stream(
             # function docstring): a near-dup whose source arrives in
             # the SAME micro-batch matches neither the corpus nor any
             # admission tier — ground-truth recall measurement
-            # (tools/stream_recall_probe.py) caught the stream
+            # (tools/stream_recall_probe.py @ 43b8cbc) caught the stream
             # admitting both members of ~2.5% of dup pairs at 2000-doc
             # batches (recall 0.973, every miss an intra-batch pair;
             # the stream==batch equivalence test could not see it

@@ -38,8 +38,9 @@ LSM/ANN system uses, each sized to what it must answer:
      gate.
 
 Per-batch bytes-read is then O(batch + collisions) — measured by
-`tools/incremental_steady_probe.py --store` via the executor input-
-bytes counters. The driver-resident Bloom is the honest scale fence:
+`tools/incremental_steady_probe.py @ 43b8cbc` (`--store`) via the
+executor input-bytes counters. The driver-resident Bloom is the honest
+scale fence:
 at 10B docs × 16 bands it is ~320 GB and must shard (per band_idx, or
 the probe tier moves to a real KV/LSM service); at the 1-10M-doc/
 store-shard granularity a 100 TB deployment would actually partition

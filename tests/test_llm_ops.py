@@ -1359,3 +1359,43 @@ def test_lsh_funnel_matches_exact_funnel(spark, sf_dir):
         for r in llm_corpus_prepare_lsh(spark, sf_dir).collect()
     }
     assert lsh == exact
+
+
+def test_python_workers_need_no_package_import(sf_dir, tmp_path):
+    """Queries whose module-level pandas helpers run in Python workers
+    must run in an application started outside the repository, with
+    the package on the Spark driver's sys.path only, which is how a
+    host process imports __spark_entry__. Workers then cannot import
+    the package, so those helpers have to be pickled by value."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    names = [
+        "mm_fake_decode",
+        "mm_phash_neardup",
+        "mm_webdataset_read",
+        "mm_webdataset_write",
+        "sim_knn_join_ivf_auto",
+        "sim_knn_join_ivf_whitened",
+        "sim_whiten_identity_check",
+    ]
+    script = f"""
+import sys
+sys.path.insert(0, {str(repo)!r})
+from database_to_bigquery_spark.registry import all_specs
+from database_to_bigquery_spark.session import get_spark
+spark = get_spark("outside-repo")
+spark.sparkContext.setLogLevel("ERROR")
+specs = all_specs()
+for name in {names!r}:
+    specs[name].fn(spark, {sf_dir!r}).collect()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True, text=True, cwd=tmp_path, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]

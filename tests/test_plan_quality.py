@@ -224,7 +224,17 @@ def test_parse_byte_conf_units():
     assert _parse_byte_conf("-1") == -1  # broadcast disabled
 
 
-def test_suitewide_no_cartesian_no_row_udf(spark, sf_dir):
+@pytest.fixture(scope="module")
+def plan_census(spark, sf_dir):
+    """One pass of tools/plan_audit.census over EVERY registered query
+    (its default plan plus the threshold=-1 re-plan), shared by the
+    census-as-CI gates below so the suite plans each query once."""
+    from tools.plan_audit import census
+
+    return census(spark, sf_dir)
+
+
+def test_suitewide_no_cartesian_no_row_udf(plan_census):
     # census-as-CI: EVERY registered query must plan without a
     # CartesianProduct (the accidental-cross-join scale killer) and
     # without row-at-a-time Python evaluation (BatchEvalPython — only
@@ -232,20 +242,99 @@ def test_suitewide_no_cartesian_no_row_udf(spark, sf_dir):
     # spot checks above freeze specific shapes; this is the global
     # floor a new operator cannot slip under.
     failures = []
-    for name, spec in sorted(SPECS.items()):
-        try:
-            df = spec.fn(spark, sf_dir)
-            plan = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-        except Exception as exc:  # a plan-time failure is also a failure
-            failures.append((name, f"plan error: {type(exc).__name__}"))
+    for name, row in sorted(plan_census.items()):
+        if "error" in row:  # a plan-time failure is also a failure
+            failures.append((name, f"plan error: {row['error']}"))
             continue
-        if "CartesianProduct" in plan:
+        if row["cartesian"]:
             failures.append((name, "CartesianProduct"))
-        if "BatchEvalPython" in plan:
+        if row["row_udf"]:
             failures.append((name, "BatchEvalPython (row-at-a-time UDF)"))
     assert not failures, failures
+
+
+def test_single_partition_stages_are_bounded_or_twinned(plan_census):
+    """Census-as-CI for the one place a silent scale regression can
+    hide: a SinglePartition exchange. ~70 registered plans legitimately
+    carry one — but only because the collapsing input is an aggregate
+    or limit output (bounded), which tools/plan_audit.py verifies
+    mechanically by walking each such exchange's input subtree instead
+    of trusting docstrings. Any RAW-relation collapse (the global
+    window/sort that stops scaling) must name an in-repo scale twin;
+    a refactor that moves a single-partition stage onto raw data in
+    an un-twinned query fails here, not in production."""
+    failures = []
+    raw_twinned = []
+    for name, row in sorted(plan_census.items()):
+        if "error" in row:
+            failures.append((name, f"plan error: {row['error']}"))
+            continue
+        if "raw" in row["sp_classes"]:
+            if row["twin"]:
+                raw_twinned.append(name)
+            else:
+                failures.append(
+                    (name, f"RAW single-partition stage ({row['sp_classes']}) with no scale twin")
+                )
+    assert not failures, failures
+    # the classifier must stay non-vacuous: the known intentional
+    # raw-collapse exact twin is detected as such
+    assert "q_ntile_stats" in raw_twinned, raw_twinned
+
+
+def test_hint_forced_broadcasts_are_bounded_or_twinned(plan_census):
+    """Census-as-CI for the OTHER silent scale regression: an
+    unconditional `F.broadcast` hint on an unbounded relation (how the
+    r03 sim_knn_join_lsh corpus broadcast slipped in). The census
+    re-plans every registered query with auto-broadcast DISABLED
+    (threshold=-1) so only hint-forced BroadcastExchanges survive, then
+    classifies each one's input subtree (tools/plan_audit.broadcast_classes):
+    aggregate/limit output (incl. the bounded() cardinality-contract
+    limit) or dimension/literal scans pass; a raw fact/corpus relation
+    must carry a scale-twin annotation. Catalyst's own stats-driven
+    auto-broadcasts are deliberately exempt — they fall back to shuffle
+    joins at scale when the relation outgrows the threshold."""
+    failures = []
+    raw_twinned = []
+    for name, row in sorted(plan_census.items()):
+        if "error" in row:
+            failures.append((name, f"plan error: {row['error']}"))
+            continue
+        if row["hint_raw"]:
+            if row["twin"]:
+                raw_twinned.append(name)
+            else:
+                failures.append(
+                    (name, f"{row['hint_raw']} hint-forced RAW broadcast(s) with no scale twin")
+                )
+    assert not failures, failures
+    # non-vacuous: the known intentional corpus broadcasts (exact
+    # oracle twins) are detected as raw-and-twinned
+    assert "dedup_embedding_cosine" in raw_twinned, raw_twinned
+    assert "sim_knn_join_exact" in raw_twinned, raw_twinned
+
+
+def test_plan_census(plan_census, sf_dir):
+    """Pins every census row to the committed PLANS.md table. Any plan
+    change fails here until `python tools/plan_audit.py` regenerates
+    it, so the change is reviewed as a PLANS.md diff."""
+    from tools.plan_audit import PLANS_MD, table_row
+
+    with open(PLANS_MD) as f:
+        text = f.read()
+    assert f"Input: `{sf_dir}`" in text, "PLANS.md was generated at another scale factor"
+    committed = {
+        ln.split(" | ", 1)[0][2:]: ln
+        for ln in text.splitlines()
+        if ln.startswith("| ") and not ln.startswith("| query |")
+    }
+    fresh = {name: table_row(name, row) for name, row in plan_census.items()}
+    stale = sorted(
+        (name, committed.get(name), fresh.get(name))
+        for name in committed.keys() | fresh.keys()
+        if committed.get(name) != fresh.get(name)
+    )
+    assert not stale, f"PLANS.md is stale; regenerate with python tools/plan_audit.py: {stale}"
 
 
 def test_new_flagships_plan_shapes(spark, sf_dir):
@@ -292,40 +381,6 @@ def test_decayed_engagement_single_aggregation_pass(spark, sf_dir):
         ln for ln in plan.splitlines() if ln.strip().startswith("(") and "Scan parquet" in ln
     ]
     assert len(scans) == 2  # events for max-date + events for the sum
-
-
-def test_single_partition_stages_are_bounded_or_twinned(spark, sf_dir):
-    """Census-as-CI for the one place a silent scale regression can
-    hide: a SinglePartition exchange. ~70 registered plans legitimately
-    carry one — but only because the collapsing input is an aggregate
-    or limit output (bounded), which tools/plan_audit.py now verifies
-    mechanically by walking each such exchange's input subtree instead
-    of trusting docstrings. Any RAW-relation collapse (the global
-    window/sort that stops scaling) must name an in-repo scale twin;
-    a refactor that moves a single-partition stage onto raw data in
-    an un-twinned query fails here, not in production."""
-    from tools.plan_audit import single_partition_classes
-
-    failures = []
-    raw_twinned = []
-    for name, spec in sorted(SPECS.items()):
-        try:
-            df = spec.fn(spark, sf_dir)
-            plan = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-        except Exception as exc:
-            failures.append((name, f"plan error: {type(exc).__name__}"))
-            continue
-        classes = single_partition_classes(plan)
-        if "raw" in classes and not spec.scale_twin:
-            failures.append((name, f"RAW single-partition stage ({classes}) with no scale twin"))
-        if "raw" in classes and spec.scale_twin:
-            raw_twinned.append(name)
-    assert not failures, failures
-    # the classifier must stay non-vacuous: the known intentional
-    # raw-collapse exact twin is detected as such
-    assert "q_ntile_stats" in raw_twinned, raw_twinned
 
 
 def test_single_partition_classifier_on_canned_plans():
@@ -403,55 +458,6 @@ Input [1]: [sum#9]
 Arguments: SinglePartition, ENSURE_REQUIREMENTS, [plan_id=13]
 """
     assert sorted(single_partition_classes(two_trees)) == ["bounded", "raw"]
-
-
-def test_hint_forced_broadcasts_are_bounded_or_twinned(spark, sf_dir):
-    """Census-as-CI for the OTHER silent scale regression: an
-    unconditional `F.broadcast` hint on an unbounded relation (how the
-    r03 sim_knn_join_lsh corpus broadcast slipped in). Mechanism:
-    re-plan every registered query with auto-broadcast DISABLED
-    (threshold=-1) so only hint-forced BroadcastExchanges survive, then
-    classify each one's input subtree (tools/plan_audit.broadcast_classes):
-    aggregate/limit output (incl. the bounded() cardinality-contract
-    limit) or dimension/literal scans pass; a raw fact/corpus relation
-    must carry a scale-twin annotation. Catalyst's own stats-driven
-    auto-broadcasts are deliberately exempt — they fall back to shuffle
-    joins at scale when the relation outgrows the threshold."""
-    from tools.plan_audit import broadcast_classes
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    failures = []
-    raw_twinned = []
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # earlier tests leave persist()-registered subplans in the
-        # CacheManager, compiled under the DEFAULT threshold; their
-        # embedded auto-broadcasts would be substituted into the -1
-        # re-plan and misread as hint-forced. Classify fresh plans.
-        spark.catalog.clearCache()
-        for name, spec in sorted(SPECS.items()):
-            try:
-                df = spec.fn(spark, sf_dir)
-                plan = spark._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"
-                )
-            except Exception as exc:
-                failures.append((name, f"plan error: {type(exc).__name__}"))
-                continue
-            classes = broadcast_classes(plan)
-            if "raw" in classes and not spec.scale_twin:
-                failures.append(
-                    (name, f"hint-forced RAW broadcast ({classes}) with no scale twin")
-                )
-            if "raw" in classes and spec.scale_twin:
-                raw_twinned.append(name)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert not failures, failures
-    # non-vacuous: the known intentional corpus broadcasts (exact
-    # oracle twins) are detected as raw-and-twinned
-    assert "dedup_embedding_cosine" in raw_twinned, raw_twinned
-    assert "sim_knn_join_exact" in raw_twinned, raw_twinned
 
 
 def test_broadcast_classifier_flags_deliberate_raw_broadcast(spark, sf_dir):

@@ -6,8 +6,8 @@ calibration workload brackets it at ≤ 1.25× the idle reference on
 BOTH sides (advisor r8: gating on the mean let a calm-before/stormy-
 after mix pass); the residual ≤ 25% ratio is divided away and the
 median of `reps` runs absorbs bracket-missed spikes. Used by
-scale_probe.py (inline, the original), banding_probe.py, and
-time_census.py's calibrated top rows.
+scale_probe.py's points and time_census.py's calibrated top rows
+(and by tools/banding_probe.py @ 43b8cbc).
 """
 
 from __future__ import annotations

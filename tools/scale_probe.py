@@ -14,15 +14,14 @@ from __future__ import annotations
 
 import math
 import os
-import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import _CAL_REFERENCE_SEC, _calibration  # noqa: E402
+from bench import force  # noqa: E402
 from database_to_bigquery_spark.registry import all_specs  # noqa: E402
 from database_to_bigquery_spark.session import get_spark  # noqa: E402
+from tools.calm import timed_calm  # noqa: E402
 
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
@@ -236,10 +235,6 @@ DRIVER_TABLE = {
 }
 
 
-def force(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
 def _dirs_for(name: str) -> list[str]:
     if name in TWIN_PROBES:
         dirs = SF_DIRS + [d for d in TWIN_SF_DIRS if os.path.isdir(d)]
@@ -308,68 +303,27 @@ def main() -> None:
         cells = []
         points = []
         for sf in dirs:
-            # Retry-until-calm measurement (r8): the VM shows speed
-            # phases deep enough (pinned-workload ratios up to 3.3×)
-            # that neither raw walls nor linear normalization by a
-            # pure-CPU probe is trustworthy — a 3× slow phase inflated
-            # an x50 point 2.6×, and dividing by the CPU ratio then
-            # OVERcorrected a mixed workload 4× below its idle wall.
-            # So each point is accepted only when the bench calibration
-            # workload (BASELINE.md "Bench calibration") brackets it at
-            # ≤1.25× the idle reference on BOTH sides; otherwise wait
-            # and retry (keeping the calmest attempt after 5 tries —
-            # flagged with * in the cell). Within a calm bracket the
-            # residual ratio division is a ≤25% correction.
-            best = None
-            for attempt in range(5):
-                cal_before = _calibration(spark)
-                if cal_before / _CAL_REFERENCE_SEC > 1.25 and attempt < 4:
-                    print(
-                        f"  {name} @ {os.path.basename(sf)}: slow phase "
-                        f"(cal {cal_before / _CAL_REFERENCE_SEC:.2f}), waiting",
-                        flush=True,
-                    )
-                    time.sleep(25)
-                    continue
-                walls = []
-                for _ in range(3):
-                    t0 = time.time()
-                    force(specs[name].fn(spark, sf))
-                    walls.append(time.time() - t0)
-                    # twin-scale queries persist multi-GB shingle/
-                    # signature relations per run; left cached they
-                    # accumulate across runs and evict each other
-                    # (measured: the x50 ladder thrashes instead of
-                    # finishing). Each run measures from a cold cache.
-                    spark.catalog.clearCache()
-                cal_after = _calibration(spark)
-                # acceptance gates on BOTH brackets (advisor r8: a calm
-                # cal_before averaged with a stormy cal_after used to
-                # pass the mean test — exactly the mixed-phase case the
-                # bracket exists to catch); the residual division still
-                # uses the mean of the two calm sides
-                ratio = max(
-                    (cal_before + cal_after) / 2 / _CAL_REFERENCE_SEC, 0.1
-                )
-                worst = (
-                    max(cal_before, cal_after) / _CAL_REFERENCE_SEC
-                )
-                cand = (statistics.median(walls) / ratio, worst, walls)
-                if best is None or cand[1] < best[1]:
-                    best = cand
-                if worst <= 1.25:
-                    break
-            wall, worst, walls = best
-            flagged = "*" if worst > 1.25 else ""
+            # Retry-until-calm measurement (r8, tools/calm.py): the
+            # VM shows speed phases deep enough (pinned-workload ratios
+            # up to 3.3×) that neither raw walls nor linear
+            # normalization by a pure-CPU probe is trustworthy — a 3×
+            # slow phase inflated an x50 point 2.6×, and dividing by
+            # the CPU ratio then OVERcorrected a mixed workload 4×
+            # below its idle wall. So each point is accepted only when
+            # the bench calibration workload brackets it at ≤1.25× the
+            # idle reference on BOTH sides (calmest of 5 attempts
+            # otherwise, flagged with * in the cell). Each run starts
+            # from a cold cache: twin-scale queries persist multi-GB
+            # shingle/signature relations that would otherwise evict
+            # each other across runs.
+            wall, slow = timed_calm(
+                spark, lambda s=specs[name], sf=sf: force(s.fn(spark, sf))
+            )
+            flagged = "*" if slow else ""
             n = rows_in(sf, t)
             points.append((n, wall))
             cells.append(f"{n:,} / {wall:.2f}s{flagged}")
-            print(
-                f"  {name} @ {os.path.basename(sf)}: raw "
-                f"{statistics.median(walls):.2f}s cal(worst) {worst:.2f} "
-                f"-> {wall:.2f}s{flagged}",
-                flush=True,
-            )
+            print(f"  {name} @ {os.path.basename(sf)}: {wall:.2f}s{flagged}", flush=True)
         while len(cells) < len(SF_DIRS) + 3:  # twin columns for non-twin rows
             cells.append("—")
         (n1, w1), (n2, w2) = points[-2], points[-1]

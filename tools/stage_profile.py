@@ -21,6 +21,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force  # noqa: E402
 from database_to_bigquery_spark.registry import all_specs  # noqa: E402
 from database_to_bigquery_spark.session import get_spark  # noqa: E402
 
@@ -46,10 +47,6 @@ def main() -> int:
         },
     )
     spec = all_specs()[name]
-
-    def force(df):
-        df.write.format("noop").mode("overwrite").save()
-
     if not cold:
         force(spark.read.parquet(os.path.join(sf_dir, "region.parquet")))
         force(spec.fn(spark, sf_dir))  # warmup

@@ -17,6 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import force  # noqa: E402
 from database_to_bigquery_spark.registry import all_specs  # noqa: E402
 from database_to_bigquery_spark.session import get_spark  # noqa: E402
 
@@ -34,7 +35,8 @@ JUSTIFIED: dict[str, str] = {
         "CC) the query must build to demo the incremental step; the "
         "incremental step itself is the O(new-edges) label-graph remap "
         "(twin exponent 0.51 with the backfill included; the isolated "
-        "per-batch step measures e 0.148 — incremental_steady_probe)"
+        "per-batch step measures e 0.148 — "
+        "tools/incremental_steady_probe.py @ 43b8cbc)"
     ),
     "dedup_cluster_keep_best": (
         "first-exec-JIT dominated: alphabetically FIRST of the cluster family, so it pays the banded miner's first execution (codegen + Python worker start); the r10 bucket-grouped miner cut the family's warm cost (bench miner median 2.8 s, this row's calm median 4.5 s = miner + contracted CC + one quality window over clustered docs only)"
@@ -43,10 +45,10 @@ JUSTIFIED: dict[str, str] = {
         "runs after dedup_cluster_keep_best has absorbed the miner's first-exec JIT; bench.py r10 3-run median 4.2 s (was 6.7 pre-restructure) — the bucket-grouped miner + CC empty-label-graph shortcut; twin behavior re-measured r10 (OPTIMIZATION_r10.md: x50 CPU ~0.6x, x250 parity at 0.53x shuffle bytes)"
     ),
     "text_bigram_kn_score": (
-        "Θ(tokens) is inherent for an LM scorer and the r7 kn_probe "
-        "decomposition shows the TOKEN stream dominates the 50k→250k "
-        "twin step (token build 3.7 s + scoring join 4.0 s vs 3.0 s "
-        "total dictionary work; bigram types grow 3.2× while tokens "
+        "Θ(tokens) is inherent for an LM scorer and the r7 "
+        "tools/kn_probe.py @ 43b8cbc decomposition shows the TOKEN "
+        "stream dominates the 50k→250k twin step (token build 3.7 s "
+        "+ scoring join 4.0 s vs 3.0 s total dictionary work; bigram types grow 3.2× while tokens "
         "grow 5.0× — Heaps saturation), so a KN min-count floor on "
         "c12 would buy nothing: no dictionary term to bound"
     ),
@@ -69,9 +71,7 @@ def main() -> int:
     # one-off process startup misattributed to whichever query runs
     # first, which is what the slow-flag threshold exists to catch in
     # REAL plans, not in fork latency.
-    specs["q1_pricing_summary"].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    force(specs["q1_pricing_summary"].fn(spark, sf_dir))
 
     def _warm(pdf):
         import numpy  # noqa: F401
@@ -79,18 +79,19 @@ def main() -> int:
 
         return pdf
 
-    spark.range(0, 1024, 1, 32).selectExpr("id", "id % 7 AS g").groupBy(
-        "g"
-    ).applyInPandas(_warm, "id long, g long").write.format("noop").mode(
-        "overwrite"
-    ).save()
+    force(
+        spark.range(0, 1024, 1, 32)
+        .selectExpr("id", "id % 7 AS g")
+        .groupBy("g")
+        .applyInPandas(_warm, "id long, g long")
+    )
 
     rows = []
     for name, spec in sorted(specs.items()):
         t0 = time.monotonic()
         err = ""
         try:
-            spec.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+            force(spec.fn(spark, sf_dir))
         except Exception as exc:  # noqa: BLE001
             err = f"{type(exc).__name__}"
         rows.append((time.monotonic() - t0, name, err))
@@ -111,11 +112,7 @@ def main() -> int:
         if err:
             continue
         wall, flagged = timed_calm(
-            spark,
-            lambda s=specs[name]: s.fn(spark, sf_dir)
-            .write.format("noop")
-            .mode("overwrite")
-            .save(),
+            spark, lambda s=specs[name]: force(s.fn(spark, sf_dir))
         )
         calibrated[name] = (wall, flagged)
         print(f"  calibrated {name}: single-shot {t:.2f}s -> {wall:.2f}s")
