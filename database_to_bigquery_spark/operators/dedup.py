@@ -2216,20 +2216,11 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id long, v array<double>, nrm double, cl long, d2 double",
         )
 
-    m = (
-        assign(c0)
-        .select("cl", F.posexplode("v").alias("i", "x"))
-        .groupBy("cl", "i")
-        .agg(
-            (F.sum(F.col("x").cast("decimal(20,10)")).cast("double") / F.count("*")).alias("c")
-        )
-    )
-    c1 = m.groupBy("cl").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s["c"]
-        ).alias("cv")
-    )
-    mem = assign(c1).persist()
+    # imported here: registration order is module import order, and
+    # a module-level import would register similarity's queries first
+    from .similarity import exact_centroids
+
+    mem = assign(exact_centroids(assign(c0), "cl")).persist()
 
     _cand_cols = ["cl", "vec_a", "vec_b", "cos", "d2a", "d2b"]
     _cand_schema = (

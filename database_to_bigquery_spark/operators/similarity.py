@@ -1,14 +1,27 @@
 """X13: similarity search over the embedding column.
 
-Two tiers:
-  sim_topk_bruteforce  exact top-k cosine neighbors — oracle-checkable
-                       baseline; at scale used only on candidate sets
-  sim_topk_lsh         random-hyperplane LSH bucketing — the scale
-                       path: candidates only form within a bucket, so
-                       the join cost is O(n·bucket_size), not O(n²)
+Tiers, by how candidates form:
+  exact  sim_topk_bruteforce, sim_topk_sq8 (8-bit scalar-quantized),
+         sim_knn_join_exact (blocked all-pairs; quadratic, scale twin
+         sim_knn_join_ivf) — the oracle-checked ground truth
+  LSH    sim_topk_lsh, sim_knn_join_lsh — random-hyperplane buckets;
+         candidates only within a bucket: O(n·bucket_size), not O(n²)
+  PQ     sim_topk_pq — product-quantized codes scored by lookup table
+  IVF    sim_topk_ivf, sim_topk_ivfpq (PQ codes inside cells),
+         sim_ivf_incremental_add, ivf_probe[_trained] and the flat,
+         two-level, whitened and auto kNN joins — candidates only
+         within the probed cells
+plus k-means (sim_kmeans_2iter), covariance / PCA whitening, and the
+rerank, hard-negative and decontamination operators.
 
-All vector math is F.zip_with/F.aggregate (codegen, double
-accumulation in index order — matches the DuckDB oracle bit-for-bit).
+Oracle-checked queries do their vector math in Column folds
+(F.zip_with/F.aggregate: double accumulation in index order, which
+matches DuckDB's list_dot_product bit for bit). The approximate,
+rows-only joins score cells with numpy matmuls inside Arrow-batched
+pandas functions. The "vector-cell primitives" section below holds
+what they share: the DECIMAL-exact centroid aggregate (also used by
+dedup_semdedup), the driver-side spherical Lloyd trainer, the
+per-cell top-k kernel and the global kNN merge.
 """
 
 from __future__ import annotations
@@ -34,6 +47,127 @@ def _dot(x: str | Column, y: str | Column) -> Column:
 
 def _as_double(col: str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
+
+
+# ------------------------------------------- vector-cell primitives ----
+
+
+def exact_centroids(df: DataFrame, key: str) -> DataFrame:
+    """Per-`key` mean of the `v` vectors as (key, cv). Each dimension
+    sums in DECIMAL(20,10) — exact, so the centroid does not depend on
+    partitioning or summation order and equals the DuckDB oracles'
+    CAST(SUM(CAST(x AS DECIMAL(20,10))) AS DOUBLE) / COUNT(*) bit for
+    bit — and the per-dimension means pack back into an index-ordered
+    array. One posexplode → groupBy(key, dim) partial-aggregated
+    shuffle; k×d rows out."""
+    dims = (
+        df.select(key, F.posexplode("v").alias("i", "x"))
+        .groupBy(key, "i")
+        .agg(
+            (F.sum(F.col("x").cast("decimal(20,10)")).cast("double") / F.count("*")).alias("c")
+        )
+    )
+    return dims.groupBy(key).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s.getField("c")
+        ).alias("cv")
+    )
+
+
+def _unit(V):
+    """Rows of V scaled to unit L2 norm. Norms are clipped at eps (the
+    faiss convention): an all-zero vector stays zero, so it scores
+    cosine 0 everywhere instead of NaN-poisoning centroids or ranks."""
+    import numpy as np
+
+    return V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
+
+
+def _head_sample(e: DataFrame, rows: int):
+    """The IVF trainers' deterministic sample: the first `rows`
+    vectors of a (vec_id, v) relation by vec_id, unit-normalized."""
+    import numpy as np
+
+    sample = np.array(
+        [r["v"] for r in e.orderBy("vec_id").limit(rows).collect()],
+        dtype=np.float64,
+    )
+    if len(sample) == 0:
+        # an empty sample is 1-D, so training would fail later with a
+        # bare numpy AxisError or ZeroDivisionError — name the cause
+        raise ValueError(
+            "empty corpus sample — the (vec_id, v) relation has no rows; "
+            "an IVF index cannot be trained on an empty corpus"
+        )
+    return _unit(sample)
+
+
+def _lloyd(X, m: int, iters: int):
+    """Spherical Lloyd over the unit rows of X: seeds are the first m
+    rows, assignment is by cosine (argmax of X·Cᵀ), an empty cell keeps
+    its centroid, centroids are re-normalized every iteration. Fully
+    deterministic, so the trained cells are too."""
+    import numpy as np
+
+    C = X[:m].copy()
+    for _ in range(iters):
+        a = np.argmax(X @ C.T, axis=1)
+        for j in range(len(C)):
+            sel = X[a == j]
+            if len(sel):
+                C[j] = sel.mean(axis=0)
+        C = _unit(C)
+    return C
+
+
+def cell_topk(Q, qid, M, mid, k: int):
+    """Exact top-k inside one cell: cosine of every query vector in Q
+    (ids qid) against every member vector in M (ids mid) as one numpy
+    matmul of unit rows, self-pairs excluded, the k best members kept
+    per query. Q and M are sequences of vectors (a pandas list column's
+    values). Returns (vec_id, neighbor_id, cos) rows — fewer than k for
+    a query with fewer than k non-self members."""
+    import numpy as np
+    import pandas as pd
+
+    if len(Q) == 0 or len(M) == 0:
+        return pd.DataFrame({"vec_id": [], "neighbor_id": [], "cos": []}).astype(
+            {"vec_id": "int64", "neighbor_id": "int64", "cos": "float64"}
+        )
+    S = _unit(np.stack(Q).astype(np.float64)) @ _unit(np.stack(M).astype(np.float64)).T
+    S[qid[:, None] == mid[None, :]] = -np.inf  # self-pairs
+    kk = min(k, S.shape[1])
+    top = np.argpartition(-S, kth=kk - 1, axis=1)[:, :kk]
+    rows = np.arange(len(qid))[:, None].repeat(kk, axis=1)
+    out = pd.DataFrame(
+        {
+            "vec_id": qid[rows.ravel()],
+            "neighbor_id": mid[top.ravel()],
+            "cos": S[rows.ravel(), top.ravel()],
+        }
+    )
+    return out[np.isfinite(out["cos"])]
+
+
+def knn_merge(cand: DataFrame, key: str, k: int) -> DataFrame:
+    """Global merge of per-cell (or per-bucket) kNN candidates (key,
+    neighbor_id, cos): a pair scored in several cells keeps its max
+    cosine, then each `key` keeps its k best, ties broken on
+    neighbor_id. Output (key, neighbor_id, cosine rounded to 4 dp,
+    rnk ≤ k); the shuffle carries 24-byte rows."""
+    w = W.partitionBy(key).orderBy(F.col("cos").desc(), "neighbor_id")
+    return (
+        cand.groupBy(key, "neighbor_id")
+        .agg(F.max("cos").alias("cos"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(
+            key,
+            "neighbor_id",
+            F.round("cos", 4).alias("cosine"),
+            F.col("rnk").cast("int").alias("rnk"),
+        )
+    )
 
 
 @query(
@@ -311,18 +445,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
-    dims = (
-        e.select("label", F.posexplode("v").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(
-            (F.sum(F.col("x").cast("decimal(20,10)")).cast("double") / F.count("*")).alias("c")
-        )
-    )
-    cent = dims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s.getField("c")
-        ).alias("cv")
-    )
+    cent = exact_centroids(e, "label")
     # query norm factored out (r10, see sim_topk_bruteforce): computed
     # once per query and carried through the probe instead of re-folded
     # per centroid and per candidate
@@ -553,19 +676,7 @@ def sim_kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     a1 = assign(e, c0).select("vec_id", "cl")
-    # new centroids: exact decimal mean per (cluster, dim), re-packed
-    # into an ordered array
-    dims = e.join(a1, "vec_id").select(
-        "cl", F.posexplode("v").alias("i", "x")
-    )
-    m = dims.groupBy("cl", "i").agg(
-        (F.sum(F.col("x").cast("decimal(20,10)")).cast("double") / F.count("*")).alias("c")
-    )
-    c1 = m.groupBy("cl").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s["c"]
-        ).alias("cv")
-    )
+    c1 = exact_centroids(e.join(a1, "vec_id"), "cl")
     return assign(e, c1).select(
         "vec_id",
         F.col("cl").cast("int").alias("cluster"),
@@ -1141,13 +1252,6 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
-    dims = (
-        e.select("label", F.posexplode("v").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(
-            (F.sum(F.col("x").cast("decimal(20,10)")).cast("double") / F.count("*")).alias("c")
-        )
-    )
     # cent and cb are INDEX relations (k×d centroids; M×K codebook
     # rows — hundreds of rows each), but every un-persisted broadcast
     # consumer recompiled their FULL corpus-sized subtrees under AQE:
@@ -1157,11 +1261,7 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codebook builds, the probe, and the query-residual side
     # independently. Persisting the two tiny relations makes each a
     # one-time build (guide §5: reused AND expensive to recompute).
-    cent = dims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s.getField("c")
-        ).alias("cv")
-    ).persist()
+    cent = exact_centroids(e, "label").persist()
     res = (
         e.repartition(spark.sparkContext.defaultParallelism, "vec_id")
         .join(F.broadcast(cent), "label")
@@ -1362,9 +1462,9 @@ def sim_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scored with the index-ordered fold (bit-identical to the
     oracle's list_dot_product) before the global per-vector window.
     Compute is still O(n²·d/P) FLOPs — quadratic, hence the
-    scale twin `sim_knn_join_lsh` (bucketed, sub-quadratic) for
-    100 TB; THIS form is the oracle-checkable ground truth the twin's
-    recall is measured against."""
+    scale twin `sim_knn_join_ivf` (IVF cells, Θ(n^1.5·d)) for
+    100 TB; THIS form is the oracle-checkable ground truth the
+    approximate joins' recall is measured against."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
@@ -1504,19 +1604,7 @@ def sim_knn_join_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = sigs.groupBy("bucket").applyInPandas(
         bucket_topk, "vec_id long, neighbor_id long, cos double"
     )
-    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        cand.groupBy("vec_id", "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return knn_merge(cand, "vec_id", _KNN_K)
 
 
 _KNN_IVF_SAMPLE = 4096  # centroid-training sample (driver-side Lloyd)
@@ -1565,27 +1653,13 @@ def train_ivf_centroids(e: DataFrame, n: int | None = None):
     in production; the result is k·d floats (≤512 KB) — closure-sized,
     never a corpus relation. Norms are clipped at eps (the faiss
     convention): an all-zero embedding must yield cosine 0 everywhere,
-    not NaN-poison the centroids."""
-    import numpy as np
-
+    not NaN-poison the centroids. An empty relation raises
+    ValueError."""
     if n is None:
         n = e.count()
     k = max(4, min(1024, int(round(n**0.5))))
-    sample = np.array(
-        [r["v"] for r in e.orderBy("vec_id").limit(_KNN_IVF_SAMPLE).collect()],
-        dtype=np.float64,
-    )
-    sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    C = sample[:k].copy()
-    k = len(C)  # tiny corpora: fewer sample rows than requested cells
-    for _ in range(5):
-        assign = np.argmax(sample @ C.T, axis=1)
-        for c in range(k):
-            members = sample[assign == c]
-            if len(members):
-                C[c] = members.mean(axis=0)
-        C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    return C
+    # tiny corpora: fewer sample rows than cells gives fewer cells
+    return _lloyd(_head_sample(e, _KNN_IVF_SAMPLE), k, 5)
 
 
 def knn_join_ivf_core(e: DataFrame, n: int | None = None) -> DataFrame:
@@ -1610,9 +1684,7 @@ def knn_join_ivf_core(e: DataFrame, n: int | None = None) -> DataFrame:
         for pdf in it:
             if len(pdf) == 0:  # Arrow may deliver empty batches
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            sims = Vn @ centroids.T
+            sims = _unit(np.stack(pdf["v"].to_numpy()).astype(np.float64)) @ centroids.T
             order = np.argsort(-sims, axis=1)[:, :nprobe]
             m = len(pdf)
             yield pd.DataFrame(
@@ -1631,51 +1703,26 @@ def knn_join_ivf_core(e: DataFrame, n: int | None = None) -> DataFrame:
     visits = e.mapInPandas(
         assign_probes, "vec_id long, v array<double>, cell int, is_member boolean"
     )
+    return _visits_knn(visits)
 
-    def cell_topk(pdf):
-        import pandas as pd
 
-        members = pdf[pdf["is_member"]]
-        if len(members) == 0 or len(pdf) < 2:
-            return pd.DataFrame({"vec_id": [], "neighbor_id": [], "cos": []}).astype(
-                {"vec_id": "int64", "neighbor_id": "int64", "cos": "float64"}
-            )
-        M = np.stack(members["v"].to_numpy()).astype(np.float64)
-        Q = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        mid = members["vec_id"].to_numpy()
-        qid = pdf["vec_id"].to_numpy()
-        S = (Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)) @ (
-            M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        ).T
-        S[qid[:, None] == mid[None, :]] = -np.inf  # self-pairs
-        kk = min(_KNN_K, S.shape[1])
-        top = np.argpartition(-S, kth=kk - 1, axis=1)[:, :kk]
-        rows = np.arange(len(qid))[:, None].repeat(kk, axis=1)
-        out = pd.DataFrame(
-            {
-                "vec_id": qid[rows.ravel()],
-                "neighbor_id": mid[top.ravel()],
-                "cos": S[rows.ravel(), top.ravel()],
-            }
+def _visits_knn(visits: DataFrame) -> DataFrame:
+    """The kNN join behind a coarse quantizer's visits (vec_id, v,
+    cell, is_member), shared by the flat and two-level cores: per
+    cell, every visiting vector against the cell's members
+    (`cell_topk`), then the global merge."""
+
+    def score(pdf):
+        m = pdf[pdf["is_member"]]
+        return cell_topk(
+            pdf["v"].to_numpy(), pdf["vec_id"].to_numpy(),
+            m["v"].to_numpy(), m["vec_id"].to_numpy(), _KNN_K,
         )
-        return out[np.isfinite(out["cos"])]
 
     cand = visits.groupBy("cell").applyInPandas(
-        cell_topk, "vec_id long, neighbor_id long, cos double"
+        score, "vec_id long, neighbor_id long, cos double"
     )
-    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        cand.groupBy("vec_id", "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return knn_merge(cand, "vec_id", _KNN_K)
 
 
 # --------------------------------------------- hierarchical IVF join ----
@@ -1712,29 +1759,9 @@ def train_ivf2_centroids(e: DataFrame, n: int | None = None):
         n = e.count()
     k = max(8, min(16384, int(round(n ** (2.0 / 3.0)))))
     k2 = max(2, int(round(k**0.5)))
-    sample_rows = min(max(_KNN_IVF_SAMPLE, 8 * k), 65536)
-    sample = np.array(
-        [r["v"] for r in e.orderBy("vec_id").limit(sample_rows).collect()],
-        dtype=np.float64,
-    )
-    if len(sample) == 0:
-        # k2 = len(S) = 0 below would make round(k/k2) a bare
-        # ZeroDivisionError — fail with the actual cause (advisor r9)
-        raise ValueError(
-            "train_ivf2_centroids: empty corpus sample — the (vec_id, v) "
-            "relation has no rows; an IVF index cannot be trained on an "
-            "empty corpus"
-        )
-    sample /= np.maximum(np.linalg.norm(sample, axis=1, keepdims=True), 1e-12)
-    S = sample[:k2].copy()
+    sample = _head_sample(e, min(max(_KNN_IVF_SAMPLE, 8 * k), 65536))
+    S = _lloyd(sample, k2, 5)
     k2 = len(S)
-    for _ in range(5):
-        assign = np.argmax(sample @ S.T, axis=1)
-        for c in range(k2):
-            members = sample[assign == c]
-            if len(members):
-                S[c] = members.mean(axis=0)
-        S /= np.maximum(np.linalg.norm(S, axis=1, keepdims=True), 1e-12)
     assign = np.argmax(sample @ S.T, axis=1)
     per_super = max(1, int(round(k / k2)))
     children, offsets = [], [0]
@@ -1743,15 +1770,7 @@ def train_ivf2_centroids(e: DataFrame, n: int | None = None):
         if len(members) == 0:  # empty super keeps its own centroid
             members = S[c : c + 1]
         m = min(per_super, len(members))
-        C = members[:m].copy()
-        for _ in range(3):
-            a = np.argmax(members @ C.T, axis=1)
-            for j in range(m):
-                sel = members[a == j]
-                if len(sel):
-                    C[j] = sel.mean(axis=0)
-            C /= np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-        children.append(C)
+        children.append(_lloyd(members, m, 3))
         offsets.append(offsets[-1] + m)
     structure = float((sample @ S.T).max(axis=1).mean())
     return S, np.vstack(children), np.array(offsets, dtype=np.int64), structure
@@ -1794,8 +1813,7 @@ def knn_join_ivf2_core(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
+            Vn = _unit(np.stack(pdf["v"].to_numpy()).astype(np.float64))
             m = len(pdf)
             top_s = np.argsort(-(Vn @ supers.T), axis=1)[:, :s_probe]
             # score the children of each selected super, grouped by
@@ -1838,51 +1856,7 @@ def knn_join_ivf2_core(
     visits = e.mapInPandas(
         assign_probes, "vec_id long, v array<double>, cell int, is_member boolean"
     )
-
-    def cell_topk(pdf):
-        import pandas as pd
-
-        members = pdf[pdf["is_member"]]
-        if len(members) == 0 or len(pdf) < 2:
-            return pd.DataFrame({"vec_id": [], "neighbor_id": [], "cos": []}).astype(
-                {"vec_id": "int64", "neighbor_id": "int64", "cos": "float64"}
-            )
-        M = np.stack(members["v"].to_numpy()).astype(np.float64)
-        Q = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-        mid = members["vec_id"].to_numpy()
-        qid = pdf["vec_id"].to_numpy()
-        Sm = (Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)) @ (
-            M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        ).T
-        Sm[qid[:, None] == mid[None, :]] = -np.inf
-        kk = min(_KNN_K, Sm.shape[1])
-        top = np.argpartition(-Sm, kth=kk - 1, axis=1)[:, :kk]
-        rows = np.arange(len(qid))[:, None].repeat(kk, axis=1)
-        out = pd.DataFrame(
-            {
-                "vec_id": qid[rows.ravel()],
-                "neighbor_id": mid[top.ravel()],
-                "cos": Sm[rows.ravel(), top.ravel()],
-            }
-        )
-        return out[np.isfinite(out["cos"])]
-
-    cand = visits.groupBy("cell").applyInPandas(
-        cell_topk, "vec_id long, neighbor_id long, cos double"
-    )
-    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        cand.groupBy("vec_id", "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return _visits_knn(visits)
 
 
 @query("sim_knn_join_ivf2")  # approximate → rows-only check
@@ -1940,9 +1914,7 @@ def ivf_probe_trained(
         for pdf in it:
             if len(pdf) == 0:
                 continue
-            V = np.stack(pdf["v"].to_numpy()).astype(np.float64)
-            Vn = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            sims = Vn @ C.T
+            sims = _unit(np.stack(pdf["v"].to_numpy()).astype(np.float64)) @ C.T
             if width == 1:
                 cells = np.argmax(sims, axis=1)[:, None]
             else:
@@ -1961,50 +1933,17 @@ def ivf_probe_trained(
     probes = queries.mapInPandas(lambda it: assign(it, nprobe, False), schema)
 
     def cell_score(pdf):
-        import pandas as pd
-
         q = pdf[~pdf["is_member"]]
         m = pdf[pdf["is_member"]]
-        if len(q) == 0 or len(m) == 0:
-            return pd.DataFrame({"query_id": [], "neighbor_id": [], "cos": []}).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "cos": "float64"}
-            )
-        Q = np.stack(q["v"].to_numpy()).astype(np.float64)
-        M = np.stack(m["v"].to_numpy()).astype(np.float64)
-        S = (Q / np.maximum(np.linalg.norm(Q, axis=1, keepdims=True), 1e-12)) @ (
-            M / np.maximum(np.linalg.norm(M, axis=1, keepdims=True), 1e-12)
-        ).T
-        qid = q["vec_id"].to_numpy()
-        mid = m["vec_id"].to_numpy()
-        S[qid[:, None] == mid[None, :]] = -np.inf  # self-pairs
-        kk = min(k, S.shape[1])
-        top = np.argpartition(-S, kth=kk - 1, axis=1)[:, :kk]
-        rows = np.arange(len(qid))[:, None].repeat(kk, axis=1)
-        out = pd.DataFrame(
-            {
-                "query_id": qid[rows.ravel()],
-                "neighbor_id": mid[top.ravel()],
-                "cos": S[rows.ravel(), top.ravel()],
-            }
-        )
-        return out[np.isfinite(out["cos"])]
+        return cell_topk(
+            q["v"].to_numpy(), q["vec_id"].to_numpy(),
+            m["v"].to_numpy(), m["vec_id"].to_numpy(), k,
+        ).rename(columns={"vec_id": "query_id"})
 
     cand = members.unionByName(probes).groupBy("cell").applyInPandas(
         cell_score, "query_id long, neighbor_id long, cos double"
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        cand.groupBy("query_id", "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return knn_merge(cand, "query_id", k)
 
 
 # ---------------------------------------- incremental index maintenance ----
@@ -2065,19 +2004,7 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     is_arrival = F.col("vec_id") % _ARRIVAL_MOD == _ARRIVAL_REM
     arrivals = e.filter(is_arrival).select("vec_id", "v")
-    standing = e.filter(~is_arrival)
-    dims = (
-        standing.select("label", F.posexplode("v").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(
-            (F.sum(F.col("x").cast("decimal(20,10)")).cast("double") / F.count("*")).alias("c")
-        )
-    )
-    cent = dims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s.getField("c")
-        ).alias("cv")
-    )
+    cent = exact_centroids(e.filter(~is_arrival), "label")
     cos = _dot("v", "cv") / (F.sqrt(_dot("v", "v")) * F.sqrt(_dot("cv", "cv")))
     w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("label"))
     return (
@@ -2111,18 +2038,7 @@ def ivf_probe(
     standing corpus (or a persisted table between batches); per-query
     cost is n_probe/k of the corpus. Both broadcasts are bounded by
     construction (k cells; |arrivals|·n_probe probe rows per batch)."""
-    dims = (
-        standing.select("label", F.posexplode("v").alias("i", "x"))
-        .groupBy("label", "i")
-        .agg(
-            (F.sum(F.col("x").cast("decimal(20,10)")).cast("double") / F.count("*")).alias("c")
-        )
-    )
-    cent = dims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("i", "c"))), lambda s: s.getField("c")
-        ).alias("cv")
-    )
+    cent = exact_centroids(standing, "label")
     cent_cos = _dot("qv", "cv") / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("cv", "cv")))
     pw = W.partitionBy("query_id").orderBy(F.col("cent_cos").desc(), F.col("label"))
     q = arrivals.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
@@ -2314,18 +2230,20 @@ def _apply_whitener(e: DataFrame, Wm, mu) -> DataFrame:
     return e.mapInPandas(whiten, "vec_id long, v array<double>")
 
 
-def whiten_corpus(e: DataFrame) -> DataFrame:
+def whiten_corpus(e: DataFrame):
     """y = Λ^(−1/2) Qᵀ (x − μ) across the corpus: train the PCA-
     whitening map from `corpus_covariance` (driver-side d×d eigen-
     decomposition — metadata-sized, like IVF centroid training) and
     apply it in one Arrow-batched map. Input/output schema:
-    (vec_id, v: array<double>)."""
+    (vec_id, v: array<double>). Returns (df, n): n is the corpus row
+    count the covariance pass already measured (whitening is
+    row-preserving), so callers need no second corpus pass to count."""
     import numpy as np
 
-    cov, mu, _n = corpus_covariance(e)
+    cov, mu, n = corpus_covariance(e)
     evals, evecs = np.linalg.eigh(cov)
     Wm = (evecs / np.sqrt(np.maximum(evals, 1e-12))).T  # Λ^(-1/2) Qᵀ
-    return _apply_whitener(e, Wm, mu)
+    return _apply_whitener(e, Wm, mu), n
 
 
 # Gate threshold for `whiten_if_anisotropic`. Measured spectra (x10
@@ -2412,22 +2330,16 @@ def sim_knn_join_ivf_whitened(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Θ(n^1.5·d) IVF join — asymptotically free at any corpus size.
     Approximate (probing) → rows-only driver check.
 
-    The corpus count rides the covariance pass (r11 — the same
-    advisor-r9 fix the auto entry got in r10): `knn_join_ivf_core`
-    with n=None would run `e.count()` on the WHITENED relation, i.e.
-    one full extra corpus pass through the Python whiten map just to
-    count rows the Gram pass already counted. The whitening map is
-    inlined from `whiten_corpus` (same eigendecomposition, same
-    arithmetic) so n can thread through."""
-    import numpy as np
-
+    The corpus count rides the covariance pass (`whiten_corpus`
+    returns it): `knn_join_ivf_core` with n=None would run `e.count()`
+    on the WHITENED relation, i.e. one full extra corpus pass through
+    the Python whiten map just to count rows the Gram pass already
+    counted."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    cov, mu, n = corpus_covariance(e)
-    evals, evecs = np.linalg.eigh(cov)
-    Wm = (evecs / np.sqrt(np.maximum(evals, 1e-12))).T  # Λ^(-1/2) Qᵀ
-    return knn_join_ivf_core(_apply_whitener(e, Wm, mu), n=n)
+    whitened, n = whiten_corpus(e)
+    return knn_join_ivf_core(whitened, n=n)
 
 
 # Corpus-size boundary for the auto entry's flat→two-level IVF tier
@@ -2528,7 +2440,7 @@ def sim_whiten_identity_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
-    whitened = whiten_corpus(e)
+    whitened, _n = whiten_corpus(e)
     cov_w, _, _ = corpus_covariance(whitened)
     iu, ju = np.triu_indices(cov_w.shape[0])
     out = [

@@ -795,7 +795,8 @@ def test_whitened_ivf_recall_on_anisotropic_geometry(spark):
         )
 
     raw = purity(knn_join_ivf_core(df))
-    wht = purity(knn_join_ivf_core(whiten_corpus(df)))
+    whitened, n_rows = whiten_corpus(df)
+    wht = purity(knn_join_ivf_core(whitened, n=n_rows))
     assert wht >= 0.9, (raw, wht)
     assert wht >= raw + 0.2, (raw, wht)
 
@@ -1035,16 +1036,102 @@ def test_knn_join_auto_tier_selection(spark, monkeypatch):
     assert calls == ["flat"]
 
 
-def test_train_ivf2_centroids_empty_corpus_raises(spark):
+@pytest.mark.parametrize("trainer", ["train_ivf_centroids", "train_ivf2_centroids"])
+def test_train_ivf2_centroids_empty_corpus_raises(spark, trainer):
     """An empty (vec_id, v) relation must fail with the actual cause,
-    not a bare ZeroDivisionError from k2=0 (advisor r9)."""
-    from database_to_bigquery_spark.operators.similarity import (
-        train_ivf2_centroids,
-    )
+    not a bare ZeroDivisionError (two-level, k2=0) or numpy AxisError
+    (flat, a 1-D empty sample) — for both IVF trainers."""
+    from database_to_bigquery_spark.operators import similarity
 
     empty = spark.createDataFrame([], "vec_id long, v array<double>")
     with pytest.raises(ValueError, match="empty corpus sample"):
-        train_ivf2_centroids(empty)
+        getattr(similarity, trainer)(empty)
+
+
+def test_exact_centroids_partition_independent(spark):
+    """`exact_centroids` sums in DECIMAL, so its centroids are the same
+    doubles at 1 and at 7 input partitions — the order-independence the
+    IVF, k-means and SemDeDup oracles rely on — and within 1e-9 of the
+    numpy mean (each value rounds to 10 decimals before the sum)."""
+    import numpy as np
+
+    from database_to_bigquery_spark.operators.similarity import exact_centroids
+
+    rng = np.random.default_rng(5)
+    n, d = 300, 8
+    X = rng.standard_normal((n, d)) * 10.0 ** rng.integers(-3, 4, (n, 1))
+    keys = rng.integers(0, 4, n)
+    df = spark.createDataFrame(
+        [(int(keys[i]), X[i].tolist()) for i in range(n)], "label int, v array<double>"
+    )
+
+    def centroids(parts: int) -> dict:
+        rows = exact_centroids(df.repartition(parts), "label").collect()
+        return {r["label"]: list(r["cv"]) for r in rows}
+
+    one = centroids(1)
+    assert one == centroids(7)
+    assert sorted(one) == [0, 1, 2, 3]
+    for key, cv in one.items():
+        np.testing.assert_allclose(cv, X[keys == key].mean(axis=0), rtol=0, atol=1e-9)
+
+
+@pytest.mark.parametrize("k", [1, 3, 5, 7])
+def test_cell_topk_and_knn_merge(spark, k):
+    """The per-cell kernel and the global merge on two hand-built
+    cells sharing members 1 and 4. Kernel: per query, the min(k,
+    non-self members) best cosines against a per-pair Python reference
+    with the same eps-clipped norms, so no self-pairs and the all-zero
+    vector 3 scores 0, not NaN. Merge: a pair scored in both cells,
+    plus a stale lower duplicate, keeps its max; ties rank by
+    neighbor_id; rnk ≤ k; cosines rounded to 4 dp."""
+    import math
+
+    import pandas as pd
+
+    from database_to_bigquery_spark.operators.similarity import cell_topk, knn_merge
+
+    vecs = {0: [1.0, 0.0], 1: [1.0, 0.0], 2: [0.0, 1.0], 3: [0.0, 0.0],
+            4: [1.0, 1.0], 5: [3.0, 1.0]}
+
+    def cos(a, b):
+        na, nb = (max(math.hypot(*vecs[x]), 1e-12) for x in (a, b))
+        return (vecs[a][0] * vecs[b][0] + vecs[a][1] * vecs[b][1]) / (na * nb)
+
+    pdf = pd.DataFrame({"vec_id": list(vecs), "v": [list(v) for v in vecs.values()]})
+    parts = []
+    for members in ([0, 1, 3, 4], [1, 2, 4, 5]):
+        m = pdf[pdf["vec_id"].isin(members)]
+        out = cell_topk(
+            pdf["v"].to_numpy(), pdf["vec_id"].to_numpy(),
+            m["v"].to_numpy(), m["vec_id"].to_numpy(), k,
+        )
+        assert (out["vec_id"] != out["neighbor_id"]).all()
+        for q in vecs:
+            mine = out[out["vec_id"] == q]
+            best = sorted((cos(q, b) for b in members if b != q), reverse=True)[:k]
+            assert sorted(mine["cos"], reverse=True) == pytest.approx(best, abs=1e-12)
+            assert list(mine["cos"]) == pytest.approx(
+                [cos(q, b) for b in mine["neighbor_id"]], abs=1e-12
+            )
+        parts.append(out)
+    parts.append(pd.DataFrame({"vec_id": [0], "neighbor_id": [4], "cos": [-0.5]}))
+    cand = pd.concat(parts)
+
+    got = knn_merge(
+        spark.createDataFrame(cand, "vec_id long, neighbor_id long, cos double"),
+        "vec_id", k,
+    ).orderBy("vec_id", "rnk").collect()
+    top = cand.groupby(["vec_id", "neighbor_id"])["cos"].max()
+    want = []
+    for q in vecs:
+        ranked = sorted((-c, b) for (a, b), c in top.items() if a == q)[:k]
+        want += [(q, b, round(-c, 4), r + 1) for r, (c, b) in enumerate(ranked)]
+    assert [tuple(r) for r in got] == want
+    assert all(r["cosine"] == 0.0 for r in got if 3 in (r["vec_id"], r["neighbor_id"]))
+    assert [tuple(r) for r in got if (r["vec_id"], r["neighbor_id"]) == (0, 4)] == (
+        [(0, 4, 0.7071, 3)] if k >= 3 else []
+    )
 
 
 def test_read_webdataset_parses_disk_shards(spark, tmp_path):

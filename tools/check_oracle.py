@@ -3,6 +3,10 @@ entry on Spark and its oracle_sql() twin on DuckDB at sf0.01, compare
 row count + schema-width + order-insensitive value hash.
 
 Usage: python tools/check_oracle.py [--sf-dir DIR] [names...]
+
+The `rows` and `OK` lines carry the first 12 hex digits of the Spark
+result's value hash, so two trees give the same results when their
+runs differ only in the bracketed timings.
 """
 
 from __future__ import annotations
@@ -147,8 +151,12 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {exc}")
             continue
+        s_hash = value_hash(s_rows, s_cols)
         if spec.oracle is None:
-            print(f"rows  {name}: {len(s_rows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(
+                f"rows  {name}: {len(s_rows)} rows (no oracle) "
+                f"hash={s_hash[:12]} [{time.time()-t0:.1f}s]"
+            )
             continue
         try:
             # fetch_arrow_table (not fetchall) so DuckDB type artifacts
@@ -197,7 +205,7 @@ def main() -> int:
             problems.append(f"rowcount {len(s_rows)} vs {len(o_rows)}")
         if sorted(s_cols) != sorted(o_cols):
             problems.append(f"columns {sorted(s_cols)} vs {sorted(o_cols)}")
-        elif value_hash(s_rows, s_cols) != value_hash(o_rows, o_cols):
+        elif s_hash != value_hash(o_rows, o_cols):
             problems.append("value hash mismatch")
             # show first differing rows for debugging
             order_s = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
@@ -215,7 +223,10 @@ def main() -> int:
             for p in problems[1:]:
                 print(p)
         else:
-            print(f"OK    {name}: {len(s_rows)} rows [{time.time()-t0:.1f}s]")
+            print(
+                f"OK    {name}: {len(s_rows)} rows hash={s_hash[:12]} "
+                f"[{time.time()-t0:.1f}s]"
+            )
     print(f"\n{len(names) - len(failures)}/{len(names)} passed")
     return 1 if failures else 0
 
