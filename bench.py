@@ -17,9 +17,10 @@ Measurement hygiene (the VM shows ±40% run-to-run variance):
   round-robin passes over the query set — round-robin, not
   back-to-back per query, so slow VM phases spread across all queries
   instead of landing on one — and reports the per-query MEDIAN
-- if a prior round's BENCH file exists, a per-query ratio vs that
-  baseline is attached under "delta_vs_baseline" (extra key; the
-  driver contract keys are unchanged)
+- if a prior round's BENCH file was recorded at this session's core
+  count, a per-query ratio vs the newest such baseline is attached
+  under "delta_vs_baseline"; otherwise "baseline_skipped" says why
+  (extra keys; the driver contract keys are unchanged)
 - a pinned CPU-bound workload is timed before AND after the pass and
   reported under "calibration" with a recorded idle-machine reference,
   so any consumer can normalize this pass's walls by machine speed
@@ -83,27 +84,31 @@ def _calibrate(spark, reps: int = 3) -> float:
     return round(statistics.median(_calibration(spark) for _ in range(reps)), 3)
 
 
-def load_baseline() -> tuple[str, dict] | None:
-    """Latest committed BENCH_r{N}.json at the repo root, if any."""
-    here = os.path.dirname(os.path.abspath(__file__))
+def load_baseline(root: str, cpus: int) -> tuple[str, dict] | None:
+    """Newest committed BENCH_r{N}[_c{C}].json under ``root`` whose
+    record was taken at ``cpus`` cores, as (tag, bench line); walls at
+    another core count do not compare."""
     cands = []
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m:
-            cands.append((int(m.group(1)), p))
+    for p in glob.glob(os.path.join(root, "BENCH_r*.json")):
+        m = re.search(r"BENCH_(r(\d+)(?:_c\d+)?)\.json$", p)
+        if not m:
+            continue
+        try:
+            with open(p) as f:
+                data = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        if data.get("cpus") != cpus:
+            continue
+        # the driver's BENCH_r{N}.json wraps this script's JSON line under
+        # "parsed" (alongside run metadata); unwrap if so
+        if "queries" not in data and isinstance(data.get("parsed"), dict):
+            data = data["parsed"]
+        cands.append((int(m.group(2)), m.group(1), data))
     if not cands:
         return None
-    n, path = max(cands)
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
-    # the driver's BENCH_r{N}.json wraps this script's JSON line under
-    # "parsed" (alongside run metadata); unwrap if so
-    if "queries" not in data and isinstance(data.get("parsed"), dict):
-        data = data["parsed"]
-    return f"r{n:02d}", data
+    _, tag, data = max(cands, key=lambda c: c[:2])
+    return tag, data
 
 
 def main() -> None:
@@ -200,8 +205,11 @@ def main() -> None:
             > 1.2 * _CAL_REFERENCE_SEC,
         },
     }
-    baseline = load_baseline()
-    if baseline is not None:
+    cpus = spark.sparkContext.defaultParallelism
+    baseline = load_baseline(os.path.dirname(os.path.abspath(__file__)), cpus)
+    if baseline is None:
+        out["baseline_skipped"] = f"no BENCH_r*.json record has cpus == {cpus}"
+    else:
         tag, base = baseline
         base_q = base.get("queries", {})
         common = {n for n in timings if isinstance(base_q.get(n), (int, float))}

@@ -891,6 +891,34 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # would silently drop true pairs below the candidate cut).
 _COS_T = 0.4
 
+
+def _normed_embeddings(spark: SparkSession, sf_dir: str):
+    """Embeddings as doubles ``(vec_id, v)`` plus their norm ``nrm``,
+    persisted, and ``dot(x, y)``: the dot product of two array columns
+    UNROLLED into a flat element_at sum over the (schema-probed)
+    dimensionality, added left to right like the sequential fold, so
+    it runs inside codegen and stays bit-identical to the oracle's
+    list_dot_product (see dedup_embedding_cosine)."""
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
+    )
+    dim_row = e.select(F.size("v").alias("d")).first()
+    dim = dim_row["d"] if dim_row else 0
+
+    def dot(x: str, y: str):
+        if dim <= 0:
+            return F.aggregate(
+                F.zip_with(x, y, lambda u, v: u * v), F.lit(0.0), lambda acc, z: acc + z
+            )
+        terms = [F.element_at(x, i) * F.element_at(y, i) for i in range(1, dim + 1)]
+        acc = terms[0]
+        for t in terms[1:]:
+            acc = acc + t
+        return acc
+
+    return e.withColumn("nrm", F.sqrt(dot("v", "v"))).persist(), dot
+
+
 @query(
     "dedup_embedding_cosine",
     scale_twin="sim_topk_lsh",
@@ -924,24 +952,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     per row before the pair join, so each of the n² pairs pays one
     64-term sum, not three.
     """
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    dim_row = e.select(F.size("v").alias("d")).first()
-    dim = dim_row["d"] if dim_row else 0
-
-    def dot(x: str, y: str):
-        if dim <= 0:
-            return F.aggregate(
-                F.zip_with(x, y, lambda u, v: u * v), F.lit(0.0), lambda acc, z: acc + z
-            )
-        terms = [F.element_at(x, i) * F.element_at(y, i) for i in range(1, dim + 1)]
-        acc = terms[0]
-        for t in terms[1:]:
-            acc = acc + t
-        return acc
-
-    e = e.withColumn("nrm", F.sqrt(dot("v", "v"))).persist()
+    e, dot = _normed_embeddings(spark, sf_dir)
 
     # Candidate generation: blocked all-pairs numpy matmul (the
     # dedup_ngram_jaccard pattern) with the threshold relaxed by a
@@ -2069,24 +2080,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_embedding_cosine candidate/verify split. Cells bound the
     quadratic: at 100 TB, k grows with the corpus so cell size stays
     fixed, and the coarse tier keeps assignment sub-Θ(n·k)."""
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
-    )
-    dim_row = e.select(F.size("v").alias("d")).first()
-    dim = dim_row["d"] if dim_row else 0
-
-    def dot(x: str, y: str):
-        if dim <= 0:
-            return F.aggregate(
-                F.zip_with(x, y, lambda u, v: u * v), F.lit(0.0), lambda acc, z: acc + z
-            )
-        terms = [F.element_at(x, i) * F.element_at(y, i) for i in range(1, dim + 1)]
-        acc = terms[0]
-        for t in terms[1:]:
-            acc = acc + t
-        return acc
-
-    e = e.withColumn("nrm", F.sqrt(dot("v", "v"))).persist()
+    e, _ = _normed_embeddings(spark, sf_dir)
     # k grows with the corpus so CELL SIZE stays fixed — the docstring's
     # own scale claim, now executable: fixed k made cells (and their
     # per-cell matmuls) grow linearly, the same fixed-parameter failure

@@ -1,12 +1,12 @@
-"""Per-stage profile of one registered query (guide §1: measure first).
+"""Counters of registered queries from one traced run.
 
-Runs the named query at the given SF dir with the Spark event log
-enabled, forces it with the noop sink (one warmup + one timed pass),
-then parses the event log into a per-stage table: wall, summed task
-time, shuffle read/write bytes, spill, input bytes, task count — the
-local[32] equivalent of reading the stage page in the UI. Jobs are
-separated so driver-sequential actions (persists, checkpoints,
-convergence rounds) are visible as job boundaries.
+`TracedSession` starts the engine's session with the Spark event log
+on, runs each query in a `perfbench/spans.py` item span and reads the
+log with `perfbench/eventlog.py`, the repo's one event-log parser. A
+query's record is its wall time, the engine counters of its jobs and
+its driver gap (wall time with no Spark job running). Alone, the tool
+profiles one query: a warm-up run (none with `--cold`), one traced
+run, then the record and the traced run's jobs.
 
 Usage: python tools/stage_profile.py <query> [sf_dir] [--cold]
 """
@@ -17,166 +17,99 @@ import json
 import os
 import shutil
 import sys
-import time
+import tempfile
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# perfbench's modules import each other by bare name
+sys.path.append(os.path.join(REPO, "perfbench"))
 
+import eventlog  # noqa: E402
 from bench import force  # noqa: E402
 from database_to_bigquery_spark.registry import all_specs  # noqa: E402
 from database_to_bigquery_spark.session import get_spark  # noqa: E402
+from spans import Tracer  # noqa: E402
 
-LOG_DIR = "/tmp/spark-events-profile"
+RECORD = (
+    "jobs", "tasks", "executor_cpu_s", "gc_s", "shuffle_read_bytes",
+    "shuffle_write_bytes", "spill_bytes", "python_rows", "files_read_bytes",
+)
+
+
+class TracedSession:
+    """A session whose event log attributes each query's jobs to it.
+    Its log conf is perfbench `measure()`'s: uncompressed, rolling left
+    at Spark's default (the `events_*` files `eventlog.parse` reads)."""
+
+    def __init__(self, app: str):
+        self.log_dir = tempfile.mkdtemp(prefix=f"{app}-events-")
+        self.spark = get_spark(app, extra_conf={
+            "spark.ui.showConsoleProgress": "false",
+            "spark.eventLog.enabled": "true",
+            "spark.eventLog.compress": "false",
+            "spark.eventLog.dir": "file://" + self.log_dir,
+            "spark.sql.ui.explainMode": "simple",
+            "spark.eventLog.includeTaskMetricsAccumulators": "false",
+        })
+        self.spark.sparkContext.setLogLevel("ERROR")
+        self.specs = all_specs()
+        self.tracer = Tracer(enabled=True)
+        self.tracer.bind(self.spark)
+
+    def run(self, item: str, name: str, sf_dir: str) -> float:
+        """Force query ``name`` at ``sf_dir`` inside the item span
+        ``item``, then drop its persists so runs share no state.
+        Returns the span's wall seconds."""
+        try:
+            with self.tracer.item_span(item, f"operators.{name}"):
+                force(self.specs[name].fn(self.spark, sf_dir))
+        finally:
+            self.spark.catalog.clearCache()
+        span = self.tracer.spans[-1]
+        return span.end - span.start
+
+    def records(self) -> tuple[dict[str, dict], eventlog.EventLog]:
+        """Stop the session (which flushes its log), parse the log and
+        return one record per item span, with the parsed log."""
+        self.spark.stop()
+        try:
+            log = eventlog.parse(self.log_dir, lambda t: None)
+        finally:
+            shutil.rmtree(self.log_dir, ignore_errors=True)
+        out = {}
+        for s in self.tracer.spans:
+            c = log.total(None, {s.item})
+            out[s.item] = {
+                "wall_s": s.end - s.start,
+                **{k: c[k] for k in RECORD},
+                "driver_gap_s": log.driver_gap_s([(s.start, s.end)]),
+            }
+        return out, log
 
 
 def main() -> int:
-    if len(sys.argv) < 2:
+    args = [a for a in sys.argv[1:] if a != "--cold"]
+    if not args:
         print("usage: python tools/stage_profile.py <query> [sf_dir] [--cold]")
         return 2
-    name = sys.argv[1]
-    sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
-    cold = "--cold" in sys.argv
-    shutil.rmtree(LOG_DIR, ignore_errors=True)
-    os.makedirs(LOG_DIR, exist_ok=True)
-    spark = get_spark(
-        f"profile-{name}",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": LOG_DIR,
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
-    spec = all_specs()[name]
-    if not cold:
-        force(spark.read.parquet(os.path.join(sf_dir, "region.parquet")))
-        force(spec.fn(spark, sf_dir))  # warmup
-    spark.sparkContext.setJobDescription(f"timed:{name}")
-    t0 = time.time()
-    force(spec.fn(spark, sf_dir))
-    wall = time.time() - t0
-    spark.sparkContext.setJobDescription(None)
-    sc_app = spark.sparkContext.applicationId
-    spark.stop()
-
-    path = os.path.join(LOG_DIR, sc_app)
-    if not os.path.exists(path):
-        cands = [os.path.join(LOG_DIR, f) for f in os.listdir(LOG_DIR)]
-        if not cands:
-            print(f"no event log found under {LOG_DIR}")
-            return 1
-        path = max(cands, key=os.path.getmtime)
-    if os.path.isdir(path):  # event log v2: rolling dir of event files
-        files = sorted(
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.startswith("events_")
-        )
-    else:
-        files = [path]
-
-    jobs = {}  # jobId -> dict
-    stages = {}  # stageId -> dict
-    stage_job = {}
-    timed_jobs = set()
-    def lines():
-        for f in files:
-            if f.endswith(".zstd"):
-                import zstandard
-
-                with open(f, "rb") as raw:
-                    reader = zstandard.ZstdDecompressor().stream_reader(raw)
-                    import io
-
-                    for ln in io.TextIOWrapper(reader, encoding="utf-8"):
-                        yield ln
-            else:
-                with open(f) as fh:
-                    yield from fh
-
-    if True:
-        for line in lines():
-            ev = json.loads(line)
-            e = ev.get("Event")
-            if e == "SparkListenerJobStart":
-                jid = ev["Job ID"]
-                desc = (ev.get("Properties") or {}).get(
-                    "spark.job.description", ""
-                )
-                jobs[jid] = {
-                    "t0": ev["Submission Time"],
-                    "desc": desc,
-                    "stages": [s["Stage ID"] for s in ev["Stage Infos"]],
-                }
-                if desc == f"timed:{name}":
-                    timed_jobs.add(jid)
-                for s in ev["Stage Infos"]:
-                    stage_job[s["Stage ID"]] = jid
-            elif e == "SparkListenerJobEnd":
-                if ev["Job ID"] in jobs:
-                    jobs[ev["Job ID"]]["t1"] = ev["Completion Time"]
-            elif e == "SparkListenerStageCompleted":
-                si = ev["Stage Info"]
-                sid = si["Stage ID"]
-                st = stages.setdefault(sid, {})
-                st.update(
-                    name=si["Stage Name"],
-                    sub=si.get("Submission Time"),
-                    done=si.get("Completion Time"),
-                    tasks=si["Number of Tasks"],
-                )
-            elif e == "SparkListenerTaskEnd":
-                sid = ev["Stage ID"]
-                m = ev.get("Task Metrics") or {}
-                agg = stages.setdefault(sid, {}).setdefault(
-                    "m",
-                    {
-                        "run": 0, "cpu": 0, "srb": 0, "swb": 0,
-                        "inb": 0, "spill": 0, "fetchwait": 0, "n": 0,
-                        "pyser": 0,
-                    },
-                )
-                agg["run"] += m.get("Executor Run Time", 0)
-                agg["cpu"] += m.get("Executor CPU Time", 0) // 1_000_000
-                sr = m.get("Shuffle Read Metrics") or {}
-                agg["srb"] += sr.get("Remote Bytes Read", 0) + sr.get(
-                    "Local Bytes Read", 0
-                )
-                agg["fetchwait"] += sr.get("Fetch Wait Time", 0)
-                sw = m.get("Shuffle Write Metrics") or {}
-                agg["swb"] += sw.get("Shuffle Bytes Written", 0)
-                inp = m.get("Input Metrics") or {}
-                agg["inb"] += inp.get("Bytes Read", 0)
-                agg["spill"] += m.get("Memory Bytes Spilled", 0)
-                agg["n"] += 1
-
-    print(f"query={name} wall={wall:.2f}s  (timed pass only below)")
-    tj = sorted(timed_jobs)
-    total_job_wall = 0.0
-    for jid in tj:
-        j = jobs[jid]
-        jw = (j.get("t1", j["t0"]) - j["t0"]) / 1000.0
-        total_job_wall += jw
-        print(f"\njob {jid}  wall={jw:6.2f}s")
-        for sid in sorted(set(j["stages"])):
-            st = stages.get(sid)
-            if not st or ("m" not in st and st.get("sub") is None):
-                continue  # skipped stage
-            m = st.get("m", {})
-            sw = (
-                (st["done"] - st["sub"]) / 1000.0
-                if st.get("sub") and st.get("done")
-                else 0.0
-            )
-            nm = st.get("name", "?").split("\n")[0][:70]
-            print(
-                f"  stage {sid:4d} wall={sw:6.2f}s task_run={m.get('run',0)/1000:7.2f}s "
-                f"cpu={m.get('cpu',0)/1000:7.2f}s tasks={m.get('n',0):4d} "
-                f"in={m.get('inb',0)/1e6:8.1f}MB sr={m.get('srb',0)/1e6:8.1f}MB "
-                f"sw={m.get('swb',0)/1e6:8.1f}MB spill={m.get('spill',0)/1e6:6.0f}MB "
-                f"fw={m.get('fetchwait',0)/1000:5.2f}s  {nm}"
-            )
-    print(f"\njobs={len(tj)} sum_job_wall={total_job_wall:.2f}s wall={wall:.2f}s "
-          f"(gap = driver/planning time between jobs)")
+    name = args[0]
+    sf_dir = args[1] if len(args) > 1 else "/root/testdata/sf0.1"
+    session = TracedSession(f"profile-{name}")
+    if "--cold" not in sys.argv:
+        force(session.spark.read.parquet(os.path.join(sf_dir, "region.parquet")))
+        force(session.specs[name].fn(session.spark, sf_dir))
+        session.spark.catalog.clearCache()
+    session.run(name, name, sf_dir)
+    span = session.tracer.spans[0]
+    records, log = session.records()
+    print(json.dumps({"query": name, **records[name]}))
+    prev = span.start
+    for job in sorted((j for j in log.jobs.values() if j.item == name), key=lambda j: j.start):
+        end = job.end if job.end is not None else job.start
+        print(f"job {job.id:4d}  start +{job.start - span.start:7.3f}s  "
+              f"end +{end - span.start:7.3f}s  gap {max(0.0, job.start - prev):6.3f}s  "
+              f"stages {len(job.stages)}")
+        prev = max(prev, end)
     return 0
 
 

@@ -1,6 +1,7 @@
-"""Time EVERY registered query once at a given scale factor (default
-sf0.1) with a noop-format write (full distributed execution, no driver
-collect) and write TIMINGS.md sorted slowest-first.
+"""Run EVERY registered query once at a given scale factor (default
+sf0.1) with a noop-format write in one traced session
+(`tools/stage_profile.py`) and write TIMINGS.md sorted slowest-first,
+with each query's wall time and engine counters from that run.
 
 bench.py measures the headline set with warmup + medians; this census
 is the long tail's smoke alarm — a non-headline query that quietly
@@ -13,22 +14,17 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import force  # noqa: E402
-from database_to_bigquery_spark.registry import all_specs  # noqa: E402
-from database_to_bigquery_spark.session import get_spark  # noqa: E402
+from tools.stage_profile import TracedSession  # noqa: E402
 
 # Queries allowed to exceed the 10 s census flag, each with a measured
 # justification (re-validate when touching them). Past entry
 # (sim_knn_join_lsh, first-exec-JIT-dominated at ~26 s) was FIXED
 # instead — per-bucket numpy top-k scoring took its sf0.1 run to ~4 s
 # and its probe exponent from 1.37 to sublinear.
-# Slowest-N single-shot rows re-measured under the calm gate.
-_CALIBRATE_TOP = 12
-
 JUSTIFIED: dict[str, str] = {
     "dedup_incremental_clusters": (
         "includes the one-time standing-state backfill (corpus miner + "
@@ -60,13 +56,12 @@ def main() -> int:
     out_md = sys.argv[2] if len(sys.argv) > 2 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "TIMINGS.md"
     )
-    spark = get_spark("time-census")
-    spark.sparkContext.setLogLevel("ERROR")
-    specs = all_specs()
+    session = TracedSession("time-census")
+    spark, specs = session.spark, session.specs
 
     # Warmup, matching bench.py's documented hygiene: a JVM/codegen
     # pass AND an Arrow/Python-worker pass. Without the second, the
-    # first applyInPandas query in the (alphabetical) census pays 32
+    # first applyInPandas query in the (alphabetical) census pays
     # Python-worker forks + numpy/pandas imports — several seconds of
     # one-off process startup misattributed to whichever query runs
     # first, which is what the slow-flag threshold exists to catch in
@@ -86,68 +81,44 @@ def main() -> int:
         .applyInPandas(_warm, "id long, g long")
     )
 
-    rows = []
-    for name, spec in sorted(specs.items()):
-        t0 = time.monotonic()
-        err = ""
+    errors: dict[str, str] = {}
+    for name in sorted(specs):
         try:
-            force(spec.fn(spark, sf_dir))
+            session.run(name, name, sf_dir)
         except Exception as exc:  # noqa: BLE001
-            err = f"{type(exc).__name__}"
-        rows.append((time.monotonic() - t0, name, err))
-        spark.catalog.clearCache()  # drop persists so queries don't share state
+            errors[name] = type(exc).__name__
+    records, _ = session.records()
+    rows = sorted(records.items(), key=lambda kv: -kv[1]["wall_s"])
 
-    rows.sort(reverse=True)
-
-    # Calm-gated re-measurement of the slowest rows (judge r8 task 6):
-    # the single-shot pass above carries ±40% VM noise plus first-exec
-    # JIT attribution, exactly where the census's flag threshold needs
-    # numbers it can trust. The top rows are re-timed with the shared
-    # bracket-and-retry helper (median of 3 inside a ≤1.25× calm
-    # calibration window on both sides, residual ratio divided away).
-    from tools.calm import timed_calm
-
-    calibrated: dict[str, tuple[float, bool]] = {}
-    for t, name, err in rows[:_CALIBRATE_TOP]:
-        if err:
-            continue
-        wall, flagged = timed_calm(
-            spark, lambda s=specs[name]: force(s.fn(spark, sf_dir))
-        )
-        calibrated[name] = (wall, flagged)
-        print(f"  calibrated {name}: single-shot {t:.2f}s -> {wall:.2f}s")
-    rows = [
-        (calibrated.get(name, (t,))[0], name, err) for t, name, err in rows
-    ]
-    rows.sort(reverse=True)
-
-    total = sum(t for t, _, _ in rows)
+    total = sum(r["wall_s"] for _, r in rows)
     with open(out_md, "w") as f:
         f.write(
-            "# TIMINGS — wall time per query "
-            f"(generated by tools/time_census.py)\n\n"
+            "# TIMINGS — wall time and engine counters per query "
+            "(generated by tools/time_census.py)\n\n"
             f"Input: `{sf_dir}`; {len(rows)} queries, total {total:.1f} s. "
-            "Long tail: one run each, noop write, shared warm session "
-            "(±40% VM noise — the flag threshold is a smoke alarm, not a "
-            f"benchmark). The {len(calibrated)} slowest rows are "
-            "CALM-GATED (marked ✓cal): median of 3 runs accepted only "
-            "inside a ≤1.25× pinned-CPU calibration bracket on both "
-            "sides, residual ratio divided away (tools/calm.py — the "
-            "SCALE.md §15 protocol; * = no calm window found).\n\n"
-            "| query | sec | cal | note |\n|---|---|---|---|\n"
+            "Long tail: one run each, noop write, shared warm session. "
+            "`sec` is wall time (±40% VM noise — the flag threshold is a "
+            "smoke alarm, not a benchmark). The other columns are read "
+            "from the same run's Spark event log, by query: executor CPU "
+            "seconds, Spark jobs, driver gap (wall with no job running), "
+            "shuffle MB written and rows crossing the Python boundary "
+            "(tools/stage_profile.py).\n\n"
+            "| query | sec | cpu s | jobs | gap s | shuffle MB | py rows | note |\n"
+            "|---|---|---|---|---|---|---|---|\n"
         )
-        for t, name, err in rows:
-            note = err or JUSTIFIED.get(
-                name, "slow — justify or fix" if t > 10 else ""
+        for name, r in rows:
+            note = errors.get(name) or JUSTIFIED.get(
+                name, "slow — justify or fix" if r["wall_s"] > 10 else ""
             )
-            cal = ""
-            if name in calibrated:
-                cal = "✓cal" + ("*" if calibrated[name][1] else "")
-            f.write(f"| {name} | {t:.2f} | {cal} | {note} |\n")
+            f.write(
+                f"| {name} | {r['wall_s']:.2f} | {r['executor_cpu_s']:.2f} "
+                f"| {r['jobs']:.0f} | {r['driver_gap_s']:.2f} "
+                f"| {r['shuffle_write_bytes'] / 1e6:.2f} | {r['python_rows']:.0f} "
+                f"| {note} |\n"
+            )
     print(f"wrote {out_md}: {len(rows)} queries, total {total:.1f}s")
-    errs = [r for r in rows if r[2]]
-    if errs:
-        print("ERRORS:", errs)
+    if errors:
+        print("ERRORS:", errors)
         return 1
     return 0
 
