@@ -102,20 +102,9 @@ def range_fanout(df: DataFrame, floor: int = 32) -> int:
     three terms collapse to the floor, so local plans are unchanged.
     The result is still an EXPLICIT partition count, so AQE will not
     re-coalesce it and both consumers of the persisted range exchange
-    see identical boundaries. SPARK_GRAFT_RANGE_FANOUT overrides for
-    tests (the global ranks are width-agnostic by construction —
-    tests/test_range_fanout.py proves it at two widths).
+    see identical boundaries. The global ranks are width-agnostic by
+    construction (tests/test_range_fanout.py proves it at two widths).
     """
-    override = os.environ.get("SPARK_GRAFT_RANGE_FANOUT")
-    if override:
-        try:
-            n = int(override)
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_RANGE_FANOUT={override!r} is not an integer "
-                "(it is a partition count, e.g. 64)"
-            ) from None
-        return max(1, n)
     spark = df.sparkSession
     width = max(floor, spark.sparkContext.defaultParallelism)
     try:

@@ -34,7 +34,7 @@ import os
 from .data import load_table
 from .plans.pipeline import PipelineResult, run_pipeline
 from .plans.table_spec import TableSpec, schema_from_registry
-from .sinks.writers import FileSink, JdbcSink, ParquetSink, Sink
+from .sinks.writers import FileSink, JdbcSink, Sink
 from .session import get_spark
 from .sources.jdbc import JdbcSourceSpec, read_jdbc
 
@@ -134,12 +134,6 @@ def main(argv: list[str] | None = None) -> int:
                 table=f"{spec.name}_loaded",
                 properties=jdbc_props,
                 staged=True,  # full refreshes swap, never expose a half-load
-            )
-        elif args.sink_format == "parquet":
-            sink = ParquetSink(
-                declared_schema=declared,
-                path=os.path.join(args.target, spec.name),
-                partition_field=spec.partition_field,
             )
         else:
             sink = FileSink(

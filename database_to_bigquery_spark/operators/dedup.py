@@ -259,10 +259,13 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     approximate path for corpora where n²/P itself is too big.
     """
     pairs = blocked_jaccard_pairs(spark, char_shingles(spark, sf_dir), 0.6)
-    # final Jaccard from integer counts in Spark SQL — bit-identical to
-    # the oracle's DOUBLE division
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return pairs.select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
+    return pairs.select("doc_a", "doc_b", F.round(_exact_jaccard(), 4).alias("jaccard"))
+
+
+def _exact_jaccard() -> F.Column:
+    """Exact Jaccard from integer counts, n_common / (na + nb − n_common),
+    as a DOUBLE division in Spark SQL — bit-identical to the oracles'."""
+    return F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
 
 
 def blocked_jaccard_pairs(spark: SparkSession, sh: DataFrame, threshold: float) -> DataFrame:
@@ -471,35 +474,16 @@ def _packed_sig(k: int = _MH_K) -> F.Column:
 
 
 def _sig_agreement_packed_sql(a: str, b: str) -> str:
-    """SQL-string twin of `_sig_agreement_packed` for callers that
-    assemble a whole generated expression in one F.expr (the bucket-
-    grouped pair generator) — keep the two formulas in sync."""
+    """Position-agreement count over two PACKED signatures — exactly
+    `_sig_agreement` on the unpacked arrays (hi and lo halves compared
+    independently), at half the elements per row. SQL string, for the
+    bucket-grouped pair generator's one generated F.expr."""
     lo = _SIG_LO_MASK
     return (
         f"aggregate(zip_with({a}, {b}, (u, v) -> "
         f"(case when shiftright(u, 31) = shiftright(v, 31) then 1 else 0 end) + "
         f"(case when (u & {lo}) = (v & {lo}) then 1 else 0 end)), "
         f"0, (acc, x) -> acc + x)"
-    )
-
-
-def _sig_agreement_packed(a="sig_a", b="sig_b") -> F.Column:
-    """Position-agreement count over two PACKED signatures — exactly
-    `_sig_agreement` on the unpacked arrays (hi and lo halves compared
-    independently), at half the elements per row. ``a``/``b`` may be
-    column names or Column expressions (the bucket-grouped pair
-    generator passes lambda-bound struct fields)."""
-    lo = F.lit(_SIG_LO_MASK)
-    return F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda u, v: F.when(F.shiftright(u, 31) == F.shiftright(v, 31), 1)
-            .otherwise(0)
-            + F.when(u.bitwiseAND(lo) == v.bitwiseAND(lo), 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
     )
 
 
@@ -760,33 +744,9 @@ def minhash_verified_pairs(
     # (exact partition-key match) — distinct + a second join exchange
     # would cost two.
     sig_est = cand.repartition("doc_a").dropDuplicates(["doc_a", "doc_b"])
-
-    sh_a = shingles
-    # intersection count as an equi-join on BOTH (doc, gram) keys —
-    # joining on doc alone and post-filtering grams would fan out to
-    # |A|×|B| rows per candidate pair before filtering. merge (SMJ)
-    # hints: the shingle relation is the CORPUS (~60× its text bytes);
-    # Catalyst's post-cache estimate undershoots and broadcast-OOMs
-    # past ~100k docs, no corpus relation broadcasts at 100 TB, and
-    # only SMJ's spillable sort survives building against it.
-    pair_grams = (
-        sig_est.join(
-            sh_a.select(F.col("doc_id").alias("doc_a"), "g").hint("merge"),
-            "doc_a",
-        )
-        .join(
-            sh_a.select(F.col("doc_id").alias("doc_b"), F.col("g").alias("g"))
-            .hint("merge"),
-            ["doc_b", "g"],
-        )
-        .groupBy("doc_a", "doc_b", "est_jaccard", "na", "nb")
-        .agg(F.count("*").alias("n_common"))
-    )
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    return (
-        pair_grams.filter(jac >= 0.6)
-        .select("doc_a", "doc_b", "est_jaccard", F.round(jac, 4).alias("jaccard"))
-    )
+    # both shingle sides are the corpus: merge (SMJ) hints, see the
+    # probe-steps note above cross_minhash_pairs
+    return _verify(sig_est, shingles, shingles, ("doc_a", "doc_b"), (True, True))
 
 
 # ----------------------------------------------------------- simhash ----
@@ -1561,101 +1521,60 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cross_minhash_pairs(
-    batch_sh: DataFrame,
-    corpus_sh: DataFrame,
-    corpus_sig: DataFrame | None = None,
-    batch_sig: DataFrame | None = None,
-    corpus_bands: DataFrame | None = None,
-    prune_corpus_to_batch: bool = False,
-    cleanup: list[DataFrame] | None = None,
-) -> DataFrame:
-    """Asymmetric banded-MinHash near-dup probe between two (doc_id, g)
-    shingle relations: bucket join batch bands against corpus bands,
-    signature pre-filter, exact Jaccard verification on candidates.
-    The shared core of `dedup_incremental_minhash` (batch split of one
-    table) and the streaming fuzzy-dedup job (micro-batch against a
-    standing corpus); fixed permutation constants make signatures
-    comparable across calls/runs. ``corpus_sig``/``batch_sig`` accept
-    PRECOMPUTED (doc_id, sig, n) relations — the production shape
-    where corpus signatures are materialized once and only the
-    batch's are hashed per probe (the fixed permutations make them
-    comparable across runs); omitted, they are derived from the
-    shingle relations here. The ``n`` column doubles as the exact
-    Jaccard denominator, so no separate size pass over the expanded
-    shingles runs on either side. ``corpus_bands`` likewise accepts a
-    PRECOMPUTED band relation for the corpus side — the streaming job
-    persists it hash-partitioned on the bucket key once (ALREADY
-    hot-bucket-capped by `probe_layout`), so each micro-batch's bucket
-    join reuses the cached partitioning instead of re-deriving and
-    re-shuffling the corpus bands per batch; a corpus side derived
-    here is capped here. Both sides are capped independently — the
-    probe join's per-bucket cost is n_batch × n_corpus, so either
-    side's hot bucket blows it up (see LSH_BUCKET_CAP).
+# ------------------------------------------- batch-vs-corpus probe steps ----
+# Every MinHash probe of a batch against a standing corpus runs the same
+# four steps: side prep (`_probe_side`), band candidates
+# (`_band_candidates`), estimate (`_estimate`) and verify (`_verify`).
+# `cross_minhash_pairs` composes them over in-memory relations,
+# `streaming.standing_store.StandingStore.probe` over bucket-pruned store
+# reads, and the corpus-wide miner ends in the same verify step. Each
+# caller states its join strategy: ``merge`` puts a sort-merge hint on
+# a corpus-sized join input (the shingle relation is ~60× its text
+# bytes; Catalyst's post-cache estimate undershoots and a broadcast
+# OOMs the driver past ~100k docs, while SMJ's sort spills). The
+# store's inputs are already cut to the batch's buckets, so it passes
+# no hint and leaves the strategy to AQE.
 
-    ``prune_corpus_to_batch`` (judge r8 task 2) turns on the small-
-    batch probe shape: every corpus-sized relation is semi-filtered by
-    a BROADCAST of the batch's keys before its merge join — band
-    relation by the batch's (band_idx, band_hash) bucket keys (~16/doc),
-    signature/shingle/size relations by the candidates' corpus doc ids
-    — so the per-batch SMJs merge only the matched buckets/docs instead
-    of streaming the whole standing cache through the merge, and
-    everything downstream of each filter touches O(batch-matched) rows.
-    The candidate relation is persisted so its two consumers (the
-    doc-id key broadcast and the verification chain) compute it once.
-    Turn this ON when the batch side is small relative
-    to the corpus (streaming micro-batches, incremental maintenance
-    steps); leave OFF for corpus×corpus backfills, where "batch keys"
-    are corpus-sized and must never broadcast. Semi filters preserve
-    the cached layout's partitioning and ordering, so the standing side
-    stays exchange- and sort-free either way.
 
-    ``cleanup``: when given, any relation this call PERSISTS (the
-    pruned path's compute-once candidate relation) is appended so the
-    caller can release it once the probe's outputs are materialized —
-    the streaming job passes a per-micro-batch list (advisor r9: the
-    previous lazy localCheckpoint here was reclaimed only by driver
-    GC in a long-running job, and its lineage truncation made the
-    probe non-recomputable on executor loss; persist + explicit
-    unpersist restores both). Without ``cleanup`` the persist still
-    resolves the plan diamond and stays recomputable/evictable — a
-    one-shot query context may omit it.
-    Returns (batch_id, corpus_id, est_jaccard, jaccard ≥ 0.6)."""
-    # canonical gid encoding on both sides (no-op for shingles_of
-    # output — see _as_gids); PRECOMPUTED sigs are sample-verified
-    # against their shingle side so a sig persisted under a different
-    # encoding fails loudly instead of silently matching nothing
-    # (advisor r7) — memoized per relation, see _check_sig_encoding
-    batch_sh = _as_gids(batch_sh)
-    corpus_sh = _as_gids(corpus_sh)
-    if batch_sig is not None:
-        _check_sig_encoding(batch_sig, batch_sh, "batch_sig")
-    if corpus_sig is not None:
-        _check_sig_encoding(corpus_sig, corpus_sh, "corpus_sig")
-    sig_b = batch_sig if batch_sig is not None else minhash_signatures(batch_sh)
-    sig_c = corpus_sig if corpus_sig is not None else minhash_signatures(corpus_sh)
-    bands_c = (
-        corpus_bands
-        if corpus_bands is not None
-        else drop_hot_buckets(signature_bands(sig_c))
-    )
-    bands_b = drop_hot_buckets(signature_bands(sig_b))
-    if prune_corpus_to_batch:
-        # the batch's bucket keys are O(batch × bands) — broadcast
-        # them and keep only the corpus band rows in matched buckets,
-        # BEFORE the merge join streams the standing cache
-        bands_c = bands_c.join(
-            F.broadcast(bands_b.select("band_idx", "band_hash").distinct()),
-            ["band_idx", "band_hash"],
-            "left_semi",
-        )
-    cand = (
-        bands_b
-        .alias("x")
-        # merge (SMJ): the corpus band relation is corpus-sized — see
-        # dedup_minhash_lsh's bucket join note (misestimated broadcast
-        # of a corpus relation OOMs the driver past ~100k docs)
-        .hint("merge")
+def _hinted(df: DataFrame, merge: bool) -> DataFrame:
+    return df.hint("merge") if merge else df
+
+
+def _semi_by(rel: DataFrame, keys: DataFrame, on) -> DataFrame:
+    """Rows of ``rel`` whose ``on`` key is among the BROADCAST ``keys``
+    (batch-sized). A semi filter keeps the rows' partitioning and
+    order, so a cached standing side stays exchange- and sort-free."""
+    return rel.join(F.broadcast(keys), on, "left_semi")
+
+
+def _probe_side(
+    sh: DataFrame, sig: DataFrame | None, arg: str, bands: DataFrame | None
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Side prep: (shingles, signatures, bands) of one probe side.
+    Shingles get the canonical gid encoding (no-op for `shingles_of`
+    output — see _as_gids). A PRECOMPUTED ``sig`` is sample-verified
+    against the shingles (see _check_sig_encoding, which names it
+    ``arg`` in its error), so a signature persisted under another
+    encoding fails loudly instead of silently matching nothing; with
+    ``sig`` None it is derived here. With ``bands`` None the signatures
+    are banded and hot-bucket-capped here — the probe's per-bucket cost is
+    n_batch × n_corpus, so either side's hot bucket blows it up (see
+    LSH_BUCKET_CAP)."""
+    sh = _as_gids(sh)
+    if sig is None:
+        sig = minhash_signatures(sh)
+    else:
+        _check_sig_encoding(sig, sh, arg)
+    if bands is None:
+        bands = drop_hot_buckets(signature_bands(sig))
+    return sh, sig, bands
+
+
+def _band_candidates(bands_b: DataFrame, bands_c: DataFrame, merge: bool) -> DataFrame:
+    """Band candidates: the distinct (batch_id, corpus_id) pairs that
+    share a (band_idx, band_hash) bucket."""
+    return (
+        _hinted(bands_b.alias("x"), merge)
         .join(
             bands_c.alias("y"),
             (F.col("x.band_idx") == F.col("y.band_idx"))
@@ -1666,28 +1585,18 @@ def cross_minhash_pairs(
         )
         .distinct()
     )
-    if prune_corpus_to_batch:
-        # persist: the candidate relation feeds BOTH the corpus-doc-id
-        # key broadcast below and the verification chain; without it
-        # the diamond recomputes the bucket join per consumer. Lazy
-        # persist (not an eager checkpoint) keeps the function free of
-        # composition-time side effects; unlike localCheckpoint it
-        # keeps lineage (recomputable on executor loss) and releases
-        # deterministically via the caller's cleanup list (advisor r9).
-        cand = cand.persist()
-        if cleanup is not None:
-            cleanup.append(cand)
-        matched_ids = cand.select(F.col("corpus_id").alias("doc_id")).distinct()
-        sig_c = sig_c.join(F.broadcast(matched_ids), "doc_id", "left_semi")
-        corpus_sh = corpus_sh.join(F.broadcast(matched_ids), "doc_id", "left_semi")
-    # na/nb RIDE the signature attach (r11 — the r10 miner's "n rides"
-    # fix applied to the asymmetric probe): the sig relations already
-    # carry the distinct-shingle count n, so selecting it here deletes
-    # the two size-attach joins that previously sat ABOVE the
-    # verification aggregate — one of them a corpus-sized sort-merge
-    # join. The counts travel as groupBy keys exactly like est_jaccard
-    # (pure functions of the doc, so the grouping is unchanged).
-    sig_est = (
+
+
+def _estimate(cand: DataFrame, sig_b: DataFrame, sig_c: DataFrame, merge: bool) -> DataFrame:
+    """Estimate: attach both sides' ``sig`` and ``n`` to the candidates
+    and keep the pairs whose signature agreement passes the same 2.5σ
+    pre-filter as the full miner (_est_threshold), which drops the
+    shared-vocabulary background before the exact (doc, gram) join.
+    Keeps batch_id, corpus_id, est_jaccard and na/nb, which ride the
+    signature attach (the sig relations carry the distinct-shingle
+    count n), so no size-attach join sits above the verification
+    aggregate."""
+    return (
         cand.join(
             sig_b.select(
                 F.col("doc_id").alias("batch_id"),
@@ -1697,40 +1606,129 @@ def cross_minhash_pairs(
             "batch_id",
         )
         .join(
-            sig_c.select(
-                F.col("doc_id").alias("corpus_id"),
-                F.col("sig").alias("sig_b"),
-                F.col("n").alias("nb"),
-            )
-            .hint("merge"),  # corpus-sized sig relation — see miner note
+            _hinted(
+                sig_c.select(
+                    F.col("doc_id").alias("corpus_id"),
+                    F.col("sig").alias("sig_b"),
+                    F.col("n").alias("nb"),
+                ),
+                merge,
+            ),
             "corpus_id",
         )
         .withColumn("est_jaccard", F.round(_sig_agreement().cast("double") / _MH_K, 4))
         .drop("sig_a", "sig_b")
-        # same 2.5σ signature pre-filter as the full miner: drop the
-        # shared-vocabulary background before the exact (doc, gram) join
         .filter(F.col("est_jaccard") >= _est_threshold(_MH_K))
     )
-    # corpus-side relations (shingles) ride merge (SMJ) joins: they are
-    # O(corpus), must never broadcast, and only SMJ spills when
-    # building against them — see the full miner's pair_grams note
-    # (the batch side stays broadcastable when AQE's real stats say it
-    # is small)
+
+
+def _verify(
+    pairs: DataFrame,
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    ids: tuple[str, str],
+    merge: tuple[bool, bool],
+) -> DataFrame:
+    """Verify: exact Jaccard of each (a, b, est_jaccard, na, nb) pair,
+    ``ids`` = (a, b), kept at ≥ 0.6 and rounded to 4 dp. The
+    intersection count is an equi-join on BOTH (doc, gram) keys —
+    joining on doc alone and post-filtering grams would fan out to
+    |A|×|B| rows per candidate pair before filtering. ``merge`` hints
+    the (sh_a, sh_b) inputs. Returns (a, b, est_jaccard, jaccard)."""
+    (a, b), (merge_a, merge_b) = ids, merge
     pair_grams = (
-        sig_est.join(batch_sh.select(F.col("doc_id").alias("batch_id"), "g"), "batch_id")
+        pairs.join(_hinted(sh_a.select(F.col("doc_id").alias(a), "g"), merge_a), a)
         .join(
-            corpus_sh.select(F.col("doc_id").alias("corpus_id"), F.col("g").alias("g"))
-            .hint("merge"),
-            ["corpus_id", "g"],
+            _hinted(
+                sh_b.select(F.col("doc_id").alias(b), F.col("g").alias("g")), merge_b
+            ),
+            [b, "g"],
         )
-        .groupBy("batch_id", "corpus_id", "est_jaccard", "na", "nb")
+        .groupBy(a, b, "est_jaccard", "na", "nb")
         .agg(F.count("*").alias("n_common"))
     )
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
+    jac = _exact_jaccard()
     return (
         pair_grams.filter(jac >= 0.6)
-        .select("batch_id", "corpus_id", "est_jaccard", F.round(jac, 4).alias("jaccard"))
+        .select(a, b, "est_jaccard", F.round(jac, 4).alias("jaccard"))
     )
+
+
+def cross_minhash_pairs(
+    batch_sh: DataFrame,
+    corpus_sh: DataFrame,
+    corpus_sig: DataFrame | None = None,
+    batch_sig: DataFrame | None = None,
+    corpus_bands: DataFrame | None = None,
+    prune_corpus_to_batch: bool = False,
+    cleanup: list[DataFrame] | None = None,
+) -> DataFrame:
+    """Asymmetric banded-MinHash near-dup probe between two (doc_id, g)
+    shingle relations, composed of the shared probe steps: side prep
+    of each side, band candidates, the signature estimate and exact
+    verification — with sort-merge hints on every corpus-sized join
+    input. The shared core of `dedup_incremental_minhash` (batch split
+    of one table), `dedup_incremental_clusters` and the streaming
+    fuzzy-dedup job (micro-batch against a standing corpus); fixed
+    permutation constants make signatures comparable across
+    calls/runs. ``corpus_sig``/``batch_sig`` accept PRECOMPUTED
+    (doc_id, sig, n) relations — the production shape where corpus
+    signatures are materialized once and only the batch's are hashed
+    per probe; omitted, they are derived from the shingle relations.
+    The ``n`` column doubles as the exact Jaccard denominator, so no
+    separate size pass over the expanded shingles runs on either side.
+    ``corpus_bands`` likewise accepts a PRECOMPUTED band relation for
+    the corpus side — the streaming job persists it hash-partitioned
+    on the bucket key once (ALREADY hot-bucket-capped by
+    `probe_layout`), so each micro-batch's bucket join reuses the
+    cached partitioning instead of re-deriving and re-shuffling the
+    corpus bands per batch.
+
+    ``prune_corpus_to_batch`` (judge r8 task 2) turns on the small-
+    batch probe shape: every corpus-sized relation is semi-filtered by
+    a BROADCAST of the batch's keys before its merge join — band
+    relation by the batch's (band_idx, band_hash) bucket keys (~16/doc),
+    signature/shingle relations by the candidates' corpus doc ids — so
+    the per-batch SMJs merge only the matched buckets/docs instead of
+    streaming the whole standing cache through the merge. The
+    candidate relation is persisted so its two consumers (the doc-id
+    key broadcast and the verification chain) compute it once. Turn
+    this ON when the batch side is small relative to the corpus
+    (streaming micro-batches, incremental maintenance steps); leave
+    OFF for corpus×corpus backfills, where "batch keys" are
+    corpus-sized and must never broadcast.
+
+    ``cleanup``: when given, any relation this call PERSISTS (the
+    pruned path's candidate relation) is appended so the caller can
+    release it once the probe's outputs are materialized — the
+    streaming job passes a per-micro-batch list (advisor r9: a lazy
+    localCheckpoint here was reclaimed only by driver GC in a
+    long-running job, and its lineage truncation made the probe
+    non-recomputable on executor loss; persist + explicit unpersist
+    restores both). Without ``cleanup`` the persist still resolves the
+    plan diamond and stays recomputable/evictable — a one-shot query
+    context may omit it.
+    Returns (batch_id, corpus_id, est_jaccard, jaccard ≥ 0.6)."""
+    batch_sh, sig_b, bands_b = _probe_side(batch_sh, batch_sig, "batch_sig", bands=None)
+    corpus_sh, sig_c, bands_c = _probe_side(
+        corpus_sh, corpus_sig, "corpus_sig", corpus_bands
+    )
+    if prune_corpus_to_batch:
+        bands_c = _semi_by(
+            bands_c,
+            bands_b.select("band_idx", "band_hash").distinct(),
+            ["band_idx", "band_hash"],
+        )
+    cand = _band_candidates(bands_b, bands_c, merge=True)
+    if prune_corpus_to_batch:
+        cand = cand.persist()
+        if cleanup is not None:
+            cleanup.append(cand)
+        matched_ids = cand.select(F.col("corpus_id").alias("doc_id")).distinct()
+        sig_c = _semi_by(sig_c, matched_ids, "doc_id")
+        corpus_sh = _semi_by(corpus_sh, matched_ids, "doc_id")
+    est = _estimate(cand, sig_b, sig_c, merge=True)
+    return _verify(est, batch_sh, corpus_sh, ("batch_id", "corpus_id"), (False, True))
 
 
 @query(

@@ -478,7 +478,7 @@ def llm_corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.col("text").substr(i, F.lit(5)),
         )
     )
-    from .dedup import blocked_jaccard_pairs, spread_partitions
+    from .dedup import _exact_jaccard, blocked_jaccard_pairs, spread_partitions
 
     sh = spread_partitions(kept_q, "doc_id").select(
         "doc_id", F.explode(grams).alias("g")
@@ -488,8 +488,11 @@ def llm_corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
     # this dense corpus); ratio re-derived from integer counts in SQL
 
     pairs = blocked_jaccard_pairs(spark, sh, 0.6)
-    jac = F.col("n_common").cast("double") / (F.col("na") + F.col("nb") - F.col("n_common"))
-    dups = pairs.filter(jac >= 0.6).select(F.col("doc_b").alias("doc_id")).distinct()
+    dups = (
+        pairs.filter(_exact_jaccard() >= 0.6)
+        .select(F.col("doc_b").alias("doc_id"))
+        .distinct()
+    )
     final = kept_q.join(dups, "doc_id", "left_anti")
 
     report = (

@@ -5,9 +5,10 @@ schema, WRITE_TRUNCATE/WRITE_APPEND disposition and optional DAY
 time-partitioning (reference bigquery_operations.py:21-52). Here that
 is one abstract ``Sink`` with two implementations:
 
-* ``ParquetSink`` — the test/file implementation; distributed write,
-  day-partitioned layout via ``partitionBy`` (partition pruning for
-  every downstream reader).
+* ``FileSink`` — the file implementation (parquet / orc / csv / json);
+  distributed write, day-partitioned layout via ``partitionBy``
+  (partition pruning for every downstream reader). ``ParquetSink`` is
+  that sink with the format fixed to parquet.
 * ``BigQuerySink`` — the production implementation via the public
   spark-bigquery-connector; fully configured but raises a clear error
   when the connector jar is absent (it is not in this container).
@@ -16,8 +17,10 @@ is one abstract ``Sink`` with two implementations:
 from __future__ import annotations
 
 import enum
+import os
 import re
-from dataclasses import dataclass
+import shutil
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -67,51 +70,34 @@ class Sink:
 
 
 @dataclass
-class ParquetSink(Sink):
-    path: str = ""
-
-    def write(self, df: DataFrame, mode: WriteMode) -> int:
-        """Distributed parquet write; returns rows written (S14 audit).
-
-        Day partitioning: a derived date column (`<field>_day`) becomes
-        the directory key so the original timestamp column survives
-        intact — at 100 TB this is what gives readers partition pruning.
-        """
-        df, obs = _observed(self.prepare(df))  # S14 audit rides the write pass
-        if self.partition_field:
-            day_col = f"{self.partition_field}_day"
-            df = df.withColumn(day_col, F.to_date(F.col(self.partition_field)))
-            writer = df.write.mode(mode.value).partitionBy(day_col)
-        else:
-            writer = df.write.mode(mode.value)
-        writer.parquet(self.path)
-        return int(obs.get["rows"])
-
-
-@dataclass
 class FileSink(Sink):
-    """Generic file sink for the remaining built-in formats — the write
-    side of sources/files.py::FileSourceSpec (orc / csv / json), so a
-    pipeline can round-trip any format it can read. Same contract as
-    ParquetSink: schema-enforce, single-pass observed audit count,
-    optional DAY partitioning by a derived date column.
+    """File sink for the built-in formats — the write side of
+    sources/files.py::FileSourceSpec (parquet / orc / csv / json), so a
+    pipeline can round-trip any format it can read: schema-enforce,
+    single-pass observed audit count, optional DAY partitioning by a
+    derived date column (`<field>_day`) that becomes the directory key
+    so the original timestamp column survives intact — at 100 TB this
+    is what gives readers partition pruning.
 
     Format notes: csv writes a header by default (matching the read
     side's default); json is newline-delimited (the reference ships BQ
     loads as NDJSON, bigquery_operations.py:28); timestamps survive in
-    orc, while csv/json callers wanting the reference's string form
-    apply S4 (format_datetimes_as_strings) upstream.
+    parquet and orc, while csv/json callers wanting the reference's
+    string form apply S4 (format_datetimes_as_strings) upstream.
     """
 
     path: str = ""
-    format: str = "orc"  # orc | csv | json
+    format: str = "orc"  # parquet | orc | csv | json
     options: dict[str, str] | None = None
 
     def write(self, df: DataFrame, mode: WriteMode) -> int:
+        """Distributed write; returns rows written (S14 audit)."""
         fmt = self.format.lower()
-        if fmt not in {"orc", "csv", "json"}:
-            raise ValueError(f"FileSink format must be orc/csv/json, got {self.format}")
-        df, obs = _observed(self.prepare(df))
+        if fmt not in {"parquet", "orc", "csv", "json"}:
+            raise ValueError(
+                f"FileSink format must be parquet/orc/csv/json, got {self.format}"
+            )
+        df, obs = _observed(self.prepare(df))  # S14 audit rides the write pass
         if self.partition_field:
             day_col = f"{self.partition_field}_day"
             df = df.withColumn(day_col, F.to_date(F.col(self.partition_field)))
@@ -124,6 +110,15 @@ class FileSink(Sink):
             writer = writer.option(k, v)
         writer.format(fmt).save(self.path)
         return int(obs.get["rows"])
+
+
+@dataclass
+class ParquetSink(FileSink):
+    """`FileSink` with the format fixed to parquet and no writer
+    options — the test/file implementation of the reference's sink."""
+
+    format: str = field(default="parquet", init=False)
+    options: dict[str, str] | None = field(default=None, init=False)
 
 
 @dataclass
@@ -430,16 +425,10 @@ def compact_parquet_dir(
     Rewrites the directory to ceil(bytes / target_file_bytes) files
     via coalesce (narrow — no shuffle: compaction is IO-bound, a
     repartition would pay a full shuffle for nothing) and swaps the
-    result in via rename-aside: the live dir moves to ``<path>._old``,
-    the compacted dir renames into place, then ``._old`` is deleted.
-    Each rename is atomic on a POSIX filesystem, so the window with no
-    data at ``path`` is one rename-to-rename gap (microseconds), not
-    the full recursive delete the naive rmtree-then-replace would
-    leave; a crash mid-swap strands a recoverable ``._old`` copy
-    instead of losing the dataset. (This is still not a transaction —
-    a table format's metadata commit, Delta OPTIMIZE / Iceberg
-    rewrite_data_files, is the true atomic version at cluster scale.)
-    Returns (files_before, files_after).
+    result in by rename-aside (`swap_dir`). (This is still not a
+    transaction — a table format's metadata commit, Delta OPTIMIZE /
+    Iceberg rewrite_data_files, is the true atomic version at cluster
+    scale.) Returns (files_before, files_after).
 
     At cluster scale the same logic runs per partition directory —
     day partitions compact independently and in parallel, and a table
@@ -447,8 +436,6 @@ def compact_parquet_dir(
     directory swap with a transactional commit.
     """
     import math
-    import os
-    import shutil
 
     def _parquet_files(p: str) -> list[str]:
         return [
@@ -463,11 +450,25 @@ def compact_parquet_dir(
     n_out = max(1, math.ceil(total_bytes / target_file_bytes))
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "._compacting"
-    old = path.rstrip("/") + "._old"
     df.coalesce(n_out).write.mode("overwrite").parquet(tmp)
+    swap_dir(tmp, path)
+    return len(before), len(_parquet_files(path))
+
+
+def swap_dir(staged: str, path: str) -> None:
+    """Move the directory ``staged`` into place at ``path`` by
+    rename-aside: the live dir (if any) moves to ``<path>._old``,
+    ``staged`` renames into place, then ``._old`` is deleted. Each
+    rename is atomic on a POSIX filesystem, so the window with no data
+    at ``path`` is one rename-to-rename gap, not a recursive delete,
+    and a crash mid-swap strands a recoverable ``._old`` copy instead
+    of losing the dataset."""
+    old = path.rstrip("/") + "._old"
     if os.path.exists(old):  # leftover from a crashed prior swap
         shutil.rmtree(old)
-    os.replace(path, old)
-    os.replace(tmp, path)
-    shutil.rmtree(old)
-    return len(before), len(_parquet_files(path))
+    live = os.path.exists(path)
+    if live:
+        os.replace(path, old)
+    os.replace(staged, path)
+    if live:
+        shutil.rmtree(old)

@@ -20,11 +20,29 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
+from ..sinks.writers import swap_dir
+
 # Every Nth micro-batch the fuzzy-dedup admissions cache is rebuilt
 # from ONE scan of the on-disk store instead of extending the cached
 # union again — bounds the cached plan's width (and the per-batch
 # planning cost) to N union branches regardless of stream lifetime.
 _ADMISSIONS_COMPACT_EVERY = 8
+
+
+def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
+    """``path`` read as parquet, or None when it does not exist. Only
+    a missing path means "nothing written yet": a corrupt file or a
+    transient FS error propagates, because reading past it as empty
+    would drop a snapshot's rows or re-admit duplicates (ADVICE r4)."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as exc:
+        if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
+            return None
+        raise
+
 
 EVENTS_SCHEMA = T.StructType(
     [
@@ -271,11 +289,8 @@ def run_foreach_batch_merge(
             .filter(F.col("_rn") == 1)
             .select(key_col, "ts", "event_id", "event_type", "value")
         )
-        try:
-            base = spark.read.parquet(target_dir)
-        except Exception:  # first batch: no snapshot yet
-            base = None
-        if base is None:
+        base = _read_if_exists(spark, target_dir)
+        if base is None:  # first batch: no snapshot yet
             merged = latest
         else:
             b = base.alias("b")
@@ -296,17 +311,11 @@ def run_foreach_batch_merge(
                     for c in ["ts", "event_id", "event_type", "value"]
                 ],
             )
-        # stage-then-swap: write to a temp dir and atomically rename so
-        # a reader never sees a half-written snapshot (local-FS stand-in
-        # for a table format's transactional commit)
-        import os
-        import shutil
-
+        # stage-then-swap so a reader never sees a half-written
+        # snapshot (local-FS stand-in for a table format's commit)
         tmp = target_dir.rstrip("/") + f"._staging_{batch_id}"
         merged.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(target_dir):
-            shutil.rmtree(target_dir)
-        os.replace(tmp, target_dir)
+        swap_dir(tmp, target_dir)
 
     return (
         changes.writeStream.foreachBatch(merge_batch)
@@ -853,19 +862,11 @@ def run_fuzzy_dedup_stream(
     }
 
     def _read_store(sub: str, schema: str) -> tuple[DataFrame, bool]:
-        """Admissions sub-store as (relation, dir-existed). Only the
-        missing-directory case is treated as "no admissions" — a
-        corrupt store or a transient FS error must propagate, because
-        silently deduping against nothing would re-admit duplicates
-        (ADVICE r4)."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.parquet(f"{admissions_dir}/{sub}"), True
-        except AnalysisException as exc:  # first batch: dir not there yet
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                return spark.createDataFrame([], schema), False
-            raise
+        """Admissions sub-store as (relation, dir-existed)."""
+        df = _read_if_exists(spark, f"{admissions_dir}/{sub}")
+        if df is None:  # first batch: dir not there yet
+            return spark.createDataFrame([], schema), False
+        return df, True
 
     def _drop_tier(tier: str) -> None:
         old = adm[tier]
@@ -898,20 +899,13 @@ def run_fuzzy_dedup_stream(
         store. The delta union is re-persisted, but it holds at most
         one compaction interval of admissions, so this materializes
         O(batch), not O(admissions)."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            new_sh = spark.read.parquet(
-                f"{admissions_dir}/shingles/micro_batch_id={batch_id}"
-            )
-            new_sig = spark.read.parquet(
-                f"{admissions_dir}/sigs/micro_batch_id={batch_id}"
-            )
-        except AnalysisException as exc:  # nothing admitted this batch
-            if "PATH_NOT_FOUND" in str(exc) or "Path does not exist" in str(exc):
-                adm["upto"] = batch_id + 1
-                return
-            raise
+        new_sh, new_sig = (
+            _read_if_exists(spark, f"{admissions_dir}/{sub}/micro_batch_id={batch_id}")
+            for sub in ("shingles", "sigs")
+        )
+        if new_sh is None or new_sig is None:  # nothing admitted this batch
+            adm["upto"] = batch_id + 1
+            return
         old_delta = adm["delta"]
         if old_delta is not None:
             new_sh = old_delta[0].unionByName(new_sh)

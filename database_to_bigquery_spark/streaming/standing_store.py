@@ -50,8 +50,14 @@ partitions + a delta Bloom, compacted on the LSM cadence
 (`streaming/jobs.py`); this module implements the base-tier store and
 its probe.
 
-Equivalence to the cached-relation probe (`cross_minhash_pairs`) is
-pinned in tests/test_streaming.py.
+The probe itself is the shared batch-vs-corpus chain of
+`operators.dedup` — side prep (`_probe_side`, which also checks a
+precomputed signature), band candidates, the signature estimate and
+exact verification, the same steps `cross_minhash_pairs` composes.
+This module adds only what the store needs around them: the Bloom
+test, the bucket reads, and the three bucket-list collects that gate
+those reads. Equivalence to `cross_minhash_pairs` is pinned in
+tests/test_streaming.py.
 """
 
 from __future__ import annotations
@@ -63,14 +69,12 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.dedup import (
-    _MH_K,
-    _as_gids,
-    _est_threshold,
-    _sig_agreement,
-    minhash_signatures,
-    signature_bands,
+    _band_candidates,
+    _estimate,
+    _probe_side,
+    _semi_by,
+    _verify,
 )
-from ..operators.pairs import drop_hot_buckets
 
 TARGET_BAND_BUCKET_ROWS = 4096
 TARGET_DOC_BUCKET_DOCS = 128
@@ -133,12 +137,13 @@ class StandingStore:
         """One-time (or compaction-cadence) store build from a
         (doc_id, g) shingle relation: bucketed parquet for bands /
         sigs / shingles plus the Bloom index. All O(corpus) work lives
-        here — the per-batch probe reads only matched buckets."""
+        here — the per-batch probe reads only matched buckets. A
+        precomputed ``corpus_sig`` is checked like the probe's
+        (`_probe_side`)."""
         spark = corpus_sh.sparkSession
-        corpus_sh = _as_gids(corpus_sh)
-        sig = corpus_sig if corpus_sig is not None else minhash_signatures(corpus_sh)
+        corpus_sh, sig, bands = _probe_side(corpus_sh, corpus_sig, "corpus_sig", bands=None)
         sig = sig.persist()
-        bands = drop_hot_buckets(signature_bands(sig)).persist()
+        bands = bands.persist()
         n_docs = sig.count()
         band_rows = bands.count()
         b_b = max(16, -(-band_rows // TARGET_BAND_BUCKET_ROWS))
@@ -221,14 +226,16 @@ class StandingStore:
     ) -> DataFrame:
         """Batch-vs-store near-dup pairs, semantics identical to
         `cross_minhash_pairs(batch, corpus)` (pinned by test): returns
-        (batch_id, corpus_id, est_jaccard, jaccard >= 0.6). Persisted
+        (batch_id, corpus_id, est_jaccard, jaccard >= 0.6). The same
+        shared steps run here — side prep of the batch (a precomputed
+        ``batch_sig`` is checked), band candidates, estimate and
+        verify — each fed from bucket reads gated by the Bloom test and
+        a collect of the buckets its input touches. Persisted
         intermediates are appended to ``cleanup`` for the caller to
         release after materializing the result (same contract as
         cross_minhash_pairs)."""
         meta = self.meta
-        batch_sh = _as_gids(batch_sh)
-        sig_b = batch_sig if batch_sig is not None else minhash_signatures(batch_sh)
-        bands_b = drop_hot_buckets(signature_bands(sig_b))
+        batch_sh, sig_b, bands_b = _probe_side(batch_sh, batch_sig, "batch_sig", bands=None)
 
         # tier 1: Bloom membership, map-side against the broadcast
         # words — batch keys with no corpus collision die here, before
@@ -267,91 +274,30 @@ class StandingStore:
         # tier 2: candidate pairs from bucket-pruned band files; the
         # surviving-key semi filter keeps only the probed keys' rows
         # out of each (constant-size) bucket file
-        bands_c = self._read("bands", band_buckets).join(
-            F.broadcast(surv.select("band_idx", "band_hash")),
+        bands_c = _semi_by(
+            self._read("bands", band_buckets),
+            surv.select("band_idx", "band_hash"),
             ["band_idx", "band_hash"],
-            "left_semi",
         )
-        cand = (
-            bands_b.alias("x")
-            .join(
-                bands_c.alias("y"),
-                (F.col("x.band_idx") == F.col("y.band_idx"))
-                & (F.col("x.band_hash") == F.col("y.band_hash")),
-            )
-            .select(
-                F.col("x.doc_id").alias("batch_id"),
-                F.col("y.doc_id").alias("corpus_id"),
-            )
-            .distinct()
-            .persist()
-        )
+        cand = _band_candidates(bands_b, bands_c, merge=False).persist()
         if cleanup is not None:
             cleanup.append(cand)
-        sig_buckets = [
-            r["b"]
-            for r in cand.select(_doc_bucket(meta["b_d"], "corpus_id").alias("b"))
-            .distinct()
-            .collect()
-        ]
 
         # tier 3a: signature fetch for candidate docs, est pre-filter
-        sig_c = self._read("sigs", sig_buckets)
-        est = (
-            cand.join(
-                sig_b.select(
-                    F.col("doc_id").alias("batch_id"), F.col("sig").alias("sig_a"),
-                    F.col("n").alias("na"),
-                ),
-                "batch_id",
-            )
-            .join(
-                sig_c.select(
-                    F.col("doc_id").alias("corpus_id"), F.col("sig").alias("sig_b"),
-                    F.col("n").alias("nb"),
-                ),
-                "corpus_id",
-            )
-            .withColumn(
-                "est_jaccard",
-                F.round(_sig_agreement().cast("double") / _MH_K, 4),
-            )
-            .drop("sig_a", "sig_b")
-            .filter(F.col("est_jaccard") >= _est_threshold(_MH_K))
-            .persist()
-        )
+        sig_c = self._read("sigs", self._doc_buckets(cand))
+        est = _estimate(cand, sig_b, sig_c, merge=False).persist()
         if cleanup is not None:
             cleanup.append(est)
-        sh_buckets = [
+
+        # tier 3b: shingle fetch ONLY for est survivors
+        sh_c = self._read("shingles", self._doc_buckets(est))
+        return _verify(est, batch_sh, sh_c, ("batch_id", "corpus_id"), (False, False))
+
+    def _doc_buckets(self, pairs: DataFrame) -> list[int]:
+        """Doc-store buckets holding ``pairs``' corpus docs (collected)."""
+        return [
             r["b"]
-            for r in est.select(_doc_bucket(meta["b_d"], "corpus_id").alias("b"))
+            for r in pairs.select(_doc_bucket(self.meta["b_d"], "corpus_id").alias("b"))
             .distinct()
             .collect()
         ]
-
-        # tier 3b: shingle fetch ONLY for est survivors — exact
-        # verification identical to cross_minhash_pairs' tail
-        sh_c = self._read("shingles", sh_buckets)
-        pair_grams = (
-            est.join(
-                batch_sh.select(F.col("doc_id").alias("batch_id"), "g"), "batch_id"
-            )
-            .join(
-                sh_c.select(F.col("doc_id").alias("corpus_id"), F.col("g").alias("g")),
-                ["corpus_id", "g"],
-            )
-            .groupBy("batch_id", "corpus_id", "est_jaccard", "na", "nb")
-            .agg(F.count("*").alias("n_common"))
-        )
-        jac = F.col("n_common").cast("double") / (
-            F.col("na") + F.col("nb") - F.col("n_common")
-        )
-        return (
-            pair_grams.filter(jac >= 0.6)
-            .select(
-                "batch_id",
-                "corpus_id",
-                "est_jaccard",
-                F.round(jac, 4).alias("jaccard"),
-            )
-        )

@@ -12,8 +12,6 @@ boundary) yields byte-identical results.
 
 from __future__ import annotations
 
-import os
-
 import pytest
 
 from database_to_bigquery_spark.data import load_table, range_fanout
@@ -23,33 +21,33 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-@pytest.mark.parametrize("width", ["1", "7"])
+@pytest.mark.parametrize("width", [1, 7])
 def test_global_ranks_width_agnostic(spark, sf_dir, width, monkeypatch):
-    from database_to_bigquery_spark.operators.skew import q_global_ranks_scalable
+    from database_to_bigquery_spark.operators import skew
 
-    baseline = _rows(q_global_ranks_scalable(spark, sf_dir))
-    monkeypatch.setenv("SPARK_GRAFT_RANGE_FANOUT", width)
-    assert _rows(q_global_ranks_scalable(spark, sf_dir)) == baseline
+    baseline = _rows(skew.q_global_ranks_scalable(spark, sf_dir))
+    calls = []
+    monkeypatch.setattr(skew, "range_fanout", lambda df: calls.append(df) or width)
+    assert _rows(skew.q_global_ranks_scalable(spark, sf_dir)) == baseline
+    assert calls
 
 
-@pytest.mark.parametrize("width", ["1", "7"])
+@pytest.mark.parametrize("width", [1, 7])
 def test_chunk_manifest_width_agnostic(spark, sf_dir, width, monkeypatch):
-    from database_to_bigquery_spark.operators.training_prep import llm_chunk_manifest
+    from database_to_bigquery_spark.operators import training_prep
 
-    baseline = _rows(llm_chunk_manifest(spark, sf_dir))
-    monkeypatch.setenv("SPARK_GRAFT_RANGE_FANOUT", width)
-    assert _rows(llm_chunk_manifest(spark, sf_dir)) == baseline
+    baseline = _rows(training_prep.llm_chunk_manifest(spark, sf_dir))
+    calls = []
+    monkeypatch.setattr(training_prep, "range_fanout", lambda df: calls.append(df) or width)
+    assert _rows(training_prep.llm_chunk_manifest(spark, sf_dir)) == baseline
+    assert calls
 
 
-def test_fanout_derivation(spark, sf_dir, monkeypatch):
-    """Floor wins at fixture scale; override wins when set; the size
-    term scales the width once estimated input exceeds the split size."""
+def test_fanout_derivation(spark, sf_dir):
+    """Floor wins at fixture scale; the size term scales the width
+    once estimated input exceeds the split size."""
     o = load_table(spark, sf_dir, "orders")
     assert range_fanout(o) >= 32
-
-    monkeypatch.setenv("SPARK_GRAFT_RANGE_FANOUT", "5")
-    assert range_fanout(o) == 5
-    monkeypatch.delenv("SPARK_GRAFT_RANGE_FANOUT")
 
     # Simulate a big input by shrinking the per-partition target: the
     # width must now exceed the floor (est_bytes / target dominates).

@@ -360,6 +360,34 @@ def test_foreach_batch_cdc_merge_latest_wins(spark, events_dir, tmp_path):
     assert got.exceptAll(expect).isEmpty() and expect.exceptAll(got).isEmpty()
 
 
+def test_foreach_batch_merge_keeps_unreadable_snapshot(spark, tmp_path):
+    """A snapshot the merge cannot read must fail the batch, not pass
+    for "no snapshot yet": reading past it as empty would overwrite
+    the snapshot with the batch's rows alone."""
+    import datetime as dt
+
+    row = "user_id long, ts timestamp, event_id long, event_type string, value double"
+    target = tmp_path / "snapshot"
+    spark.createDataFrame(
+        [(7, dt.datetime(2024, 1, 1), 70, "view", 1.0)], row
+    ).coalesce(1).write.parquet(str(target))
+    (part,) = target.glob("part-*.parquet")
+    part.write_bytes(part.read_bytes()[:-16])  # footer cut: unreadable
+    before = {p.name: p.read_bytes() for p in target.iterdir()}
+
+    src = tmp_path / "changes"
+    spark.createDataFrame(
+        [(i, dt.datetime(2024, 1, 2), u, "view", 1.0, "") for i, u in ((1, 1), (2, 2))],
+        jobs.EVENTS_SCHEMA,
+    ).write.parquet(str(src))
+    q = jobs.run_foreach_batch_merge(
+        jobs.read_events_stream(spark, str(src)), str(target), str(tmp_path / "ckpt")
+    )
+    with pytest.raises(Exception):
+        q.awaitTermination(180)
+    assert {p.name: p.read_bytes() for p in target.iterdir()} == before
+
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Semantic contract of withWatermark: a row arriving after the
     watermark has passed its window is dropped from the aggregation —
@@ -1223,20 +1251,24 @@ def test_stream_point_in_time_scd2_enrich_equals_batch(spark, sf_dir, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_standing_store_probe_equals_cached_probe(spark, sf_dir, tmp_path):
+@pytest.mark.parametrize("precomputed", [False, True], ids=["derived_sig", "precomputed_sig"])
+def test_standing_store_probe_equals_cached_probe(spark, sf_dir, tmp_path, precomputed):
     """The Bloom-indexed bucketed StandingStore (judge r9 task 4) must
     return EXACTLY the cached-relation probe's answer — the store
     changes per-batch IO (bucket-pruned fetch tiers instead of
-    corpus-cache scans), never semantics. Also pins the IO-design
-    invariants: every store tier is bucket-partitioned on its probe
-    key, and the Bloom index admits the batch's true collision keys
-    (no false negatives by construction)."""
+    corpus-cache scans), never semantics — whether the probe derives
+    the batch signatures or is handed precomputed ones (the admissions
+    stream's shape). Also pins the IO-design invariants: every store
+    tier is bucket-partitioned on its probe key, and the Bloom index
+    admits the batch's true collision keys (no false negatives by
+    construction)."""
     import os
 
     from pyspark.sql import functions as F_  # noqa: N812
 
     from database_to_bigquery_spark.operators.dedup import (
         cross_minhash_pairs,
+        minhash_signatures,
         shingles_of,
     )
     from database_to_bigquery_spark.streaming.standing_store import StandingStore
@@ -1254,7 +1286,11 @@ def test_standing_store_probe_equals_cached_probe(spark, sf_dir, tmp_path):
     cleanup: list = []
     got = {
         (r.batch_id, r.corpus_id, r.est_jaccard, r.jaccard)
-        for r in store.probe(b_sh, cleanup=cleanup).collect()
+        for r in store.probe(
+            b_sh,
+            batch_sig=minhash_signatures(b_sh) if precomputed else None,
+            cleanup=cleanup,
+        ).collect()
     }
     for df in cleanup:
         df.unpersist()
@@ -1270,6 +1306,33 @@ def test_standing_store_probe_equals_cached_probe(spark, sf_dir, tmp_path):
         assert parts, f"{sub} is not bucket-partitioned"
     assert (tmp_path / "store" / "bloom.npy").exists()
     assert store.meta["n_docs"] == corpus.count()
+
+
+def test_standing_store_checks_precomputed_signatures(spark, sf_dir, tmp_path):
+    """A precomputed signature built under another gram encoding (here
+    over string grams) must fail the store's build and probe as loudly
+    as it fails cross_minhash_pairs: its band hashes collide with
+    nothing, so the probe would silently return zero pairs."""
+    from pyspark.sql import functions as F_  # noqa: N812
+
+    from database_to_bigquery_spark.operators.dedup import (
+        minhash_signatures,
+        shingles_of,
+    )
+    from database_to_bigquery_spark.streaming.standing_store import StandingStore
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    c_sh = shingles_of(docs.filter(F_.col("doc_id") % 10 != 0))
+    b_sh = shingles_of(docs.filter(F_.col("doc_id") % 10 == 0))
+
+    def string_gram_sig(sh):
+        return minhash_signatures(sh.withColumn("g", F_.col("g").cast("string")))
+
+    with pytest.raises(ValueError, match="gram encoding"):
+        StandingStore.build(c_sh, str(tmp_path / "bad"), corpus_sig=string_gram_sig(c_sh))
+    store = StandingStore.build(c_sh, str(tmp_path / "store"))
+    with pytest.raises(ValueError, match="gram encoding"):
+        store.probe(b_sh, batch_sig=string_gram_sig(b_sh))
 
 
 def test_standing_store_empty_batch_and_no_match_paths(spark, sf_dir, tmp_path):
