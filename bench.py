@@ -16,7 +16,9 @@ Measurement hygiene (the VM shows ±40% run-to-run variance):
 - the timed section runs $SPARK_GRAFT_BENCH_RUNS (default 3) full
   round-robin passes over the query set — round-robin, not
   back-to-back per query, so slow VM phases spread across all queries
-  instead of landing on one — and reports the per-query MEDIAN
+  instead of landing on one — and reports the per-query MEDIAN; the
+  cache is cleared after each timed run (outside the timed window), so
+  no rerun reads the relations an earlier run persisted
 - if a prior round's BENCH file was recorded at this session's core
   count, a per-query ratio vs the newest such baseline is attached
   under "delta_vs_baseline"; otherwise "baseline_skipped" says why
@@ -163,6 +165,7 @@ def main() -> None:
             t0 = time.time()
             force(specs[name].fn(spark, sf_dir))
             samples[name].append(time.time() - t0)
+            spark.catalog.clearCache()
 
     cal_after = _calibrate(spark)
 

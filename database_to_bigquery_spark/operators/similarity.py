@@ -21,7 +21,8 @@ rows-only joins score cells with numpy matmuls inside Arrow-batched
 pandas functions. The "vector-cell primitives" section below holds
 what they share: the DECIMAL-exact centroid aggregate (also used by
 dedup_semdedup), the driver-side spherical Lloyd trainer, the
-per-cell top-k kernel and the global kNN merge.
+per-cell top-k kernel, the global kNN merge, and the one IVF probe
+path that every IVF operator runs through.
 """
 
 from __future__ import annotations
@@ -50,6 +51,16 @@ def _as_double(col: str) -> Column:
 
 
 # ------------------------------------------- vector-cell primitives ----
+# exact_centroids, _unit, _head_sample, _lloyd, cell_topk and knn_merge,
+# then the IVF probe path in three steps:
+# - label-cell probe: label_probe (sim_topk_ivf, sim_topk_ivfpq,
+#   sim_ivf_incremental_add, ivf_probe), then rank_in_cells, the exact
+#   top-k within the probed cells (sim_topk_ivf, ivf_probe);
+# - visit emitter: emit_visits, routed by _flat_route (top-w trained
+#   cells) or _descent_route (the two-level descent, beside
+#   train_ivf2_centroids);
+# - per-cell scorer: visits_knn, for the self-join (the flat and
+#   two-level kNN joins) and the asymmetric probe (ivf_probe_trained).
 
 
 def exact_centroids(df: DataFrame, key: str) -> DataFrame:
@@ -168,6 +179,125 @@ def knn_merge(cand: DataFrame, key: str, k: int) -> DataFrame:
             F.col("rnk").cast("int").alias("rnk"),
         )
     )
+
+
+def label_probe(queries: DataFrame, cent: DataFrame, n_probe: int) -> DataFrame:
+    """The label-cell probe: every query (vec_id, v) against the
+    caller's centroid relation (label, cv), keeping its `n_probe` cells
+    by centroid cosine, ties broken on label. One broadcast cross join
+    and one ranking window per query; the caller decides whether `cent`
+    goes in `bounded()`. The query norm is folded once per query and
+    carried as `_nq` instead of being re-folded per centroid and per
+    candidate. Output (query_id, qv, _nq, label, cent_cos)."""
+    q = queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("v").alias("qv"),
+        F.sqrt(_dot("v", "v")).alias("_nq"),
+    )
+    cent_cos = _dot("qv", "cv") / (F.col("_nq") * F.sqrt(_dot("cv", "cv")))
+    pw = W.partitionBy("query_id").orderBy(F.col("cent_cos").desc(), F.col("label"))
+    return (
+        q.crossJoin(F.broadcast(cent))
+        .withColumn("cent_cos", cent_cos)
+        .withColumn("pr", F.row_number().over(pw))
+        .filter(F.col("pr") <= n_probe)
+        .select("query_id", "qv", "_nq", "label", "cent_cos")
+    )
+
+
+def rank_in_cells(probe: DataFrame, standing: DataFrame, k: int) -> DataFrame:
+    """The label-cell probe's tail: each probed query against the
+    members (vec_id, label, v) of its probed cells by exact cosine,
+    self-pairs excluded, its `k` best kept, ties broken on neighbor_id.
+    The probe rows (|queries|·n_probe) broadcast. Output (query_id,
+    neighbor_id, cosine rounded to 4 dp, rnk ≤ k)."""
+    cand_cos = _dot("qv", "v") / (F.col("_nq") * F.sqrt(_dot("v", "v")))
+    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
+    return (
+        F.broadcast(probe)
+        .join(standing.select(F.col("vec_id").alias("neighbor_id"), "label", "v"), "label")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", cand_cos.alias("cos"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round("cos", 4).alias("cosine"),
+            F.col("rnk").cast("int").alias("rnk"),
+        )
+    )
+
+
+def _flat_route(C, width: int):
+    """Route for `emit_visits` through one level of unit centroids C:
+    the `width` nearest cells by cosine, nearest first (width 1 is the
+    argmax), scored by that cosine."""
+    import numpy as np
+
+    def route(Vn):
+        sims = Vn @ C.T
+        if width == 1:
+            cells = np.argmax(sims, axis=1)[:, None]
+        else:
+            cells = np.argsort(-sims, axis=1)[:, :width]
+        return cells, np.take_along_axis(sims, cells, axis=1)
+
+    return route
+
+
+def emit_visits(df: DataFrame, route, members: bool) -> DataFrame:
+    """The trained-cell visit emitter: one Arrow-batched pass turns
+    each (vec_id, v) row into (vec_id, v, cell, is_member) visits, one
+    per cell `route` picks for its unit vector. `route(Vn)` returns
+    (cells, scores), both rows × width; cell -1 marks an empty slot.
+    With `members`, a row is a member of its best-scoring cell and a
+    probe-only visitor of the rest; without, every visit is probe-only
+    (the query side of an asymmetric probe)."""
+    import numpy as np
+
+    def emit(it):
+        import pandas as pd
+
+        for pdf in it:
+            if len(pdf) == 0:  # Arrow may deliver empty batches
+                continue
+            cells, scores = route(_unit(np.stack(pdf["v"].to_numpy()).astype(np.float64)))
+            m, width = cells.shape
+            is_member = np.zeros((m, width), dtype=bool)
+            if members:
+                is_member[np.arange(m), np.argmax(scores, axis=1)] = True
+            live = (cells >= 0).ravel()
+            yield pd.DataFrame(
+                {
+                    "vec_id": pdf["vec_id"].to_numpy().repeat(width)[live],
+                    "v": pdf["v"].to_numpy().repeat(width)[live],
+                    "cell": cells.ravel()[live].astype("int32"),
+                    "is_member": is_member.ravel()[live],
+                }
+            )
+
+    return df.mapInPandas(emit, "vec_id long, v array<double>, cell int, is_member boolean")
+
+
+def visits_knn(visits: DataFrame, key: str, k: int, self_join: bool) -> DataFrame:
+    """The per-cell scorer behind `emit_visits`: per cell, the query
+    visits against the cell's members (`cell_topk`), then the global
+    merge on `key`. In the self-join every visit is a query; in an
+    asymmetric probe only the non-member visits are."""
+
+    def score(pdf):
+        m = pdf[pdf["is_member"]]
+        q = pdf if self_join else pdf[~pdf["is_member"]]
+        return cell_topk(
+            q["v"].to_numpy(), q["vec_id"].to_numpy(),
+            m["v"].to_numpy(), m["vec_id"].to_numpy(), k,
+        ).rename(columns={"vec_id": key})
+
+    cand = visits.groupBy("cell").applyInPandas(
+        score, f"{key} long, neighbor_id long, cos double"
+    )
+    return knn_merge(cand, key, k)
 
 
 @query(
@@ -445,42 +575,10 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _as_double("embedding").alias("v")
     )
-    cent = exact_centroids(e, "label")
-    # query norm factored out (r10, see sim_topk_bruteforce): computed
-    # once per query and carried through the probe instead of re-folded
-    # per centroid and per candidate
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.sqrt(_dot("v", "v")).alias("_nq"),
+    probe = label_probe(
+        e.filter(F.col("vec_id") < _N_QUERIES), exact_centroids(e, "label"), _N_PROBE
     )
-    cent_cos = _dot("qv", "cv") / (F.col("_nq") * F.sqrt(_dot("cv", "cv")))
-    pw = W.partitionBy("query_id").orderBy(F.col("cent_cos").desc(), F.col("label"))
-    probe = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", cent_cos)
-        .withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= _N_PROBE)
-        .select("query_id", "qv", "_nq", "label")
-    )
-    cand_cos = _dot("qv", "v") / (F.col("_nq") * F.sqrt(_dot("v", "v")))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        F.broadcast(probe)
-        .join(e, "label")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id", F.col("vec_id").alias("neighbor_id"), cand_cos.alias("cos")
-        )
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return rank_in_cells(probe, e, _TOP_K)
 
 
 @query(
@@ -1293,18 +1391,7 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min(F.struct("pd2", "code")).alias("b"))
         .select("vec_id", "label", "s", F.col("b.code").alias("code"))
     )
-    q = e.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    )
-    cent_cos = _dot("qv", "cv") / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("cv", "cv")))
-    pw = W.partitionBy("query_id").orderBy(F.col("cent_cos").desc(), F.col("label"))
-    probe = (
-        q.crossJoin(F.broadcast(cent))
-        .withColumn("cent_cos", cent_cos)
-        .withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= _N_PROBE)
-        .select("query_id", "qv", "label")
-    )
+    probe = label_probe(e.filter(F.col("vec_id") < _N_QUERIES), cent, _N_PROBE)
     qsub = (
         probe.join(F.broadcast(cent), "label")
         .select(
@@ -1669,60 +1756,14 @@ def knn_join_ivf_core(e: DataFrame, n: int | None = None) -> DataFrame:
     composition the whitening operator exists for). See the caller
     docstring for the cost/scale argument. ``n`` accepts a
     precomputed corpus count so tier-selecting callers don't pay a
-    second scan (advisor r9)."""
-    import numpy as np
-
+    second scan (advisor r9). Every vector visits its nprobe nearest
+    cells and is a member of the nearest (`emit_visits`); each cell
+    scores all its visitors against its members (`visits_knn`)."""
     if n is None:
         n = e.count()
-    centroids = train_ivf_centroids(e, n)  # captured by the closures
-    k = len(centroids)
-    nprobe = min(_KNN_IVF_NPROBE, k)
-
-    def assign_probes(it):
-        import pandas as pd
-
-        for pdf in it:
-            if len(pdf) == 0:  # Arrow may deliver empty batches
-                continue
-            sims = _unit(np.stack(pdf["v"].to_numpy()).astype(np.float64)) @ centroids.T
-            order = np.argsort(-sims, axis=1)[:, :nprobe]
-            m = len(pdf)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy().repeat(nprobe),
-                    "v": pdf["v"].to_numpy().repeat(nprobe),
-                    "cell": order.ravel().astype("int32"),
-                    # primary (nearest) cell = membership; the rest are
-                    # probe-only visits
-                    "is_member": (
-                        np.arange(nprobe)[None, :].repeat(m, axis=0) == 0
-                    ).ravel(),
-                }
-            )
-
-    visits = e.mapInPandas(
-        assign_probes, "vec_id long, v array<double>, cell int, is_member boolean"
-    )
-    return _visits_knn(visits)
-
-
-def _visits_knn(visits: DataFrame) -> DataFrame:
-    """The kNN join behind a coarse quantizer's visits (vec_id, v,
-    cell, is_member), shared by the flat and two-level cores: per
-    cell, every visiting vector against the cell's members
-    (`cell_topk`), then the global merge."""
-
-    def score(pdf):
-        m = pdf[pdf["is_member"]]
-        return cell_topk(
-            pdf["v"].to_numpy(), pdf["vec_id"].to_numpy(),
-            m["v"].to_numpy(), m["vec_id"].to_numpy(), _KNN_K,
-        )
-
-    cand = visits.groupBy("cell").applyInPandas(
-        score, "vec_id long, neighbor_id long, cos double"
-    )
-    return knn_merge(cand, "vec_id", _KNN_K)
+    centroids = train_ivf_centroids(e, n)  # captured by the route
+    route = _flat_route(centroids, min(_KNN_IVF_NPROBE, len(centroids)))
+    return visits_knn(emit_visits(e, route, members=True), "vec_id", _KNN_K, self_join=True)
 
 
 # --------------------------------------------- hierarchical IVF join ----
@@ -1797,66 +1838,52 @@ def knn_join_ivf2_core(
     `train_ivf2_centroids` result, so the tier-selecting auto entry
     pays neither a second corpus scan nor a second training sample
     collect (advisor r9)."""
-    import numpy as np
-
     if n is None:
         n = e.count()
     supers, children, offsets, _structure = (
         index if index is not None else train_ivf2_centroids(e, n)
     )
+    route = _descent_route(supers, children, offsets, min(nprobe, len(children)))
+    return visits_knn(emit_visits(e, route, members=True), "vec_id", _KNN_K, self_join=True)
+
+
+def _descent_route(supers, children, offsets, nprobe: int):
+    """Route for `emit_visits` through a `train_ivf2_centroids` index:
+    each unit vector descends into its `_IVF2_SUPER_PROBE` nearest
+    super-cells and keeps the `nprobe` best-scoring of their children.
+    A vector whose supers hold fewer than `nprobe` children leaves the
+    rest of its slots empty (-1)."""
+    import numpy as np
+
     s_probe = min(_IVF2_SUPER_PROBE, len(supers))
-    nprobe = min(nprobe, len(children))
 
-    def assign_probes(it):
-        import pandas as pd
+    def route(Vn):
+        m = len(Vn)
+        top_s = np.argsort(-(Vn @ supers.T), axis=1)[:, :s_probe]
+        # score the children of each selected super, grouped by super
+        # id so every matmul is a dense block
+        cell_scores = np.full((m, nprobe), -np.inf)
+        cell_ids = np.zeros((m, nprobe), dtype=np.int64)
+        for rank in range(s_probe):
+            sel = top_s[:, rank]
+            for u in np.unique(sel):
+                rows = np.nonzero(sel == u)[0]
+                lo, hi = offsets[u], offsets[u + 1]
+                Sc = Vn[rows] @ children[lo:hi].T  # rows × children(u)
+                take = min(nprobe, hi - lo)
+                part = np.argpartition(-Sc, kth=take - 1, axis=1)[:, :take]
+                # merge into the running per-row top-nprobe
+                allsc = np.concatenate(
+                    [cell_scores[rows], np.take_along_axis(Sc, part, axis=1)], axis=1
+                )
+                allid = np.concatenate([cell_ids[rows], part + lo], axis=1)
+                keep = np.argpartition(-allsc, kth=nprobe - 1, axis=1)[:, :nprobe]
+                cell_scores[rows] = np.take_along_axis(allsc, keep, axis=1)
+                cell_ids[rows] = np.take_along_axis(allid, keep, axis=1)
+        cell_ids[~np.isfinite(cell_scores)] = -1
+        return cell_ids, cell_scores
 
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            Vn = _unit(np.stack(pdf["v"].to_numpy()).astype(np.float64))
-            m = len(pdf)
-            top_s = np.argsort(-(Vn @ supers.T), axis=1)[:, :s_probe]
-            # score the children of each selected super, grouped by
-            # super id so every matmul is a dense block
-            cell_scores = np.full((m, nprobe), -np.inf)
-            cell_ids = np.zeros((m, nprobe), dtype=np.int64)
-            for rank in range(s_probe):
-                sel = top_s[:, rank]
-                for u in np.unique(sel):
-                    rows = np.nonzero(sel == u)[0]
-                    lo, hi = offsets[u], offsets[u + 1]
-                    Sc = Vn[rows] @ children[lo:hi].T  # rows × children(u)
-                    width = hi - lo
-                    take = min(nprobe, width)
-                    part = np.argpartition(-Sc, kth=take - 1, axis=1)[:, :take]
-                    sc = np.take_along_axis(Sc, part, axis=1)
-                    ids = part + lo
-                    # merge into the running per-row top-nprobe
-                    allsc = np.concatenate([cell_scores[rows], sc], axis=1)
-                    allid = np.concatenate([cell_ids[rows], ids], axis=1)
-                    keep = np.argpartition(-allsc, kth=nprobe - 1, axis=1)[
-                        :, :nprobe
-                    ]
-                    cell_scores[rows] = np.take_along_axis(allsc, keep, axis=1)
-                    cell_ids[rows] = np.take_along_axis(allid, keep, axis=1)
-            # membership = the best-scoring probed cell
-            best = np.argmax(cell_scores, axis=1)
-            is_member = np.zeros((m, nprobe), dtype=bool)
-            is_member[np.arange(m), best] = True
-            live = np.isfinite(cell_scores).ravel()
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy().repeat(nprobe)[live],
-                    "v": pdf["v"].to_numpy().repeat(nprobe)[live],
-                    "cell": cell_ids.ravel()[live].astype("int32"),
-                    "is_member": is_member.ravel()[live],
-                }
-            )
-
-    visits = e.mapInPandas(
-        assign_probes, "vec_id long, v array<double>, cell int, is_member boolean"
-    )
-    return _visits_knn(visits)
+    return route
 
 
 @query("sim_knn_join_ivf2")  # approximate → rows-only check
@@ -1900,50 +1927,17 @@ def ivf_probe_trained(
     standing corpus) to reuse the index across micro-batches — the
     foreachBatch production loop; None trains here. Output matches
     `ivf_probe`: (query_id, neighbor_id, cosine, rnk ≤ k).
-    Approximate (probing misses cross-cell neighbors) → rows-only."""
-    import numpy as np
+    Approximate (probing misses cross-cell neighbors) → rows-only.
 
+    The standing rows are members of their nearest cell, the queries
+    visit their `n_probe` nearest cells (`emit_visits` on both), and
+    each cell scores only its query visits (`visits_knn`)."""
     if centroids is None:
         centroids = train_ivf_centroids(standing)
-    C = centroids
-    nprobe = min(n_probe, len(C))
-
-    def assign(it, width: int, member: bool):
-        import pandas as pd
-
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            sims = _unit(np.stack(pdf["v"].to_numpy()).astype(np.float64)) @ C.T
-            if width == 1:
-                cells = np.argmax(sims, axis=1)[:, None]
-            else:
-                cells = np.argsort(-sims, axis=1)[:, :width]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy().repeat(width),
-                    "v": pdf["v"].to_numpy().repeat(width),
-                    "cell": cells.ravel().astype("int32"),
-                    "is_member": member,
-                }
-            )
-
-    schema = "vec_id long, v array<double>, cell int, is_member boolean"
-    members = standing.mapInPandas(lambda it: assign(it, 1, True), schema)
-    probes = queries.mapInPandas(lambda it: assign(it, nprobe, False), schema)
-
-    def cell_score(pdf):
-        q = pdf[~pdf["is_member"]]
-        m = pdf[pdf["is_member"]]
-        return cell_topk(
-            q["v"].to_numpy(), q["vec_id"].to_numpy(),
-            m["v"].to_numpy(), m["vec_id"].to_numpy(), k,
-        ).rename(columns={"vec_id": "query_id"})
-
-    cand = members.unionByName(probes).groupBy("cell").applyInPandas(
-        cell_score, "query_id long, neighbor_id long, cos double"
-    )
-    return knn_merge(cand, "query_id", k)
+    members = emit_visits(standing, _flat_route(centroids, 1), members=True)
+    route = _flat_route(centroids, min(n_probe, len(centroids)))
+    probes = emit_visits(queries, route, members=False)
+    return visits_knn(members.unionByName(probes), "query_id", k, self_join=False)
 
 
 # ---------------------------------------- incremental index maintenance ----
@@ -2003,20 +1997,11 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "label", _as_double("embedding").alias("v")
     )
     is_arrival = F.col("vec_id") % _ARRIVAL_MOD == _ARRIVAL_REM
-    arrivals = e.filter(is_arrival).select("vec_id", "v")
     cent = exact_centroids(e.filter(~is_arrival), "label")
-    cos = _dot("v", "cv") / (F.sqrt(_dot("v", "v")) * F.sqrt(_dot("cv", "cv")))
-    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), F.col("label"))
-    return (
-        arrivals.crossJoin(F.broadcast(bounded(cent, _IVF_CELLS)))
-        .withColumn("cos", cos)
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") == 1)
-        .select(
-            "vec_id",
-            F.col("label").cast("int").alias("cell"),
-            F.round("cos", 4).alias("cosine"),
-        )
+    return label_probe(e.filter(is_arrival), bounded(cent, _IVF_CELLS), 1).select(
+        F.col("query_id").alias("vec_id"),
+        F.col("label").cast("int").alias("cell"),
+        F.round("cent_cos", 4).alias("cosine"),
     )
 
 
@@ -2038,33 +2023,8 @@ def ivf_probe(
     standing corpus (or a persisted table between batches); per-query
     cost is n_probe/k of the corpus. Both broadcasts are bounded by
     construction (k cells; |arrivals|·n_probe probe rows per batch)."""
-    cent = exact_centroids(standing, "label")
-    cent_cos = _dot("qv", "cv") / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("cv", "cv")))
-    pw = W.partitionBy("query_id").orderBy(F.col("cent_cos").desc(), F.col("label"))
-    q = arrivals.select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-    probe = (
-        q.crossJoin(F.broadcast(bounded(cent, _IVF_CELLS)))
-        .withColumn("cent_cos", cent_cos)
-        .withColumn("pr", F.row_number().over(pw))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "label")
-    )
-    cand_cos = _dot("qv", "v") / (F.sqrt(_dot("qv", "qv")) * F.sqrt(_dot("v", "v")))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
-        F.broadcast(probe)
-        .join(standing.select(F.col("vec_id").alias("neighbor_id"), "label", "v"), "label")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", F.col("neighbor_id"), cand_cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    cent = bounded(exact_centroids(standing, "label"), _IVF_CELLS)
+    return rank_in_cells(label_probe(arrivals, cent, n_probe), standing, k)
 
 
 # --------------------------------------- covariance / PCA whitening ----

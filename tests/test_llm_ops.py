@@ -928,6 +928,32 @@ def test_knn_join_ivf_recall_vs_exact(spark, sf_dir):
     assert recall >= 0.7, recall
 
 
+def test_ivf_probe_trained_self_probe_equals_flat_join(spark, sf_dir):
+    """The two join shapes over the trained cells agree: probing the
+    corpus against itself (members in their nearest cell, queries in
+    their nprobe nearest, only queries scored) returns exactly the
+    flat self-join's edges, cosines and ranks."""
+    from database_to_bigquery_spark.data import load_table
+    from database_to_bigquery_spark.operators.similarity import (
+        _KNN_IVF_NPROBE,
+        _KNN_K,
+        _as_double,
+        ivf_probe_trained,
+        knn_join_ivf_core,
+        train_ivf_centroids,
+    )
+
+    e = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _as_double("embedding").alias("v")
+    )
+    probe = ivf_probe_trained(
+        e, e, centroids=train_ivf_centroids(e), n_probe=_KNN_IVF_NPROBE, k=_KNN_K
+    ).collect()
+    joined = knn_join_ivf_core(e).collect()
+    assert len(joined) == e.count() * _KNN_K
+    assert {tuple(r) for r in probe} == {tuple(r) for r in joined}
+
+
 def test_knn_join_ivf2_recall_and_purity(spark, sf_dir):
     """Two-level IVF join (the Θ(n^(4/3)) tier above the flat form's
     Θ(n^1.5)): on CLUSTERED geometry — the only geometry any sublinear

@@ -6,7 +6,8 @@ Usage: python tools/check_oracle.py [--sf-dir DIR] [names...]
 
 The `rows` and `OK` lines carry the first 12 hex digits of the Spark
 result's value hash, so two trees give the same results when their
-runs differ only in the bracketed timings.
+runs differ only in the bracketed timings. The cache is cleared after
+each query, so each hash comes from that query's own plan.
 """
 
 from __future__ import annotations
@@ -151,6 +152,9 @@ def main() -> int:
             failures.append(name)
             print(f"FAIL  {name}: spark error: {exc}")
             continue
+        finally:
+            # no query may read another's persisted relations
+            spark.catalog.clearCache()
         s_hash = value_hash(s_rows, s_cols)
         if spec.oracle is None:
             print(
