@@ -1143,19 +1143,13 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     the size count riding the same partitioning. Oracle: the
     recursive-CTE CC composed with the identical quality formula and
     argmax."""
+    from .text_analysis import quality_score
+
     labels = label_propagation_components(
         _symmetrized_edges(dedup_minhash_lsh(spark, sf_dir))
     )
     d = load_table(spark, sf_dir, "documents")
-    n_chars = F.length("text")
-    n_words = F.size(F.split(F.col("text"), " "))
-    punct_ratio = F.regexp_count("text", F.lit("[^A-Za-z0-9 ]")) / n_chars
-    quality = F.round(
-        F.when((n_chars >= 100) & (n_chars <= 400), 1.0).otherwise(0.5)
-        * F.when(n_words >= 20, 1.0).otherwise(0.6)
-        * F.when(punct_ratio < 0.1, 1.0).otherwise(0.7),
-        4,
-    )
+    quality = F.round(quality_score(), 4)
     scored = labels.select(F.col("node").alias("doc_id"), "label").join(
         d.select("doc_id", quality.alias("quality")), "doc_id"
     )

@@ -457,16 +457,10 @@ def llm_corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup runs on the reduced survivor set, and the report is one
     groupBy(source). Nothing rescans the raw corpus more than the
     shingle pass."""
+    from .text_analysis import quality_score
+
     d = load_table(spark, sf_dir, "documents")
-    n_chars = F.length("text")
-    n_words = F.size(F.split(F.col("text"), " "))
-    punct_ratio = F.regexp_count("text", F.lit("[^A-Za-z0-9 ]")) / n_chars
-    q = (
-        F.when((n_chars >= 100) & (n_chars <= 400), 1.0).otherwise(0.5)
-        * F.when(n_words >= 20, 1.0).otherwise(0.6)
-        * F.when(punct_ratio < 0.1, 1.0).otherwise(0.7)
-    )
-    quality = d.select("doc_id", "source", "text", q.alias("q"))
+    quality = d.select("doc_id", "source", "text", quality_score().alias("q"))
     kept_q = quality.filter(F.col("q") >= 0.6)
 
     # near-dup pairs over the quality survivors (shingle → equi-join on
@@ -889,16 +883,11 @@ def llm_corpus_prepare_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Rows-only in the driver gate (banding recall < 1 is possible on
     adversarial corpora); the exact twin carries the DuckDB oracle."""
     from .dedup import minhash_verified_pairs
+    from .text_analysis import quality_score
 
     d = load_table(spark, sf_dir, "documents")
-    n_chars = F.length("text")
     n_words = F.size(F.split(F.col("text"), " "))
-    punct_ratio = F.regexp_count("text", F.lit("[^A-Za-z0-9 ]")) / n_chars
-    q = (
-        F.when((n_chars >= 100) & (n_chars <= 400), 1.0).otherwise(0.5)
-        * F.when(n_words >= 20, 1.0).otherwise(0.6)
-        * F.when(punct_ratio < 0.1, 1.0).otherwise(0.7)
-    )
+    q = quality_score()
     # The gate's regexp pass is computed ONCE over the corpus and the
     # TEXT-FREE result persisted: the policy anti-join and the report
     # aggregate both ride this slim relation, so neither re-scans the

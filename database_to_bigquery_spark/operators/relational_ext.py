@@ -1169,6 +1169,42 @@ _SS_SHARDS = 8
 _SS_CAPACITY = 16
 
 
+def spacesaving_feed(counters: dict[int, list[int]], user_ids) -> None:
+    """Space-Saving update: feed ``user_ids`` in order through
+    ``counters`` (uid -> [count, err]) in place, holding at most
+    `_SS_CAPACITY` counters. A new key evicts the minimum counter
+    (smallest uid on ties) and inherits its count as its error bound.
+    Shared by q_spacesaving_topk and the streaming
+    spacesaving_user_counts; each sorts its rows and keeps its own
+    state."""
+    for uid in user_ids:
+        uid = int(uid)
+        if uid in counters:
+            counters[uid][0] += 1
+        elif len(counters) < _SS_CAPACITY:
+            counters[uid] = [1, 0]
+        else:
+            vid, (vc, _) = min(counters.items(), key=lambda kv: (kv[1][0], kv[0]))
+            del counters[vid]
+            counters[uid] = [vc + 1, vc]
+
+
+def spacesaving_frame(shard: int, counters: dict[int, list[int]], n: int):
+    """One shard's summary rows: (shard, user_id, est_count, max_err,
+    n_shard) per counter."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "shard": shard,
+            "user_id": list(counters),
+            "est_count": [c for c, _ in counters.values()],
+            "max_err": [e for _, e in counters.values()],
+            "n_shard": n,
+        }
+    )
+
+
 @query("q_spacesaving_topk")  # sequential sketch — no SQL twin (rows-only)
 def q_spacesaving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Space-saving heavy hitters (Metwally et al., ICDT 2005): per
@@ -1188,39 +1224,14 @@ def q_spacesaving_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     is heavy in its own shard. The streaming twin
     (streaming/jobs.py:spacesaving_user_counts) maintains the same
     state across micro-batches via applyInPandasWithState."""
-    import pandas as pd  # noqa: F401
-
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
 
     def summarize(pdf):
-        import pandas as pd
-
         pdf = pdf.sort_values(["ts", "event_id"])
-        counters: dict[int, list[int]] = {}  # uid -> [count, err]
-        n = 0
-        for uid in pdf["user_id"]:
-            n += 1
-            uid = int(uid)
-            if uid in counters:
-                counters[uid][0] += 1
-            elif len(counters) < _SS_CAPACITY:
-                counters[uid] = [1, 0]
-            else:
-                vid, (vc, _) = min(
-                    counters.items(), key=lambda kv: (kv[1][0], kv[0])
-                )
-                del counters[vid]
-                counters[uid] = [vc + 1, vc]
+        counters: dict[int, list[int]] = {}
+        spacesaving_feed(counters, pdf["user_id"])
         shard = int(pdf["user_id"].iat[0]) % _SS_SHARDS if len(pdf) else 0
-        return pd.DataFrame(
-            {
-                "shard": shard,
-                "user_id": list(counters),
-                "est_count": [c for c, _ in counters.values()],
-                "max_err": [e for _, e in counters.values()],
-                "n_shard": n,
-            }
-        )
+        return spacesaving_frame(shard, counters, len(pdf))
 
     return (
         ev.withColumn("shard", (F.col("user_id") % _SS_SHARDS).cast("int"))

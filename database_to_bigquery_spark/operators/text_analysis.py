@@ -70,6 +70,20 @@ def text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def quality_score() -> Column:
+    """The `text_quality_score` heuristic over the ``text`` column,
+    unrounded: length band × word-count floor × punctuation-ratio cap.
+    Every quality gate in the package scores documents with it."""
+    n_chars = F.length("text")
+    n_words = F.size(F.split(F.col("text"), " "))
+    punct_ratio = F.regexp_count("text", F.lit("[^A-Za-z0-9 ]")) / n_chars
+    return (
+        F.when((n_chars >= 100) & (n_chars <= 400), 1.0).otherwise(0.5)
+        * F.when(n_words >= 20, 1.0).otherwise(0.6)
+        * F.when(punct_ratio < 0.1, 1.0).otherwise(0.7)
+    )
+
+
 @query(
     "text_quality_score",
     oracle="""
@@ -86,15 +100,7 @@ def text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic quality score (length band × word-count floor ×
     punctuation-ratio cap) — the standard pre-training filter shape."""
     d = load_table(spark, sf_dir, "documents")
-    n_chars = F.length("text")
-    n_words = F.size(F.split(F.col("text"), " "))
-    punct_ratio = F.regexp_count("text", F.lit("[^A-Za-z0-9 ]")) / n_chars
-    quality = (
-        F.when((n_chars >= 100) & (n_chars <= 400), 1.0).otherwise(0.5)
-        * F.when(n_words >= 20, 1.0).otherwise(0.6)
-        * F.when(punct_ratio < 0.1, 1.0).otherwise(0.7)
-    )
-    return d.select("doc_id", F.round(quality, 4).alias("quality"))
+    return d.select("doc_id", F.round(quality_score(), 4).alias("quality"))
 
 
 @query(
@@ -1416,15 +1422,8 @@ def text_quality_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal — grid × docs never materializes beyond the map side), and
     the corpus totals ride the same pass as a 1-row broadcast."""
     d = load_table(spark, sf_dir, "documents")
-    n_chars = F.length("text")
     n_words = F.size(F.split(F.col("text"), " "))
-    punct_ratio = F.regexp_count("text", F.lit("[^A-Za-z0-9 ]")) / n_chars
-    quality = (
-        F.when((n_chars >= 100) & (n_chars <= 400), 1.0).otherwise(0.5)
-        * F.when(n_words >= 20, 1.0).otherwise(0.6)
-        * F.when(punct_ratio < 0.1, 1.0).otherwise(0.7)
-    )
-    scored = d.select(n_words.alias("n_tokens"), quality.alias("quality"))
+    scored = d.select(n_words.alias("n_tokens"), quality_score().alias("quality"))
     tot = scored.agg(
         F.count("*").alias("n_docs"), F.sum("n_tokens").alias("tot_tokens")
     )

@@ -707,8 +707,16 @@ def ts_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     of (n, Σx, Σy, Σxy, Σx²) merge associatively; this is why OLS,
     correlation and variance belong IN the engine rather than in a
     driver-side statistics library."""
-    ev = load_table(spark, sf_dir, "events")
-    pts = ev.select(
+    return ols_trend(load_table(spark, sf_dir, "events"))
+
+
+def ols_trend(events: DataFrame) -> DataFrame:
+    """ts_ols_trend's regression over any events relation, static or
+    streaming. Over readStream it is a complete-mode aggregation with
+    five numbers of state per event type: the statistics merge
+    associatively, and slope/intercept derive in the final select, so
+    the stateful part never grows."""
+    pts = events.select(
         "event_type",
         F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date"))
         .cast("double")

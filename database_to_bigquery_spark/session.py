@@ -73,17 +73,22 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    In local mode ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``);
-    on a real cluster the master comes from spark-submit and these
-    configs still apply.
+    Started by spark-submit, the master is spark-submit's ``--master``
+    and these configs still apply; started as a plain Python process,
+    it is ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
         shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
+    builder = SparkSession.builder.appName(app_name)
+    # spark-submit hands its Python driver the gateway port in
+    # PYSPARK_GATEWAY_PORT. "Is spark.master set?" cannot tell the two
+    # launches apart: a plain launch starts its JVM through
+    # spark-submit too, so its conf already holds the default local[*].
+    if "PYSPARK_GATEWAY_PORT" not in os.environ:
+        builder = builder.master(f"local[{cpus}]")
     builder = (
-        SparkSession.builder.appName(app_name)
-        .master(f"local[{cpus}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # AQE: coalesce small shuffle partitions, split skewed ones,
         # convert sort-merge joins to broadcast at runtime.
         .config("spark.sql.adaptive.enabled", "true")

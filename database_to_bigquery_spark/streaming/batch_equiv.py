@@ -1,8 +1,10 @@
-"""X16 (oracle-checkable half): windowed event-time aggregations whose
-semantics are identical in batch and streaming — Spark's unified
-DataFrame model guarantees the same F.window/F.session_window plan
-runs under readStream (see streaming/jobs.py for the streaming run;
-tests assert stream == batch on the same input).
+"""X16 (oracle-checkable half): the batch twins of the streaming jobs.
+Each windowed, join, enrichment and sketch twin CALLS the stream
+transform in streaming/jobs.py over the static events table — Spark's
+unified DataFrame model runs one function under readStream or over a
+table (withWatermark is a no-op in batch) — so the DuckDB oracle
+checks the code that streams, and tests assert stream == batch on the
+same input.
 
 Oracles express the window algebra in portable SQL: tumbling = truncate
 to the grid; sliding(1h, 30m) = exactly the two covering 30m-grid
@@ -16,6 +18,14 @@ from pyspark.sql import functions as F
 
 from ..data import load_table, load_table_spread
 from ..registry import query
+from .jobs import (
+    countmin_cells,
+    enrich_with_user_dim,
+    session_aggregate,
+    sliding_counts,
+    stream_click_purchase_join,
+    tumbling_counts,
+)
 
 
 @query(
@@ -31,23 +41,14 @@ from ..registry import query
     """,
 )
 def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time windows per event type.
+    """Tumbling 1-hour event-time windows per event type: calls
+    jobs.tumbling_counts.
 
     Scale/streaming: with readStream + withWatermark this exact plan
     maintains incremental per-window state; in batch it is one shuffle
     on (window, event_type).
     """
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
+    return tumbling_counts(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -75,13 +76,9 @@ def stream_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding windows: 1-hour length, 30-minute slide — every event
     lands in exactly two windows (its 30m bucket and the one before).
-    F.window generates both assignments natively."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
-    )
+    The window function generates both assignments natively. Calls
+    jobs.sliding_counts."""
+    return sliding_counts(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -110,24 +107,14 @@ def stream_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session windows with a 2-hour inactivity gap per user —
-    F.session_window (start = first event, end = last event + gap),
+    session_window (start = first event, end = last event + gap),
     oracled by the classic LAG/cumulative-sum gaps-and-islands SQL.
+    Calls jobs.session_aggregate.
 
     Scale/streaming: session_window under readStream keeps one merged
     state row per open session per user; watermark closes sessions.
     """
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.session_window("ts", "2 hours").alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
+    return session_aggregate(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -166,26 +153,11 @@ def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_click_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of jobs.stream_click_purchase_join: the interval join
-    (purchase × clicks in the preceding hour). In streaming the same
-    plan runs with two watermarked sides and bounded state;
+    """The interval join (purchase × clicks in the preceding hour):
+    calls jobs.stream_click_purchase_join. In streaming the same plan
+    runs with two watermarked sides and bounded state;
     tests/test_streaming.py asserts stream == batch."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("purchase_ts"), F.col("event_id").alias("purchase_id")
-    )
-    return purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")),
-        "inner",
-    ).select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
+    return stream_click_purchase_join(load_table(spark, sf_dir, "events"))
 
 
 @query(
@@ -220,30 +192,15 @@ def stream_dedup_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static dimension enrichment (batch twin of
-    jobs.enrich_with_user_dim): events joined to the customer dimension
-    on user_id, revenue rolled up per (hour, market segment).
+    """Stream-static dimension enrichment: calls
+    jobs.enrich_with_user_dim — events joined to the customer
+    dimension on user_id, revenue rolled up per (hour, market segment).
 
     Under readStream the identical plan is a stateless per-micro-batch
     broadcast join — the standard way a 100 TB/day event firehose picks
     up slowly-changing dimension attributes without any join state."""
-    ev = load_table(spark, sf_dir, "events")
-    dim = load_table(spark, sf_dir, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    return (
-        ev.join(F.broadcast(dim), "user_id")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "c_mktsegment")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.round(F.sum("value"), 2).alias("total_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "c_mktsegment",
-            "n_events",
-            "total_value",
-        )
+    return enrich_with_user_dim(
+        load_table(spark, sf_dir, "events"), load_table(spark, sf_dir, "customer")
     )
 
 
@@ -260,27 +217,15 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_countmin_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of streaming/jobs.py::countmin_cells: the 4×64
-    count-min cell table over event user_ids. Identical plan under
-    readStream (complete mode) because the aggregation state is a
-    constant 256 cells — the sketch property that makes frequency
-    estimation streamable with bounded memory where an exact per-key
-    count is not. Cells are md5-bucketed (engine-independent), so the
-    DuckDB oracle rebuilds the same sketch cell-for-cell;
-    tests/test_streaming.py asserts stream == batch on the same input."""
-    from ..operators.relational_ext import _CMS_DEPTH, cms_bucket
-
-    ev = load_table(spark, sf_dir, "events")
-    k = F.col("user_id").cast("string")
-    return (
-        ev.select(
-            F.posexplode(F.array(*[cms_bucket(i, k) for i in range(_CMS_DEPTH)])).alias(
-                "i", "bucket"
-            )
-        )
-        .groupBy("i", "bucket")
-        .agg(F.count("*").alias("cell"))
-    )
+    """The 4×64 count-min cell table over event user_ids: calls
+    jobs.countmin_cells. The same plan runs under readStream (complete
+    mode) because the aggregation state is a constant 256 cells — the
+    sketch property that makes frequency estimation streamable with
+    bounded memory where an exact per-key count is not. Cells are
+    md5-bucketed (engine-independent), so the DuckDB oracle rebuilds
+    the same sketch cell-for-cell; tests/test_streaming.py asserts
+    stream == batch on the same input."""
+    return countmin_cells(load_table(spark, sf_dir, "events"))
 
 
 @query(

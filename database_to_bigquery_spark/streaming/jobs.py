@@ -5,9 +5,12 @@ the driver-mandated extension surface. Patterns covered:
 
   * file-source readStream with explicit schema (no inference races),
   * event-time watermarks → bounded state with late-data tolerance,
-  * tumbling/session windowed aggregation (same plans as
-    streaming/batch_equiv.py — tests assert stream result == batch
-    result on identical input),
+  * tumbling/sliding/session windowed aggregation, the interval join,
+    stream-static enrichment and the count-min cell build, each written
+    once here as an ``events -> DataFrame`` transform: the oracle-
+    checked twins in streaming/batch_equiv.py call the same transform
+    over the static events table (withWatermark is a no-op in batch),
+    and tests assert stream result == batch result on identical input,
   * foreachBatch sink reusing the batch ParquetSink writers — the
     streaming-ETL shape of the reference's incremental mode (S3+S12):
     each micro-batch is an append of one time-slice.
@@ -27,6 +30,19 @@ from ..sinks.writers import swap_dir
 # union again — bounds the cached plan's width (and the per-batch
 # planning cost) to N union branches regardless of stream lifetime.
 _ADMISSIONS_COMPACT_EVERY = 8
+
+# Event-time lateness the windowed aggregates, the interval join and
+# the dedup tolerate before a window's (or key's) state is dropped.
+_WATERMARK = "2 hours"
+# Session windows close after a 2-hour inactivity gap, under a 4-hour
+# watermark.
+_SESSION_GAP = "2 hours"
+_SESSION_WATERMARK = "4 hours"
+# observe() name under which with_audit_metrics' metrics appear in a
+# micro-batch's progress.observedMetrics.
+_AUDIT_NAME = "audit"
+# Key of the CDC snapshot run_foreach_batch_merge maintains.
+_MERGE_KEY = "user_id"
 
 
 def _read_if_exists(spark: SparkSession, path: str) -> DataFrame | None:
@@ -67,12 +83,12 @@ def read_events_stream(spark: SparkSession, source_dir: str) -> DataFrame:
     )
 
 
-def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Watermarked tumbling 1h aggregation — state per (window, type)
     is dropped once the watermark passes window end (bounded memory on
-    an unbounded stream)."""
+    an unbounded stream). Batch twin: stream_tumbling_hourly."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
@@ -81,11 +97,12 @@ def tumbling_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def session_aggregate(events: DataFrame, gap: str = "2 hours", watermark: str = "4 hours") -> DataFrame:
-    """Watermarked session windows (2h inactivity gap) per user."""
+def session_aggregate(events: DataFrame) -> DataFrame:
+    """Watermarked session windows (2h inactivity gap) per user.
+    Batch twin: stream_session_windows."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", _SESSION_WATERMARK)
+        .groupBy(F.session_window("ts", _SESSION_GAP).alias("w"), "user_id")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(
             "user_id",
@@ -196,28 +213,22 @@ def stateful_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def sliding_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def sliding_counts(events: DataFrame) -> DataFrame:
     """Watermarked sliding windows (1h length, 30m slide): each event
     belongs to two open windows, so streaming state holds two window
-    entries per grid slot until the watermark closes them."""
+    entries per grid slot until the watermark closes them. Batch twin:
+    stream_sliding_windows."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", _WATERMARK)
         .groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
 
 
-def stream_click_purchase_join(events: DataFrame) -> DataFrame:
-    """Watermarked stream-stream inner join: each purchase joined to
-    the same user's clicks from the preceding hour. Both sides carry
-    watermarks and the join condition carries the time range, so Spark
-    can expire click state older than (watermark - 1h) — bounded state
-    on two unbounded streams.
-
-    Scale: state is partitioned by user_id; the range condition keeps
-    per-key state to one hour of clicks.
-    """
+def _click_purchase_join(events: DataFrame, how: str) -> DataFrame:
+    """Each purchase joined (``how``) to the same user's clicks from
+    the preceding hour, both sides watermarked."""
     clicks = (
         events.filter(F.col("event_type") == "click")
         .select(
@@ -225,23 +236,36 @@ def stream_click_purchase_join(events: DataFrame) -> DataFrame:
             F.col("ts").alias("click_ts"),
             F.col("event_id").alias("click_id"),
         )
-        .withWatermark("click_ts", "2 hours")
+        .withWatermark("click_ts", _WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
         .select("user_id", F.col("ts").alias("purchase_ts"), F.col("event_id").alias("purchase_id"))
-        .withWatermark("purchase_ts", "2 hours")
+        .withWatermark("purchase_ts", _WATERMARK)
     )
     return purchases.join(
         clicks,
         (F.col("user_id") == F.col("c_user_id"))
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")),
-        "inner",
+        how,
     ).select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
 
 
-def stream_dedup_events(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def stream_click_purchase_join(events: DataFrame) -> DataFrame:
+    """Watermarked stream-stream inner join: each purchase joined to
+    the same user's clicks from the preceding hour. Both sides carry
+    watermarks and the join condition carries the time range, so Spark
+    can expire click state older than (watermark - 1h) — bounded state
+    on two unbounded streams. Batch twin: stream_click_attribution.
+
+    Scale: state is partitioned by user_id; the range condition keeps
+    per-key state to one hour of clicks.
+    """
+    return _click_purchase_join(events, "inner")
+
+
+def stream_dedup_events(events: DataFrame) -> DataFrame:
     """Streaming ingestion dedup: drop re-deliveries of the same
     event_id (the at-least-once → exactly-once repair every streaming
     ETL needs). dropDuplicatesWithinWatermark keeps per-key state only
@@ -250,7 +274,7 @@ def stream_dedup_events(events: DataFrame, watermark: str = "2 hours") -> DataFr
 
     Re-deliveries carry the original event time, so they always land
     within the watermark of the first copy."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", _WATERMARK).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
 
@@ -259,7 +283,6 @@ def run_foreach_batch_merge(
     changes: DataFrame,
     target_dir: str,
     checkpoint_dir: str,
-    key_col: str = "user_id",
 ) -> StreamingQuery:
     """Streaming CDC apply: each micro-batch of change events is
     MERGEd into a keyed parquet snapshot — latest change per key wins
@@ -281,13 +304,13 @@ def run_foreach_batch_merge(
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return
-        w = Window.partitionBy(key_col).orderBy(
+        w = Window.partitionBy(_MERGE_KEY).orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
         latest = (
             batch_df.withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
-            .select(key_col, "ts", "event_id", "event_type", "value")
+            .select(_MERGE_KEY, "ts", "event_id", "event_type", "value")
         )
         base = _read_if_exists(spark, target_dir)
         if base is None:  # first batch: no snapshot yet
@@ -302,8 +325,8 @@ def run_foreach_batch_merge(
             upd_wins = F.col("b.ts").isNull() | (
                 F.struct("u.ts", "u.event_id") >= F.struct("b.ts", "b.event_id")
             )
-            merged = b.join(u, on=key_col, how="full_outer").select(
-                F.col(key_col),
+            merged = b.join(u, on=_MERGE_KEY, how="full_outer").select(
+                F.col(_MERGE_KEY),
                 *[
                     F.when(upd_wins, F.col(f"u.{c}"))
                     .otherwise(F.col(f"b.{c}"))
@@ -343,20 +366,9 @@ def tws_user_totals(events: DataFrame) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("n_events", T.LongType()),
-            T.StructField("total_value", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [T.StructField("n", T.LongType()), T.StructField("total", T.DoubleType())]
-    )
-
     class RunningTotals(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", state_schema)
+            self._state = handle.getValueState("totals", USER_TOTALS_STATE)
 
         def handleInputRows(self, key, rows, timerValues):
             n, total = 0, 0.0
@@ -375,15 +387,13 @@ def tws_user_totals(events: DataFrame) -> DataFrame:
 
     return events.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=RunningTotals(),
-        outputStructType=out_schema,
+        outputStructType=USER_TOTALS_OUTPUT,
         outputMode="Update",
         timeMode="None",
     )
 
 
-def enrich_with_user_dim(
-    events: DataFrame, users: DataFrame, watermark: str = "2 hours"
-) -> DataFrame:
+def enrich_with_user_dim(events: DataFrame, users: DataFrame) -> DataFrame:
     """Stream-static enrichment: join the event stream to a static
     dimension (user → market segment) and aggregate revenue per
     (hour, segment).
@@ -393,12 +403,12 @@ def enrich_with_user_dim(
     scales as an ordinary broadcast join applied to each micro-batch:
     the dimension is broadcast once per batch and events never shuffle
     before the join. Only the windowed aggregate keeps (bounded,
-    watermarked) state."""
+    watermarked) state. Batch twin: stream_static_enrich."""
     dim = users.select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", _WATERMARK)
         .join(F.broadcast(dim), "user_id")
         .groupBy(F.window("ts", "1 hour").alias("w"), "c_mktsegment")
         .agg(
@@ -426,30 +436,10 @@ def stream_click_purchase_left_outer(events: DataFrame) -> DataFrame:
     which is why the batch-equivalence test can compare against a
     plain batch left join). State stays bounded exactly as in the
     inner case: both sides watermarked, range-bounded join condition."""
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user_id"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("ts").alias("purchase_ts"), F.col("event_id").alias("purchase_id"))
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    return purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user_id"))
-        & (F.col("click_ts") <= F.col("purchase_ts"))
-        & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")),
-        "leftOuter",
-    ).select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
+    return _click_purchase_join(events, "leftOuter")
 
 
-def with_audit_metrics(events: DataFrame, name: str = "audit") -> DataFrame:
+def with_audit_metrics(events: DataFrame) -> DataFrame:
     """S14 generalized: the reference audits row counts with separate
     post-load queries (reference ``bigquery_operations.py:46-48``, an
     extra round-trip); ``observe`` rides the metrics on the SAME pass —
@@ -457,7 +447,7 @@ def with_audit_metrics(events: DataFrame, name: str = "audit") -> DataFrame:
     per action in batch — at zero extra scans. The metric expressions
     are ordinary aggregates evaluated alongside the query."""
     return events.observe(
-        name,
+        _AUDIT_NAME,
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("value").alias("total_value"),
         F.max("ts").alias("max_event_ts"),
@@ -473,7 +463,8 @@ def countmin_cells(events: DataFrame) -> DataFrame:
     count grows state with the key universe, the sketch never does. No
     watermark needed; cells merge by addition, so per-micro-batch
     partial counts fold into state exactly like map-side partial
-    aggregation does in batch (q_countmin_sketch is the batch twin)."""
+    aggregation does in batch. Batch twin: stream_countmin_cells (and
+    q_countmin_sketch builds the same cells)."""
     from ..operators.relational_ext import _CMS_DEPTH, cms_bucket
 
     k = F.col("user_id").cast("string")
@@ -485,39 +476,6 @@ def countmin_cells(events: DataFrame) -> DataFrame:
         )
         .groupBy("i", "bucket")
         .agg(F.count("*").alias("cell"))
-    )
-
-
-def ols_sufficient_stats(events: DataFrame) -> DataFrame:
-    """Streaming OLS: the per-event-type sufficient statistics
-    (n, Σx, Σy, Σxy, Σx²) as a running complete-mode aggregation —
-    regression coefficients maintained over a stream with five numbers
-    of state per key, because the statistics merge associatively
-    (exactly the property that makes them map-side-combinable in
-    batch; ts_ols_trend is the batch twin). Slope/intercept derive in
-    the final select, so the stateful part never grows."""
-    from pyspark.sql import functions as F
-
-    x = F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date")).cast("double")
-    dec = lambda c: c.cast("decimal(20,10)")  # noqa: E731
-    s = events.select(
-        "event_type", x.alias("x"), F.col("value").alias("y")
-    ).groupBy("event_type").agg(
-        F.count("*").alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("x")) * dec(F.col("y"))).cast("double").alias("sxy"),
-        F.sum(dec(F.col("x")) * dec(F.col("x"))).cast("double").alias("sxx"),
-    )
-    n = F.col("n")
-    slope = (n * F.col("sxy") - F.col("sx") * F.col("sy")) / (
-        n * F.col("sxx") - F.col("sx") * F.col("sx")
-    )
-    return s.select(
-        "event_type",
-        n.cast("long").alias("n_points"),
-        F.round(slope, 6).alias("slope_per_day"),
-        F.round((F.col("sy") - slope * F.col("sx")) / n, 6).alias("intercept"),
     )
 
 
@@ -542,13 +500,14 @@ SPACESAVING_STATE = T.StructType(
 )
 
 
-def spacesaving_user_counts(events: DataFrame, capacity: int = 16, shards: int = 8) -> DataFrame:
+def spacesaving_user_counts(events: DataFrame) -> DataFrame:
     """Streaming space-saving heavy hitters (Metwally et al. 2005):
-    each shard keeps at most `capacity` (user, count, err) counters as
-    keyed state across micro-batches; a new key evicts the minimum
-    counter and inherits its count as the error bound. Every batch
-    re-emits the shard's full summary, so the LAST emission per shard
-    is the final sketch.
+    each of `_SS_SHARDS` shards keeps at most `_SS_CAPACITY` (user,
+    count, err) counters as keyed state across micro-batches, updated
+    by q_spacesaving_topk's own `spacesaving_feed`: a new key evicts
+    the minimum counter and inherits its count as the error bound.
+    Every batch re-emits the shard's full summary, so the LAST
+    emission per shard is the final sketch.
 
     The guarantees (est ≥ true ≥ est − err; any user with true
     shard-count > n/capacity present) hold for any arrival order —
@@ -558,9 +517,13 @@ def spacesaving_user_counts(events: DataFrame, capacity: int = 16, shards: int =
     never grows, no watermark needed, no state eviction policy."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    def update(key, pdfs, state):
-        import pandas as pd
+    from ..operators.relational_ext import (
+        _SS_SHARDS,
+        spacesaving_feed,
+        spacesaving_frame,
+    )
 
+    def update(key, pdfs, state):
         if state.exists:
             ids, counts, errs, n = state.get
             counters = {int(i): [int(c), int(e)] for i, c, e in zip(ids, counts, errs)}
@@ -568,20 +531,8 @@ def spacesaving_user_counts(events: DataFrame, capacity: int = 16, shards: int =
         else:
             counters, n = {}, 0
         for pdf in pdfs:
-            pdf = pdf.sort_values(["ts", "event_id"])
-            for uid in pdf["user_id"]:
-                n += 1
-                uid = int(uid)
-                if uid in counters:
-                    counters[uid][0] += 1
-                elif len(counters) < capacity:
-                    counters[uid] = [1, 0]
-                else:
-                    vid, (vc, _) = min(
-                        counters.items(), key=lambda kv: (kv[1][0], kv[0])
-                    )
-                    del counters[vid]
-                    counters[uid] = [vc + 1, vc]
+            spacesaving_feed(counters, pdf.sort_values(["ts", "event_id"])["user_id"])
+            n += len(pdf)
         state.update(
             (
                 list(counters),
@@ -590,18 +541,10 @@ def spacesaving_user_counts(events: DataFrame, capacity: int = 16, shards: int =
                 n,
             )
         )
-        yield pd.DataFrame(
-            {
-                "shard": int(key[0]),
-                "user_id": list(counters),
-                "est_count": [c for c, _ in counters.values()],
-                "max_err": [e for _, e in counters.values()],
-                "n_shard": n,
-            }
-        )
+        yield spacesaving_frame(int(key[0]), counters, n)
 
     return (
-        events.withColumn("shard", (F.col("user_id") % shards).cast("int"))
+        events.withColumn("shard", (F.col("user_id") % _SS_SHARDS).cast("int"))
         .groupBy("shard")
         .applyInPandasWithState(
             update,

@@ -283,6 +283,38 @@ def test_run_etl_sh_smoke(sf_dir, tmp_path):
     assert "--daily" in proc.stdout and "--log-dir" in proc.stdout
 
 
+def test_get_spark_honours_spark_submit_master(tmp_path):
+    """Under spark-submit, get_spark keeps spark-submit's --master
+    instead of replacing it with local[$SPARK_GRAFT_CPUS]."""
+    import os
+    import pathlib
+    import subprocess
+    import sys
+
+    import pyspark
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    script = tmp_path / "master.py"
+    script.write_text(
+        f"""
+import sys
+sys.path.insert(0, {str(repo)!r})
+from database_to_bigquery_spark.session import get_spark
+spark = get_spark("submit-master")
+print("PARALLELISM", spark.sparkContext.defaultParallelism)
+spark.stop()
+"""
+    )
+    submit = pathlib.Path(pyspark.__file__).parent / "bin" / "spark-submit"
+    env = dict(os.environ, SPARK_GRAFT_CPUS="3", PYSPARK_PYTHON=sys.executable)
+    proc = subprocess.run(
+        [str(submit), "--master", "local[2]", str(script)],
+        capture_output=True, text=True, cwd=tmp_path, env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "PARALLELISM 2" in proc.stdout, proc.stdout
+
+
 def test_cli_sink_format_orc(spark, sf_dir, tmp_path):
     # --sink-format routes through FileSink; the warehouse round-trips
     from database_to_bigquery_spark import etl

@@ -36,21 +36,15 @@ def events_dir(spark, sf_dir, tmp_path_factory):
     return str(out)
 
 
-def _batch_tumbling(spark, events_dir):
-    ev = spark.read.parquet(events_dir)
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
-    )
-
-
 def test_stream_tumbling_equals_batch(spark, events_dir):
     stream = jobs.tumbling_counts(jobs.read_events_stream(spark, events_dir))
     q = jobs.run_to_memory_sink(stream, "tumbling_test", output_mode="complete")
     q.awaitTermination()  # availableNow trigger → terminates when drained
     got = {tuple(r) for r in spark.table("tumbling_test").collect()}
-    want = {tuple(r) for r in _batch_tumbling(spark, events_dir).collect()}
+    # the same transform over the same input as a batch DataFrame
+    # (withWatermark is a no-op in batch); its registered twin,
+    # stream_tumbling_hourly, is the same call checked against DuckDB
+    want = {tuple(r) for r in jobs.tumbling_counts(spark.read.parquet(events_dir)).collect()}
     assert got == want
 
 
@@ -59,21 +53,7 @@ def test_stream_session_equals_batch(spark, events_dir):
     q = jobs.run_to_memory_sink(stream, "session_test", output_mode="complete")
     q.awaitTermination()
     got = {tuple(r) for r in spark.table("session_test").collect()}
-    ev = spark.read.parquet(events_dir)
-    want = {
-        tuple(r)
-        for r in (
-            ev.groupBy(F.session_window("ts", "2 hours").alias("w"), "user_id")
-            .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-            .select(
-                "user_id",
-                F.col("w.start").alias("session_start"),
-                F.col("w.end").alias("session_end"),
-                "n_events",
-                "total_value",
-            )
-        ).collect()
-    }
+    want = {tuple(r) for r in jobs.session_aggregate(spark.read.parquet(events_dir)).collect()}
     assert got == want
 
 
@@ -165,15 +145,7 @@ def test_stream_sliding_equals_batch(spark, events_dir):
     q = jobs.run_to_memory_sink(stream, "sliding_test", output_mode="complete")
     q.awaitTermination()
     got = {tuple(r) for r in spark.table("sliding_test").collect()}
-    ev = spark.read.parquet(events_dir)
-    want = {
-        tuple(r)
-        for r in (
-            ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
-            .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("total_value"))
-            .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
-        ).collect()
-    }
+    want = {tuple(r) for r in jobs.sliding_counts(spark.read.parquet(events_dir)).collect()}
     assert got == want
 
 
@@ -201,26 +173,9 @@ def test_stream_stream_join_equals_batch(spark, events_dir):
     q = jobs.run_to_memory_sink(stream, "ssjoin_test", output_mode="append")
     q.awaitTermination()
     got = {tuple(r) for r in spark.table("ssjoin_test").collect()}
-    ev = spark.read.parquet(events_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("c_user_id"),
-        F.col("ts").alias("click_ts"),
-        F.col("event_id").alias("click_id"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", F.col("ts").alias("purchase_ts"), F.col("event_id").alias("purchase_id")
-    )
     want = {
         tuple(r)
-        for r in purchases.join(
-            clicks,
-            (F.col("user_id") == F.col("c_user_id"))
-            & (F.col("click_ts") <= F.col("purchase_ts"))
-            & (F.col("click_ts") >= F.col("purchase_ts") - F.expr("INTERVAL 1 HOUR")),
-            "inner",
-        )
-        .select("user_id", "purchase_id", "purchase_ts", "click_id", "click_ts")
-        .collect()
+        for r in jobs.stream_click_purchase_join(spark.read.parquet(events_dir)).collect()
     }
     assert got == want and len(got) > 0
 
@@ -431,7 +386,7 @@ def test_watermark_drops_late_rows(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(str(src) + "/*")
     )
-    agg = jobs.tumbling_counts(stream, watermark="2 hours")
+    agg = jobs.tumbling_counts(stream)
     q = jobs.run_to_memory_sink(agg, "late_drop_check", output_mode="append")
     q.awaitTermination(120)
     got = {
@@ -528,11 +483,13 @@ def test_stream_ols_equals_batch(spark, events_dir):
     # regression coefficients over a stream: the sufficient statistics
     # are associative, so the drained complete-mode result must equal
     # the batch computation exactly (decimal-exact sums, same rounding)
-    stream = jobs.ols_sufficient_stats(jobs.read_events_stream(spark, events_dir))
+    from database_to_bigquery_spark.operators.timeseries import ols_trend
+
+    stream = ols_trend(jobs.read_events_stream(spark, events_dir))
     q = jobs.run_to_memory_sink(stream, "ols_test", output_mode="complete")
     q.awaitTermination()
     got = {tuple(r) for r in spark.table("ols_test").collect()}
-    want = {tuple(r) for r in jobs.ols_sufficient_stats(spark.read.parquet(events_dir)).collect()}
+    want = {tuple(r) for r in ols_trend(spark.read.parquet(events_dir)).collect()}
     assert got == want
 
 
