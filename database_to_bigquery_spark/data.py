@@ -1,9 +1,7 @@
 """Fixture table access.
 
 The driver's synthetic tables (TESTDATA.md) are one parquet file per
-table. ``load_tables`` reads them lazily as DataFrames and registers
-each as a temp view so operators can be written in either DataFrame or
-SQL form — Catalyst produces the same plan for both.
+table. ``load_table`` reads one lazily as a DataFrame.
 
 At cluster scale the same call works against a directory of many
 parquet files per table; nothing here materializes data on the driver.
@@ -90,7 +88,7 @@ def load_table_spread(spark: SparkSession, sf_dir: str, name: str, key: str) -> 
 
 
 def range_fanout(df: DataFrame, floor: int = 32) -> int:
-    """Width for the two-pass global-rank family's repartitionByRange.
+    """Width for `global_prefix`'s repartitionByRange.
 
     Derived, not hardcoded: the pattern's SinglePartition offsets stage
     only ever sees one long per range partition, so the width can grow
@@ -102,7 +100,7 @@ def range_fanout(df: DataFrame, floor: int = 32) -> int:
     three terms collapse to the floor, so local plans are unchanged.
     The result is still an EXPLICIT partition count, so AQE will not
     re-coalesce it and both consumers of the persisted range exchange
-    see identical boundaries. The global ranks are width-agnostic by
+    see identical boundaries. The prefix sums are width-agnostic by
     construction (tests/test_range_fanout.py proves it at two widths).
     """
     spark = df.sparkSession
@@ -135,6 +133,56 @@ def range_fanout(df: DataFrame, floor: int = 32) -> int:
 
 # Upper clamp for range_fanout's size-derived term; see its body.
 _RANGE_FANOUT_CEILING = 1 << 18
+
+
+def global_prefix(df: DataFrame, order: list, weight=None) -> DataFrame:
+    """``df`` plus ``cum``, the inclusive running sum of ``weight``
+    (a column or name; default 1, making ``cum`` the 1-based global
+    rank) in ``order``, and ``total``, the sum over all rows — without
+    a whole-table window, which would funnel the relation through one
+    task. ``order`` must be unique per row for ``cum`` to be exact.
+
+    Two passes: repartitionByRange on ``order`` (sampled boundaries, a
+    parallel distributed sort over `range_fanout` partitions) and a
+    running sum inside each range partition; then each partition's
+    exclusive offset, the sum of the partitions before it, from a
+    per-partition sum — one row per partition, so its cumulative
+    window is the only SinglePartition stage and sees one long per
+    partition — broadcast-joined back.
+    """
+    from pyspark.sql import Window as W
+    from pyspark.sql import functions as F
+
+    w = F.lit(1) if weight is None else weight
+    # persist() pins the range partitioning across the two consumers
+    # (rows + broadcast offsets). The offsets subtree executes as its
+    # own job and may prune to a narrower schema than the rows branch,
+    # defeating exchange reuse — and RangePartitioner re-samples
+    # boundaries per exchange instance, so the two branches could
+    # disagree on boundaries and silently corrupt the offsets (bitten
+    # in q_decile_lift).
+    ranged = (
+        df.repartitionByRange(range_fanout(df), *order)
+        .withColumn("_pid", F.spark_partition_id())
+        .persist()
+    )
+    local = ranged.withColumn(
+        "_lc",
+        F.sum(w).over(
+            W.partitionBy("_pid").orderBy(*order).rowsBetween(W.unboundedPreceding, W.currentRow)
+        ),
+    )
+    parts = W.orderBy("_pid")
+    offsets = local.groupBy("_pid").agg(F.sum(w).alias("_c")).select(
+        "_pid",
+        F.coalesce(
+            F.sum("_c").over(parts.rowsBetween(W.unboundedPreceding, -1)), F.lit(0)
+        ).alias("_off"),
+        F.sum("_c").over(parts.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)).alias("total"),
+    )
+    return local.join(F.broadcast(offsets), "_pid").select(
+        *df.columns, (F.col("_off") + F.col("_lc")).alias("cum"), "total"
+    )
 
 
 def _parse_byte_conf(value: str) -> int:
@@ -200,16 +248,3 @@ def bounded(df: DataFrame, n: int) -> DataFrame:
     100 TB. LIMIT-without-ORDER nondeterminism cannot bite: the limit
     never truncates when the contract holds."""
     return df.limit(n)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """All fixture tables as DataFrames; optionally as temp views."""
-    out: dict[str, DataFrame] = {}
-    for name in TABLE_NAMES:
-        df = load_table(spark, sf_dir, name)
-        if register_views:
-            df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

@@ -977,9 +977,10 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------- duplicate clustering (CC) ----
 
 
-# Shared by dedup_clusters and graph.graph_cc_pointer_jumping — two
-# different distributed CC algorithms over the SAME near-dup pair
-# graph, checked against the same recursive-CTE fixpoint.
+# The recursive-CTE fixpoint every query on the CC core
+# (label_propagation_components) is checked against: the exact-miner
+# forms (dedup_clusters, graph.graph_cc_pointer_jumping) and the
+# banded-miner forms.
 CLUSTERS_ORACLE = f"""
     WITH RECURSIVE
     idx AS (
@@ -1017,7 +1018,7 @@ def _symmetrized_edges(pairs: DataFrame) -> DataFrame:
     unionByName of two selects would splice the (expensive) mining DAG
     into the plan twice and run it twice — explode(array(fwd, rev))
     reads it once. The checkpoint then pins the edge list for the
-    iterative consumers (label propagation / pointer jumping)."""
+    iterative CC core (label_propagation_components)."""
     return (
         pairs.select(
             F.explode(
@@ -1035,6 +1036,14 @@ def _symmetrized_edges(pairs: DataFrame) -> DataFrame:
 def dup_graph_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetrized near-dup edge list from the EXACT pair mining."""
     return _symmetrized_edges(dedup_ngram_jaccard(spark, sf_dir))
+
+
+def component_sizes(labels: DataFrame) -> DataFrame:
+    """One (component, cluster_size) row per component of a (node,
+    label) relation — the output of every CC query."""
+    return labels.groupBy(F.col("label").alias("component")).agg(
+        F.count("*").alias("cluster_size")
+    )
 
 
 @query(
@@ -1066,9 +1075,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair mining per round). Oracle: the same fixpoint via DuckDB\'s
     recursive CTE over the identical pair set.
     """
-    return label_propagation_components(dup_graph_edges(spark, sf_dir)).groupBy(
-        F.col("label").alias("component")
-    ).agg(F.count("*").alias("cluster_size"))
+    return component_sizes(label_propagation_components(dup_graph_edges(spark, sf_dir)))
 
 
 @query("dedup_clusters_lsh", headline=True, oracle=CLUSTERS_ORACLE)
@@ -1089,10 +1096,8 @@ def dedup_clusters_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows catches J ≳ 0.5 w.h.p.), so the cluster sizes agree exactly;
     at adversarial thresholds the twin relationship (exact form =
     `dedup_clusters`) documents the recall trade."""
-    return label_propagation_components(
-        _symmetrized_edges(dedup_minhash_lsh(spark, sf_dir))
-    ).groupBy(F.col("label").alias("component")).agg(
-        F.count("*").alias("cluster_size")
+    return component_sizes(
+        label_propagation_components(_symmetrized_edges(dedup_minhash_lsh(spark, sf_dir)))
     )
 
 
@@ -1278,9 +1283,9 @@ def dedup_incremental_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label",
             "left",
         )
-        .select(F.coalesce("merged", F.col("label")).alias("component"))
+        .select(F.coalesce("merged", F.col("label")).alias("label"))
     )
-    return final.groupBy("component").agg(F.count("*").alias("cluster_size"))
+    return component_sizes(final)
 
 
 def label_propagation_components(e: DataFrame) -> DataFrame:

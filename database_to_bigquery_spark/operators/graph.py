@@ -1,11 +1,12 @@
 """Graph operators beyond the near-dup clustering family.
 
 The dedup module already covers connected components (iterative label
-propagation, ``dedup.py``) and triangle counting; this adds the other
-canonical iterative graph computation — PageRank — expressed as pure
-DataFrame algebra with a FIXED, unrolled iteration count so the whole
-computation stays one declarative plan that a DuckDB oracle can mirror
-as chained CTEs. (The open-ended converge-until-ε variant is the same
+propagation with pointer jumping, ``dedup.label_propagation_components``,
+which ``graph_cc_pointer_jumping`` here also runs) and triangle
+counting; this adds the other canonical iterative graph computation —
+PageRank — expressed as pure DataFrame algebra with a FIXED, unrolled
+iteration count so the whole computation stays one declarative plan
+that a DuckDB oracle can mirror as chained CTEs. (The open-ended converge-until-ε variant is the same
 loop body driven from Python, as in dedup's label propagation; fixing
 k makes it oracle-checkable.)
 
@@ -318,84 +319,19 @@ def _cc_oracle() -> str:
 )
 def graph_cc_pointer_jumping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components by min-label propagation WITH pointer
-    jumping (path halving): each round first takes the minimum label
-    over the neighborhood (the dedup_clusters step), then replaces
-    every label by its label's label — the classic PRAM/BSP shortcut
-    that collapses label chains geometrically, so convergence takes
-    O(log diameter) rounds instead of O(diameter). On a 100 TB graph
-    with long chains (web graphs, citation graphs — unlike the
+    jumping (path halving): each round takes the minimum over the
+    neighborhood AND over every label's label — the classic PRAM/BSP
+    shortcut that collapses label chains geometrically, so convergence
+    takes O(log diameter) rounds instead of O(diameter). On a 100 TB
+    graph with long chains (web graphs, citation graphs — unlike the
     near-clique dup clusters) this is the difference between ~6 and
     ~500 rounds, each round being a full shuffle.
 
-    Runs over the SAME near-dup edge list as dedup_clusters and is
-    checked against the SAME recursive-CTE oracle — two independent
-    distributed algorithms agreeing on the fixpoint (plus a direct
-    equality test in tests/test_llm_ops.py).
+    This is the shared CC core, `dedup.label_propagation_components`
+    (hop + pointer jump on the contracted label graph, one job per
+    round), run over the same exact near-dup edge list as
+    `dedup_clusters` and checked against the same recursive-CTE
+    oracle."""
+    from .dedup import component_sizes, dup_graph_edges, label_propagation_components
 
-    Scale: the jump step is a self-join of the label table on the
-    label key — O(V) rows, co-partitioned with the propagation's
-    groupBy(node) output; the driver sees only a 0/1 convergence
-    count per round; localCheckpoint truncates the growing lineage.
-
-    The round cap is a lineage/runaway guard, not a semantic limit:
-    if the fixpoint is not reached within it (pathological graph, or
-    a bug in the monotonicity argument) the loop RAISES instead of
-    returning silently-unconverged labels — wrong components must
-    never come out looking like an answer."""
-    from .dedup import dup_graph_edges
-
-    _MAX_ROUNDS = 20  # log2(diameter) rounds suffice; exits at fixpoint
-    e = dup_graph_edges(spark, sf_dir)
-    labels = (
-        e.select(F.col("src").alias("node")).distinct().withColumn("label", F.col("node"))
-    ).localCheckpoint(eager=True)
-    # NOTE: dedup_clusters fuses its convergence count into the
-    # checkpoint pass via observe(); doing the same here — observe on
-    # top of the prop self-join (p ⋈ q on label) plus the old-labels
-    # join, all above the union — trips a Catalyst constraint-rewrite
-    # bug in Spark 4.1 (NoSuchElementException in
-    # UnionBase.rewriteConstraints during localCheckpoint analysis),
-    # so this operator keeps the separate (cheap, V-row) convergence
-    # job per round.
-    converged = False
-    for _ in range(_MAX_ROUNDS):
-        prop = (
-            e.join(labels, e.src == labels.node)
-            .select(F.col("dst").alias("node"), "label")
-            .unionByName(labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        # pointer jump: label <- label(label). Labels are node ids, so
-        # the lookup is a self-join on the label key; labels only ever
-        # decrease, making the jump monotone and safe.
-        jumped = (
-            prop.alias("p")
-            .join(
-                prop.select(F.col("node").alias("label"), F.col("label").alias("label2")).alias("q"),
-                "label",
-                "left",
-            )
-            .select("node", F.coalesce("label2", "label").alias("label"))
-        ).localCheckpoint(eager=True)
-        changed = (
-            jumped.alias("j")
-            .join(labels.alias("l"), "node")
-            .filter(F.col("j.label") != F.col("l.label"))
-            .limit(1)
-            .count()
-        )
-        labels = jumped
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"graph_cc_pointer_jumping: no fixpoint after {_MAX_ROUNDS} "
-            "pointer-jumping rounds — labels would be unconverged; refusing "
-            "to return possibly-wrong components (raise the cap for graphs "
-            "with diameter > 2^20)"
-        )
-    return labels.groupBy(F.col("label").alias("component")).agg(
-        F.count("*").alias("cluster_size")
-    )
+    return component_sizes(label_propagation_components(dup_graph_edges(spark, sf_dir)))

@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..data import load_table, range_fanout
+from ..data import global_prefix, load_table
 from ..registry import query
 
 # ------------------------------------------------------------- pivot ----
@@ -359,10 +359,8 @@ def q_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the base rate — the standard campaign-targeting /
     classifier-eval report.
 
-    Scale: the global ranking reuses the q_global_ranks_scalable
-    two-phase pattern — repartitionByRange on (score DESC, key) for a
-    distributed sort, row_number within each range partition, then a
-    broadcast O(#partitions) offset table; no whole-table
+    Scale: the global rank is `data.global_prefix` over (score DESC,
+    key) — a range-sorted two-pass running count with no whole-table
     SinglePartition window. Deciles are rank arithmetic
     ((r-1)·10 div n), NOT NTILE, so the bucket rule is identical in
     both engines; the cumulative window runs on the 10-row decile
@@ -374,37 +372,9 @@ def q_decile_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("o_orderstatus") == "F", 1).otherwise(0).alias("resp"),
         "o_totalprice",
     )
-    # persist() pins the range partitioning: the offsets branch (a
-    # broadcast subtree, executed as its own job) would otherwise prune
-    # to a NARROWER schema than the probe branch, defeating exchange
-    # reuse — and RangePartitioner re-samples per exchange instance, so
-    # the two branches could disagree on boundaries and corrupt the
-    # offsets. (q_global_ranks_scalable dodges this only because both
-    # of its branches prune to the identical 2-column schema.)
-    ranged = (
-        o.repartitionByRange(
-            range_fanout(o), F.col("o_totalprice").desc(), F.col("o_orderkey")
-        )
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    local = ranged.withColumn(
-        "lr",
-        F.row_number().over(
-            W.partitionBy("pid").orderBy(F.col("o_totalprice").desc(), "o_orderkey")
-        ),
-    )
-    counts = local.groupBy("pid").agg(F.count("*").alias("c"))
-    offsets = counts.withColumn(
-        "off",
-        F.coalesce(
-            F.sum("c").over(W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)),
-            F.lit(0),
-        ),
-    ).withColumn("n", F.sum("c").over(W.orderBy(F.lit(1)).rowsBetween(W.unboundedPreceding, W.unboundedFollowing)))
-    ranked = local.join(F.broadcast(offsets.select("pid", "off", "n")), "pid").select(
-        "resp", (F.col("lr") + F.col("off")).alias("r"), "n"
-    )
+    ranked = global_prefix(
+        o, [F.col("o_totalprice").desc(), F.col("o_orderkey")]
+    ).select("resp", F.col("cum").alias("r"), F.col("total").alias("n"))
     cells = (
         ranked.withColumn(
             "decile", (((F.col("r") - 1) * 10) / F.col("n")).cast("int") + 1

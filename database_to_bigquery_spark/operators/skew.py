@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..data import load_table, range_fanout
+from ..data import global_prefix, load_table
 from ..registry import query
 
 DEFAULT_SALT = 8
@@ -145,48 +145,15 @@ def q_global_ranks_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale rewrite of q_ntile_stats (whose stock `Window.orderBy()`
     funnels the whole table through one task).
 
-    Two-phase: (1) repartitionByRange on the sort key (sampled
-    boundaries — a parallel distributed sort), rank locally inside each
-    range partition; (2) offset every partition's local ranks by the
-    cumulative row count of the partitions before it. The offsets come
-    from a per-partition count — O(#partitions) rows, so its own
-    cumulative window is microscopic (that tiny 32-row stage is the
-    only SinglePartition in the plan, by design) — broadcast-joined
-    back. With a unique sort key, rank == row_number, so
-    percent_rank = (r-1)/(n-1), cume_dist = r/n, and NTILE's
-    uneven-bucket rule is pure arithmetic on r and n."""
-    from pyspark.sql import Window as W
-
+    The global rank r comes from `data.global_prefix` (range-sorted
+    two-pass running count; its only SinglePartition stage sees one
+    row per range partition). With a unique sort key, rank ==
+    row_number, so percent_rank = (r-1)/(n-1), cume_dist = r/n, and
+    NTILE's uneven-bucket rule is pure arithmetic on r and n."""
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    # persist() pins the range partitioning across the two consumers
-    # (probe + broadcast offsets). The offsets subtree executes as its
-    # own job; without a shared materialization it relies on exchange
-    # reuse, and RangePartitioner re-samples boundaries per exchange
-    # instance — any schema-pruning asymmetry between the branches
-    # would silently corrupt the offsets (bitten in q_decile_lift).
-    ranged = (
-        o.repartitionByRange(range_fanout(o), "o_totalprice", "o_orderkey")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    local = ranged.withColumn(
-        "rn",
-        F.row_number().over(
-            W.partitionBy("pid").orderBy("o_totalprice", "o_orderkey")
-        ),
-    )
-    counts = local.groupBy("pid").agg(F.count("*").alias("c"))
-    offsets = counts.withColumn(
-        "off",
-        F.coalesce(
-            F.sum("c").over(
-                W.orderBy("pid").rowsBetween(W.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).withColumn("n", F.sum("c").over(W.partitionBy()))
-    r = F.col("off") + F.col("rn")  # global 1-based rank
-    n = F.col("n")
+    ranked = global_prefix(o, ["o_totalprice", "o_orderkey"])
+    r = F.col("cum")  # global 1-based rank
+    n = F.col("total")
     k = F.lit(10)
     big = F.ceil(n / k)  # size of the first (n % k) buckets
     small = F.floor(n / k)
@@ -194,12 +161,9 @@ def q_global_ranks_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     decile = F.when(r <= cut, F.floor((r - 1) / big) + 1).otherwise(
         (n % k) + F.floor((r - cut - 1) / small) + 1
     )
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            "o_orderkey",
-            decile.cast("long").alias("decile"),
-            F.round((r - F.lit(1)) / (n - F.lit(1)), 6).alias("pct_rank"),
-            F.round(r / n, 6).alias("cume"),
-        )
+    return ranked.select(
+        "o_orderkey",
+        decile.cast("long").alias("decile"),
+        F.round((r - F.lit(1)) / (n - F.lit(1)), 6).alias("pct_rank"),
+        F.round(r / n, 6).alias("cume"),
     )

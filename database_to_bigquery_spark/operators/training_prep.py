@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..data import load_table, range_fanout
+from ..data import global_prefix, load_table
 from ..registry import query
 
 _N_SHARDS = 8  # fixture-sized; at 100 TB this is thousands
@@ -685,16 +685,11 @@ def llm_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrive in.
 
     Scale: the per-source rank is an ordinary partitioned window (no
-    global sort), and the interleave position is the two-pass global
-    rank core of `q_global_ranks_scalable` applied to the composite
-    key (src_rank, source): repartitionByRange gives a parallel
-    distributed sort, ranks are local per range partition, and the
-    only SinglePartition stage is the 32-row partition-count
-    cumulative — never the corpus. A naive ROW_NUMBER() OVER (ORDER
-    BY ...) here funnels 100 TB through one task; this plan funnels
-    32 longs. The persist() pins the range boundaries across the
-    probe/offset consumers (RangePartitioner re-samples per exchange
-    instance — the q_decile_lift lesson)."""
+    global sort), and the interleave position is `data.global_prefix`
+    over the composite key (src_rank, source): a range-sorted
+    two-pass running count whose only SinglePartition stage sees one
+    row per range partition — never the corpus. A naive ROW_NUMBER()
+    OVER (ORDER BY ...) here funnels 100 TB through one task."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
     ranked = d.withColumn(
         "src_rank",
@@ -702,33 +697,8 @@ def llm_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         .over(Window.partitionBy("source").orderBy("n_chars", "doc_id"))
         .cast("long"),
     ).drop("n_chars")
-    ranged = (
-        ranked.repartitionByRange(range_fanout(ranked), "src_rank", "source")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    local = ranged.withColumn(
-        "rn",
-        F.row_number().over(Window.partitionBy("pid").orderBy("src_rank", "source")),
-    )
-    counts = local.groupBy("pid").agg(F.count("*").alias("c"))
-    offsets = counts.withColumn(
-        "off",
-        F.coalesce(
-            F.sum("c").over(
-                Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    )
-    return (
-        local.join(F.broadcast(offsets), "pid")
-        .select(
-            "doc_id",
-            "source",
-            "src_rank",
-            (F.col("off") + F.col("rn")).cast("long").alias("global_pos"),
-        )
+    return global_prefix(ranked, ["src_rank", "source"]).select(
+        "doc_id", "source", "src_rank", F.col("cum").alias("global_pos")
     )
 
 
@@ -773,49 +743,22 @@ def llm_chunk_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the no-split per-shard bin view (occupancy accounting); this is
     the split-across-boundaries layout itself.
 
-    Scale: the global token offset is the two-pass cumulative-sum core
-    (q_global_ranks_scalable): repartitionByRange gives a parallel
-    range-sorted layout, offsets are local per partition, and the only
-    SinglePartition stage is the 32-row partition-total cumulative —
-    a naive SUM() OVER (ORDER BY doc_id) funnels the corpus through
-    one task; this funnels 32 longs. Chunk rows come from a bounded
-    per-doc explode (ceil(n/{_SEQ_LEN}) + 1 rows). The persist pins
-    the range boundaries across the two consumers (RangePartitioner
-    re-samples per exchange instance — the q_decile_lift lesson).
-    Everything downstream is integer arithmetic, so the whole layout
-    is oracle-exact; at 100 TB the same manifest shards by
-    floor(chunk_id / chunks_per_shard) into independent writer tasks."""
+    Scale: the global token offset is `data.global_prefix` weighted by
+    each doc's token count: a range-sorted two-pass running sum whose
+    only SinglePartition stage sees one row per range partition — a
+    naive SUM() OVER (ORDER BY doc_id) funnels the corpus through one
+    task. Chunk rows come from a bounded per-doc explode
+    (ceil(n/{_SEQ_LEN}) + 1 rows). Everything downstream is integer
+    arithmetic, so the whole layout is oracle-exact; at 100 TB the
+    same manifest shards by floor(chunk_id / chunks_per_shard) into
+    independent writer tasks."""
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).cast("long").alias("n"),
     )
-    ranged = (
-        d.repartitionByRange(range_fanout(d), "doc_id")
-        .withColumn("pid", F.spark_partition_id())
-        .persist()
-    )
-    local = ranged.withColumn(
-        "lc",
-        F.sum("n").over(
-            Window.partitionBy("pid")
-            .orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
-    totals = ranged.groupBy("pid").agg(F.sum("n").alias("c"))
-    offsets = totals.withColumn(
-        "off",
-        F.coalesce(
-            F.sum("c").over(
-                Window.orderBy("pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select("pid", "off")
-    st = (F.col("off") + F.col("lc") - F.col("n")).alias("st")
     spans = (
-        local.join(F.broadcast(offsets), "pid")
-        .select("doc_id", "n", st)
+        global_prefix(d, ["doc_id"], weight="n")
+        .select("doc_id", "n", (F.col("cum") - F.col("n")).alias("st"))
         .select(
             "doc_id",
             "n",

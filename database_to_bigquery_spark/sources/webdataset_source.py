@@ -19,14 +19,10 @@ the API buys over the hand-composed form:
   * the reader **streams members** through ``tarfile`` member-at-a-
     time per task — peak memory is one member, not one shard.
 
-Directory metadata (listing) and the commit protocol (rename/delete)
-go through ``shard_fs.fs_for`` — local ``os`` calls for plain paths,
-Hadoop ``FileSystem`` via the driver JVM for URI paths — so the
-driver-side planning and commit work against any Hadoop-connector
-path. The *staging byte write* is executor-side Python and therefore
-local-filesystem-bound (Python workers have no JVM gateway); writers
-reject non-``file:`` URI targets explicitly rather than corrupting
-them.
+Every reader and writer opens archive bytes with local Python IO, so
+each rejects a non-``file:`` URI path in its constructor (``file:``
+URIs are normalized to plain paths); listing and the commit protocol
+(rename/delete) are plain ``os`` calls.
 
 Commit protocol: executors stage to ``<dir>/.staging/`` under a
 task-attempt-unique name (retries and speculative attempts never
@@ -45,7 +41,8 @@ either route interchangeably.
 from __future__ import annotations
 
 import os
-
+import re
+import shutil
 from dataclasses import dataclass
 
 from pyspark.sql.datasource import (
@@ -57,8 +54,6 @@ from pyspark.sql.datasource import (
     InputPartition,
     WriterCommitMessage,
 )
-
-from .shard_fs import fs_for, has_uri_scheme, strip_file_scheme
 
 _SCHEMA = (
     "shard string, member_name string, key string, ext string, "
@@ -73,18 +68,55 @@ class _ShardPartition(InputPartition):
         self.path = path
 
 
-def _require_local(path: str, what: str) -> str:
-    """Writers/readers that open bytes with Python need a local path;
-    ``file:`` URIs are normalized, other schemes rejected with the
-    supported alternative named."""
-    if has_uri_scheme(path) and not path.startswith("file:"):
+def _require_local(path: str | None, what: str) -> str:
+    """The local path a reader/writer opens: ``file:`` URIs are
+    normalized, other schemes rejected with the supported alternative
+    named."""
+    if not path:
+        raise ValueError(f"webdataset {what} requires a path")
+    if path.startswith("file:"):
+        return "/" + path[len("file:"):].lstrip("/")
+    if re.match(r"[a-zA-Z][a-zA-Z0-9+.-]*://", path):
         raise ValueError(
             f"webdataset {what} opens archive bytes with local Python IO; "
             f"for object-store paths like {path!r} use the binaryFile-based "
             "operators.training_prep.read_webdataset / write via a "
             "foreachBatch committer instead"
         )
-    return strip_file_scheme(path)
+    return path
+
+
+def _list_tars(path: str) -> list[str]:
+    """Committed ``*.tar`` paths directly under ``path``, sorted. Names
+    starting with ``.`` or ``_`` are never data (Hadoop's
+    FileInputFormat rule), so in-flight staging shards stay invisible."""
+    if not os.path.isdir(path):
+        return []
+    return [
+        os.path.join(path, f)
+        for f in sorted(os.listdir(path))
+        if f.endswith(".tar") and not f.startswith((".", "_"))
+    ]
+
+
+def _read_members(path: str):
+    """Executor-side: stream ONE archive member-at-a-time. tarfile in
+    "r:" mode seeks through the file; memory is one member."""
+    import tarfile
+
+    shard = os.path.basename(path)
+    with tarfile.open(path, mode="r:") as tf:
+        for ti in tf:
+            if not ti.isfile():
+                continue
+            f = tf.extractfile(ti)
+            data = f.read() if f is not None else b""
+            key, _, ext = os.path.basename(ti.name).partition(".")
+            yield (shard, ti.name, key, ext, len(data), data)
+
+
+def _drop_staging(path: str) -> None:
+    shutil.rmtree(os.path.join(path, _STAGING_DIR), ignore_errors=True)
 
 
 class WebDatasetDataSource(DataSource):
@@ -117,40 +149,17 @@ class WebDatasetDataSource(DataSource):
 
 class WebDatasetReader(DataSourceReader):
     def __init__(self, options):
-        path = options.get("path")
-        if not path:
-            raise ValueError("webdataset source requires a path")
-        self._path = path
+        self._path = _require_local(options.get("path"), "reader")
 
     def partitions(self):
         # driver-side METADATA listing only: shard paths, never bytes.
-        # list_tars filters hidden (., _) names, so staging shards and
-        # committer metadata are never planned as data.
-        fs = fs_for(self._path)
-        if fs.is_dir(self._path):
-            shards = [fs.join(self._path, f) for f in fs.list_tars(self._path)]
-        else:
-            shards = [self._path]
+        shards = _list_tars(self._path) if os.path.isdir(self._path) else [self._path]
         if not shards:
             raise ValueError(f"no .tar shards under {self._path}")
         return [_ShardPartition(p) for p in shards]
 
     def read(self, partition: _ShardPartition):
-        # executor-side: stream ONE archive member-at-a-time. tarfile
-        # in "r:" mode seeks through the file; memory is one member.
-        import tarfile
-
-        local = _require_local(partition.path, "reader")
-        shard = os.path.basename(local)
-        with tarfile.open(local, mode="r:") as tf:
-            for ti in tf:
-                if not ti.isfile():
-                    continue
-                f = tf.extractfile(ti)
-                data = f.read() if f is not None else b""
-                base = os.path.basename(ti.name)
-                key, _, ext = base.partition(".")
-                yield (shard, ti.name, key, ext, len(data), data)
+        return _read_members(partition.path)
 
 
 class WebDatasetStreamReader(DataSourceStreamReader):
@@ -165,7 +174,7 @@ class WebDatasetStreamReader(DataSourceStreamReader):
     total order, replay between two offsets deterministic, and the
     checkpoint tiny — exactly the properties Structured Streaming
     needs for end-to-end exactly-once into an idempotent sink.
-    Hidden-name filtering in ``list_tars`` keeps in-flight staging
+    Hidden-name filtering in ``_list_tars`` keeps in-flight staging
     shards out of the count, so the offset only ever advances over
     committed shards.
 
@@ -174,30 +183,23 @@ class WebDatasetStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, options):
-        path = options.get("path")
-        if not path:
-            raise ValueError("webdataset stream requires a path")
-        self._path = path
-
-    def _shards(self):
-        fs = fs_for(self._path)
-        return [fs.join(self._path, f) for f in fs.list_tars(self._path)]
+        self._path = _require_local(options.get("path"), "stream reader")
 
     def initialOffset(self) -> dict:
         return {"n": 0}
 
     def latestOffset(self) -> dict:
-        return {"n": len(self._shards())}
+        return {"n": len(_list_tars(self._path))}
 
     def partitions(self, start: dict, end: dict):
-        new = self._shards()[start["n"] : end["n"]]
+        new = _list_tars(self._path)[start["n"] : end["n"]]
         # an empty batch still needs >=1 (empty) partition in some
         # planner paths; Spark handles [] fine for microbatches, so
         # return the real list.
         return [_ShardPartition(p) for p in new]
 
     def read(self, partition: _ShardPartition):
-        return WebDatasetReader({"path": partition.path}).read(partition)
+        return _read_members(partition.path)
 
     def commit(self, end: dict) -> None:
         # offsets are directory positions; nothing external to clean up
@@ -248,10 +250,7 @@ class WebDatasetBatchWriter(DataSourceWriter):
     leave stale shards mixed into the corpus."""
 
     def __init__(self, options, overwrite: bool):
-        path = options.get("path")
-        if not path:
-            raise ValueError("webdataset writer requires a path")
-        self._path = _require_local(path, "writer")
+        self._path = _require_local(options.get("path"), "writer")
         self._overwrite = overwrite
 
     def write(self, iterator):
@@ -261,25 +260,23 @@ class WebDatasetBatchWriter(DataSourceWriter):
         return _write_members_tar(iterator, self._path, pid)
 
     def commit(self, messages):
-        fs = fs_for(self._path)
         written = set()
         for m in messages:
             if m is None:
                 continue
-            final_name = f"part-{m.partition_id:05d}.tar"
-            fs.rename_over(m.tmp_path, fs.join(self._path, final_name))
-            written.add(final_name)
+            final = os.path.join(self._path, f"part-{m.partition_id:05d}.tar")
+            os.replace(m.tmp_path, final)
+            written.add(final)
         if self._overwrite:
-            for stale in fs.list_tars(self._path):
+            for stale in _list_tars(self._path):
                 if stale not in written:
-                    fs.delete(fs.join(self._path, stale))
+                    os.remove(stale)
         # drop the staging dir: committed files are out, anything left
         # is an orphan from a failed/speculative attempt.
-        fs.delete(fs.join(self._path, _STAGING_DIR))
+        _drop_staging(self._path)
 
     def abort(self, messages):
-        fs = fs_for(self._path)
-        fs.delete(fs.join(self._path, _STAGING_DIR))
+        _drop_staging(self._path)
 
 
 class WebDatasetStreamWriter(DataSourceStreamWriter):
@@ -295,10 +292,7 @@ class WebDatasetStreamWriter(DataSourceStreamWriter):
     serialized (batch N commits before batch N+1's tasks write)."""
 
     def __init__(self, options):
-        path = options.get("path")
-        if not path:
-            raise ValueError("webdataset stream writer requires a path")
-        self._path = _require_local(path, "stream writer")
+        self._path = _require_local(options.get("path"), "stream writer")
 
     def write(self, iterator):
         from pyspark import TaskContext
@@ -307,16 +301,12 @@ class WebDatasetStreamWriter(DataSourceStreamWriter):
         return _write_members_tar(iterator, self._path, pid)
 
     def commit(self, messages, batchId):
-        fs = fs_for(self._path)
         for m in messages:
             if m is None:
                 continue
-            final = fs.join(
-                self._path, f"shard-b{batchId:06d}-p{m.partition_id:05d}.tar"
-            )
-            fs.rename_over(m.tmp_path, final)
-        fs.delete(fs.join(self._path, _STAGING_DIR))
+            final = f"shard-b{batchId:06d}-p{m.partition_id:05d}.tar"
+            os.replace(m.tmp_path, os.path.join(self._path, final))
+        _drop_staging(self._path)
 
     def abort(self, messages, batchId):
-        fs = fs_for(self._path)
-        fs.delete(fs.join(self._path, _STAGING_DIR))
+        _drop_staging(self._path)

@@ -517,17 +517,6 @@ def test_ivfpq_shape_and_cell_restriction(spark, sf_dir):
             assert (a["approx_d2"], a["neighbor_id"]) <= (b["approx_d2"], b["neighbor_id"])
 
 
-def test_pointer_jumping_cc_equals_label_propagation(spark, sf_dir):
-    """Two independent distributed CC algorithms over the same edge
-    list must produce identical component histograms."""
-    from database_to_bigquery_spark.operators.dedup import dedup_clusters
-    from database_to_bigquery_spark.operators.graph import graph_cc_pointer_jumping
-
-    a = {tuple(r) for r in dedup_clusters(spark, sf_dir).collect()}
-    b = {tuple(r) for r in graph_cc_pointer_jumping(spark, sf_dir).collect()}
-    assert a == b and a
-
-
 def test_incremental_clusters_equal_full_recompute(spark, sf_dir):
     """Incremental CC maintenance (standing labels + label-graph remap
     over the new batch's edges) must equal the full recompute exactly:

@@ -1,4 +1,5 @@
-"""The two-pass global-rank core must be range-fanout-agnostic.
+"""The two-pass global prefix (`data.global_prefix`) must be
+range-fanout-agnostic.
 
 VERDICT r6 design finding #1: the family hardcoded
 ``repartitionByRange(32, …)`` — the right SHAPE (the SinglePartition
@@ -14,7 +15,17 @@ from __future__ import annotations
 
 import pytest
 
+from database_to_bigquery_spark import data
 from database_to_bigquery_spark.data import load_table, range_fanout
+from database_to_bigquery_spark.registry import all_specs
+
+# every caller of data.global_prefix
+PREFIX_QUERIES = [
+    "q_global_ranks_scalable",
+    "q_decile_lift",
+    "llm_curriculum_order",
+    "llm_chunk_manifest",
+]
 
 
 def _rows(df):
@@ -22,24 +33,16 @@ def _rows(df):
 
 
 @pytest.mark.parametrize("width", [1, 7])
-def test_global_ranks_width_agnostic(spark, sf_dir, width, monkeypatch):
-    from database_to_bigquery_spark.operators import skew
-
-    baseline = _rows(skew.q_global_ranks_scalable(spark, sf_dir))
+@pytest.mark.parametrize("name", PREFIX_QUERIES)
+def test_global_prefix_width_agnostic(spark, sf_dir, name, width, monkeypatch):
+    """Each caller gives the same rows at a forced width, and the
+    forced width reached it: a caller that ranks without going
+    through data.global_prefix never calls the patched range_fanout."""
+    fn = all_specs()[name].fn
+    baseline = _rows(fn(spark, sf_dir))
     calls = []
-    monkeypatch.setattr(skew, "range_fanout", lambda df: calls.append(df) or width)
-    assert _rows(skew.q_global_ranks_scalable(spark, sf_dir)) == baseline
-    assert calls
-
-
-@pytest.mark.parametrize("width", [1, 7])
-def test_chunk_manifest_width_agnostic(spark, sf_dir, width, monkeypatch):
-    from database_to_bigquery_spark.operators import training_prep
-
-    baseline = _rows(training_prep.llm_chunk_manifest(spark, sf_dir))
-    calls = []
-    monkeypatch.setattr(training_prep, "range_fanout", lambda df: calls.append(df) or width)
-    assert _rows(training_prep.llm_chunk_manifest(spark, sf_dir)) == baseline
+    monkeypatch.setattr(data, "range_fanout", lambda df: calls.append(df) or width)
+    assert _rows(fn(spark, sf_dir)) == baseline
     assert calls
 
 

@@ -744,12 +744,10 @@ def test_fuzzy_dedup_stream_admits_and_dedups_against_admissions(
 
 def test_fuzzy_dedup_static_mode_intra_batch_contract(spark, tmp_path):
     """The static-corpus mode's intra-batch contract (judge r9 task 5):
-    by default it flags ONLY duplicates of the standing corpus (its
-    batch twin is batch-vs-corpus by definition, and the flagged set
-    must not depend on micro-batch boundaries), while intra_batch=True
-    opts in to same-batch coverage — flagging the LATER doc of a
-    same-micro-batch near-dup pair on top of the unchanged
-    batch-vs-corpus set."""
+    it flags ONLY duplicates of the standing corpus — its batch twin is
+    batch-vs-corpus by definition, and the flagged set must not depend
+    on micro-batch boundaries — so a same-micro-batch near-dup pair
+    is not flagged."""
     import os
     import shutil
     import time
@@ -781,31 +779,19 @@ def test_fuzzy_dedup_static_mode_intra_batch_contract(spark, tmp_path):
         shutil.copy(p, dst)
         os.utime(dst, (time.time() - 100,) * 2)
 
-    for sub, intra, want in (
-        ("default", None, {(300, 1)}),
-        ("intra", True, {(300, 1), (200, 100)}),
-    ):
-        stream = (
-            spark.readStream.schema("doc_id long, text string")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-        out = tmp_path / f"matches_{sub}"
-        q = run_fuzzy_dedup_stream(
-            stream,
-            corpus_docs,
-            str(out),
-            str(tmp_path / f"ckpt_{sub}"),
-            intra_batch=intra,
-        )
-        q.awaitTermination()
-        pairs = {
-            (r["batch_id"], r["corpus_id"])
-            for r in spark.read.parquet(str(out))
-            .select("batch_id", "corpus_id")
-            .collect()
-        }
-        assert pairs == want, (sub, pairs)
+    stream = (
+        spark.readStream.schema("doc_id long, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    out = tmp_path / "matches"
+    q = run_fuzzy_dedup_stream(stream, corpus_docs, str(out), str(tmp_path / "ckpt"))
+    q.awaitTermination()
+    pairs = {
+        (r["batch_id"], r["corpus_id"])
+        for r in spark.read.parquet(str(out)).select("batch_id", "corpus_id").collect()
+    }
+    assert pairs == {(300, 1)}
 
 
 def test_stream_knn_probe_equals_batch(spark, sf_dir, tmp_path):
@@ -1094,56 +1080,44 @@ def test_webdataset_readers_ignore_staging_and_hidden(spark, tmp_path):
     assert names == [f"shard-{i:06d}.tar" for i in range(3)]
 
 
-def test_shard_fs_hadoop_file_uri_roundtrip(spark, tmp_path):
-    """The Hadoop-FS seam drives listing/rename/delete for URI paths —
-    exercised here with file:/ URIs through the real Hadoop FileSystem
-    stack (the same dispatch an s3a:// path would take on a cluster)."""
-    from database_to_bigquery_spark.sources.shard_fs import (
-        HadoopShardFS,
-        LocalShardFS,
-        fs_for,
-        has_uri_scheme,
-        strip_file_scheme,
+def test_webdataset_file_uri_roundtrip(spark, tmp_path):
+    """A ``file://`` URI is a local path to every reader and writer:
+    a write then a read through ``format("webdataset")`` round-trips
+    the members."""
+    from database_to_bigquery_spark.sources.webdataset_source import WebDatasetDataSource
+
+    spark.dataSource.register(WebDatasetDataSource)
+    uri = f"file://{tmp_path}/uri"
+    docs = spark.createDataFrame(
+        [(f"{i:04d}", "txt", f"doc {i}".encode()) for i in range(12)],
+        "key string, ext string, payload binary",
+    )
+    docs.repartition(3).write.format("webdataset").mode("overwrite").option(
+        "path", uri
+    ).save()
+    assert sorted(p.name for p in (tmp_path / "uri").iterdir()) == [
+        f"part-{i:05d}.tar" for i in range(3)
+    ]
+    back = spark.read.format("webdataset").load(uri)
+    assert sorted((r["key"], r["ext"], bytes(r["payload"])) for r in back.collect()) == sorted(
+        tuple(r) for r in docs.collect()
     )
 
-    assert isinstance(fs_for(str(tmp_path)), LocalShardFS)
-    uri = f"file://{tmp_path}"
-    fs = fs_for(uri)
-    assert isinstance(fs, HadoopShardFS)
-    assert has_uri_scheme("s3a://bucket/x") and not has_uri_scheme("/plain")
-    assert strip_file_scheme("file:/a/b.tar") == "/a/b.tar"
-    assert strip_file_scheme(f"file://{tmp_path}") == str(tmp_path)
 
-    (tmp_path / "a.tar").write_bytes(b"")
-    (tmp_path / "_hidden.tar").write_bytes(b"")
-    (tmp_path / ".staging").mkdir()
-    assert fs.list_tars(uri) == ["a.tar"]
-    assert fs.is_dir(uri) and fs.exists(f"{uri}/a.tar")
-    fs.mkdirs(f"{uri}/sub")
-    assert (tmp_path / "sub").is_dir()
-    # rename_over replaces an existing destination (commit semantics)
-    (tmp_path / "b.tar").write_bytes(b"new")
-    fs.rename_over(f"{uri}/b.tar", f"{uri}/a.tar")
-    assert (tmp_path / "a.tar").read_bytes() == b"new"
-    assert fs.list_tars(uri) == ["a.tar"]
-    fs.delete(f"{uri}/a.tar")
-    assert not (tmp_path / "a.tar").exists()
-    fs.delete(f"{uri}/sub")
-    assert not (tmp_path / "sub").exists()
+@pytest.mark.parametrize(
+    "cls",
+    ["WebDatasetReader", "WebDatasetStreamReader", "WebDatasetBatchWriter", "WebDatasetStreamWriter"],
+)
+def test_webdataset_rejects_object_store_path(cls):
+    """Non-file URI paths are rejected up front, by every reader and
+    writer, with the supported route named — instead of listing shards
+    no worker can open, or staging executor-local bytes that a real
+    cluster could never commit."""
+    from database_to_bigquery_spark.sources import webdataset_source
 
-
-def test_webdataset_writer_rejects_object_store_path(spark):
-    """Non-file URI targets are rejected up front with the supported
-    route named, instead of staging executor-local bytes that a real
-    cluster's driver could never commit."""
-    import pytest as _pytest
-
-    from database_to_bigquery_spark.sources.webdataset_source import (
-        WebDatasetBatchWriter,
-    )
-
-    with _pytest.raises(ValueError, match="binaryFile"):
-        WebDatasetBatchWriter({"path": "s3a://bucket/corpus"}, overwrite=False)
+    args = (False,) if cls == "WebDatasetBatchWriter" else ()
+    with pytest.raises(ValueError, match="binaryFile"):
+        getattr(webdataset_source, cls)({"path": "s3a://bucket/corpus"}, *args)
 
 
 def test_stream_point_in_time_scd2_enrich_equals_batch(spark, sf_dir, tmp_path):
