@@ -21,8 +21,14 @@ REFERENCE_DATETIME_FMT = "yyyy-MM-dd HH:mm:ss"
 def format_datetimes_as_strings(df: DataFrame, fmt: str = REFERENCE_DATETIME_FMT) -> DataFrame:
     """S4: render every timestamp column as a formatted string
     (reference mysql_operations.py:30-31 does this to ALL datetime64
-    columns unconditionally)."""
-    ts_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampType)]
+    columns unconditionally). Both Spark timestamp types count:
+    ``TIMESTAMP_NTZ`` (what ``load_table`` gives ``events.ts``) is not
+    a subclass of ``TimestampType``."""
+    ts_cols = [
+        f.name
+        for f in df.schema.fields
+        if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
+    ]
     return df.withColumns({c: F.date_format(F.col(c), fmt) for c in ts_cols})
 
 

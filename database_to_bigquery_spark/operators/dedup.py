@@ -31,7 +31,6 @@ from ..data import bounded, load_table, load_table_spread
 from ..registry import query
 from .ngram_util import sliding_structs
 from .pairs import (
-    LSH_BUCKET_CAP,
     block_pairs,
     block_sides,
     bucket_pairs,
@@ -334,24 +333,14 @@ _MH_BANDS = 16
 # Permutations are generated once up to the largest signature any
 # banding scheme uses; a k-length signature is always the PREFIX of
 # the max-k one, so signatures of different lengths built from the
-# same corpus agree on their shared prefix (and the sharpness probe
-# can compare schemes without re-hashing shingles).
+# same corpus agree on their shared prefix. (Changing _MH_MAX_K
+# re-draws _MH_B and so changes every signature.)
 _MH_MAX_K = 128
 _rng = random.Random(42)
 _MH_A = [_rng.randrange(1, _MH_PRIME) for _ in range(_MH_MAX_K)]
 _MH_B = [_rng.randrange(0, _MH_PRIME) for _ in range(_MH_MAX_K)]
 
-# The production banding scheme (bands, rows) — parameterized (judge
-# r8 task 1) because banding sharpness is THE collision-mass lever at
-# scale: a pair of docs at Jaccard J collides on one band w.p. J^rows,
-# so raising `rows` suppresses the background (J ≈ 0.09–0.15 on the
-# adversarial twin, < 0.01 on real web) geometrically while more
-# `bands` buy back recall at the dedup threshold. The r8 x250 ladder
-# measured the (16, 4) default transitional-superlinear (e 1.15)
-# precisely because its per-band collision rate at background J is
-# 16·J⁴; see tools/banding_probe.py @ 43b8cbc for the measured
-# (bands, rows) frontier and SCALE.md §16 for the numbers behind the
-# default below.
+
 def _est_threshold(k: int) -> float:
     """Signature-agreement pre-filter threshold for a k-length
     signature: ~2.5σ below the J = 0.6 output bar (σ = √(0.6·0.4/k)),
@@ -393,24 +382,20 @@ def minhash_signatures(shingles: DataFrame, k: int = _MH_K) -> DataFrame:
     )
 
 
-def signature_bands(
-    sig: DataFrame,
-    carry: tuple[str, ...] = (),
-    bands: int = _MH_BANDS,
-    rows: int = _MH_K // _MH_BANDS,
-) -> DataFrame:
+def signature_bands(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     """Explode signatures into (doc_id, band_idx, band_hash) bucket
-    keys (md5 of each 4-row band) — the LSH bucketing shared by every
+    keys (md5 of each 5-row band) — the LSH bucketing shared by every
     MinHash consumer. ``carry`` names extra columns of ``sig`` to ride
     the explode onto every band row (e.g. the packed signature, so the
     bucket join can estimate Jaccard inline without a later per-
-    candidate attach join — the r8 miner restructure). ``bands`` ×
-    ``rows`` must fit inside the signature length (the scheme reads
-    the first bands·rows positions) — enforced at runtime below:
+    candidate attach join — the r8 miner restructure). The scheme
+    reads the first _MH_K = _MH_BANDS × rows positions, so a shorter
+    signature is rejected at runtime below:
     F.slice past the array end would silently yield truncated/empty
     band arrays that md5 happily hashes into WRONG buckets (advisor
     r9), the same silent-zero failure class _check_sig_encoding
     guards against."""
+    bands, rows = _MH_BANDS, _MH_K // _MH_BANDS
     need = bands * rows
     # guard shape matters: wrapping the sig COLUMN in a CASE defeats
     # subexpression sharing across the 16 slice+md5 band expressions
@@ -598,28 +583,16 @@ def _as_gids(sh: DataFrame) -> DataFrame:
     return sh
 
 
-def minhash_verified_pairs(
-    raw_shingles: DataFrame,
-    bands: int = _MH_BANDS,
-    rows: int = _MH_K // _MH_BANDS,
-    cap: int = LSH_BUCKET_CAP,
-    sig: DataFrame | None = None,
-) -> DataFrame:
+def minhash_verified_pairs(raw_shingles: DataFrame, sig: DataFrame | None = None) -> DataFrame:
     """The banded-MinHash mine-and-verify core over a (doc_id, g)
     shingle relation — shared by the corpus-wide miner
     (`dedup_minhash_lsh`) and the production corpus-prep funnel
     (`llm_corpus_prepare_lsh`, which runs it on the quality-gate
     survivors). Returns (doc_a < doc_b, est_jaccard, jaccard ≥ 0.6).
 
-    ``(bands, rows)`` select the LSH sharpness: one band collides at
-    J^rows, so rows is the background-suppression exponent and bands
-    the recall budget at the threshold (P(any band) =
-    1 − (1 − J^rows)^bands). The signature length is bands·rows
-    (prefix of the fixed permutation set, so different schemes remain
-    comparable on shared prefixes). ``cap`` is the hot-bucket
-    population ceiling (see LSH_BUCKET_CAP) — parameterized so the
-    sharpness probe can price cap rungs the same way it prices
-    banding schemes (judge r9 task 1).
+    The banding scheme is the module's (_MH_BANDS × 5 rows, k = _MH_K;
+    see the note above _MH_K) and the hot-bucket ceiling is
+    LSH_BUCKET_CAP.
 
     PRECONDITION: `raw_shingles` must be (doc_id, g)-DISTINCT. The
     exact-Jaccard verification takes set sizes n from the signature
@@ -664,7 +637,7 @@ def minhash_verified_pairs(
     # required ordering exactly, so BOTH corpus-side attaches are
     # exchange- and sort-free (judge r7 task 6; measured at the x50
     # twin in SCALE.md §14).
-    k = bands * rows
+    k = _MH_K
     shingles = (
         _as_gids(raw_shingles).sortWithinPartitions("doc_id", "g").persist()
     )
@@ -700,13 +673,7 @@ def minhash_verified_pairs(
     # verification. The traded cost is payload width on the one band
     # shuffle — linear in docs, spillable.
     band_rel = drop_hot_buckets(
-        signature_bands(
-            sig.withColumn("sigp", _packed_sig(k)),
-            carry=("sigp", "n"),
-            bands=bands,
-            rows=rows,
-        ),
-        cap=cap,
+        signature_bands(sig.withColumn("sigp", _packed_sig(k)), carry=("sigp", "n"))
     )
     # Group the capped buckets — the window's exchange on
     # (band_idx, band_hash) IS this aggregation's clustering, so no

@@ -2,8 +2,11 @@
 (SURVEY.md §2a S1-S14), expressed over the driver fixtures.
 
 The library implementations live in plans/, sources/, sinks/,
-functions/; each query here exercises the same semantics in a form the
-DuckDB oracle can verify value-for-value.
+functions/. S1, S4, S5/S6 and S7 call that library code, so the DuckDB
+oracle checks value-for-value the same functions the ETL CLI runs.
+S3 and S14 keep their own forms: S3's cutoff is derived from the data
+(the library takes a fixed day), and the library's S14 count rides
+the sink's write pass.
 """
 
 from __future__ import annotations
@@ -11,8 +14,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..data import TABLE_NAMES, load_table
+from ..data import load_table
+from ..functions.reference_transforms import cast_bools, format_datetimes_as_strings
+from ..plans.table_spec import TableSpec
 from ..registry import query
+from ..sources.catalog import discover_tables
 
 _CATALOG_ALLOWLIST = ["region", "nation", "lineitem", "no_such_table"]
 
@@ -28,9 +34,9 @@ _CATALOG_ALLOWLIST = ["region", "nation", "lineitem", "no_such_table"]
 )
 def s1_catalog_allowlist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1: catalog listing ∩ static allowlist (reference
-    mysql_operations.py:45-51). Metadata-only at any scale."""
-    cat = spark.createDataFrame([(n,) for n in TABLE_NAMES], "table_name string")
-    return cat.filter(F.col("table_name").isin(_CATALOG_ALLOWLIST))
+    mysql_operations.py:45-51) via ``discover_tables``. Metadata-only
+    at any scale."""
+    return discover_tables(spark, sf_dir, _CATALOG_ALLOWLIST)
 
 
 @query(
@@ -78,11 +84,11 @@ def s3_incremental_day_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s4_datetime_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4: the reference's datetime→string wire format (reference
-    mysql_operations.py:30-31) — sub-second precision intentionally
-    truncated, reproduced exactly."""
+    mysql_operations.py:30-31) via ``format_datetimes_as_strings`` —
+    sub-second precision intentionally truncated, reproduced exactly."""
     ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 1000)
-    return ev.select(
-        "event_id", F.date_format("ts", "yyyy-MM-dd HH:mm:ss").alias("ts_str")
+    return format_datetimes_as_strings(ev.select("event_id", "ts")).withColumnRenamed(
+        "ts", "ts_str"
     )
 
 
@@ -96,18 +102,21 @@ def s4_datetime_format(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s5_s6_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S5+S6: static rename map + column drop (reference
-    transformations.py:10-20) — one narrow projection; Catalyst prunes
-    dropped columns out of the scan (the reference always reads them)."""
-    o = load_table(spark, sf_dir, "orders")
-    renamed = o.withColumnsRenamed(
-        {
+    transformations.py:10-20) via ``TableSpec.transform`` — one narrow
+    projection; Catalyst prunes dropped columns out of the scan (the
+    reference always reads them)."""
+    spec = TableSpec(
+        name="orders",
+        rename={
             "o_orderkey": "OrderKey",
             "o_custkey": "CustKey",
             "o_orderstatus": "Status",
             "o_totalprice": "TotalPrice",
-        }
-    ).drop("o_orderdate", "o_orderpriority")
-    return renamed.withColumn("TotalPrice", F.round("TotalPrice", 2))
+        },
+        drop=["o_orderdate", "o_orderpriority"],
+    )
+    out = spec.transform(load_table(spark, sf_dir, "orders"))
+    return out.withColumn("TotalPrice", F.round("TotalPrice", 2))
 
 
 @query(
@@ -120,13 +129,12 @@ def s5_s6_rename_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def s7_bool_cast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S7: int→boolean cast semantics (reference transformations.py:
-    33-37): 0→false, nonzero→true, NULL→NULL."""
+    33-37) via ``cast_bools``: 0→false, nonzero→true, NULL→NULL."""
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") < 1000)
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_linenumber") % 2).cast("boolean").alias("is_odd_line"),
+    flags = li.select(
+        "l_orderkey", "l_linenumber", (F.col("l_linenumber") % 2).alias("is_odd_line")
     )
+    return cast_bools(flags, ["is_odd_line"])
 
 
 @query(

@@ -47,16 +47,15 @@ def run_table(
     """One table end-to-end: transform → (incremental slice) → empty
     guard (S9) → schema-enforced write (S10-S13) → audit count (S14)."""
     df = spec.transform(source_df)
+    # SURVEY.md §7 decision 2: extract-mode and write-mode are ONE
+    # policy. Only a daily run of an incremental table appends its
+    # slice; a non-incremental table in a daily run is a full refresh
+    # (overwrite), not the reference's duplicate-accumulating append
+    # (mysql_operations.py:21 vs bigquery_operations.py:36).
+    mode = WriteMode.TRUNCATE
     if is_daily and spec.incremental_column:
         df = spec.incremental_filter(df, day or (dt.date.today() - dt.timedelta(days=1)))
-    if is_daily and not spec.incremental_column and not spec.reference_daily_asymmetry:
-        # Unified policy: a non-incremental table in a daily run is a
-        # full refresh (overwrite), not the reference's duplicate-
-        # accumulating append (mysql_operations.py:21 vs
-        # bigquery_operations.py:36).
-        mode = WriteMode.TRUNCATE
-    else:
-        mode = WriteMode.APPEND if is_daily else WriteMode.TRUNCATE
+        mode = WriteMode.APPEND
     if df.isEmpty():  # S9 — isEmpty() scans at most one partition, no full count
         log.info("table %s: empty extract, skipping load", spec.name)
         return PipelineResult(spec.name, 0, skipped_empty=True)

@@ -74,11 +74,6 @@ class TableSpec:
     bool_cols: list[str] = field(default_factory=list)  # S7
     incremental_column: str | None = None  # S3 filter key
     partition_field: str | None = None  # S13 sink partitioning
-    # SURVEY.md §7 decision 2: extract-mode and write-mode are ONE
-    # policy. incremental tables append their daily slice; full tables
-    # overwrite. `reference_daily_asymmetry=True` restores the
-    # reference's buggy behavior (full-extract + append → duplicates).
-    reference_daily_asymmetry: bool = False
 
     def transform(self, df: DataFrame) -> DataFrame:
         """S5+S6+S7+S8 as one narrow (shuffle-free) projection."""

@@ -306,9 +306,9 @@ class JdbcSink(Sink):
             )
         return got
 
-    #: SQLStates meaning "table does not exist" — the ONLY DROP failure
-    #: the staged swap may ignore (first ever load): Derby 42Y55,
-    #: MySQL/MSSQL 42S02, PostgreSQL 42P01.
+    #: SQLStates meaning "table does not exist" — the ONLY failure the
+    #: APPEND baseline count and the staged swap's DROP may ignore
+    #: (first ever load): Derby 42Y55, MySQL/MSSQL 42S02, PostgreSQL 42P01.
     _MISSING_TABLE_SQLSTATES = ("42Y55", "42S02", "42P01")
 
     @classmethod
@@ -371,22 +371,13 @@ class JdbcSink(Sink):
             try:
                 stmt.execute(f"DROP TABLE {table}")
             except Exception as exc:
-                state = getattr(
-                    getattr(exc, "java_exception", None), "getSQLState", lambda: None
-                )()
-                if state not in self._MISSING_TABLE_SQLSTATES:
+                if not self._is_missing_table(exc):
                     raise
             # Derby/standard syntax: new name is unqualified
             stmt.execute(f"RENAME TABLE {stage} TO {table.rsplit('.', 1)[-1]}")
             stmt.close()
         finally:
             conn.close()
-
-
-# Reference bigquery_operations.py:30-34 — of the three inventory
-# tables only ``daily_log`` is DAY-partitioned, on its BackupDate
-# column. (backup_log / servers_temp load unpartitioned.)
-REFERENCE_PARTITIONED_TABLES: dict[str, str] = {"daily_log": "BackupDate"}
 
 
 def bigquery_sink_for_reference_table(
@@ -400,13 +391,17 @@ def bigquery_sink_for_reference_table(
     """Build the sink exactly as the reference's ``load_to_bigquery``
     configures its load job (bigquery_operations.py:21-44): table ref
     ``project.dataset.table`` (:24), DAY partitioning on BackupDate for
-    ``daily_log`` only (:30-34), declared schema enforced (:27). The
-    truncate-vs-append disposition (:36, from ``is_daily``) is the
-    ``WriteMode`` passed to :meth:`BigQuerySink.write` — same split as
-    the reference, where dispositions are per-run, not per-table."""
+    ``daily_log`` only (:30-34, read from its ``REFERENCE_SPECS``
+    entry), declared schema enforced (:27). The truncate-vs-append
+    disposition (:36, from ``is_daily``) is the ``WriteMode`` passed
+    to :meth:`BigQuerySink.write` — same split as the reference, where
+    dispositions are per-run, not per-table."""
+    from ..plans.table_spec import REFERENCE_SPECS
+
+    spec = REFERENCE_SPECS.get(table_name)
     return BigQuerySink(
         declared_schema=declared_schema,
-        partition_field=REFERENCE_PARTITIONED_TABLES.get(table_name),
+        partition_field=spec.partition_field if spec else None,
         table=f"{project_id}.{dataset_id}.{table_name}",
         temporary_gcs_bucket=temporary_gcs_bucket,
     )

@@ -3,7 +3,8 @@
 The reference lists MySQL base tables (`SHOW FULL TABLES WHERE
 Table_type = 'BASE TABLE'`, reference mysql_operations.py:50) and
 intersects with a static allowlist (:45,:51). Here the same operator
-over either a live JDBC catalog or a directory of parquet tables.
+over either a directory of parquet tables or a live JDBC catalog,
+whose query comes from the URL's dialect (sources/dialects.py).
 """
 
 from __future__ import annotations
@@ -12,26 +13,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .dialects import dialect_for_url
+
 #: The reference's table allowlist (reference mysql_operations.py:45).
 REFERENCE_ALLOWLIST = ["backup_log", "daily_log", "servers_temp"]
-
-#: information_schema query equivalent to the reference's SHOW FULL TABLES
-#: (for the JDBC path; pushed to the source database verbatim).
-BASE_TABLES_QUERY = (
-    "SELECT table_name FROM information_schema.tables "
-    "WHERE table_type = 'BASE TABLE' AND table_schema = '{schema}'"
-)
-
-#: The same catalog listing for engines without information_schema —
-#: Apache Derby exposes SYS.SYSTABLES (TABLETYPE 'T' = user base
-#: table). Lower-cased so the driver-side allowlist intersection is
-#: case-insensitive like MySQL's default collation. Used by the live
-#: catalog test (Derby ships inside pyspark's jars); a real MySQL
-#: deployment uses BASE_TABLES_QUERY unchanged.
-DERBY_BASE_TABLES_QUERY = (
-    'SELECT LOWER(CAST(tablename AS VARCHAR(128))) AS "table_name" '
-    "FROM SYS.SYSTABLES WHERE tabletype = 'T'"
-)
 
 
 def discover_tables(
@@ -57,17 +42,18 @@ def discover_tables_jdbc(
     schema: str,
     allowlist: list[str],
     properties: dict[str, str] | None = None,
-    catalog_query: str | None = None,
 ) -> list[str]:
-    """S1 over a live database: push the information_schema query to
-    the source, intersect with the allowlist driver-side (the list is
-    tiny — metadata, not data). ``catalog_query`` overrides the
-    MySQL-shaped default for engines with a different catalog surface
-    (e.g. DERBY_BASE_TABLES_QUERY)."""
+    """S1 over a live database: push the URL's dialect catalog query
+    (sources/dialects.py) to the source, intersect with the allowlist
+    driver-side (the list is tiny — metadata, not data). A URL no
+    dialect models raises ValueError before any connection opens."""
+    dialect = dialect_for_url(jdbc_url)
+    if dialect is None:
+        raise ValueError(f"no catalog query for JDBC URL {jdbc_url!r}")
     reader = (
         spark.read.format("jdbc")
         .option("url", jdbc_url)
-        .option("query", catalog_query or BASE_TABLES_QUERY.format(schema=schema))
+        .option("query", dialect.catalog_query.format(schema=schema))
     )
     for k, v in (properties or {}).items():
         reader = reader.option(k, v)

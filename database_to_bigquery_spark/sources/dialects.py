@@ -6,11 +6,14 @@ only ever builds a MySQL engine (reference mysql_operations.py:8-12).
 This module completes the claimed surface for the Spark engine: one
 constant block per dialect — JDBC URL shape, driver class, and the
 catalog query equivalent to the reference's ``SHOW FULL TABLES WHERE
-Table_type = 'BASE TABLE'`` (reference mysql_operations.py:50) — so
-``discover_tables_jdbc`` / ``JdbcSourceSpec`` work against any of the
-four engines by swapping ONE object. The Derby dialect is the live
-test seam (Derby ships inside pyspark's jars; the others need their
-driver jar on the executor classpath, same mechanism).
+Table_type = 'BASE TABLE'`` (reference mysql_operations.py:50). This
+is the only home of that SQL and of the URL shapes:
+``discover_tables_jdbc`` takes its catalog query from the URL's
+dialect and ``jdbc_spec_from_credentials`` builds its URL here, so
+both work against any of the four engines by swapping ONE object.
+The Derby dialect is the live test seam (Derby ships inside pyspark's
+jars; the others need their driver jar on the executor classpath,
+same mechanism).
 
 Scale note: everything here is metadata/string assembly — the
 partitioned-read machinery in jdbc.py (numPartitions range queries,
@@ -59,8 +62,7 @@ class Dialect:
 
     def jdbc_url(self, host: str, database: str, port: int | None = None) -> str:
         """Credentials deliberately NOT in the URL — they travel as
-        reader options so the Spark UI/event-log URL stays clean
-        (same policy as jdbc.jdbc_url)."""
+        reader options so the Spark UI/event-log URL stays clean."""
         return self.url_template.format(
             host=host, port=port if port is not None else self.default_port,
             database=database,
@@ -144,7 +146,8 @@ def get_dialect(name: str) -> Dialect:
 def dialect_for_url(url: str) -> Dialect | None:
     """Resolve the dialect from a JDBC URL's subprotocol
     (``jdbc:derby:...`` → DERBY); None for engines this module does
-    not model (callers fall back to their own defaults)."""
+    not model (catalog discovery rejects those; JdbcSink falls back to
+    Derby's conventions)."""
     if not url.startswith("jdbc:"):
         return None
     sub = url[len("jdbc:") :].split(":", 1)[0].lower()

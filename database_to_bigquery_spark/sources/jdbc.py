@@ -4,15 +4,15 @@ The reference reads whole tables into driver pandas via SQLAlchemy
 (reference mysql_operations.py:25-27) — single connection, driver-RAM
 bound. The Spark-native equivalent splits the scan into
 ``numPartitions`` concurrent range queries so a 1000-executor cluster
-reads a 100 TB table in parallel, and pushes the incremental date
-predicate (reference :21-23) into the source as a sargable range.
+reads a 100 TB table in parallel. The incremental date predicate
+(reference :21-23) is ``TableSpec.incremental_filter`` on the read
+frame, which Spark pushes into the source as a sargable range.
+Connection URLs come from the dialect (sources/dialects.py).
 """
 
 from __future__ import annotations
 
-import datetime as dt
 from dataclasses import dataclass, field
-from urllib.parse import quote_plus
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,55 +37,6 @@ def load_credentials(path: str) -> dict[str, str]:
     return creds
 
 
-@dataclass
-class MysqlConnectionConfig:
-    """S17: the reference's ``mysql_config`` dict (config.py:20-26) as a
-    typed object. Defaults mirror the reference's hardcoded host/port/db."""
-
-    user: str
-    password: str
-    host: str = "localhost"
-    database: str = "ti_db_inventory"
-    port: int = 3306
-
-    @classmethod
-    def from_cred_file(
-        cls,
-        path: str,
-        host: str = "localhost",
-        database: str = "ti_db_inventory",
-        port: int = 3306,
-    ) -> "MysqlConnectionConfig":
-        """Reference config.py:20-21: ``DB_USR``/``DB_PWD`` keys, empty
-        string when absent."""
-        creds = load_credentials(path)
-        return cls(
-            user=creds.get("DB_USR", ""),
-            password=creds.get("DB_PWD", ""),
-            host=host,
-            database=database,
-            port=port,
-        )
-
-
-def sqlalchemy_url(cfg: MysqlConnectionConfig) -> str:
-    """The EXACT URL shape the reference builds (mysql_operations.py:10-12):
-    ``mysql+pymysql://user:<quote_plus(password)>@host:port/database``.
-    Kept for migration parity checks; Spark itself uses :func:`jdbc_url`
-    + properties (password never embedded in a URL that lands in logs
-    and the Spark UI)."""
-    return (
-        f"mysql+pymysql://{cfg.user}:{quote_plus(cfg.password)}"
-        f"@{cfg.host}:{cfg.port}/{cfg.database}"
-    )
-
-
-def jdbc_url(cfg: MysqlConnectionConfig) -> str:
-    """Spark-side JDBC URL. Credentials deliberately NOT in the URL —
-    they travel as reader options so the UI/event-log URL stays clean."""
-    return f"jdbc:mysql://{cfg.host}:{cfg.port}/{cfg.database}"
-
-
 def jdbc_spec_from_credentials(
     cred_path: str,
     table: str,
@@ -101,7 +52,10 @@ def jdbc_spec_from_credentials(
     mysql_operations.py:8-12's engine factory — which only ever builds
     MySQL despite the README's "MYSQL, MSSQL, PostgreSQL" claim
     (reference README.md:2); ``dialect`` completes that surface
-    (mysql/postgresql/mssql/derby, see sources/dialects.py)."""
+    (mysql/postgresql/mssql/derby, see sources/dialects.py). Host and
+    database default to the reference's hardcoded values (config.py:
+    22-26); absent ``DB_USR``/``DB_PWD`` keys read as "" (:20-21).
+    Credentials travel as properties, never in the URL."""
     from .dialects import get_dialect
 
     d = get_dialect(dialect)
@@ -165,22 +119,14 @@ def jdbc_reader_options(spec: JdbcSourceSpec) -> dict[str, str]:
     return opts
 
 
-def incremental_predicate(column: str, day: dt.date) -> str:
-    """S3 as a sargable range (index-friendly), not the reference's
-    `DATE(col) = 'yesterday'` (reference mysql_operations.py:23) which
-    defeats source-side indexes by wrapping the column in a function."""
-    nxt = day + dt.timedelta(days=1)
-    return f"{column} >= '{day:%Y-%m-%d}' AND {column} < '{nxt:%Y-%m-%d}'"
-
-
-def read_jdbc(spark: SparkSession, spec: JdbcSourceSpec, where: str | None = None) -> DataFrame:
-    """Build the partitioned JDBC scan; `where` (e.g. the incremental
-    predicate) lands in a pushed-down filter."""
+def read_jdbc(spark: SparkSession, spec: JdbcSourceSpec) -> DataFrame:
+    """Build the partitioned JDBC scan. The S3 day slice is
+    ``TableSpec.incremental_filter`` on the returned frame, which Spark
+    pushes into the source as a sargable range."""
     reader = spark.read.format("jdbc")
     for k, v in jdbc_reader_options(spec).items():
         reader = reader.option(k, v)
-    df = reader.load()
-    return df.where(where) if where else df
+    return reader.load()
 
 
 def register_jdbc_catalog(

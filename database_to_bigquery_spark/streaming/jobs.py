@@ -864,7 +864,6 @@ def run_fuzzy_dedup_stream(
         # (advisor r9)
         probe_cleanup: list[DataFrame] = []
         batch_sh = shingles_of(batch_df)
-        self_probe = admissions_dir is not None
 
         def corpus_probe(b_sh, b_sig):
             # the static-corpus tier: Bloom-indexed bucket-pruned store
@@ -886,8 +885,6 @@ def run_fuzzy_dedup_stream(
             )
 
         if admissions_dir is None:
-            if self_probe:
-                batch_sh = batch_sh.persist()  # corpus probe + self-probe
             matches = corpus_probe(batch_sh, None)
             batch_sig = None
         else:
@@ -916,7 +913,7 @@ def run_fuzzy_dedup_stream(
                         cleanup=probe_cleanup,
                     )
                 )
-        if self_probe:
+        if admissions_dir is not None:
             # Batch-INTERNAL pairs (round 9; mode contract in the
             # function docstring): a near-dup whose source arrives in
             # the SAME micro-batch matches neither the corpus nor any
@@ -938,7 +935,6 @@ def run_fuzzy_dedup_stream(
                     batch_sig=batch_sig,
                 ).filter(F.col("batch_id") > F.col("corpus_id"))
             )
-        if admissions_dir is not None:
             matches = matches.persist()  # probe write + admission anti-join
         (
             # micro_batch_id, NOT batch_id: the probe's own batch_id

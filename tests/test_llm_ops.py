@@ -152,20 +152,22 @@ def test_stale_signature_length_fails_loudly(spark, sf_dir):
 
 
 def test_signature_bands_rejects_overlong_scheme(spark):
-    """A (bands, rows) scheme that reads past the signature end must
-    raise at runtime, not hash truncated/empty slices into wrong
-    buckets (advisor r9): F.slice past the array end silently yields
-    short arrays and md5 hashes them without error."""
+    """A banding scheme that reads past the signature end must raise
+    at runtime, not hash truncated/empty slices into wrong buckets
+    (advisor r9): F.slice past the array end silently yields short
+    arrays and md5 hashes them without error."""
     import pytest
 
     from database_to_bigquery_spark.operators.dedup import signature_bands
 
-    sig = spark.createDataFrame(
-        [(1, list(range(80)), 10)], "doc_id long, sig array<long>, n long"
-    )
-    assert signature_bands(sig).count() == 16  # 16x5 fits k=80
-    with pytest.raises(Exception, match="80"):
-        signature_bands(sig, bands=20, rows=5).count()
+    def sig_of(k):
+        return spark.createDataFrame(
+            [(1, list(range(k)), 10)], "doc_id long, sig array<long>, n long"
+        )
+
+    assert signature_bands(sig_of(80)).count() == 16  # 16x5 fits k=80
+    with pytest.raises(Exception, match="reads 80 .* only 64"):
+        signature_bands(sig_of(64)).count()
 
 
 def test_lsh_topk_recall(spark, sf_dir):

@@ -79,11 +79,16 @@ def test_bool_cast_semantics(spark):
 
 
 def test_datetime_format_truncates_subseconds(daily_log_df):
-    out = format_datetimes_as_strings(daily_log_df)
+    # an NTZ column too: load_table reads events.ts as TIMESTAMP_NTZ,
+    # which is not a subclass of TimestampType
+    df = daily_log_df.withColumn("seen_at", F.col("backup_date").cast("timestamp_ntz"))
+    out = format_datetimes_as_strings(df)
     row = out.filter(F.col("ID") == 1).collect()[0]
     assert row["backup_date"] == "2024-01-09 10:00:00"  # .123456 dropped (mysql_operations.py:30-31)
+    assert row["seen_at"] == "2024-01-09 10:00:00"
     assert dict(out.dtypes)["backup_date"] == "string"
     assert dict(out.dtypes)["last_update"] == "string"  # sweeps ALL timestamp cols
+    assert dict(out.dtypes)["seen_at"] == "string"
 
 
 def test_incremental_window_exact_day(daily_log_df):

@@ -18,13 +18,10 @@ from database_to_bigquery_spark.sources.catalog import (
 )
 from database_to_bigquery_spark.sources.jdbc import (
     JdbcSourceSpec,
-    MysqlConnectionConfig,
-    incremental_predicate,
     jdbc_reader_options,
     jdbc_spec_from_credentials,
     load_credentials,
     read_jdbc,
-    sqlalchemy_url,
 )
 
 
@@ -73,21 +70,12 @@ class TestCredentialConfig:
         creds = load_credentials(self._cred_file(tmp_path))
         assert creds == {"DB_USR": "root", "DB_PWD": "p@ss w/ spaces+symbols=ok"}
 
-    def test_reference_exact_sqlalchemy_url(self, tmp_path):
-        cfg = MysqlConnectionConfig.from_cred_file(self._cred_file(tmp_path))
-        # the EXACT shape mysql_operations.py:10-12 builds, incl.
-        # quote_plus on the password and the hardcoded host/port/db
-        # from config.py:22-26
-        assert sqlalchemy_url(cfg) == (
-            "mysql+pymysql://root:p%40ss+w%2F+spaces%2Bsymbols%3Dok"
-            "@localhost:3306/ti_db_inventory"
-        )
-
     def test_missing_keys_default_empty(self, tmp_path):
         p = tmp_path / "empty.conf"
         p.write_text("OTHER=1\n")
-        cfg = MysqlConnectionConfig.from_cred_file(str(p))
-        assert (cfg.user, cfg.password) == ("", "")  # config.py:20-21
+        spec = jdbc_spec_from_credentials(str(p), "backup_log")
+        props = spec.properties
+        assert (props["user"], props["password"]) == ("", "")  # config.py:20-21
 
     def test_jdbc_spec_keeps_password_out_of_url(self, tmp_path):
         spec = jdbc_spec_from_credentials(
@@ -100,12 +88,6 @@ class TestCredentialConfig:
         assert opts["password"] == "p@ss w/ spaces+symbols=ok"
         assert "p%40ss" not in spec.url and "@ss" not in spec.url
         assert opts["partitionColumn"] == "id"
-
-
-def test_incremental_predicate_is_sargable():
-    pred = incremental_predicate("backup_date", dt.date(2024, 1, 10))
-    assert pred == "backup_date >= '2024-01-10' AND backup_date < '2024-01-11'"
-    assert "DATE(" not in pred  # unlike mysql_operations.py:23 — index-friendly
 
 
 class TestFileSources:
@@ -462,20 +444,29 @@ class TestLiveJdbcDerby:
     def test_incremental_day_slice_is_pushed_to_source(self, spark, sf_dir, derby_url):
         import re
 
+        from pyspark.sql import functions as F
+
+        from database_to_bigquery_spark.plans.table_spec import TableSpec
+
         day = dt.date(2024, 1, 5)
         spec = JdbcSourceSpec(url=derby_url, table="events", properties=self._PROPS)
-        df = read_jdbc(spark, spec, where=incremental_predicate("ts", day))
+        # the same call run_table makes on every source
+        df = TableSpec(name="events", incremental_column="ts").incremental_filter(
+            read_jdbc(spark, spec), day
+        )
         plan = spark._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
         pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
         assert pushed, plan
+        # a sargable range on the raw column, not the reference's
+        # DATE(col) = day (mysql_operations.py:23), which defeats indexes
         assert re.search(r"GreaterThanOrEqual\(ts,2024-01-05", pushed[0]), pushed
         assert re.search(r"LessThan\(ts,2024-01-06", pushed[0]), pushed
         # the pushed read returns exactly the parquet twin's day slice
         twin = (
             spark.read.parquet(f"{sf_dir}/events.parquet")
-            .where(incremental_predicate("ts", day))
+            .where(F.to_date("ts") == F.lit(day))
             .count()
         )
         assert df.count() == twin > 0  # fixture plants events on this day
@@ -604,10 +595,7 @@ class TestLiveJdbcPipeline:
         return url
 
     def test_live_catalog_discovery_intersects_allowlist(self, spark, pipeline_db):
-        from database_to_bigquery_spark.sources.catalog import (
-            DERBY_BASE_TABLES_QUERY,
-            discover_tables_jdbc,
-        )
+        from database_to_bigquery_spark.sources.catalog import discover_tables_jdbc
 
         got = discover_tables_jdbc(
             spark,
@@ -615,7 +603,6 @@ class TestLiveJdbcPipeline:
             schema="ignored",
             allowlist=["nation", "region", "not_there"],
             properties=self._PROPS,
-            catalog_query=DERBY_BASE_TABLES_QUERY,
         )
         assert sorted(got) == ["nation", "region"]
 
@@ -638,10 +625,7 @@ class TestLiveJdbcPipeline:
         from database_to_bigquery_spark.plans.pipeline import run_pipeline
         from database_to_bigquery_spark.plans.table_spec import TableSpec
         from database_to_bigquery_spark.sinks.writers import JdbcSink
-        from database_to_bigquery_spark.sources.catalog import (
-            DERBY_BASE_TABLES_QUERY,
-            discover_tables_jdbc,
-        )
+        from database_to_bigquery_spark.sources.catalog import discover_tables_jdbc
         from database_to_bigquery_spark.sources.jdbc import (
             JdbcSourceSpec,
             read_jdbc,
@@ -653,7 +637,6 @@ class TestLiveJdbcPipeline:
             schema="ignored",
             allowlist=["nation", "region"],
             properties=self._PROPS,
-            catalog_query=DERBY_BASE_TABLES_QUERY,
         )
         jobs = [
             (
@@ -802,19 +785,15 @@ class TestDialects:
         with pytest.raises(ValueError, match="unknown dialect"):
             get_dialect("oracle")
 
-    def test_derby_catalog_query_matches_live_constant(self):
-        # the live-tested constant in catalog.py and the dialect entry
-        # must never drift apart
-        from database_to_bigquery_spark.sources.catalog import DERBY_BASE_TABLES_QUERY
-        from database_to_bigquery_spark.sources.dialects import DERBY
+    def test_discovery_rejects_unmodelled_url(self):
+        # no dialect, no catalog query: raise before any connection
+        # opens (spark=None would fail on first use)
+        import pytest
 
-        assert DERBY.catalog_query == DERBY_BASE_TABLES_QUERY
+        from database_to_bigquery_spark.sources.catalog import discover_tables_jdbc
 
-    def test_mysql_catalog_query_matches_live_constant(self):
-        from database_to_bigquery_spark.sources.catalog import BASE_TABLES_QUERY
-        from database_to_bigquery_spark.sources.dialects import MYSQL
-
-        assert MYSQL.catalog_query == BASE_TABLES_QUERY
+        with pytest.raises(ValueError, match="no catalog query"):
+            discover_tables_jdbc(None, "jdbc:oracle:thin:@h:1521/db", "s", ["t"])
 
 
 class TestStagedSwapSafety:
