@@ -26,9 +26,6 @@ TABLE_NAMES = [
     "embeddings",
 ]
 
-DEFAULT_SF_DIR = "/root/testdata/sf0.001"
-
-
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
@@ -87,24 +84,24 @@ def load_table_spread(spark: SparkSession, sf_dir: str, name: str, key: str) -> 
     )
 
 
-def range_fanout(df: DataFrame, floor: int = 32) -> int:
+def range_fanout(df: DataFrame) -> int:
     """Width for `global_prefix`'s repartitionByRange.
 
     Derived, not hardcoded: the pattern's SinglePartition offsets stage
     only ever sees one long per range partition, so the width can grow
     with the input at zero metadata cost — while a FIXED 32 means ~3 TB
     per task at 100 TB (a straggler/spill wall no plan census can see).
-    Width = max(floor, defaultParallelism, plan-estimated input bytes /
+    Width = max(32, defaultParallelism, plan-estimated input bytes /
     files.maxPartitionBytes) — the same "size the narrow work to the
     cluster" convention as load_table_spread. At fixture scale all
-    three terms collapse to the floor, so local plans are unchanged.
+    three terms collapse to 32, so local plans are unchanged.
     The result is still an EXPLICIT partition count, so AQE will not
     re-coalesce it and both consumers of the persisted range exchange
     see identical boundaries. The prefix sums are width-agnostic by
     construction (tests/test_range_fanout.py proves it at two widths).
     """
     spark = df.sparkSession
-    width = max(floor, spark.sparkContext.defaultParallelism)
+    width = max(32, spark.sparkContext.defaultParallelism)
     try:
         est = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         target = _parse_byte_conf(
@@ -198,7 +195,7 @@ def _parse_byte_conf(value: str) -> int:
     return int(v)
 
 
-def maybe_broadcast(df: DataFrame, threshold_bytes: int | None = None) -> DataFrame:
+def maybe_broadcast(df: DataFrame) -> DataFrame:
     """Broadcast hint guarded by Catalyst's own size estimate.
 
     ``F.broadcast(df)`` is an unconditional hint: Spark will ship the
@@ -206,8 +203,8 @@ def maybe_broadcast(df: DataFrame, threshold_bytes: int | None = None) -> DataFr
     at web scale a "vocabulary-sized" side table can blow past the
     driver/executor memory the hint assumes. This helper reads the
     optimized plan's ``sizeInBytes`` estimate and only applies the hint
-    when the estimate fits under ``threshold_bytes`` (default: the
-    session's ``spark.sql.autoBroadcastJoinThreshold``). Above the
+    when the estimate fits under the session's
+    ``spark.sql.autoBroadcastJoinThreshold``. Above the
     threshold the DataFrame is returned unhinted, so the planner picks
     a shuffle join (sort-merge / shuffled-hash, AQE may still convert
     back if runtime stats shrink). The size estimate is conservative in
@@ -215,11 +212,9 @@ def maybe_broadcast(df: DataFrame, threshold_bytes: int | None = None) -> DataFr
     estimate, so an over-estimate falls back to the always-correct
     shuffle path rather than an OOM-prone broadcast.
     """
-    spark = df.sparkSession
-    if threshold_bytes is None:
-        threshold_bytes = _parse_byte_conf(
-            spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
-        )
+    threshold_bytes = _parse_byte_conf(
+        df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
+    )
     if threshold_bytes < 0:  # -1 disables auto-broadcast: never hint
         return df
     from pyspark.sql import functions as F

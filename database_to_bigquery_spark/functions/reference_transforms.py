@@ -18,7 +18,7 @@ from pyspark.sql import types as T
 REFERENCE_DATETIME_FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-def format_datetimes_as_strings(df: DataFrame, fmt: str = REFERENCE_DATETIME_FMT) -> DataFrame:
+def format_datetimes_as_strings(df: DataFrame) -> DataFrame:
     """S4: render every timestamp column as a formatted string
     (reference mysql_operations.py:30-31 does this to ALL datetime64
     columns unconditionally). Both Spark timestamp types count:
@@ -29,7 +29,7 @@ def format_datetimes_as_strings(df: DataFrame, fmt: str = REFERENCE_DATETIME_FMT
         for f in df.schema.fields
         if isinstance(f.dataType, (T.TimestampType, T.TimestampNTZType))
     ]
-    return df.withColumns({c: F.date_format(F.col(c), fmt) for c in ts_cols})
+    return df.withColumns({c: F.date_format(F.col(c), REFERENCE_DATETIME_FMT) for c in ts_cols})
 
 
 def cast_bools(df: DataFrame, columns: list[str]) -> DataFrame:

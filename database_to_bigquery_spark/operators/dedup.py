@@ -328,30 +328,25 @@ _MH_PRIME = (1 << 31) - 1
 # 97.0M → 38.2M) — the superlinear term of the r8 ladder was exactly
 # this collision mass. (20,5)/(24,5) lose the trade (k ≥ 100 signature
 # cost dominates); (16,6)/(12,6) fail the 0.99 recall bar (0.9877).
-_MH_K = 80  # default signature length (= _MH_BANDS × 5 rows)
+_MH_K = 80  # signature length (= _MH_BANDS × 5 rows)
 _MH_BANDS = 16
-# Permutations are generated once up to the largest signature any
-# banding scheme uses; a k-length signature is always the PREFIX of
-# the max-k one, so signatures of different lengths built from the
-# same corpus agree on their shared prefix. (Changing _MH_MAX_K
-# re-draws _MH_B and so changes every signature.)
+# Signatures use the first _MH_K of _MH_MAX_K drawn permutations. The
+# draws stay at 128 although only 80 are read: _MH_B is drawn from the
+# same generator after all of _MH_A, so fewer _MH_A draws would give a
+# different _MH_B and change every signature (and every stored one).
 _MH_MAX_K = 128
 _rng = random.Random(42)
 _MH_A = [_rng.randrange(1, _MH_PRIME) for _ in range(_MH_MAX_K)]
 _MH_B = [_rng.randrange(0, _MH_PRIME) for _ in range(_MH_MAX_K)]
+# Signature-agreement pre-filter threshold: ~2.5σ below the J = 0.6
+# output bar (σ = √(0.6·0.4/_MH_K)), capped at the historical 0.45 so
+# a longer signature only ever TIGHTENS the filter (never admits more
+# background than k = 64 did).
+_EST_THRESHOLD = max(0.45, 0.6 - 2.5 * (0.24 / _MH_K) ** 0.5)
 
 
-def _est_threshold(k: int) -> float:
-    """Signature-agreement pre-filter threshold for a k-length
-    signature: ~2.5σ below the J = 0.6 output bar (σ = √(0.6·0.4/k)),
-    capped at the historical 0.45 so longer signatures only ever
-    TIGHTEN the filter (never admit more background than k = 64
-    did)."""
-    return max(0.45, 0.6 - 2.5 * (0.24 / k) ** 0.5)
-
-
-def minhash_signatures(shingles: DataFrame, k: int = _MH_K) -> DataFrame:
-    """(doc_id, sig: array<long>[k], n) — one groupBy(doc) over the
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
+    """(doc_id, sig: array<long>[_MH_K], n) — one groupBy(doc) over the
     shingle relation; min((a_i·h+b_i) mod p) per permutation as a
     single array expression, plus the doc's distinct-shingle count
     ``n`` riding the SAME aggregation (the exact-Jaccard denominator
@@ -366,7 +361,7 @@ def minhash_signatures(shingles: DataFrame, k: int = _MH_K) -> DataFrame:
         "h", (F.hash("g").cast("long").bitwiseAND(F.lit((1 << 32) - 1))) % _MH_PRIME
     )
     # One F.expr over a generated SQL string instead of k composed
-    # Column objects (r10): building 80 min((a·h+b)%p) aggregates via
+    # Column objects (r10): building _MH_K min((a·h+b)%p) aggregates via
     # the Column API costs ~1.7 s of py4j round trips PER CALL (the
     # single largest driver-side cost of every miner-family query at
     # bench scale — tools/stage_profile.py gap analysis), while the
@@ -375,7 +370,7 @@ def minhash_signatures(shingles: DataFrame, k: int = _MH_K) -> DataFrame:
     # the long `h` exactly as F.lit(int) did.
     perm_sql = ", ".join(
         f"min(({a} * h + {b}) % {_MH_PRIME})"
-        for a, b in zip(_MH_A[:k], _MH_B[:k])
+        for a, b in zip(_MH_A[:_MH_K], _MH_B[:_MH_K])
     )
     return sh.groupBy("doc_id").agg(
         F.expr(f"array({perm_sql})").alias("sig"), F.count("*").alias("n")
@@ -410,9 +405,7 @@ def signature_bands(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
                     f"{need} signature positions but the signature has only "
                 ),
                 F.size("sig").cast("string"),
-                F.lit(" — re-materialize with minhash_signatures(k>="),
-                F.lit(str(need)),
-                F.lit(")"),
+                F.lit(" — re-materialize with minhash_signatures()"),
             )
         ).cast("boolean")
     )
@@ -441,19 +434,18 @@ def _sig_agreement() -> F.Column:
 _SIG_LO_MASK = (1 << 31) - 1  # minhash values are mod (2^31 - 1): 31 bits
 
 
-def _packed_sig(k: int = _MH_K) -> F.Column:
-    """`sig` (array<long>[k], each value < 2^31) packed two-per-long
-    into array<long>[k/2]. The est attach carries every candidate's two
+def _packed_sig() -> F.Column:
+    """`sig` (array<long>[_MH_K], each value < 2^31) packed two-per-long
+    into array<long>[_MH_K/2]. The est attach carries every candidate's two
     signatures through a shuffle (13.7M candidate rows at the 250k
     twin); halving the array halves both the shuffled bytes and the
     zip_with iteration count of the agreement fold. Values are 31-bit
     so hi<<31 | lo stays < 2^62 — positive, ANSI-safe."""
-    assert k % 2 == 0, "packing pairs signature positions"
     # generated-SQL form for the same py4j-cost reason as the
     # minhash_signatures permutation array (r10)
     pack_sql = ", ".join(
         f"shiftleft(element_at(sig, {2 * i + 1}), 31) | element_at(sig, {2 * i + 2})"
-        for i in range(k // 2)
+        for i in range(_MH_K // 2)
     )
     return F.expr(f"array({pack_sql})")
 
@@ -534,9 +526,7 @@ def _check_sig_encoding(sig: DataFrame, sh: DataFrame, arg: str) -> None:
             "minhash_signatures() under the current banding scheme"
         )
     got = (
-        minhash_signatures(
-            sh.filter(F.col("doc_id") == F.lit(doc_id)), k=len(expect)
-        )
+        minhash_signatures(sh.filter(F.col("doc_id") == F.lit(doc_id)))
         .select("sig", "n")
         .collect()
     )
@@ -637,7 +627,6 @@ def minhash_verified_pairs(raw_shingles: DataFrame, sig: DataFrame | None = None
     # required ordering exactly, so BOTH corpus-side attaches are
     # exchange- and sort-free (judge r7 task 6; measured at the x50
     # twin in SCALE.md §14).
-    k = _MH_K
     shingles = (
         _as_gids(raw_shingles).sortWithinPartitions("doc_id", "g").persist()
     )
@@ -654,7 +643,7 @@ def minhash_verified_pairs(raw_shingles: DataFrame, sig: DataFrame | None = None
     if sig is not None:
         _check_sig_encoding(sig, shingles, "sig")
     else:
-        sig = minhash_signatures(shingles, k)
+        sig = minhash_signatures(shingles)
     # bands → buckets, with the PACKED signature and the doc's
     # distinct-shingle count n riding each band row. band_hash = md5
     # of the rows-joined values. Hot buckets dropped first: pair
@@ -673,16 +662,15 @@ def minhash_verified_pairs(raw_shingles: DataFrame, sig: DataFrame | None = None
     # verification. The traded cost is payload width on the one band
     # shuffle — linear in docs, spillable.
     band_rel = drop_hot_buckets(
-        signature_bands(sig.withColumn("sigp", _packed_sig(k)), carry=("sigp", "n"))
+        signature_bands(sig.withColumn("sigp", _packed_sig()), carry=("sigp", "n"))
     )
     # Group the capped buckets — the window's exchange on
     # (band_idx, band_hash) IS this aggregation's clustering, so no
     # new shuffle — and emit each bucket's i<j pairs with the
     # signature-agreement estimate computed and filtered in-array.
     # sort_array orders members by doc_id (first struct field, unique
-    # per bucket), so doc_a < doc_b. CAST(repr(thr) AS DOUBLE) parses
-    # to the bit-identical IEEE754 value of the F.lit(thr) literal.
-    thr = _est_threshold(k)
+    # per bucket), so doc_a < doc_b. CAST(repr(_EST_THRESHOLD) AS
+    # DOUBLE) parses to the bit-identical IEEE754 value of the constant.
     grouped = band_rel.groupBy("band_idx", "band_hash").agg(
         F.sort_array(F.collect_list(F.struct("doc_id", "sigp", "n"))).alias("ms")
     )
@@ -693,14 +681,14 @@ def minhash_verified_pairs(raw_shingles: DataFrame, sig: DataFrame | None = None
         {
             "doc_a": "a.doc_id",
             "doc_b": "b.doc_id",
-            "est_jaccard": f"round(cast({agree} as double) / {k}, 4)",
+            "est_jaccard": f"round(cast({agree} as double) / {_MH_K}, 4)",
             "na": "a.n",
             "nb": "b.n",
         },
-        keep=f"p.est_jaccard >= cast('{thr!r}' as double)",
+        keep=f"p.est_jaccard >= cast('{_EST_THRESHOLD!r}' as double)",
     )
     # the est pre-filter sits ~2.5σ below the J = 0.6 output threshold
-    # (σ = √(0.6·0.4/k), see _est_threshold), so true pairs survive
+    # (σ = √(0.6·0.4/k), see _EST_THRESHOLD), so true pairs survive
     # w.h.p. while the band-collision background never leaves the
     # bucket's own stage. Dedup across buckets AFTER the filter is the
     # same set as before (est/na/nb are pure functions of the pair, so
@@ -1556,7 +1544,7 @@ def _band_candidates(bands_b: DataFrame, bands_c: DataFrame, merge: bool) -> Dat
 def _estimate(cand: DataFrame, sig_b: DataFrame, sig_c: DataFrame, merge: bool) -> DataFrame:
     """Estimate: attach both sides' ``sig`` and ``n`` to the candidates
     and keep the pairs whose signature agreement passes the same 2.5σ
-    pre-filter as the full miner (_est_threshold), which drops the
+    pre-filter as the full miner (_EST_THRESHOLD), which drops the
     shared-vocabulary background before the exact (doc, gram) join.
     Keeps batch_id, corpus_id, est_jaccard and na/nb, which ride the
     signature attach (the sig relations carry the distinct-shingle
@@ -1584,7 +1572,7 @@ def _estimate(cand: DataFrame, sig_b: DataFrame, sig_c: DataFrame, merge: bool) 
         )
         .withColumn("est_jaccard", F.round(_sig_agreement().cast("double") / _MH_K, 4))
         .drop("sig_a", "sig_b")
-        .filter(F.col("est_jaccard") >= _est_threshold(_MH_K))
+        .filter(F.col("est_jaccard") >= _EST_THRESHOLD)
     )
 
 

@@ -137,38 +137,36 @@ def mm_fake_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 FRAME_SCHEMA = "doc_id long, frame_idx int, frame_offset long, frame_bytes binary"
 
 
-def frame_sample_batch(
-    frame_size: int = 32, stride: int = 4
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+_FRAME_BYTES = 32  # fixed frame size; every _FRAME_STRIDE-th frame is kept
+_FRAME_STRIDE = 4
+
+
+def frame_sample_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas operator for video-style frame sampling: treat the
     payload as a sequence of fixed-size frames and emit every
-    `stride`-th one. A real implementation would seek keyframes via
-    pyav/ffmpeg per batch; the byte-slicing fake keeps the exact
+    `_FRAME_STRIDE`-th one. A real implementation would seek keyframes
+    via pyav/ffmpeg per batch; the byte-slicing fake keeps the exact
     Spark-side contract (expanding output — rows out > rows in — with
     binary columns over Arrow) testable without codecs."""
-
-    def _sample(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame_bytes": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                n_frames = max(len(raw) // frame_size, 0)
-                for k, f in enumerate(range(0, n_frames, stride)):
-                    off = f * frame_size
-                    out["doc_id"].append(doc_id)
-                    out["frame_idx"].append(k)
-                    out["frame_offset"].append(off)
-                    out["frame_bytes"].append(raw[off : off + frame_size])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "frame_idx": pd.Series(out["frame_idx"], dtype="int32"),
-                    "frame_offset": pd.Series(out["frame_offset"], dtype="int64"),
-                    "frame_bytes": pd.Series(out["frame_bytes"], dtype=object),
-                }
-            )
-
-    return _sample
+    for pdf in it:
+        out = {"doc_id": [], "frame_idx": [], "frame_offset": [], "frame_bytes": []}
+        for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+            raw = bytes(payload)
+            n_frames = len(raw) // _FRAME_BYTES
+            for k, f in enumerate(range(0, n_frames, _FRAME_STRIDE)):
+                off = f * _FRAME_BYTES
+                out["doc_id"].append(doc_id)
+                out["frame_idx"].append(k)
+                out["frame_offset"].append(off)
+                out["frame_bytes"].append(raw[off : off + _FRAME_BYTES])
+        yield pd.DataFrame(
+            {
+                "doc_id": pd.Series(out["doc_id"], dtype="int64"),
+                "frame_idx": pd.Series(out["frame_idx"], dtype="int32"),
+                "frame_offset": pd.Series(out["frame_offset"], dtype="int64"),
+                "frame_bytes": pd.Series(out["frame_bytes"], dtype=object),
+            }
+        )
 
 
 @query(
@@ -204,7 +202,7 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames = (
         with_payload(d)
         .select("doc_id", "payload")
-        .mapInPandas(frame_sample_batch(), schema=FRAME_SCHEMA)
+        .mapInPandas(frame_sample_batch, schema=FRAME_SCHEMA)
     )
     return frames.select(
         "doc_id", "frame_idx", "frame_offset", F.md5("frame_bytes").alias("frame_md5")
@@ -214,27 +212,21 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 RESIZE_SCHEMA = "doc_id long, out_bytes binary, out_len int"
 
 
-def resize_batch(
-    stride: int = 4,
-) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
+def resize_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas operator for the resize/downsample step: keep every
-    `stride`-th byte of the payload (a real implementation would be a
+    4th byte of the payload (a real implementation would be a
     vips/PIL thumbnail per batch; byte striding keeps the exact contract
     — binary in, smaller binary out, length bookkeeping — testable
     without codec libs)."""
-
-    def _resize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf["payload"].map(lambda p: bytes(p)[::stride])
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "out_bytes": out,
-                    "out_len": out.map(len).astype("int32"),
-                }
-            )
-
-    return _resize
+    for pdf in it:
+        out = pdf["payload"].map(lambda p: bytes(p)[::4])
+        yield pd.DataFrame(
+            {
+                "doc_id": pdf["doc_id"],
+                "out_bytes": out,
+                "out_len": out.map(len).astype("int32"),
+            }
+        )
 
 
 @query(
@@ -269,7 +261,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     resized = (
         with_payload(d)
         .select("doc_id", "payload")
-        .mapInPandas(resize_batch(), schema=RESIZE_SCHEMA)
+        .mapInPandas(resize_batch, schema=RESIZE_SCHEMA)
     )
     return resized.select(
         "doc_id", F.md5("out_bytes").alias("out_md5"), F.col("out_len")

@@ -42,12 +42,12 @@ def sliding_structs(col: str, n: int) -> Column:
     )
 
 
-def sliding_ngrams(col: str, n: int, sep: str = " ") -> Column:
-    """``array<string>`` of sep-joined n-grams over the materialized
+def sliding_ngrams(col: str, n: int) -> Column:
+    """``array<string>`` of space-joined n-grams over the materialized
     array column ``col``. The transform lambda touches ONLY its struct
     element (no outer column references), so it is a cheap per-element
     concat — the safe kind of HOF."""
     return F.transform(
         sliding_structs(col, n),
-        lambda s: F.concat_ws(sep, *[s[f"w{i}"] for i in range(n)]),
+        lambda s: F.concat_ws(" ", *[s[f"w{i}"] for i in range(n)]),
     )

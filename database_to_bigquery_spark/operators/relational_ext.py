@@ -6,7 +6,7 @@ DataFrame API — narrow or single-shuffle plans.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..data import load_table
@@ -460,18 +460,31 @@ _CMS_DEPTH = 4  # independent hash rows
 _CMS_WIDTH = 64  # buckets per row
 
 
-def cms_bucket(i: int, key_col):
-    """CMS bucket for hash row i: bits 97-128 of md5(f"{i}:{key}") mod
-    width — engine-independent (the oracle's substr(md5, 25, 8)), so
-    batch, streaming, and DuckDB all build the identical sketch."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit(str(i)), F.lit(":"), key_col)), 25, 8),
-            16,
-            10,
-        ).cast("long")
-        % _CMS_WIDTH
-    )
+def cms_buckets(key_col: Column) -> Column:
+    """Generator of (i, bucket): the key's bucket in each of the
+    _CMS_DEPTH hash rows, bits 97-128 of md5(f"{i}:{key}") mod width —
+    engine-independent (the oracle's substr(md5, 25, 8)), so batch,
+    streaming, and DuckDB all build the identical sketch."""
+    return F.posexplode(
+        F.array(
+            *[
+                F.conv(
+                    F.substring(F.md5(F.concat(F.lit(str(i)), F.lit(":"), key_col)), 25, 8),
+                    16,
+                    10,
+                ).cast("long")
+                % _CMS_WIDTH
+                for i in range(_CMS_DEPTH)
+            ]
+        )
+    ).alias("i", "bucket")
+
+
+def cms_cell_table(df: DataFrame, key_col: Column) -> DataFrame:
+    """The CMS cells (i, bucket, cell) of ``key_col`` over ``df``: one
+    groupBy that partial-aggregates map-side, so per-partition (or
+    per-micro-batch) sketches merge by cell-wise addition."""
+    return df.select(cms_buckets(key_col)).groupBy("i", "bucket").agg(F.count("*").alias("cell"))
 
 
 @query(
@@ -528,31 +541,14 @@ def q_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("k")
     )
-
-    bucket = cms_bucket
-
-    cells = (
-        ev.select(
-            F.posexplode(F.array(*[bucket(i, F.col("k")) for i in range(_CMS_DEPTH)])).alias(
-                "i", "bucket"
-            )
-        )
-        .groupBy("i", "bucket")
-        .agg(F.count("*").alias("cell"))
-    )
+    cells = cms_cell_table(ev, F.col("k"))
     top = (
         ev.groupBy("k")
         .agg(F.count("*").alias("exact_cnt"))
         .orderBy(F.col("exact_cnt").desc(), "k")
         .limit(10)
     )
-    probes = top.select(
-        "k",
-        "exact_cnt",
-        F.posexplode(F.array(*[bucket(i, F.col("k")) for i in range(_CMS_DEPTH)])).alias(
-            "i", "bucket"
-        ),
-    )
+    probes = top.select("k", "exact_cnt", cms_buckets(F.col("k")))
     return (
         F.broadcast(probes)
         .join(cells, ["i", "bucket"])

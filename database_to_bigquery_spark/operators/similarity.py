@@ -380,8 +380,8 @@ _PLANES = [
 ]
 
 
-def _with_lsh_buckets(df: DataFrame, vec_col: str = "v") -> DataFrame:
-    """Explode a vector column into its L multi-table LSH bucket keys
+def _with_lsh_buckets(df: DataFrame) -> DataFrame:
+    """Explode the vector column ``v`` into its L multi-table LSH bucket keys
     (bucket = table·2^b + signature, signature bit i = sign of the
     projection onto fixed Gaussian plane i).
 
@@ -406,7 +406,7 @@ def _with_lsh_buckets(df: DataFrame, vec_col: str = "v") -> DataFrame:
     projs = F.transform(
         tensor,
         lambda p: F.aggregate(
-            F.zip_with(vec_col, p, lambda u, w_: u * w_), F.lit(0.0), lambda a, z: a + z
+            F.zip_with("v", p, lambda u, w_: u * w_), F.lit(0.0), lambda a, z: a + z
         ),
     )
     buckets = F.transform(
@@ -2005,26 +2005,22 @@ def sim_ivf_incremental_add(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_probe(
-    arrivals: DataFrame,
-    standing: DataFrame,
-    n_probe: int = _PROBE_NPROBE,
-    k: int = _PROBE_K,
-) -> DataFrame:
+def ivf_probe(arrivals: DataFrame, standing: DataFrame) -> DataFrame:
     """Reusable IVF probe core: rank `arrivals` (vec_id, v) against the
-    `standing` (vec_id, label, v) corpus — nearest `n_probe` cells by
-    centroid cosine, then exact-cosine top-`k` within the probed
-    cells. Centroids are DECIMAL-exact (order-independent sums) so the
-    candidate set is reproducible across engines and across batch /
-    foreachBatch execution — the property the streaming equivalence
-    test leans on.
+    `standing` (vec_id, label, v) corpus — nearest `_PROBE_NPROBE`
+    cells by centroid cosine, then exact-cosine top-`_PROBE_K` within
+    the probed cells. Centroids are DECIMAL-exact (order-independent
+    sums) so the candidate set is reproducible across engines and
+    across batch / foreachBatch execution — the property the streaming
+    equivalence test leans on.
 
     Scale: centroids = one narrow posexplode aggregate over the
     standing corpus (or a persisted table between batches); per-query
-    cost is n_probe/k of the corpus. Both broadcasts are bounded by
-    construction (k cells; |arrivals|·n_probe probe rows per batch)."""
+    cost is _PROBE_NPROBE/_IVF_CELLS of the corpus. Both broadcasts
+    are bounded by construction (_IVF_CELLS cells; |arrivals| ×
+    _PROBE_NPROBE probe rows per batch)."""
     cent = bounded(exact_centroids(standing, "label"), _IVF_CELLS)
-    return rank_in_cells(label_probe(arrivals, cent, n_probe), standing, k)
+    return rank_in_cells(label_probe(arrivals, cent, _PROBE_NPROBE), standing, _PROBE_K)
 
 
 # --------------------------------------- covariance / PCA whitening ----
@@ -2221,13 +2217,11 @@ WHITEN_COND_THRESHOLD = 100.0
 _EIG_REL_FLOOR = 1e-8
 
 
-def whiten_if_anisotropic(
-    e: DataFrame, cond_threshold: float = WHITEN_COND_THRESHOLD
-):
+def whiten_if_anisotropic(e: DataFrame):
     """Condition-number-gated whitening (advisor/judge r7 task 4):
     compute the corpus covariance once (metadata-sized — the decision
     is free relative to any downstream ANN pass), whiten ONLY when
-    cond(cov) = λ_max/λ_min exceeds `cond_threshold`, reusing the
+    cond(cov) = λ_max/λ_min exceeds `WHITEN_COND_THRESHOLD`, reusing the
     already-computed eigendecomposition for the map. Whitening benign
     clustered geometry is not a no-op — it flattens exactly the
     cluster directions ANN relies on — so production corpora must NOT
@@ -2259,7 +2253,7 @@ def whiten_if_anisotropic(
     # direction carries no data to rescale: its centered coordinate is
     # ~0, so the decision about it is moot)
     cond = float(live[-1] / live[0]) if len(live) else 1.0
-    if cond <= cond_threshold:
+    if cond <= WHITEN_COND_THRESHOLD:
         return e, cond, False, n
     lam = np.maximum(evals, max(lam_floor, 1e-300))
     Wm = (evecs / np.sqrt(lam)).T

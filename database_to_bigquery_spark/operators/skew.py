@@ -17,7 +17,7 @@ engine relies on:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..data import global_prefix, load_table
@@ -26,30 +26,18 @@ from ..registry import query
 DEFAULT_SALT = 8
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    how: str = "inner",
-    n_salts: int = DEFAULT_SALT,
-    salt_source: Column | None = None,
-) -> DataFrame:
-    """Equi-join `big ⋈ small` on `key` with the big side salted and
-    the small side replicated n_salts×. Result is row-identical to the
-    plain join; the hot keys of `big` are spread across n_salts
-    reducers. `salt_source` defaults to a hash of all big-side columns
-    (any per-row expression works — it only needs to spread rows, not
-    be stable)."""
-    salt = (
-        F.pmod(salt_source if salt_source is not None else F.hash(*big.columns), n_salts)
-        if n_salts > 1
-        else F.lit(0)
-    )
-    big_s = big.withColumn("__salt", salt.cast("int"))
+def salted_join(big: DataFrame, small: DataFrame, key: str) -> DataFrame:
+    """Inner equi-join `big ⋈ small` on `key` with the big side salted
+    and the small side replicated DEFAULT_SALT×. Result is
+    row-identical to the plain join; the hot keys of `big` are spread
+    across DEFAULT_SALT reducers. The salt is a hash of all big-side
+    columns (any per-row expression works — it only needs to spread
+    rows, not be stable)."""
+    big_s = big.withColumn("__salt", F.pmod(F.hash(*big.columns), DEFAULT_SALT).cast("int"))
     small_s = small.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(n_salts)]))
+        "__salt", F.explode(F.array(*[F.lit(i) for i in range(DEFAULT_SALT)]))
     )
-    return big_s.join(small_s, [key, "__salt"], how).drop("__salt")
+    return big_s.join(small_s, [key, "__salt"]).drop("__salt")
 
 
 @query(

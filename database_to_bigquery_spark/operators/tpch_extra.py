@@ -29,8 +29,8 @@ from ..registry import query
 _D184 = "decimal(18,4)"
 
 
-def _rev(c_price: str = "l_extendedprice", c_disc: str = "l_discount"):
-    return (F.col(c_price) * (1 - F.col(c_disc))).cast(_D184)
+def _rev():
+    return (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(_D184)
 
 
 # ------------------------------------------------------- Q2 shape ----

@@ -68,7 +68,6 @@ def _default_driver_mem() -> str:
 
 def get_spark(
     app_name: str = "database_to_bigquery_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -78,8 +77,7 @@ def get_spark(
     it is ``local[$SPARK_GRAFT_CPUS]`` (default ``local[*]``).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    if shuffle_partitions is None:
-        shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
+    shuffle_partitions = 32 if cpus == "*" else max(int(cpus), 1)
     builder = SparkSession.builder.appName(app_name)
     # spark-submit hands its Python driver the gateway port in
     # PYSPARK_GATEWAY_PORT. "Is spark.master set?" cannot tell the two

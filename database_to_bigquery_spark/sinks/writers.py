@@ -88,7 +88,6 @@ class FileSink(Sink):
 
     path: str = ""
     format: str = "orc"  # parquet | orc | csv | json
-    options: dict[str, str] | None = None
 
     def write(self, df: DataFrame, mode: WriteMode) -> int:
         """Distributed write; returns rows written (S14 audit)."""
@@ -106,19 +105,16 @@ class FileSink(Sink):
             writer = df.write.mode(mode.value)
         if fmt == "csv":
             writer = writer.option("header", "true")
-        for k, v in (self.options or {}).items():
-            writer = writer.option(k, v)
         writer.format(fmt).save(self.path)
         return int(obs.get["rows"])
 
 
 @dataclass
 class ParquetSink(FileSink):
-    """`FileSink` with the format fixed to parquet and no writer
-    options — the test/file implementation of the reference's sink."""
+    """`FileSink` with the format fixed to parquet — the test/file
+    implementation of the reference's sink."""
 
     format: str = field(default="parquet", init=False)
-    options: dict[str, str] | None = field(default=None, init=False)
 
 
 @dataclass
@@ -226,9 +222,9 @@ class JdbcSink(Sink):
         self._pre_rows: int | None = None
 
     def _dialect(self):
-        from ..sources.dialects import DERBY, dialect_for_url
+        from ..sources.dialects import dialect_for_url
 
-        return dialect_for_url(self.url) or DERBY
+        return dialect_for_url(self.url)
 
     def _warehouse_count(self, spark: SparkSession) -> int:
         """Pushed-COUNT of the target table via the DSv2 catalog route
@@ -257,6 +253,7 @@ class JdbcSink(Sink):
         ).count()
 
     def write(self, df: DataFrame, mode: WriteMode) -> int:
+        self._dialect()  # an unmodelled URL fails here, before any connection
         df, obs = _observed(self.prepare(df))  # S14 audit rides the write pass
         props = self.properties or {}
         if mode is WriteMode.APPEND:

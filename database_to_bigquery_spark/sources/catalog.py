@@ -47,14 +47,8 @@ def discover_tables_jdbc(
     (sources/dialects.py) to the source, intersect with the allowlist
     driver-side (the list is tiny — metadata, not data). A URL no
     dialect models raises ValueError before any connection opens."""
-    dialect = dialect_for_url(jdbc_url)
-    if dialect is None:
-        raise ValueError(f"no catalog query for JDBC URL {jdbc_url!r}")
-    reader = (
-        spark.read.format("jdbc")
-        .option("url", jdbc_url)
-        .option("query", dialect.catalog_query.format(schema=schema))
-    )
+    query = dialect_for_url(jdbc_url).catalog_query.format(schema=schema)
+    reader = spark.read.format("jdbc").option("url", jdbc_url).option("query", query)
     for k, v in (properties or {}).items():
         reader = reader.option(k, v)
     names = [r["table_name"] for r in reader.load().collect()]

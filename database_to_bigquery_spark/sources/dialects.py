@@ -143,14 +143,19 @@ def get_dialect(name: str) -> Dialect:
         ) from None
 
 
-def dialect_for_url(url: str) -> Dialect | None:
+def dialect_for_url(url: str) -> Dialect:
     """Resolve the dialect from a JDBC URL's subprotocol
-    (``jdbc:derby:...`` → DERBY); None for engines this module does
-    not model (catalog discovery rejects those; JdbcSink falls back to
-    Derby's conventions)."""
-    if not url.startswith("jdbc:"):
-        return None
-    sub = url[len("jdbc:") :].split(":", 1)[0].lower()
-    if sub == "sqlserver":
-        sub = "mssql"
-    return DIALECTS.get(sub)
+    (``jdbc:derby:...`` → DERBY). A URL naming an engine this module
+    does not model (``jdbc:oracle:...``, ``jdbc:h2:...``, or no
+    ``jdbc:`` prefix at all) raises ValueError: catalog discovery and
+    JdbcSink's audit count both need the engine's catalog SQL and
+    identifier rules, and another engine's would read the wrong
+    table."""
+    sub = url[len("jdbc:") :].split(":", 1)[0].lower() if url.startswith("jdbc:") else ""
+    dialect = DIALECTS.get("mssql" if sub == "sqlserver" else sub)
+    if dialect is None:
+        raise ValueError(
+            f"no dialect models JDBC URL {url!r}; supported engines: "
+            "mysql, postgresql, sqlserver, derby"
+        )
+    return dialect

@@ -38,7 +38,6 @@ class FileSourceSpec:
     format: str  # parquet | orc | csv | json | xml
     schema: T.StructType | None = None  # required for csv/json
     options: dict[str, str] = field(default_factory=dict)
-    quarantine_corrupt: bool = True  # text formats: keep bad rows in CORRUPT_COL
 
     def __post_init__(self) -> None:
         fmt = self.format.lower()
@@ -56,7 +55,7 @@ def read_file_source(spark: SparkSession, spec: FileSourceSpec) -> DataFrame:
     """One-pass, schema-stable read of a file source."""
     reader = spark.read.format(spec.format)
     schema = spec.schema
-    if spec.format in _TEXT_FORMATS and spec.quarantine_corrupt:
+    if spec.format in _TEXT_FORMATS:  # keep bad rows in CORRUPT_COL
         schema = T.StructType(
             [*schema.fields, T.StructField(CORRUPT_COL, T.StringType())]
         )

@@ -465,18 +465,9 @@ def countmin_cells(events: DataFrame) -> DataFrame:
     partial counts fold into state exactly like map-side partial
     aggregation does in batch. Batch twin: stream_countmin_cells (and
     q_countmin_sketch builds the same cells)."""
-    from ..operators.relational_ext import _CMS_DEPTH, cms_bucket
+    from ..operators.relational_ext import cms_cell_table
 
-    k = F.col("user_id").cast("string")
-    return (
-        events.select(
-            F.posexplode(F.array(*[cms_bucket(i, k) for i in range(_CMS_DEPTH)])).alias(
-                "i", "bucket"
-            )
-        )
-        .groupBy("i", "bucket")
-        .agg(F.count("*").alias("cell"))
-    )
+    return cms_cell_table(events, F.col("user_id").cast("string"))
 
 
 # ------------------------------------------- space-saving heavy hitters ----

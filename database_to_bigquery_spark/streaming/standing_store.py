@@ -44,11 +44,15 @@ scale fence:
 at 10B docs × 16 bands it is ~320 GB and must shard (per band_idx, or
 the probe tier moves to a real KV/LSM service); at the 1-10M-doc/
 store-shard granularity a 100 TB deployment would actually partition
-corpora into, it is tens of MB. Store maintenance composes with the
-streaming admissions design: admissions append as new bucketed
-partitions + a delta Bloom, compacted on the LSM cadence
-(`streaming/jobs.py`); this module implements the base-tier store and
-its probe.
+corpora into, it is tens of MB. This module is the corpus tier only:
+`build` writes the store whole; nothing appends to it. Admissions in
+`streaming/jobs.py::run_fuzzy_dedup_stream` do not go through it.
+They are written as parquet partitioned by `micro_batch_id` and
+probed from a cached base/delta tier over those files: the delta is
+the union of the admissions since the last compaction, and every
+`_ADMISSIONS_COMPACT_EVERY` batches the base is rebuilt from one scan
+of the admissions directory. That tier has no Bloom and no bucket
+layout.
 
 The probe itself is the shared batch-vs-corpus chain of
 `operators.dedup` — side prep (`_probe_side`, which also checks a

@@ -137,8 +137,9 @@ def test_stale_signature_length_fails_loudly(spark, sf_dir):
     explode slices k/bands rows per band from the wrong positions."""
     import pytest
 
+    from pyspark.sql import functions as F
+
     from database_to_bigquery_spark.operators.dedup import (
-        _MH_K,
         cross_minhash_pairs,
         minhash_signatures,
         shingles_of,
@@ -146,7 +147,7 @@ def test_stale_signature_length_fails_loudly(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents").limit(50).repartition(4, "doc_id")
     sh = shingles_of(d)
-    stale = minhash_signatures(sh, k=64 if _MH_K != 64 else 32)
+    stale = minhash_signatures(sh).withColumn("sig", F.slice("sig", 1, 64))
     with pytest.raises(ValueError, match="signature length"):
         cross_minhash_pairs(sh, sh, corpus_sig=stale, batch_sig=stale).count()
 

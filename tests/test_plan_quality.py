@@ -86,20 +86,6 @@ def test_hot_path_stays_in_codegen(spark, sf_dir, name):
     assert "*(" in plan, plan
 
 
-def test_profiler_is_single_scan(spark, sf_dir):
-    # the whole point of the inline()-based profiler/quality report is
-    # ONE pass over the table (the oracle's UNION ALL form scans k
-    # times); a regression to per-column scans multiplies 100 TB I/O.
-    import re
-
-    for name in ["q_profile_columns", "q_data_quality_checks"]:
-        plan = plan_of(spark, sf_dir, name)
-        # formatted explain prints each node in the tree AND in the
-        # numbered details section; count the numbered node entries.
-        n_scans = len(re.findall(r"\(\d+\) Scan parquet", plan))
-        assert n_scans == 1, f"{name}: expected 1 scan, plan has {n_scans}"
-
-
 def test_shuffle_shard_windows_are_partitioned(spark, sf_dir):
     # training-prep ordering must never fall into a global (single
     # partition) window — the plan's Window/Sort nodes must be keyed by
@@ -109,24 +95,6 @@ def test_shuffle_shard_windows_are_partitioned(spark, sf_dir):
         plan = plan_of(spark, sf_dir, name)
         assert "SinglePartition" not in plan, name
         assert "hashpartitioning(shard" in plan, name
-
-
-def test_behavioral_funnels_are_single_scan(spark, sf_dir):
-    # funnel & retention use whole-partition window formulations so the
-    # fact is scanned once; the naive stage-by-stage aggregate-and-join
-    # chain (the oracle's shape) scans it 6×/2× — frozen here so a
-    # refactor back to the textbook shape fails loudly.
-    import re
-
-    for name in [
-        "q_funnel_conversion",
-        "q_funnel_time_windowed",
-        "q_cohort_retention",
-        "q_new_vs_returning",
-    ]:
-        plan = plan_of(spark, sf_dir, name)
-        n_scans = len(re.findall(r"\(\d+\) Scan parquet", plan))
-        assert n_scans == 1, f"{name}: expected 1 scan, plan has {n_scans}"
 
 
 def test_runtime_bloom_filter_prunes_shuffle_join(spark, sf_dir):
@@ -360,27 +328,6 @@ def test_new_flagships_plan_shapes(spark, sf_dir):
     probe = plan_of(spark, sf_dir, "text_quality_linear_probe")
     # the only joins are with 1-row aggregates -> broadcast NLJ/HJ, no SMJ
     assert "SortMergeJoin" not in probe
-
-
-def test_scene_split_single_doc_shuffle(spark, sf_dir):
-    """mm_scene_split's lag window, island cumsum, and per-scene
-    rollup must share ONE doc_id exchange (Catalyst reuses the sort):
-    exactly one shuffle in the whole plan."""
-    plan = plan_of(spark, sf_dir, "mm_scene_split")
-    n_exchanges = plan.count("Exchange")
-    assert n_exchanges <= 2, plan[:2000]  # 1 data shuffle (+AQE wrapper slack)
-
-
-def test_decayed_engagement_single_aggregation_pass(spark, sf_dir):
-    """ts_decayed_engagement is one scan + the 1-row max-date
-    broadcast + one groupBy(user) — no extra exchanges."""
-    plan = plan_of(spark, sf_dir, "ts_decayed_engagement")
-    assert "CartesianProduct" not in plan
-    # formatted plans list each node twice (tree + detail) — count details
-    scans = [
-        ln for ln in plan.splitlines() if ln.strip().startswith("(") and "Scan parquet" in ln
-    ]
-    assert len(scans) == 2  # events for max-date + events for the sum
 
 
 def test_single_partition_classifier_on_canned_plans():

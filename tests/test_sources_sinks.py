@@ -792,7 +792,7 @@ class TestDialects:
 
         from database_to_bigquery_spark.sources.catalog import discover_tables_jdbc
 
-        with pytest.raises(ValueError, match="no catalog query"):
+        with pytest.raises(ValueError, match="jdbc:oracle"):
             discover_tables_jdbc(None, "jdbc:oracle:thin:@h:1521/db", "s", ["t"])
 
 
@@ -1059,8 +1059,10 @@ def test_dialect_identifier_and_url_resolution():
     assert dialect_for_url("jdbc:mysql://h:3306/db") is MYSQL
     assert dialect_for_url("jdbc:postgresql://h:5432/db") is POSTGRESQL
     assert dialect_for_url("jdbc:sqlserver://h:1433;databaseName=db") is MSSQL
-    assert dialect_for_url("not-a-jdbc-url") is None
-    assert dialect_for_url("jdbc:oracle:thin:@h:1521/db") is None
+    with pytest.raises(ValueError, match="not-a-jdbc-url"):
+        dialect_for_url("not-a-jdbc-url")
+    with pytest.raises(ValueError, match="jdbc:oracle"):
+        dialect_for_url("jdbc:oracle:thin:@h:1521/db")
 
     assert DERBY.stored_identifier("nat_daily") == "NAT_DAILY"
     assert POSTGRESQL.stored_identifier("Nat_Daily") == "nat_daily"
@@ -1068,6 +1070,18 @@ def test_dialect_identifier_and_url_resolution():
     assert DERBY.default_schema == "APP"
     assert POSTGRESQL.default_schema == "public"
     assert MSSQL.default_schema == "dbo"
+
+
+def test_jdbc_sink_rejects_unmodelled_url(spark):
+    """A sink URL no dialect models fails before any connection opens,
+    instead of auditing the table under another engine's rules (an
+    APPEND would baseline at 0 and fail verification on a correct
+    load)."""
+    from database_to_bigquery_spark.sinks.writers import JdbcSink, WriteMode
+
+    df = spark.createDataFrame([(1,)], "x int")
+    with pytest.raises(ValueError, match="jdbc:oracle"):
+        JdbcSink(url="jdbc:oracle:thin:@h:1521/db", table="t").write(df, WriteMode.APPEND)
 
 
 def test_xml_roundtrip_and_quarantine(spark, tmp_path):

@@ -7,56 +7,29 @@ Usage: python tools/check_oracle.py [--sf-dir DIR] [names...]
 The `rows` and `OK` lines carry the first 12 hex digits of the Spark
 result's value hash, so two trees give the same results when their
 runs differ only in the bracketed timings. The cache is cleared after
-each query, so each hash comes from that query's own plan.
+each query, so each hash comes from that query's own plan. The cell
+normalisation and the hash are perfbench/oracle.py's, so the benchmark
+and this gate hash a result the same way.
 """
 
 from __future__ import annotations
 
 import argparse
-import hashlib
 import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+# perfbench's modules import each other by bare name
+sys.path.append(os.path.join(REPO, "perfbench"))
 
-import duckdb
+import duckdb  # noqa: E402
+from oracle import normalize_cell, value_hash  # noqa: E402
 
-from database_to_bigquery_spark.data import TABLE_NAMES
-from database_to_bigquery_spark.registry import all_specs
-from database_to_bigquery_spark.session import get_spark
-
-
-def normalize_cell(v) -> str:
-    import datetime as dt
-    import decimal
-    import math
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, decimal.Decimal):
-        # Values are canonicalized so the VALUE comparison stays
-        # meaningful; the TYPE mismatch (DuckDB HUGEINT/DECIMAL vs
-        # Spark integer) is flagged separately in arrow_type_category.
-        if v == v.to_integral_value():
-            return str(int(v))
-        return repr(round(float(v), 9))
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        # match driver-style float canonicalization: repr of rounded
-        return repr(round(v, 9))
-    if isinstance(v, dt.datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, dt.date):
-        return v.isoformat()
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    if isinstance(v, bool):
-        return str(v).lower()
-    if isinstance(v, list):
-        return "[" + ",".join(normalize_cell(x) for x in v) + "]"
-    return str(v)
+from database_to_bigquery_spark.data import TABLE_NAMES  # noqa: E402
+from database_to_bigquery_spark.registry import all_specs  # noqa: E402
+from database_to_bigquery_spark.session import get_spark  # noqa: E402
 
 
 def spark_type_category(dtype: str) -> str:
@@ -110,18 +83,6 @@ def arrow_type_category(t) -> str:
     if pa.types.is_list(t) or pa.types.is_large_list(t):
         return "list"
     return "other"
-
-
-def value_hash(rows: list[tuple], colnames: list[str]) -> str:
-    order = sorted(range(len(colnames)), key=lambda i: colnames[i])
-    lines = sorted(
-        "\x1f".join(normalize_cell(r[i]) for i in order) for r in rows
-    )
-    h = hashlib.sha256()
-    for line in lines:
-        h.update(line.encode())
-        h.update(b"\n")
-    return h.hexdigest()
 
 
 def main() -> int:
