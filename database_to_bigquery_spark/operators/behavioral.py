@@ -24,13 +24,48 @@ driver state, no global sort anywhere.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..data import load_table
 from ..registry import query
 
 # ------------------------------------------------------------ funnel ----
+
+
+def funnel_stages(events: DataFrame, within_us: int | None, names: list[str]) -> DataFrame:
+    """The strictly-ordered view → click → purchase funnel as one row
+    of three user counts, aliased `names`. Each user's stage
+    timestamps are three whole-partition window minimums over the
+    SAME user_id partitioning, each conditioned on the previous
+    stage's (a step must come strictly after it and, unless
+    `within_us` is None, at most `within_us` microseconds after it);
+    then one count-distinct rollup. The plan is one events scan, one
+    user_id exchange and one single-row rollup. Callers:
+    q_funnel_conversion (unbounded), q_funnel_time_windowed (1 hour)."""
+    w = Window.partitionBy("user_id")
+
+    def us(c: str) -> Column:
+        return F.unix_micros(F.col(c).cast("timestamp"))
+
+    def first_after(event: str, prev: str) -> Column:
+        cond = (F.col("event_type") == event) & (F.col("ts") > F.col(prev))
+        if within_us is not None:
+            cond = cond & (us("ts") <= us(prev) + within_us)
+        return F.min(F.when(cond, F.col("ts"))).over(w)
+
+    staged = (
+        events.select("user_id", "event_type", "ts")
+        .withColumn("view_ts", F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w))
+        .withColumn("click_ts", first_after("click", "view_ts"))
+        .withColumn("buy_ts", first_after("purchase", "click_ts"))
+    )
+    return staged.agg(
+        *[
+            F.count_distinct(F.when(F.col(c).isNotNull(), F.col("user_id"))).alias(n)
+            for c, n in zip(["view_ts", "click_ts", "buy_ts"], names)
+        ]
+    )
 
 
 @query(
@@ -61,50 +96,15 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strictly-ordered funnel: users whose first view precedes a click
     that precedes a purchase.
 
-    Single-scan formulation: three whole-partition window minimums over
-    the SAME user_id partitioning compute the stage timestamps in
-    sequence (each conditioned on the previous stage's), so the plan is
-    one events scan + one user_id exchange + one single-row rollup —
-    versus the textbook per-stage aggregate-and-join-back chain, which
-    scans the fact 6× and shuffles 8× for identical results (that chain
-    is what the DuckDB oracle runs)."""
-    e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    w = Window.partitionBy("user_id")
-    staged = (
-        e.withColumn(
-            "view_ts",
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "click_ts",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click") & (F.col("ts") > F.col("view_ts")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "buy_ts",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") > F.col("click_ts")),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-    )
-    return staged.agg(
-        F.count_distinct(
-            F.when(F.col("view_ts").isNotNull(), F.col("user_id"))
-        ).alias("users_view"),
-        F.count_distinct(
-            F.when(F.col("click_ts").isNotNull(), F.col("user_id"))
-        ).alias("users_click"),
-        F.count_distinct(
-            F.when(F.col("buy_ts").isNotNull(), F.col("user_id"))
-        ).alias("users_purchase"),
+    Single-scan formulation (`funnel_stages`): one events scan + one
+    user_id exchange + one single-row rollup — versus the textbook
+    per-stage aggregate-and-join-back chain, which scans the fact 6×
+    and shuffles 8× for identical results (that chain is what the
+    DuckDB oracle runs)."""
+    return funnel_stages(
+        load_table(spark, sf_dir, "events"),
+        None,
+        ["users_view", "users_click", "users_purchase"],
     )
 
 
@@ -546,51 +546,10 @@ def q_funnel_time_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional window MIN, so tightening or widening the conversion
     window never changes the plan shape. The oracle runs the textbook
     6-scan aggregate-and-join-back chain for the same answer."""
-    e = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    w = Window.partitionBy("user_id")
-    hour_us = 3600 * 1_000_000
-
-    def us(c):
-        return F.unix_micros(c.cast("timestamp"))
-
-    staged = (
-        e.withColumn(
-            "view_ts",
-            F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w),
-        )
-        .withColumn(
-            "click_ts",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click")
-                    & (F.col("ts") > F.col("view_ts"))
-                    & (us(F.col("ts")) <= us(F.col("view_ts")) + hour_us),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "buy_ts",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts") > F.col("click_ts"))
-                    & (us(F.col("ts")) <= us(F.col("click_ts")) + hour_us),
-                    F.col("ts"),
-                )
-            ).over(w),
-        )
-    )
-    return staged.agg(
-        F.count_distinct(
-            F.when(F.col("view_ts").isNotNull(), F.col("user_id"))
-        ).alias("users_view"),
-        F.count_distinct(
-            F.when(F.col("click_ts").isNotNull(), F.col("user_id"))
-        ).alias("users_click_1h"),
-        F.count_distinct(
-            F.when(F.col("buy_ts").isNotNull(), F.col("user_id"))
-        ).alias("users_purchase_1h"),
+    return funnel_stages(
+        load_table(spark, sf_dir, "events"),
+        3600 * 1_000_000,
+        ["users_view", "users_click_1h", "users_purchase_1h"],
     )
 
 

@@ -394,6 +394,27 @@ def text_char_entropy_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def corpus_report(quality: DataFrame, final: DataFrame) -> DataFrame:
+    """The corpus-prep funnel report, one row per source: docs in,
+    docs past the quality gate (q ≥ 0.6), docs past dedup and their
+    whitespace-token total. `quality` holds (doc_id, source, q) for
+    every document, `final` (doc_id, nw) for each survivor of the
+    dedup, nw its whitespace-token count. One left join on doc_id and
+    one groupBy(source). Callers: llm_corpus_prepare,
+    llm_corpus_prepare_lsh."""
+    return (
+        quality.alias("q")
+        .join(final.alias("f"), "doc_id", "left")
+        .groupBy(F.col("q.source").alias("source"))
+        .agg(
+            F.count("*").cast("long").alias("docs_in"),
+            F.count(F.when(F.col("q.q") >= 0.6, 1)).cast("long").alias("docs_quality"),
+            F.count("f.nw").cast("long").alias("docs_final"),
+            F.coalesce(F.sum("f.nw"), F.lit(0)).cast("long").alias("ws_tokens_final"),
+        )
+    )
+
+
 @query(
     "llm_corpus_prepare",
     scale_twin="llm_corpus_prepare_lsh",
@@ -445,8 +466,8 @@ def llm_corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
          Jaccard ≥ 0.6; keep-first policy — any doc appearing as the
          higher id of a near-dup pair is dropped), using the same
          shingle machinery as dedup_ngram_jaccard,
-      3. per-source funnel report: docs in → past quality → past dedup
-         → surviving whitespace-token budget.
+      3. per-source funnel report (`corpus_report`): docs in → past
+         quality → past dedup → surviving whitespace-token budget.
 
     At 100 TB step 2 swaps to dedup_minhash_lsh candidates (same
     output contract, sub-quadratic) — the exact form here is what
@@ -488,23 +509,9 @@ def llm_corpus_prepare(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     final = kept_q.join(dups, "doc_id", "left_anti")
-
-    report = (
-        quality.alias("q")
-        .join(
-            final.select("doc_id", F.size(F.split(F.col("text"), " ")).alias("nw")).alias("f"),
-            "doc_id",
-            "left",
-        )
-        .groupBy(F.col("q.source").alias("source"))
-        .agg(
-            F.count("*").cast("long").alias("docs_in"),
-            F.count(F.when(F.col("q.q") >= 0.6, 1)).cast("long").alias("docs_quality"),
-            F.count("f.nw").cast("long").alias("docs_final"),
-            F.coalesce(F.sum("f.nw"), F.lit(0)).cast("long").alias("ws_tokens_final"),
-        )
+    return corpus_report(
+        quality, final.select("doc_id", F.size(F.split(F.col("text"), " ")).alias("nw"))
     )
-    return report
 
 
 @query("text_compression_ratio")  # zlib not in DuckDB → rows-only check
@@ -906,20 +913,4 @@ def llm_corpus_prepare_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = minhash_verified_pairs(sh)  # doc_a < doc_b, jaccard >= 0.6
     dups = pairs.select(F.col("doc_b").alias("doc_id")).distinct()
     final = slim.filter(F.col("q") >= 0.6).join(dups, "doc_id", "left_anti")
-
-    report = (
-        slim.alias("q")
-        .join(final.select("doc_id", "nw").alias("f"), "doc_id", "left")
-        .groupBy(F.col("q.source").alias("source"))
-        .agg(
-            F.count("*").cast("long").alias("docs_in"),
-            F.count(F.when(F.col("q.q") >= 0.6, 1)).cast("long").alias(
-                "docs_quality"
-            ),
-            F.count("f.nw").cast("long").alias("docs_final"),
-            F.coalesce(F.sum("f.nw"), F.lit(0)).cast("long").alias(
-                "ws_tokens_final"
-            ),
-        )
-    )
-    return report
+    return corpus_report(slim, final.select("doc_id", "nw"))

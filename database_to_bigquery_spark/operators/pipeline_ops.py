@@ -201,6 +201,25 @@ def s14_audit_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
+def cdc_snapshots(o: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Yesterday's and today's full extracts of an orders relation
+    `o`, derived deterministically so the oracles can reproduce them:
+    "old" drops keys ≡3 (mod 10); "new" drops keys ≡7 and bumps the
+    o_totalprice of keys ≡0 (mod 5). The bump is an exact +1000.0
+    (same IEEE add in both engines) rather than a ×1.1-then-ROUND,
+    whose half-ties Spark (BigDecimal HALF_UP) and DuckDB (double
+    rounding) resolve differently. Both keep `o`'s columns. Callers:
+    q_snapshot_diff_cdc, q_scd2_apply_changes and
+    q_ivm_join_maintenance."""
+    key = F.col("o_orderkey")
+    old = o.filter(key % 10 != 3)
+    new = o.filter(key % 10 != 7).withColumn(
+        "o_totalprice",
+        F.when(key % 5 == 0, F.col("o_totalprice") + 1000.0).otherwise(F.col("o_totalprice")),
+    )
+    return old, new
+
+
 @query(
     "q_snapshot_diff_cdc",
     headline=True,
@@ -232,12 +251,7 @@ def q_snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     provide one (the reference's fallback is a full refresh,
     etl_process.py --daily).
 
-    The two snapshots are derived deterministically from orders so the
-    oracle can reproduce them: "old" drops keys ≡3 (mod 10), "new"
-    drops keys ≡7 and bumps the price of keys ≡0 (mod 5). The bump is
-    an exact +1000.0 (same IEEE add in both engines) rather than a
-    ×1.1-then-ROUND, whose half-ties Spark (BigDecimal HALF_UP) and
-    DuckDB (double rounding) resolve differently.
+    The two snapshots are `cdc_snapshots` of orders.
 
     Scale: ONE full-outer sort-merge join on the primary key — the
     minimal possible cost for snapshot differencing (every row of both
@@ -245,16 +259,8 @@ def q_snapshot_diff_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     be written bucketed by the key (sinks/layout.py) so the diff joins
     with zero exchange; the unchanged majority is filtered before
     anything downstream shuffles again."""
-    o = load_table(spark, sf_dir, "orders")
-    old = o.filter(F.col("o_orderkey") % 10 != 3).select(
-        "o_orderkey", "o_totalprice"
-    )
-    new = o.filter(F.col("o_orderkey") % 10 != 7).select(
-        "o_orderkey",
-        F.when(F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + 1000.0)
-        .otherwise(F.col("o_totalprice"))
-        .alias("o_totalprice"),
-    )
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    old, new = cdc_snapshots(o)
     j = old.alias("old").join(new.alias("new"), "o_orderkey", "full_outer")
     op, np = F.col("old.o_totalprice"), F.col("new.o_totalprice")
     return (
@@ -394,16 +400,8 @@ def q_scd2_apply_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     five disposition branches are projections of that single joined
     relation: Spark computes the join once and fans out map-side;
     history never rewrites, only closes."""
-    o = load_table(spark, sf_dir, "orders")
-    old = o.filter(F.col("o_orderkey") % 10 != 3).select(
-        "o_orderkey", "o_totalprice"
-    )
-    new = o.filter(F.col("o_orderkey") % 10 != 7).select(
-        "o_orderkey",
-        F.when(F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + 1000.0)
-        .otherwise(F.col("o_totalprice"))
-        .alias("o_totalprice"),
-    )
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
+    old, new = cdc_snapshots(o)
     j = (
         old.alias("old")
         .join(new.alias("new"), "o_orderkey", "full_outer")
@@ -472,17 +470,10 @@ def q_ivm_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     files, and V_old merges with ΔV on the group key: total cost is
     O(|delta| + |V|), independent of the base table size. That
     independence is the entire point of IVM at 100 TB."""
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
+    old, new = cdc_snapshots(
+        load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_totalprice")
     )
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    old = o.filter(F.col("o_orderkey") % 10 != 3)
-    new = o.filter(F.col("o_orderkey") % 10 != 7).withColumn(
-        "o_totalprice",
-        F.when(F.col("o_orderkey") % 5 == 0, F.col("o_totalprice") + 1000.0).otherwise(
-            F.col("o_totalprice")
-        ),
-    )
     # the materialized view as of yesterday
     v_old = (
         old.join(F.broadcast(c), old.o_custkey == c.c_custkey)

@@ -471,6 +471,38 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def equi_depth_buckets(o: DataFrame, percentile) -> DataFrame:
+    """The equi-depth histogram of orders' o_totalprice in 10 buckets:
+    the nine decile thresholds from one array-valued aggregate
+    `percentile(column, quantiles)`, that one row broadcast back, a
+    map-only CASE assigning each order to the first threshold it does
+    not exceed, then a partial-aggregated rollup (bucket, n_orders,
+    lo, hi). Callers:
+    q_histogram_equi_depth (exact `F.percentile`),
+    q_histogram_equi_depth_approx (`F.approx_percentile`)."""
+    # ONE array-valued aggregate (r10): nine scalar F.percentile calls
+    # each buffered ALL n values in their own aggregation buffer (9×
+    # the memory and sort work of the single heaviest aggregate in
+    # SCALING.md), and nine approx_percentile calls kept nine GK
+    # sketches; the array form computes every threshold from one
+    # shared buffer with identical per-element results.
+    th = o.agg(
+        percentile("o_totalprice", F.array(*[F.lit(q / 10) for q in range(1, 10)])).alias("ts")
+    ).select(*[F.element_at("ts", q).alias(f"t{q}") for q in range(1, 10)])
+    bucket = F.lit(9)
+    for q in range(9, 0, -1):
+        bucket = F.when(F.col("o_totalprice") <= F.col(f"t{q}"), q - 1).otherwise(bucket)
+    return (
+        o.join(F.broadcast(th))
+        .groupBy(bucket.cast("int").alias("bucket"))
+        .agg(
+            F.count("*").cast("long").alias("n_orders"),
+            F.round(F.min("o_totalprice"), 2).alias("lo"),
+            F.round(F.max("o_totalprice"), 2).alias("hi"),
+        )
+    )
+
+
 @query(
     "q_histogram_equi_depth",
     scale_twin="q_histogram_equi_depth_approx",
@@ -509,37 +541,14 @@ def q_histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     THIS form is the oracle-checkable exact twin; production schedules
     q_histogram_equi_depth_approx (identical plan, GK-sketch
     thresholds, bounded memory) via production_specs()."""
-    o = load_table(spark, sf_dir, "orders")
-    # ONE array-percentile aggregate (r10): nine scalar F.percentile
-    # calls each buffered ALL n values in their own aggregation buffer
-    # (9× the memory and sort work of the single heaviest aggregate in
-    # SCALING.md); the array form computes every threshold from one
-    # shared buffer with identical per-element results.
-    th = o.agg(
-        F.percentile(
-            "o_totalprice", F.array(*[F.lit(q / 10) for q in range(1, 10)])
-        ).alias("ts")
-    ).select(*[F.element_at("ts", q).alias(f"t{q}") for q in range(1, 10)])
-    bucket = F.lit(9)
-    for q in range(9, 0, -1):
-        bucket = F.when(
-            F.col("o_totalprice") <= F.col(f"t{q}"), q - 1
-        ).otherwise(bucket)
-    return (
-        o.join(F.broadcast(th))
-        .groupBy(bucket.cast("int").alias("bucket"))
-        .agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.round(F.min("o_totalprice"), 2).alias("lo"),
-            F.round(F.max("o_totalprice"), 2).alias("hi"),
-        )
-    )
+    return equi_depth_buckets(load_table(spark, sf_dir, "orders"), F.percentile)
 
 
 @query("q_histogram_equi_depth_approx")  # approximate thresholds → rows-only check
 def q_histogram_equi_depth_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production form of q_histogram_equi_depth: identical plan —
-    one threshold-aggregate row broadcast back over a map-only CASE
+    """Production form of q_histogram_equi_depth: identical plan, as
+    both run the shared builder `equi_depth_buckets` — one
+    threshold-aggregate row broadcast back over a map-only CASE
     bucket assignment — but the nine thresholds come from
     ``approx_percentile`` (Greenwald-Khanna sketch, accuracy 1e-4):
     the aggregation buffer is bounded at O(1/ε · log(εn)) REGARDLESS
@@ -548,28 +557,7 @@ def q_histogram_equi_depth_approx(spark: SparkSession, sf_dir: str) -> DataFrame
     value oracle; the equi-depth property itself is asserted in
     tests/test_properties.py (every bucket within a few % of n/10 at
     the sketch accuracy)."""
-    o = load_table(spark, sf_dir, "orders")
-    # one array-form sketch instead of nine independent GK sketches
-    # (r10, same change as the exact twin — identical per-element
-    # results, one shared sketch buffer)
-    th = o.agg(
-        F.approx_percentile(
-            "o_totalprice",
-            F.array(*[F.lit(q / 10) for q in range(1, 10)]),
-            F.lit(10000),
-        ).alias("ts")
-    ).select(*[F.element_at("ts", q).alias(f"t{q}") for q in range(1, 10)])
-    bucket = F.lit(9)
-    for q in range(9, 0, -1):
-        bucket = F.when(
-            F.col("o_totalprice") <= F.col(f"t{q}"), q - 1
-        ).otherwise(bucket)
-    return (
-        o.join(F.broadcast(th))
-        .groupBy(bucket.cast("int").alias("bucket"))
-        .agg(
-            F.count("*").cast("long").alias("n_orders"),
-            F.round(F.min("o_totalprice"), 2).alias("lo"),
-            F.round(F.max("o_totalprice"), 2).alias("hi"),
-        )
+    return equi_depth_buckets(
+        load_table(spark, sf_dir, "orders"),
+        lambda c, qs: F.approx_percentile(c, qs, F.lit(10000)),
     )

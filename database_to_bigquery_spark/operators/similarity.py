@@ -21,8 +21,12 @@ rows-only joins score cells with numpy matmuls inside Arrow-batched
 pandas functions. The "vector-cell primitives" section below holds
 what they share: the DECIMAL-exact centroid aggregate (also used by
 dedup_semdedup), the driver-side spherical Lloyd trainer, the
-per-cell top-k kernel, the global kNN merge, and the one IVF probe
-path that every IVF operator runs through.
+per-cell top-k kernel, `top_k` (the one ranked tail of every kNN
+query: k best per key, ties on neighbor_id, score to 4 dp), the
+global kNN merge, and the one IVF probe path that every IVF operator
+runs through. The product-quantization section holds the one PQ
+scorer (`pq_slices`, `pq_codebook`, `pq_adc`) that sim_topk_pq and
+sim_topk_ivfpq share.
 """
 
 from __future__ import annotations
@@ -46,13 +50,21 @@ def _dot(x: str | Column, y: str | Column) -> Column:
     return F.aggregate(F.zip_with(x, y, lambda u, v: u * v), F.lit(0.0), lambda a, z: a + z)
 
 
+def _d2(x: str, y: str) -> Column:
+    """Squared L2 distance expanded into three index-ordered folds
+    (x·x − 2x·y + y·y), the form the DuckDB oracles write."""
+    return _dot(x, x) - 2 * _dot(x, y) + _dot(y, y)
+
+
 def _as_double(col: str) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
 
 
 # ------------------------------------------- vector-cell primitives ----
-# exact_centroids, _unit, _head_sample, _lloyd, cell_topk and knn_merge,
-# then the IVF probe path in three steps:
+# exact_centroids, _unit, _head_sample, _lloyd, cell_topk, top_k (the
+# ranked tail of knn_merge, rank_in_cells and the exact, LSH, SQ8, PQ
+# and IVFADC top-k queries) and knn_merge, then the IVF probe path in
+# three steps:
 # - label-cell probe: label_probe (sim_topk_ivf, sim_topk_ivfpq,
 #   sim_ivf_incremental_add, ivf_probe), then rank_in_cells, the exact
 #   top-k within the probed cells (sim_topk_ivf, ivf_probe);
@@ -61,6 +73,8 @@ def _as_double(col: str) -> Column:
 #   train_ivf2_centroids);
 # - per-cell scorer: visits_knn, for the self-join (the flat and
 #   two-level kNN joins) and the asymmetric probe (ivf_probe_trained).
+# The PQ scorer (pq_slices, pq_codebook, pq_adc) heads the
+# product-quantization section.
 
 
 def exact_centroids(df: DataFrame, key: str) -> DataFrame:
@@ -160,24 +174,38 @@ def cell_topk(Q, qid, M, mid, k: int):
     return out[np.isfinite(out["cos"])]
 
 
-def knn_merge(cand: DataFrame, key: str, k: int) -> DataFrame:
-    """Global merge of per-cell (or per-bucket) kNN candidates (key,
-    neighbor_id, cos): a pair scored in several cells keeps its max
-    cosine, then each `key` keeps its k best, ties broken on
-    neighbor_id. Output (key, neighbor_id, cosine rounded to 4 dp,
-    rnk ≤ k); the shuffle carries 24-byte rows."""
-    w = W.partitionBy(key).orderBy(F.col("cos").desc(), "neighbor_id")
+def top_k(
+    scored: DataFrame, key: str, score: str, descending: bool, k: int, name: str
+) -> DataFrame:
+    """The kNN top-k tail: each `key` of a scored (key, neighbor_id,
+    score) relation keeps its k best neighbors by `score` (descending
+    for a similarity, ascending for a distance), ties broken on
+    neighbor_id. Output (key, neighbor_id, score as double rounded to
+    4 dp under `name`, rnk int ≤ k). Callers: knn_merge,
+    rank_in_cells, sim_topk_bruteforce, sim_topk_lsh, sim_topk_sq8,
+    sim_topk_pq, sim_topk_ivfpq and sim_knn_join_exact."""
+    order = F.col(score).desc() if descending else F.col(score)
+    w = W.partitionBy(key).orderBy(order, "neighbor_id")
     return (
-        cand.groupBy(key, "neighbor_id")
-        .agg(F.max("cos").alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
+        scored.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select(
             key,
             "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
+            F.round(F.col(score).cast("double"), 4).alias(name),
             F.col("rnk").cast("int").alias("rnk"),
         )
+    )
+
+
+def knn_merge(cand: DataFrame, key: str, k: int) -> DataFrame:
+    """Global merge of per-cell (or per-bucket) kNN candidates (key,
+    neighbor_id, cos): a pair scored in several cells keeps its max
+    cosine, then `top_k` keeps each `key`'s k best as (key,
+    neighbor_id, cosine, rnk); the shuffle carries 24-byte rows."""
+    return top_k(
+        cand.groupBy(key, "neighbor_id").agg(F.max("cos").alias("cos")),
+        key, "cos", True, k, "cosine",
     )
 
 
@@ -209,24 +237,16 @@ def rank_in_cells(probe: DataFrame, standing: DataFrame, k: int) -> DataFrame:
     """The label-cell probe's tail: each probed query against the
     members (vec_id, label, v) of its probed cells by exact cosine,
     self-pairs excluded, its `k` best kept, ties broken on neighbor_id.
-    The probe rows (|queries|·n_probe) broadcast. Output (query_id,
-    neighbor_id, cosine rounded to 4 dp, rnk ≤ k)."""
+    The probe rows (|queries|·n_probe) broadcast. Output `top_k`'s
+    (query_id, neighbor_id, cosine, rnk)."""
     cand_cos = _dot("qv", "v") / (F.col("_nq") * F.sqrt(_dot("v", "v")))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
+    scored = (
         F.broadcast(probe)
         .join(standing.select(F.col("vec_id").alias("neighbor_id"), "label", "v"), "label")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cand_cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
     )
+    return top_k(scored, "query_id", "cos", True, k, "cosine")
 
 
 def _flat_route(C, width: int):
@@ -345,22 +365,14 @@ def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sqrt(_dot("v", "v")).alias("_nc"),
     )
     cos = _dot("qv", "cv") / (F.col("_nq") * F.col("_nc"))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
+    scored = (
         F.broadcast(bounded(q, _N_QUERIES))
         .join(c, F.col("neighbor_id") != F.col("query_id"))
         # project the vectors away before the ranking window's
         # exchange — only (query_id, neighbor_id, cos) shuffles
         .select("query_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
     )
+    return top_k(scored, "query_id", "cos", True, _TOP_K, "cosine")
 
 
 # Deterministic random hyperplanes (seed fixed → stable buckets).
@@ -465,22 +477,14 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bucket",
     )
     cos = _dot("qv", "cv") / (F.col("_nq") * F.col("_nc"))
-    w = W.partitionBy("query_id").orderBy(F.col("cos").desc(), F.col("neighbor_id"))
-    return (
+    scored = (
         F.broadcast(bounded(q, _N_QUERIES * _LSH_TABLES))
         .join(cand, "bucket")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos.alias("cos"))
         .distinct()
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
     )
+    return top_k(scored, "query_id", "cos", True, _TOP_K, "cosine")
 
 
 @query(
@@ -664,17 +668,7 @@ def sim_topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exchange — only (query_id, neighbor_id, cos8) shuffles
         .select("query_id", "neighbor_id", cos8.alias("cos8"))
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cos8").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos8", 4).alias("cosine_sq8"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    return top_k(scored, "query_id", "cos8", True, _TOP_K, "cosine_sq8")
 
 
 # ------------------------------------------------------- k-means ----
@@ -761,7 +755,7 @@ def sim_kmeans_2iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         # compares d2 then cl, exactly the window's (d2, cl) orderBy
         # (d2 is never NaN/-0.0 here: squared distances from finite
         # dot products).
-        d2 = _dot("v", "v") - 2 * _dot("v", "cv") + _dot("cv", "cv")
+        d2 = _d2("v", "cv")
         return (
             vecs.join(F.broadcast(bounded(cents, _KMEANS_K)))
             .select(
@@ -1142,6 +1136,63 @@ _PQ_SUB = 8  # dims per subspace
 _PQ_K = 16  # codewords per subspace (seeds: vec_id < 16)
 
 
+def pq_slices(df: DataFrame, keys: list[str], vec: str, name: str) -> DataFrame:
+    """One row per (keys, subspace s < _PQ_M) holding the s-th
+    _PQ_SUB-long slice of the `vec` array under `name`. Callers:
+    sim_topk_pq (vectors), sim_topk_ivfpq (vector and query
+    residuals)."""
+    return df.select(
+        *keys, F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("s"), vec
+    ).select(*keys, "s", F.expr(f"slice({vec}, s * {_PQ_SUB} + 1, {_PQ_SUB})").alias(name))
+
+
+def pq_codebook(sub: DataFrame) -> DataFrame:
+    """The deterministic seed codebook (code, s, cs): the slices of
+    the first _PQ_K vectors of a `pq_slices` (vec_id, s, xs)
+    relation. Callers: sim_topk_pq, sim_topk_ivfpq."""
+    return sub.filter(F.col("vec_id") < _PQ_K).select(
+        F.col("vec_id").alias("code"), "s", F.col("xs").alias("cs")
+    )
+
+
+def pq_adc(
+    sub: DataFrame, cb: DataFrame, qsub: DataFrame, cell: list[str], qsub_rows: int
+) -> DataFrame:
+    """The PQ scorer: encode each (vec_id, *cell, s, xs) slice of
+    `sub` as its nearest codeword in `cb`, build the lookup table of
+    partial d² from each (query_id, *cell, s, qs) query slice of
+    `qsub` (at most `qsub_rows` rows) to every codeword, and sum the
+    table entries of each vector's codes (ADC) in DECIMAL(25,10), so
+    the sum does not depend on order. Vectors meet only the queries
+    that share their `cell` keys; self-pairs are excluded. Output
+    (query_id, neighbor_id, score). Callers: sim_topk_pq (no cell
+    keys), sim_topk_ivfpq (`label`).
+
+    The argmin is min(struct(pd2, code)), a partial aggregation (the
+    sim_kmeans_2iter pattern) instead of a row_number window: the
+    _PQ_K candidate rows per (vec, subspace) reduce map-side before
+    any exchange. (A min over a struct plans as a SortAggregate, so
+    the map side still sorts them.) Struct ordering (pd2, then code)
+    equals the oracles' ROW_NUMBER ORDER BY; a cell key is
+    functionally dependent on vec_id, so grouping by it changes
+    nothing."""
+    book = F.broadcast(bounded(cb, _PQ_K * _PQ_M))
+    enc = (
+        sub.join(book, "s")
+        .withColumn("pd2", _d2("xs", "cs"))
+        .groupBy("vec_id", *cell, "s")
+        .agg(F.min(F.struct("pd2", "code")).alias("b"))
+        .select("vec_id", *cell, "s", F.col("b.code").alias("code"))
+    )
+    lut = qsub.join(book, "s").select("query_id", *cell, "s", "code", _d2("qs", "cs").alias("qd2"))
+    return (
+        enc.join(F.broadcast(bounded(lut, qsub_rows * _PQ_K)), [*cell, "s", "code"])
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+        .agg(F.sum(F.col("qd2").cast("decimal(25,10)")).alias("score"))
+    )
+
+
 @query(
     "sim_topk_pq",
     oracle=f"""
@@ -1200,63 +1251,24 @@ def sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranking ties and near-ties resolve identically.
 
     Scale: encoding is a {_PQ_K}-row-per-subspace broadcast join +
-    argmin window — map-side, linear in corpus; the code table (n×m
-    smallints) is ~1% of the raw vectors; ADC is a broadcast of the
-    (queries × m × k) LUT against the code table, one narrow
-    aggregation per (query, vector). This is the memory-bound tier
+    argmin partial aggregate (`pq_adc`) — map-side, linear in corpus;
+    the code table (n×m smallints) is ~1% of the raw vectors; ADC is
+    a broadcast of the (queries × m × k) LUT against the code table,
+    one narrow aggregation per (query, vector). This is the memory-bound tier
     between SQ8 (4×) and IVF cell pruning — at 100 TB, IVF picks the
     cells and PQ scores inside them (IVFADC)."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", _as_double("embedding").alias("v")
     )
     # one (vec, subspace) row per slice; spread the single-file input
-    sub = (
-        e.repartition(spark.sparkContext.defaultParallelism, "vec_id")
-        .select(
-            "vec_id",
-            F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("s"),
-            "v",
-        )
-        .select("vec_id", "s", F.expr(f"slice(v, s * {_PQ_SUB} + 1, {_PQ_SUB})").alias("xs"))
+    sub = pq_slices(
+        e.repartition(spark.sparkContext.defaultParallelism, "vec_id"), ["vec_id"], "v", "xs"
     )
-    cb = sub.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("code"), "s", F.col("xs").alias("cs")
+    qsub = sub.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), "s", F.col("xs").alias("qs")
     )
-    pd2 = _dot("xs", "xs") - 2 * _dot("xs", "cs") + _dot("cs", "cs")
-    ew = W.partitionBy("vec_id", "s").orderBy("pd2", "code")
-    enc = (
-        sub.join(F.broadcast(bounded(cb, _PQ_K * _PQ_M)), "s")
-        .withColumn("pd2", pd2)
-        .withColumn("rn", F.row_number().over(ew))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "s", "code")
-    )
-    lut = (
-        sub.filter(F.col("vec_id") < _N_QUERIES)
-        .select(F.col("vec_id").alias("query_id"), "s", F.col("xs").alias("qs"))
-        .join(F.broadcast(bounded(cb, _PQ_K * _PQ_M)), "s")
-        .select(
-            "query_id", "s", "code",
-            (_dot("qs", "qs") - 2 * _dot("qs", "cs") + _dot("cs", "cs")).alias("qd2"),
-        )
-    )
-    scored = (
-        enc.join(F.broadcast(bounded(lut, _N_QUERIES * _PQ_M * _PQ_K)), ["s", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum(F.col("qd2").cast("decimal(25,10)")).alias("score"))
-    )
-    w = W.partitionBy("query_id").orderBy("score", "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("score").cast("double"), 4).alias("approx_d2"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    scored = pq_adc(sub, pq_codebook(sub), qsub, [], _N_QUERIES * _PQ_M)
+    return top_k(scored, "query_id", "score", False, _TOP_K, "approx_d2")
 
 
 # ------------------------------------------------- IVFADC composition ----
@@ -1367,71 +1379,15 @@ def sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "label", F.zip_with("v", "cv", lambda u, c: u - c).alias("r")
         )
     )
-    sub = res.select(
-        "vec_id",
-        "label",
-        F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("s"),
-        "r",
-    ).select("vec_id", "label", "s", F.expr(f"slice(r, s * {_PQ_SUB} + 1, {_PQ_SUB})").alias("xs"))
-    cb = sub.filter(F.col("vec_id") < _PQ_K).select(
-        F.col("vec_id").alias("code"), "s", F.col("xs").alias("cs")
-    ).persist()
-    pd2 = _dot("xs", "xs") - 2 * _dot("xs", "cs") + _dot("cs", "cs")
-    # nearest-codeword argmin as min(struct(pd2, code)) — a partial
-    # aggregation (the sim_kmeans_2iter r10 pattern) instead of a
-    # row_number window: the K candidate rows per (vec, subspace)
-    # reduce map-side before any exchange and no sort runs. Struct
-    # ordering (pd2 asc, code asc) equals the window's ORDER BY;
-    # label is functionally dependent on vec_id, so adding it to the
-    # grouping keys changes nothing.
-    enc = (
-        sub.join(F.broadcast(bounded(cb, _PQ_K * _PQ_M)), "s")
-        .withColumn("pd2", pd2)
-        .groupBy("vec_id", "label", "s")
-        .agg(F.min(F.struct("pd2", "code")).alias("b"))
-        .select("vec_id", "label", "s", F.col("b.code").alias("code"))
-    )
+    sub = pq_slices(res, ["vec_id", "label"], "r", "xs")
+    cb = pq_codebook(sub).persist()
     probe = label_probe(e.filter(F.col("vec_id") < _N_QUERIES), cent, _N_PROBE)
-    qsub = (
-        probe.join(F.broadcast(cent), "label")
-        .select(
-            "query_id", "label", F.zip_with("qv", "cv", lambda u, c: u - c).alias("qr")
-        )
-        .select(
-            "query_id",
-            "label",
-            F.explode(F.sequence(F.lit(0), F.lit(_PQ_M - 1))).alias("s"),
-            "qr",
-        )
-        .select(
-            "query_id", "label", "s",
-            F.expr(f"slice(qr, s * {_PQ_SUB} + 1, {_PQ_SUB})").alias("qs"),
-        )
+    qres = probe.join(F.broadcast(cent), "label").select(
+        "query_id", "label", F.zip_with("qv", "cv", lambda u, c: u - c).alias("qr")
     )
-    lut = qsub.join(F.broadcast(bounded(cb, _PQ_K * _PQ_M)), "s").select(
-        "query_id", "label", "s", "code",
-        (_dot("qs", "qs") - 2 * _dot("qs", "cs") + _dot("cs", "cs")).alias("qd2"),
-    )
-    scored = (
-        enc.join(
-            F.broadcast(bounded(lut, _N_QUERIES * _N_PROBE * _PQ_M * _PQ_K)),
-            ["label", "s", "code"],
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum(F.col("qd2").cast("decimal(25,10)")).alias("score"))
-    )
-    w = W.partitionBy("query_id").orderBy("score", "neighbor_id")
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _TOP_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("score").cast("double"), 4).alias("approx_d2"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
+    qsub = pq_slices(qres, ["query_id", "label"], "qr", "qs")
+    scored = pq_adc(sub, cb, qsub, ["label"], _N_QUERIES * _N_PROBE * _PQ_M)
+    return top_k(scored, "query_id", "score", False, _TOP_K, "approx_d2")
 
 
 # ------------------------------------------- semantic decontamination ----
@@ -1622,17 +1578,9 @@ def sim_knn_join_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
                              F.col("nrm").alias("nb"))), "neighbor_id"
     )
     cos = _dot("va", "vb") / (F.col("na") * F.col("nb"))
-    w = W.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor_id")
-    return (
-        scored.select("vec_id", "neighbor_id", cos.alias("cos"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _KNN_K)
-        .select(
-            "vec_id",
-            "neighbor_id",
-            F.round("cos", 4).alias("cosine"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
+    return top_k(
+        scored.select("vec_id", "neighbor_id", cos.alias("cos")),
+        "vec_id", "cos", True, _KNN_K, "cosine",
     )
 
 

@@ -10,7 +10,7 @@ DataFrame like everything else and joins distribute normally.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..data import load_table
@@ -190,6 +190,33 @@ def ts_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def scd2_versions(ev: DataFrame) -> DataFrame:
+    """The SCD2 versions of the signup dimension: each signup event of
+    `ev` is one version (user_id, valid_from, valid_to, version_id,
+    value rounded to 4 dp), valid from its ts up to the next version's
+    ts (LEAD over ts, then event_id, so same-timestamp changes get
+    deterministic edges), open-ended (valid_to NULL) for the current
+    one. One shuffle on the key. Callers: ts_scd2_intervals,
+    ts_point_in_time_join, ts_scd2_as_of_snapshot and
+    ts_time_travel_diff."""
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    return ev.filter(F.col("event_type") == "signup").select(
+        "user_id",
+        F.col("ts").alias("valid_from"),
+        F.lead("ts").over(w).alias("valid_to"),
+        F.col("event_id").alias("version_id"),
+        F.round("value", 4).alias("value"),
+    )
+
+
+def scd2_valid_at(t: Column) -> Column:
+    """True where an `scd2_versions` row is the version valid at `t`:
+    valid_from ≤ t < valid_to, with an open valid_to. Callers:
+    ts_point_in_time_join (t = each purchase's ts),
+    ts_scd2_as_of_snapshot and ts_time_travel_diff."""
+    return (F.col("valid_from") <= t) & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
+
+
 @query(
     "ts_scd2_intervals",
     oracle="""
@@ -211,18 +238,14 @@ def ts_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's truncate-reload sink (reference
     ``bigquery_operations.py:36``) cannot express.
 
-    One shuffle on the key; LEAD over (ts, event_id) gives
-    deterministic interval edges even under same-timestamp changes."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "signup")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    nxt = F.lead("ts").over(w)
-    return ev.select(
+    The intervals are `scd2_versions`: one shuffle on the key."""
+    return scd2_versions(load_table(spark, sf_dir, "events")).select(
         "user_id",
-        F.col("ts").alias("valid_from"),
-        nxt.alias("valid_to"),
-        "event_id",
-        F.round("value", 4).alias("value"),
-        F.when(nxt.isNull(), F.lit(1)).otherwise(F.lit(0)).alias("is_current"),
+        "valid_from",
+        "valid_to",
+        F.col("version_id").alias("event_id"),
+        "value",
+        F.when(F.col("valid_to").isNull(), F.lit(1)).otherwise(F.lit(0)).alias("is_current"),
     )
 
 
@@ -477,27 +500,14 @@ def ts_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     row-locally after the match. The as-of union+window formulation
     (q_asof_join) is the alternative when versions per key are huge."""
     ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    dim = (
-        ev.filter(F.col("event_type") == "signup")
-        .select(
-            "user_id",
-            F.col("ts").alias("valid_from"),
-            F.lead("ts").over(w).alias("valid_to"),
-            F.col("event_id").alias("version_id"),
-        )
-    )
     facts = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
         F.col("event_id").alias("purchase_id"),
         F.col("ts").alias("purchase_ts"),
     )
     return (
-        facts.join(dim, "user_id")
-        .filter(
-            (F.col("purchase_ts") >= F.col("valid_from"))
-            & (F.col("valid_to").isNull() | (F.col("purchase_ts") < F.col("valid_to")))
-        )
+        facts.join(scd2_versions(ev), "user_id")
+        .filter(scd2_valid_at(F.col("purchase_ts")))
         .select("user_id", "purchase_id", "purchase_ts", "version_id", "valid_from")
     )
 
@@ -1488,20 +1498,10 @@ def ts_scd2_as_of_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut is a row-local filter — no join, no extra shuffle, and with
     the history table day-partitioned on valid_from the filter prunes
     partitions."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "signup")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t = F.lit(_TT_T2).cast("timestamp")
-    dim = ev.select(
-        "user_id",
-        F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w).alias("valid_to"),
-        F.col("event_id").alias("version_id"),
-        F.round("value", 4).alias("value"),
+    dim = scd2_versions(load_table(spark, sf_dir, "events"))
+    return dim.filter(scd2_valid_at(F.lit(_TT_T2).cast("timestamp"))).select(
+        "user_id", "version_id", "valid_from", "value"
     )
-    return dim.filter(
-        (F.col("valid_from") <= t)
-        & (F.col("valid_to").isNull() | (F.col("valid_to") > t))
-    ).select("user_id", "version_id", "valid_from", "value")
 
 
 @query(
@@ -1540,25 +1540,10 @@ def ts_time_travel_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one key-partitioned window for intervals + one groupBy on
     the key; cost is independent of how far apart T1 and T2 are."""
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_type") == "signup")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    t1 = F.lit(_TT_T1).cast("timestamp")
-    t2 = F.lit(_TT_T2).cast("timestamp")
-    dim = ev.select(
-        "user_id",
-        F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w).alias("valid_to"),
-        F.col("event_id").alias("version_id"),
-    )
-
-    def member(t):
-        return (F.col("valid_from") <= t) & (
-            F.col("valid_to").isNull() | (F.col("valid_to") > t)
-        )
-
     keyed = (
-        dim.withColumn("at_t1", member(t1).cast("int"))
-        .withColumn("at_t2", member(t2).cast("int"))
+        scd2_versions(load_table(spark, sf_dir, "events"))
+        .withColumn("at_t1", scd2_valid_at(F.lit(_TT_T1).cast("timestamp")).cast("int"))
+        .withColumn("at_t2", scd2_valid_at(F.lit(_TT_T2).cast("timestamp")).cast("int"))
         .filter((F.col("at_t1") == 1) | (F.col("at_t2") == 1))
         .groupBy("user_id")
         .agg(

@@ -429,6 +429,8 @@ def compact_parquet_dir(
     """
     import math
 
+    recover_swap(path)
+
     def _parquet_files(p: str) -> list[str]:
         return [
             os.path.join(dp, f)
@@ -447,6 +449,17 @@ def compact_parquet_dir(
     return len(before), len(_parquet_files(path))
 
 
+def recover_swap(path: str) -> None:
+    """Undo a `swap_dir` that crashed between its two renames: when
+    ``path`` is missing and ``<path>._old`` exists, ``._old`` holds the
+    only copy, so it renames back to ``path``. Run before anything
+    reads ``path``. Callers: swap_dir, compact_parquet_dir and
+    streaming.jobs.run_foreach_batch_merge."""
+    old = path.rstrip("/") + "._old"
+    if not os.path.exists(path) and os.path.exists(old):
+        os.replace(old, path)
+
+
 def swap_dir(staged: str, path: str) -> None:
     """Move the directory ``staged`` into place at ``path`` by
     rename-aside: the live dir (if any) moves to ``<path>._old``,
@@ -454,9 +467,16 @@ def swap_dir(staged: str, path: str) -> None:
     rename is atomic on a POSIX filesystem, so the window with no data
     at ``path`` is one rename-to-rename gap, not a recursive delete,
     and a crash mid-swap strands a recoverable ``._old`` copy instead
-    of losing the dataset."""
+    of losing the dataset.
+
+    Restore rule for a prior crashed swap: a ``._old`` without
+    ``path`` is the only copy and first renames back to ``path``
+    (`recover_swap`); a ``._old`` beside ``path`` is the superseded
+    copy of a swap that crashed after its second rename, and only then
+    is it deleted."""
+    recover_swap(path)
     old = path.rstrip("/") + "._old"
-    if os.path.exists(old):  # leftover from a crashed prior swap
+    if os.path.exists(old):  # beside path: superseded by a finished swap
         shutil.rmtree(old)
     live = os.path.exists(path)
     if live:

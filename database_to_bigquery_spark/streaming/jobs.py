@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..sinks.writers import swap_dir
+from ..sinks.writers import recover_swap, swap_dir
 
 # Every Nth micro-batch the fuzzy-dedup admissions cache is rebuilt
 # from ONE scan of the on-disk store instead of extending the cached
@@ -312,6 +312,7 @@ def run_foreach_batch_merge(
             .filter(F.col("_rn") == 1)
             .select(_MERGE_KEY, "ts", "event_id", "event_type", "value")
         )
+        recover_swap(target_dir)  # a crash mid-swap strands the snapshot aside
         base = _read_if_exists(spark, target_dir)
         if base is None:  # first batch: no snapshot yet
             merged = latest

@@ -343,6 +343,56 @@ def test_foreach_batch_merge_keeps_unreadable_snapshot(spark, tmp_path):
     assert {p.name: p.read_bytes() for p in target.iterdir()} == before
 
 
+def test_foreach_batch_merge_recovers_stranded_snapshot(spark, tmp_path):
+    """A crash between swap_dir's two renames leaves the snapshot only
+    at ``<target>._old``. The next batch must merge into that copy,
+    not read the missing target as a first batch and then delete the
+    stranded copy as swap debris."""
+    import datetime as dt
+    import os
+
+    target = str(tmp_path / "snapshot")
+
+    def merge(name, users):
+        src = str(tmp_path / name)
+        spark.createDataFrame(
+            [(u, dt.datetime(2024, 1, 2), u, "view", 1.0, "") for u in users],
+            jobs.EVENTS_SCHEMA,
+        ).write.parquet(src)
+        jobs.run_foreach_batch_merge(
+            jobs.read_events_stream(spark, src), target, str(tmp_path / f"{name}_ckpt")
+        ).awaitTermination(180)
+
+    merge("first", (1, 2))
+    os.replace(target, target + "._old")  # the state a mid-swap crash leaves
+    merge("second", (3, 4))
+    got = {r.user_id for r in spark.read.parquet(target).select("user_id").collect()}
+    assert got == {1, 2, 3, 4}
+    assert not os.path.exists(target + "._old")
+
+
+def test_swap_dir_restores_stranded_copy(tmp_path):
+    """Plain-filesystem form of the same crash: a ``._old`` without its
+    live dir renames back into place; a ``._old`` beside a live dir is
+    superseded and deleted by the next swap."""
+    from database_to_bigquery_spark.sinks.writers import recover_swap, swap_dir
+
+    live, old = tmp_path / "snap", tmp_path / "snap._old"
+    old.mkdir()
+    (old / "part").write_text("previous")
+    recover_swap(str(live))
+    assert (live / "part").read_text() == "previous" and not old.exists()
+
+    old.mkdir()
+    (old / "part").write_text("superseded")
+    staged = tmp_path / "staged"
+    staged.mkdir()
+    (staged / "part").write_text("next")
+    swap_dir(str(staged), str(live))
+    assert (live / "part").read_text() == "next"
+    assert not old.exists() and not staged.exists()
+
+
 def test_watermark_drops_late_rows(spark, tmp_path):
     """Semantic contract of withWatermark: a row arriving after the
     watermark has passed its window is dropped from the aggregation —

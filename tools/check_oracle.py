@@ -9,7 +9,9 @@ result's value hash, so two trees give the same results when their
 runs differ only in the bracketed timings. The cache is cleared after
 each query, so each hash comes from that query's own plan. The cell
 normalisation and the hash are perfbench/oracle.py's, so the benchmark
-and this gate hash a result the same way.
+and this gate hash a result the same way. The per-query check is
+`check_query`; tests/test_queries_oracle.py runs the same function
+on every query at sf0.001.
 """
 
 from __future__ import annotations
@@ -104,25 +106,47 @@ def main() -> int:
     for name in names:
         spec = specs[name]
         t0 = time.time()
+        problems, n_rows, s_hash = check_query(spark, con, spec, args.sf_dir)
+        if problems:
+            failures.append(name)
+            print(f"FAIL  {name}: " + "; ".join(problems[:1]))
+            for p in problems[1:]:
+                print(p)
+        elif spec.oracle is None:
+            print(
+                f"rows  {name}: {n_rows} rows (no oracle) "
+                f"hash={s_hash[:12]} [{time.time()-t0:.1f}s]"
+            )
+        else:
+            print(
+                f"OK    {name}: {n_rows} rows hash={s_hash[:12]} "
+                f"[{time.time()-t0:.1f}s]"
+            )
+    print(f"\n{len(names) - len(failures)}/{len(names)} passed")
+    return 1 if failures else 0
+
+
+def check_query(spark, con, spec, sf_dir: str) -> tuple[list[str], int, str]:
+    """Run one registered query on Spark and, when it has an oracle,
+    the oracle on DuckDB connection ``con``; return (problems, Spark
+    row count, Spark value hash). No problems means the query passed:
+    it ran, returned columns and, with an oracle, matched it on row
+    count, column names, type categories and value hash, with no list
+    column on either side. The cache is cleared afterwards, so no
+    query reads another's persisted relations."""
+    try:
         try:
-            sdf = spec.fn(spark, args.sf_dir)
+            sdf = spec.fn(spark, sf_dir)
             s_cols = sdf.columns
             s_dtypes = dict(sdf.dtypes)
             s_rows = [tuple(r) for r in sdf.collect()]
         except Exception as exc:
-            failures.append(name)
-            print(f"FAIL  {name}: spark error: {exc}")
-            continue
-        finally:
-            # no query may read another's persisted relations
-            spark.catalog.clearCache()
+            return [f"spark error: {exc}"], 0, ""
         s_hash = value_hash(s_rows, s_cols)
+        if not s_cols:
+            return ["no columns"], len(s_rows), s_hash
         if spec.oracle is None:
-            print(
-                f"rows  {name}: {len(s_rows)} rows (no oracle) "
-                f"hash={s_hash[:12]} [{time.time()-t0:.1f}s]"
-            )
-            continue
+            return [], len(s_rows), s_hash
         try:
             # fetch_arrow_table (not fetchall) so DuckDB type artifacts
             # that the external driver sees — HUGEINT→decimal128,
@@ -134,66 +158,55 @@ def main() -> int:
             cols_data = [tbl.column(i).to_pylist() for i in range(tbl.num_columns)]
             o_rows = list(zip(*cols_data)) if tbl.num_columns else []
         except Exception as exc:
-            failures.append(name)
-            print(f"FAIL  {name}: duckdb error: {exc}")
-            continue
-        problems = []
-        for c in s_cols:
-            # Driver-strict canonicalization: the external driver sorts
-            # result columns with pandas (Categorical/factorize), which
-            # raises `TypeError: unhashable type: 'list'` on list cells —
-            # q_map_functions crashed its r10 attestation this way. Any
-            # list-typed column in an oracle-bearing result is therefore
-            # a FAILURE here, on either side.
-            if spark_type_category(s_dtypes.get(c, "")) == "list":
-                problems.append(
-                    f"list column {c}: spark {s_dtypes.get(c)} — the "
-                    "driver's pandas canonicalizer cannot sort list "
-                    "cells; emit a deterministic string encoding "
-                    "(to_json) on both sides"
-                )
-        for c, t in o_types.items():
-            if arrow_type_category(t) == "list":
-                problems.append(
-                    f"list column {c}: oracle {t} — driver-uncanonicalizable"
-                )
-        for c in s_cols:
-            if c in o_types:
-                sc = spark_type_category(s_dtypes.get(c, ""))
-                oc = arrow_type_category(o_types[c])
-                if sc != oc:
-                    problems.append(
-                        f"type mismatch {c}: spark {s_dtypes.get(c)} vs "
-                        f"oracle {o_types[c]}"
-                    )
-        if len(s_rows) != len(o_rows):
-            problems.append(f"rowcount {len(s_rows)} vs {len(o_rows)}")
-        if sorted(s_cols) != sorted(o_cols):
-            problems.append(f"columns {sorted(s_cols)} vs {sorted(o_cols)}")
-        elif s_hash != value_hash(o_rows, o_cols):
-            problems.append("value hash mismatch")
-            # show first differing rows for debugging
-            order_s = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
-            order_o = sorted(range(len(o_cols)), key=lambda i: o_cols[i])
-            ss = sorted("\x1f".join(normalize_cell(r[i]) for i in order_s) for r in s_rows)
-            oo = sorted("\x1f".join(normalize_cell(r[i]) for i in order_o) for r in o_rows)
-            for a, b in zip(ss, oo):
-                if a != b:
-                    problems.append(f"  spark:  {a[:300]}")
-                    problems.append(f"  oracle: {b[:300]}")
-                    break
-        if problems:
-            failures.append(name)
-            print(f"FAIL  {name}: " + "; ".join(problems[:1]))
-            for p in problems[1:]:
-                print(p)
-        else:
-            print(
-                f"OK    {name}: {len(s_rows)} rows hash={s_hash[:12]} "
-                f"[{time.time()-t0:.1f}s]"
+            return [f"duckdb error: {exc}"], len(s_rows), s_hash
+    finally:
+        spark.catalog.clearCache()
+    problems = []
+    for c in s_cols:
+        # Driver-strict canonicalization: the external driver sorts
+        # result columns with pandas (Categorical/factorize), which
+        # raises `TypeError: unhashable type: 'list'` on list cells —
+        # q_map_functions crashed its r10 attestation this way. Any
+        # list-typed column in an oracle-bearing result is therefore
+        # a FAILURE here, on either side.
+        if spark_type_category(s_dtypes.get(c, "")) == "list":
+            problems.append(
+                f"list column {c}: spark {s_dtypes.get(c)} — the "
+                "driver's pandas canonicalizer cannot sort list "
+                "cells; emit a deterministic string encoding "
+                "(to_json) on both sides"
             )
-    print(f"\n{len(names) - len(failures)}/{len(names)} passed")
-    return 1 if failures else 0
+    for c, t in o_types.items():
+        if arrow_type_category(t) == "list":
+            problems.append(
+                f"list column {c}: oracle {t} — driver-uncanonicalizable"
+            )
+    for c in s_cols:
+        if c in o_types:
+            sc = spark_type_category(s_dtypes.get(c, ""))
+            oc = arrow_type_category(o_types[c])
+            if sc != oc:
+                problems.append(
+                    f"type mismatch {c}: spark {s_dtypes.get(c)} vs "
+                    f"oracle {o_types[c]}"
+                )
+    if len(s_rows) != len(o_rows):
+        problems.append(f"rowcount {len(s_rows)} vs {len(o_rows)}")
+    if sorted(s_cols) != sorted(o_cols):
+        problems.append(f"columns {sorted(s_cols)} vs {sorted(o_cols)}")
+    elif s_hash != value_hash(o_rows, o_cols):
+        problems.append("value hash mismatch")
+        # show first differing rows for debugging
+        order_s = sorted(range(len(s_cols)), key=lambda i: s_cols[i])
+        order_o = sorted(range(len(o_cols)), key=lambda i: o_cols[i])
+        ss = sorted("\x1f".join(normalize_cell(r[i]) for i in order_s) for r in s_rows)
+        oo = sorted("\x1f".join(normalize_cell(r[i]) for i in order_o) for r in o_rows)
+        for a, b in zip(ss, oo):
+            if a != b:
+                problems.append(f"  spark:  {a[:300]}")
+                problems.append(f"  oracle: {b[:300]}")
+                break
+    return problems, len(s_rows), s_hash
 
 
 if __name__ == "__main__":
